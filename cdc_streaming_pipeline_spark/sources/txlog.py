@@ -44,6 +44,7 @@ import math
 import os
 import re
 import uuid
+from collections import Counter
 from decimal import Decimal, InvalidOperation
 from glob import glob
 
@@ -614,6 +615,7 @@ def _dv_stage(
     blob=None,
     prior_n: dict[str, int] | None = None,
     small_hint: bool = True,
+    head: list | None = None,
 ) -> list:
     """Threshold-gated DV staging — the WRITE-side twin of
     ``_dv_relation``'s read gate: when the commit's position volume is
@@ -628,11 +630,14 @@ def _dv_stage(
     wider — or any caller that does not hold the pairs cached
     (``small_hint=False``, the compliance-erasure delete) — takes the
     executor-side path unchanged, so the driver never materializes an
-    unbounded position list. Same return contract as
+    unbounded position list. ``head`` is ``matched``'s pairs when the
+    caller already collected them under the cap (the MoR merge's fold
+    decision), saving the collect. Same return contract as
     ``_dv_stage_executor_side``."""
     cap = DV_BROADCAST_MAX_POSITIONS
     if small_hint and sum((prior_n or {}).values()) <= cap:
-        head = matched.select("_dv_fp", "_dv_ri").limit(cap + 1).collect()
+        if head is None:
+            head = matched.select("_dv_fp", "_dv_ri").limit(cap + 1).collect()
         if len(head) <= cap:
             by_file: dict[str, set] = {}
             for r in head:
@@ -758,7 +763,8 @@ def _apply_dvs(spark, df: DataFrame, files: list[str], dvs: dict, blob=None) -> 
     positions through the driver."""
     from pyspark.sql import functions as F
 
-    rel = {f: m for f, m in dvs.items() if f in set(files)}
+    wanted = set(files)
+    rel = {f: m for f, m in dvs.items() if f in wanted}
     if not rel:
         return df
     keyed = df.withColumn("_dv_fp", _fp_key_col()).withColumn(
@@ -1199,6 +1205,21 @@ def _bucket_overlap(t: int, n_ours: int, tag: int, n_theirs: int) -> bool:
     return t % g == tag % g
 
 
+#: per-handle bounds on the parsed-entry and parsed-checkpoint caches: a
+#: resolution replays at most checkpoint_interval entries past one
+#: checkpoint, so these hold every hot object with room for time travel,
+#: while a handle that lives across an unbounded stream stays bounded
+ENTRY_CACHE_MAX = 256
+CHECKPOINT_CACHE_MAX = 4
+
+
+def _cache_put(cache: dict, key, value, cap: int) -> None:
+    """Insert, evicting the oldest insertion once ``cap`` is reached."""
+    if len(cache) >= cap:
+        cache.pop(next(iter(cache)))
+    cache[key] = value
+
+
 class TxLogTable:
     """``commit_backend`` is the pluggable putIfAbsent primitive
     (``fn(entry_path, payload) -> bool``, True iff this writer owns the
@@ -1224,6 +1245,15 @@ class TxLogTable:
         # decision defaults to the blob store's conditional put.
         self.blob = blob_backend or DEFAULT_BLOB
         self._put_if_absent = commit_backend or self.blob.put_if_absent
+        # parsed log entries and checkpoints by version: both are
+        # immutable once published (an entry once its put_if_absent won,
+        # a checkpoint at v is never rewritten), so one handle parses
+        # each at most once however many resolvers replay it. Only
+        # successful parses are kept; the _last_checkpoint pointer and
+        # existence probes always go to the store. Callers treat the
+        # returned dicts as read-only.
+        self._entry_cache: dict[int, dict] = {}
+        self._checkpoint_cache: dict[int, dict] = {}
         os.makedirs(self.log_dir, exist_ok=True)
         os.makedirs(self.data_dir, exist_ok=True)
 
@@ -1271,7 +1301,11 @@ class TxLogTable:
         return out
 
     def _read_entry(self, version: int) -> dict:
-        return json.loads(self.blob.get_text(self._entry_path(version)))
+        e = self._entry_cache.get(version)
+        if e is None:
+            e = json.loads(self.blob.get_text(self._entry_path(version)))
+            _cache_put(self._entry_cache, version, e, ENTRY_CACHE_MAX)
+        return e
 
     def history(self, limit: int | None = None) -> list[dict]:
         """Committed entries, oldest first. ``limit`` keeps only the
@@ -2956,9 +2990,8 @@ class BucketedTxLogTable(TxLogTable):
         # delete_where on a touched file changes its ROWS without
         # adding/removing files, so the retry path must compare this
         # (resurrecting concurrently-deleted rows otherwise)
-        dv_ours = {
-            f: m for f, m in resolve_file_dvs(self, base).items() if f in set(old)
-        }
+        ours = set(old)
+        dv_ours = {f: m for f, m in resolve_file_dvs(self, base).items() if f in ours}
         merged = (
             batch
             if prev is None
@@ -3015,7 +3048,6 @@ class BucketedTxLogTable(TxLogTable):
                 if done is not None and txn[1] <= done[0]:
                     return done[1], []  # the interleaved commit WAS this txn
             new_snap = set(new_snap_l)
-            ours = set(old)
             still_there = ours <= new_snap
             # layout-SYMMETRIC overlap test (gcd rule): a racing lazy
             # rebucket can land foreign files under a LARGER layout n'
@@ -3072,6 +3104,7 @@ class BucketedTxLogTable(TxLogTable):
         batch: DataFrame,
         max_retries: int = 20,
         txn: tuple[str, int] | None = None,
+        max_dv_fraction: float | None = None,
     ) -> tuple[int, list[int]]:
         """Merge-on-read MERGE (Delta's DV-backed MERGE): apply one CDC
         batch by deletion-vectoring the stored images of the BATCH'S
@@ -3087,6 +3120,18 @@ class BucketedTxLogTable(TxLogTable):
         + folds small postimage files) keeps sustained MoR ingest
         bounded, exactly the Delta lifecycle.
 
+        ``max_dv_fraction`` folds deletion-vector debt INSIDE this
+        commit: before anything is staged, each file of the touched
+        buckets is scored with its prior vector plus the rows this merge
+        would vector (``dv_debt_files``); a touched bucket holding a file
+        over the threshold is rewritten whole — all its DV-applied rows,
+        bloom-skipped files included, merged with the batch and staged
+        one file per bucket, what ``compact_buckets`` would write — and
+        its files are removed instead of vectored. Clean buckets keep
+        vectors plus appended postimages. The batch still lands as ONE
+        log version, so a streaming sink needs no second fold commit.
+        ``None`` (the default) keeps the pure-MoR commit.
+
         Semantics are IDENTICAL to ``merge_cdc_batch``: per key the
         greatest ``order_col`` wins among (stored image, batch events),
         tombstones are stored (a stale replay still loses), schema
@@ -3095,9 +3140,10 @@ class BucketedTxLogTable(TxLogTable):
         NOTHING for it because pre- and post-image compare equal).
 
         Conflict rule is merge's file-granular rule PLUS the DV rule:
-        retry after a lost race only if the read set (touched buckets'
-        files) is still live with unchanged vectors, no foreign file
-        landed in our buckets, and no untagged foreign commit appeared.
+        retry after a lost race only if the read set (the scanned files
+        of the touched buckets plus every file a fused fold removes) is
+        still live with unchanged vectors, no foreign file landed in our
+        buckets, and no untagged foreign commit appeared.
 
         Returns (version, touched buckets); replayed ``txn`` batches
         no-op exactly like the rewrite path."""
@@ -3187,6 +3233,7 @@ class BucketedTxLogTable(TxLogTable):
                 for t in touched
             )
         ]
+        bucket_files = old  # before bloom pruning: the fold's candidates
         # Bloom-assisted scan pruning: bucket overlap bounds the files
         # that COULD hold the batch's keys; when the leading key column
         # carries bloom sidecars and the key set is small (the CDC
@@ -3213,38 +3260,88 @@ class BucketedTxLogTable(TxLogTable):
                     )
                 ]
         dvs = resolve_file_dvs(self, base)
-        dv_ours = {f: m for f, m in dvs.items() if f in set(old)}
+        old_set = set(old)
+        dv_ours = {f: m for f, m in dvs.items() if f in old_set}
         dv_dir = os.path.join(self.data_dir, "_dv")
         os.makedirs(dv_dir, exist_ok=True)
         if old:
-            df = (
-                self._raw_read(old, base)
-                .withColumn("_dv_fp", _fp_key_col())
-                .withColumn("_dv_ri", F.col("_metadata.row_index"))
-            )
-            prior = {f: m["path"] for f, m in dv_ours.items()}
+            raw = self._raw_read(old, base)
             # threshold-gated: small prior vectors broadcast (keeps the
             # stored-image scan exchange-free), wide ones expand
             # executor-side — metadata-only decision
             rel = _dv_relation(self.spark, dv_ours, self.blob)
-            if rel is not None:
-                df = df.join(rel, ["_dv_fp", "_dv_ri"], "left_anti")
+
+            def visible_keyed(frame: DataFrame) -> DataFrame:
+                keyed = frame.withColumn("_dv_fp", _fp_key_col()).withColumn(
+                    "_dv_ri", F.col("_metadata.row_index")
+                )
+                if rel is None:
+                    return keyed
+                return keyed.join(rel, ["_dv_fp", "_dv_ri"], "left_anti")
+
+            df = visible_keyed(raw)
             # only the BATCH'S KEYS' stored images participate — the
             # whole point: untouched keys of the same bucket are never
-            # rewritten (AQE broadcasts the key set when it is small)
-            bkeys = batch.select(*self.key_cols).distinct()
+            # rewritten (AQE broadcasts the key set when it is small).
+            # A semi join ignores duplicate keys on its right side, so
+            # the key set needs no distinct (one shuffle job saved)
+            bkeys = batch.select(*self.key_cols)
             oldk = df.join(bkeys, self.key_cols, "left_semi").persist()
         else:
             oldk = None
         try:
-            prev_rows = (
-                oldk.drop("_dv_fp", "_dv_ri") if oldk is not None else None
-            )
-            merged = (
-                batch
-                if prev_rows is None
-                else prev_rows.unionByName(batch, allowMissingColumns=True)
-            )
+            fold: list[str] = []
+            pairs = None
+            if max_dv_fraction is not None:
+                # this merge's vectored rows per file, before staging
+                if oldk is None:
+                    new_n = {}
+                elif len(probe) <= _probe_cap:
+                    # a trickle batch (<= _probe_cap rows) bounds its
+                    # stored images, so ONE plain collect (no limit: a
+                    # capped take scans partitions in several jobs) both
+                    # scores the fold and feeds the vector staging
+                    pairs = oldk.select("_dv_fp", "_dv_ri").collect()
+                    new_n = Counter(r["_dv_fp"] for r in pairs)
+                else:
+                    new_n = {
+                        r["_dv_fp"]: r["n"]
+                        for r in oldk.groupBy("_dv_fp")
+                        .agg(F.count("*").alias("n"))
+                        .collect()  # one row per scanned file
+                    }
+                deleted = {
+                    f: dvs.get(f, {}).get("n", 0) + new_n.get(f, 0)
+                    for f in bucket_files
+                }
+                fold = self._mor_fold_files(
+                    deleted, bmap, touched, base, max_dv_fraction
+                )
+            fold_set = set(fold)
+            parts = []
+            if oldk is not None:
+                # a folded file's stored images also arrive with its
+                # bucket's rows below: identical duplicates, which
+                # latest_state collapses, so oldk needs no filter
+                parts.append(oldk.drop("_dv_fp", "_dv_ri"))
+            # a folded bucket's every DV-applied row is rewritten. Files
+            # the stored-image scan read reuse its merged schema and
+            # vector relation (no second footer-merge job or sidecar
+            # load); files the bloom probe skipped are read on their own
+            scanned = [f for f in fold if f in old_set]
+            if scanned:
+                fr = visible_keyed(self.spark.read.schema(raw.schema).parquet(*scanned))
+                parts.append(fr.drop("_dv_fp", "_dv_ri"))
+            skipped = [f for f in fold if f not in old_set]
+            if skipped:
+                parts.append(
+                    _apply_dvs(
+                        self.spark, self._raw_read(skipped, base), skipped, dvs, self.blob
+                    )
+                )
+            merged = batch
+            for p in parts:
+                merged = p.unionByName(merged, allowMissingColumns=True)
             new_state = latest_state(
                 merged,
                 key_cols=self.key_cols,
@@ -3255,17 +3352,29 @@ class BucketedTxLogTable(TxLogTable):
                 new_state, n_buckets_hint=len(touched)
             )
             staged_facts = self._staged_skipping_facts(adds, new_state.columns)
-            if oldk is not None:
+            # vectors only for the files that stay live: a folded file
+            # is removed, so it gets no sidecar
+            vectored = old_set - fold_set
+            if vectored:
                 # oldk is cached and sized by the batch's keys, so the
                 # threshold gate's capped collect is cheap; a trickle
                 # merge stages its vectors driver-side (one Python job
                 # saved), a bulk one stays executor-side
+                prior = {f: m for f, m in dv_ours.items() if f in vectored}
+                matched = oldk.select("_dv_fp", "_dv_ri")
+                if fold:
+                    matched = matched.filter(~F.col("_dv_fp").isin(fold))
                 rows = _dv_stage(
-                    oldk.select("_dv_fp", "_dv_ri"),
-                    {f: m["path"] for f, m in dv_ours.items()},
+                    matched,
+                    {f: m["path"] for f, m in prior.items()},
                     dv_dir,
                     self.blob,
-                    prior_n={f: m["n"] for f, m in dv_ours.items()},
+                    prior_n={f: m["n"] for f, m in prior.items()},
+                    head=(
+                        [r for r in pairs if r["_dv_fp"] in vectored]
+                        if pairs is not None
+                        else None
+                    ),
                 )
             else:
                 rows = []
@@ -3278,20 +3387,25 @@ class BucketedTxLogTable(TxLogTable):
         dv_added = {
             r["file"]: {"path": r["add_path"], "n": r["n_add"]} for r in rows
         }
+        # the read set: scanned files plus every file the fold rewrites
+        ours = old_set | fold_set
+        dv_read = {f: m for f, m in dvs.items() if f in ours}
         for _ in range(max_retries):
             version = base + 1
             entry = {
                 "version": version,
                 "mode": "merge_mor",
                 "adds": adds,
-                "removes": [],
+                "removes": sorted(fold),
                 "n_files": len(adds),
                 "file_buckets": buckets,
                 "file_bytes": self._staged_bytes(adds),
                 "file_layout_n": {f: self.n_buckets for f in adds},
                 "file_dvs": file_dvs,
                 "dv_added": dv_added,
-                "buckets": sorted(touched),
+                # an old-layout folded file can carry rows of buckets
+                # beyond the touched ones; record every bucket written
+                "buckets": sorted(touched | set(buckets.values())),
                 "schema": _schema_union(
                     _resolve_schema_json(self, base),
                     new_state.schema.jsonValue(),
@@ -3311,7 +3425,6 @@ class BucketedTxLogTable(TxLogTable):
                 if done is not None and txn[1] <= done[0]:
                     return done[1], []
             new_snap = set(new_snap_l)
-            ours = set(old)
             still_there = ours <= new_snap
             new_layouts = resolve_file_layouts(self, new_base)
             others_in_our_buckets = any(
@@ -3329,7 +3442,7 @@ class BucketedTxLogTable(TxLogTable):
                 f not in ours and f not in new_bmap for f in new_snap
             )
             new_dvs = resolve_file_dvs(self, new_base)
-            dvs_changed = any(new_dvs.get(f) != dv_ours.get(f) for f in ours)
+            dvs_changed = any(new_dvs.get(f) != dv_read.get(f) for f in ours)
             if (
                 still_there
                 and not others_in_our_buckets
@@ -3343,6 +3456,32 @@ class BucketedTxLogTable(TxLogTable):
                 f"commit at version {new_base}"
             )
         raise ConcurrentWriteError(f"merge_mor gave up after {max_retries} retries")
+
+    def _mor_fold_files(
+        self,
+        deleted: dict[str, int],
+        bmap: dict[str, int],
+        touched: set[int],
+        base: int,
+        max_dv_fraction: float,
+    ) -> list[str]:
+        """The files a MoR merge folds in its own commit: ``deleted``
+        maps every file of the touched buckets to its vectored rows once
+        this merge's vectors land; each touched bucket holding a file
+        over the DV-debt threshold is folded whole, so every file
+        covering it is returned."""
+        dirty = dv_debt_files(deleted, resolve_file_nulls(self, base), max_dv_fraction)
+        if not dirty:
+            return []
+        layouts = resolve_file_layouts(self, base)
+
+        def covers(f: str, t: int) -> bool:
+            return _bucket_overlap(
+                t, self.n_buckets, bmap[f], layouts.get(f, self.n_buckets)
+            )
+
+        folded = {t for t in touched if any(covers(f, t) for f in dirty)}
+        return [f for f in deleted if any(covers(f, t) for t in folded)]
 
     def compact_buckets(
         self,
@@ -3717,7 +3856,8 @@ class BucketedTxLogTable(TxLogTable):
         matched = vis.filter(predicate).select("_dv_fp", "_dv_ri")
         dv_dir = os.path.join(self.data_dir, "_dv")
         os.makedirs(dv_dir, exist_ok=True)
-        prior = {f: m["path"] for f, m in dvs.items() if f in set(keep)}
+        keep_set = set(keep)
+        prior = {f: m["path"] for f, m in dvs.items() if f in keep_set}
         rows = _dv_stage_executor_side(matched, prior, dv_dir, self.blob)
         if not rows:
             return None, 0, 0
@@ -3819,7 +3959,8 @@ class BucketedTxLogTable(TxLogTable):
         # DV_BROADCAST_MAX_POSITIONS (no shuffle added to the candidate
         # scan), distributed pairs frame (binaryFile + mapInPandas)
         # past it so a wide delete's positions never cross the driver
-        prior = {f: m["path"] for f, m in dvs.items() if f in set(keep)}
+        keep_set = set(keep)
+        prior = {f: m["path"] for f, m in dvs.items() if f in keep_set}
         rel = _dv_relation(self.spark, {f: dvs[f] for f in prior}, self.blob)
         if rel is not None:
             df = df.join(rel, ["_dv_fp", "_dv_ri"], "left_anti")
@@ -4023,16 +4164,21 @@ def table_changes(
                 parts.append(typed(post, "update_postimage", v))
             continue
         if mode in ("merge", "overwrite", "merge_mor"):
-            # merge_mor replaces rows by VECTORING them instead of
-            # removing files, so its old side is the dv_added rows —
-            # the same key-join classification then applies unchanged
-            # (a stale-only batch re-appends an identical winner and
-            # correctly feeds NOTHING: pre == post)
-            old = (
-                dvadd_visible(e, v)
-                if mode == "merge_mor"
-                else visible(e.get("removes", []), v)
-            )
+            # old side: the removed files' rows as visible just BEFORE
+            # this version (their vectors at v-1 — a checkpoint at v
+            # keeps only live files' vectors) plus the rows this
+            # commit's vectors newly marked: merge_mor replaces rows by
+            # vectoring them, and removes whole files only for the
+            # buckets it folds. The key-join classification then
+            # applies unchanged (a rewritten-but-unchanged row, or a
+            # stale-only batch's identical re-appended winner, feeds
+            # NOTHING: pre == post)
+            old = None
+            for side in (visible(e.get("removes", []), v - 1), dvadd_visible(e, v)):
+                if side is not None:
+                    old = side if old is None else old.unionByName(
+                        side, allowMissingColumns=True
+                    )
             new = visible(e.get("adds", []), v)
             if old is None and new is None:
                 continue
@@ -4277,11 +4423,13 @@ def mv_delta(
     from cdc_streaming_pipeline_spark.operators.cdc import mark_deleted
 
     e = table._read_entry(version)
-    # DV state AS OF this version: a removed file is negated at the
-    # rows VISIBLE when it was removed (its full content minus its
+    # DV state just BEFORE this version: a removed file is negated at
+    # the rows VISIBLE when it was removed (its full content minus its
     # accumulated vector) — negating the full file would double-count
-    # the rows an earlier delete entry already subtracted
-    dvs = resolve_file_dvs(table, version)
+    # the rows an earlier delete entry already subtracted. Resolved at
+    # version-1 because a checkpoint at ``version`` keeps only the live
+    # files' vectors; added files are born clean either way.
+    dvs = resolve_file_dvs(table, version - 1)
     # caller names are LOGICAL under column mapping; frames read from
     # files are physical — present them under the CURRENT (latest)
     # mapping whatever the entry's era: physical names are stable, so
@@ -4485,6 +4633,17 @@ def _last_checkpoint_version(table: TxLogTable) -> int | None:
         return None  # pointer absent/torn: derived state, callers fall back
 
 
+def _load_checkpoint(table: TxLogTable, version: int) -> dict:
+    """The parsed checkpoint at ``version``, parsed at most once per
+    handle (a checkpoint is never rewritten); raises like the blob GET
+    or the JSON parse, and a failed load is not cached."""
+    ck = table._checkpoint_cache.get(version)
+    if ck is None:
+        ck = json.loads(table.blob.get_text(_checkpoint_path(table, version)))
+        _cache_put(table._checkpoint_cache, version, ck, CHECKPOINT_CACHE_MAX)
+    return ck
+
+
 def _best_checkpoint(table: TxLogTable, target: int) -> dict | None:
     # fast path: the pointer names the newest checkpoint; usable iff it
     # doesn't overshoot the pinned version
@@ -4492,7 +4651,7 @@ def _best_checkpoint(table: TxLogTable, target: int) -> dict | None:
     start = target
     if ptr is not None and ptr <= target:
         try:
-            return json.loads(table.blob.get_text(_checkpoint_path(table, ptr)))
+            return _load_checkpoint(table, ptr)
         except (OSError, json.JSONDecodeError):
             start = ptr - 1  # torn checkpoint behind a valid pointer
     # Newest checkpoint <= target WITHOUT listing-and-parsing every
@@ -4505,11 +4664,12 @@ def _best_checkpoint(table: TxLogTable, target: int) -> dict | None:
     # a log with no checkpoint below target pays O(target) stats, still
     # far below parsing each checkpoint's full file list.
     for v in range(start, -1, -1):
-        p = _checkpoint_path(table, v)
-        if not table.blob.exists(p):
+        if v in table._checkpoint_cache:
+            return table._checkpoint_cache[v]
+        if not table.blob.exists(_checkpoint_path(table, v)):
             continue
         try:
-            return json.loads(table.blob.get_text(p))
+            return _load_checkpoint(table, v)
         except (OSError, json.JSONDecodeError):
             continue  # torn/unreadable checkpoint: derived state, skip
     return None
@@ -4713,6 +4873,23 @@ def resolve_file_dvs(table: TxLogTable, version: int | None = None) -> dict:
         start = 0
     for v in table._versions_between(start, target):
         out.update(table._read_entry(v).get("file_dvs", {}))
+    return out
+
+
+def dv_debt_files(deleted: dict[str, int], nulls: dict, max_fraction: float) -> set[str]:
+    """The deletion-vector debt rule, shared by the MoR merge's fused
+    fold and the streaming sink's fallback fold: of ``deleted`` ({file:
+    vectored rows}), the files whose deleted fraction exceeds
+    ``max_fraction`` — a file whose row count the log does not record
+    (``nulls``, the resolved ``file_nulls``) counts as fully deleted, so
+    it folds on any vector. Such a file drags every read through its
+    anti-join until its bucket is rewritten."""
+    out: set[str] = set()
+    for f, n in deleted.items():
+        nu = nulls.get(f)
+        rows = next((rc for _, rc in nu.values()), None) if nu else None
+        if n > 0 and (n / rows if rows else 1.0) > max_fraction:
+            out.add(f)
     return out
 
 

@@ -507,21 +507,26 @@ def bucketed_merge_stream_sink(
     The STORAGE LAYER rides along (r12 verdict item 5: a stream-written
     table must get the same point-lookup/delete story as a batch one):
     ``bloom_cols`` gives every landed AND every compacted file a bloom
-    sidecar; ``max_dv_fraction`` bounds live deletion-vector debt — when
-    interleaved ``delete_where``/``update_where`` calls push a live
-    file's deleted fraction past the threshold, its bucket is folded on
-    the next batch (compaction reads DV-applied rows, so the rewrite
-    absorbs the vectors and vacuum reclaims the sidecars; files whose
-    row count the log does not record fold on ANY vector — conservative,
-    and still bounded because folding clears them). ``analyze_every=K``
-    backfills stats/bloom facts every K batches for files landed by
-    stats-less writers (requires ``stats_cols``). ``merge_mode="mor"``
+    sidecar; ``max_dv_fraction`` bounds live deletion-vector debt
+    (``txlog.dv_debt_files``: a file whose deleted fraction exceeds the
+    threshold, or that carries a vector but no recorded row count, has
+    its bucket folded — the rewrite reads DV-applied rows, so it absorbs
+    the vectors and vacuum reclaims the sidecars). ``merge_mode="mor"``
     lands each batch with ``merge_cdc_batch_mor`` — deletion-vector
     the stored images of the batch's keys and append their winners,
-    O(batch) bytes written instead of O(touched buckets); the
-    compaction policy and the DV-debt fold are what make sustained MoR
-    ingest bounded, so pair it with both. Returns the
-    DataStreamWriter (caller picks trigger and starts)."""
+    O(batch) bytes written instead of O(touched buckets) — and passes
+    it ``max_dv_fraction``, so the fold of the buckets the merge's own
+    vectors push over the threshold rides the merge commit: each batch
+    lands as ONE log version. After the merge, a metadata-only
+    fallback folds the debt the merge left — vectors from interleaved
+    ``delete_where``/``update_where`` calls in buckets the batch did
+    not touch, or in any bucket under the rewrite merge — in a separate
+    untagged commit; it normally finds nothing. The compaction policy
+    and the DV-debt threshold are what make sustained MoR ingest
+    bounded, so pair it with both.
+    ``analyze_every=K`` backfills stats/bloom facts every K batches for
+    files landed by stats-less writers (requires ``stats_cols``).
+    Returns the DataStreamWriter (caller picks trigger and starts)."""
     from cdc_streaming_pipeline_spark.sources.txlog import (
         BucketedTxLogTable,
         vacuum,
@@ -560,7 +565,9 @@ def bucketed_merge_stream_sink(
                 if table.latest_version() is None:
                     table.init_from_events(batch_df, txn=tag)
                 elif merge_mode == "mor":
-                    table.merge_cdc_batch_mor(batch_df, txn=tag)
+                    table.merge_cdc_batch_mor(
+                        batch_df, txn=tag, max_dv_fraction=max_dv_fraction
+                    )
                 else:
                     table.merge_cdc_batch(batch_df, txn=tag)
                 break
@@ -575,13 +582,14 @@ def bucketed_merge_stream_sink(
             except ConcurrentWriteError:
                 pass  # raced an external commit: the next batch folds
         if max_dv_fraction is not None:
-            # deletion-vector debt fold: a live file whose deleted
-            # fraction crossed the threshold drags every read through
-            # its anti-join forever — fold its bucket (the rewrite
-            # reads DV-applied rows, absorbing the vectors; vacuum
-            # reclaims the sidecars). Metadata-only check: vectors,
-            # row counts and bucket tags all come from the log.
+            # fallback deletion-vector debt fold: the MoR merge folds
+            # the buckets its own vectors push over the threshold, so
+            # what is left here is delete_where/update_where debt the
+            # merge did not rewrite — normally nothing. Metadata-only
+            # check: vectors, row counts and bucket tags all come from
+            # the log.
             from cdc_streaming_pipeline_spark.sources.txlog import (
+                dv_debt_files,
                 resolve_file_dvs,
                 resolve_file_nulls,
                 resolve_snapshot_state,
@@ -590,17 +598,13 @@ def bucketed_merge_stream_sink(
             dvs = resolve_file_dvs(table)
             if dvs:
                 live, bmap, _ = resolve_snapshot_state(table)
-                live_set = set(live)
-                nulls = resolve_file_nulls(table)
-                dirty: set[int] = set()
-                for f, m in dvs.items():
-                    if f not in live_set or f not in bmap:
-                        continue
-                    nu = nulls.get(f)
-                    rows = next((rc for _, rc in nu.values()), None) if nu else None
-                    frac = (m["n"] / rows) if rows else 1.0
-                    if frac > max_dv_fraction:
-                        dirty.add(bmap[f])
+                debt = {f: dvs[f]["n"] for f in live if f in dvs and f in bmap}
+                dirty = {
+                    bmap[f]
+                    for f in dv_debt_files(
+                        debt, resolve_file_nulls(table), max_dv_fraction
+                    )
+                }
                 if dirty:
                     try:
                         table.compact_buckets(

@@ -12,10 +12,15 @@ delete / update pre+post; a stale-only batch feeds NOTHING); mv folds
 are exact; compaction absorbs the vectors; the conflict matrix covers
 mor-vs-delete and disjoint-bucket interleaves; txn tags keep replays
 exactly-once; the streaming sink's maintenance keeps sustained MoR
-ingest bounded."""
+ingest bounded. With ``max_dv_fraction`` the DV-debt fold rides the
+merge commit: state still equals the rewrite merge's, the change feed
+equals that of the merge + separate-fold pair, a concurrent delete on
+any file of a folded bucket conflicts, and the sink lands one log
+version per batch."""
 
 from __future__ import annotations
 
+import os
 import random
 
 import pytest
@@ -71,12 +76,18 @@ def test_mor_merge_is_append_plus_vectors(spark, tmp_path):
 
 
 def test_mor_equals_rewrite_merge_over_random_waves(spark, tmp_path):
-    """The semantics pin: identical waves into a rewrite table and a
-    MoR table must produce identical state at every step — stale
-    events, tombstones, re-inserts and drift included."""
+    """The semantics pin: identical waves into a rewrite table and MoR
+    tables must produce identical state at every step — stale events,
+    tombstones, re-inserts and drift included. The fold threshold is
+    one more input: pure MoR (None), a fold when a file's debt passes
+    20%, and a fold on ANY vector (0.0) all agree with the rewrite."""
     rng = random.Random(777)
     a = _seed(spark, str(tmp_path / "rewrite"), n=60)
-    b = _seed(spark, str(tmp_path / "mor"), n=60)
+    mors = {
+        frac: _seed(spark, str(tmp_path / f"mor_{frac}"), n=60)
+        for frac in (None, 0.2, 0.0)
+    }
+    waves = []
     for step in range(1, 7):
         wave = []
         for i in range(rng.randint(1, 6)):
@@ -94,11 +105,20 @@ def test_mor_equals_rewrite_merge_over_random_waves(spark, tmp_path):
                     "true" if op == "d" else None,
                 )
             )
+        waves.append(wave)
+    # a bulk wave past the merge's 4096-row probe cap: the fold then
+    # scores files with an aggregate instead of a collect
+    waves.append([(k, float(k), "b", "u", f"99{k:06d}", None) for k in range(4500)])
+    folded = 0
+    for step, wave in enumerate(waves, 1):
         a.merge_cdc_batch(_ev(spark, wave))
-        b.merge_cdc_batch_mor(_ev(spark, wave))
         sa = {(r["id"], r["amount"], r["g"]) for r in a.read_state().collect()}
-        sb = {(r["id"], r["amount"], r["g"]) for r in b.read_state().collect()}
-        assert sa == sb, f"divergence at step {step}"
+        for frac, b in mors.items():
+            v, _ = b.merge_cdc_batch_mor(_ev(spark, wave), max_dv_fraction=frac)
+            folded += bool(b._read_entry(v)["removes"])
+            sb = {(r["id"], r["amount"], r["g"]) for r in b.read_state().collect()}
+            assert sa == sb, f"divergence at step {step} (max_dv_fraction={frac})"
+    assert folded  # the fused fold actually ran
 
 
 def test_mor_change_feed_classification(spark, tmp_path):
@@ -122,6 +142,93 @@ def test_mor_change_feed_classification(spark, tmp_path):
     v1 = t.latest_version()
     t.merge_cdc_batch_mor(_ev(spark, [(4, 1.0, "x", "u", "000001", None)]))
     assert table_changes(t, v1).count() == 0
+
+
+def _feed_rows(t, v0):
+    """The change feed after ``v0`` as a multiset, ``_commit_version``
+    excluded (a fused commit and a merge+fold pair land at different
+    versions by construction)."""
+    from collections import Counter
+
+    df = table_changes(t, v0).drop("_commit_version")
+    cols = sorted(df.columns)
+    return Counter(tuple(r[c] for c in cols) for r in df.collect())
+
+
+def _sink_fold(t, max_dv_fraction):
+    """The streaming sink's separate DV-debt fold, as a second commit."""
+    from cdc_streaming_pipeline_spark.sources.txlog import (
+        dv_debt_files,
+        resolve_file_nulls,
+        resolve_snapshot_state,
+    )
+
+    dvs = resolve_file_dvs(t)
+    live, bmap, _ = resolve_snapshot_state(t)
+    debt = {f: dvs[f]["n"] for f in live if f in dvs}
+    dirty = {bmap[f] for f in dv_debt_files(debt, resolve_file_nulls(t), max_dv_fraction)}
+    return t.compact_buckets(buckets=sorted(dirty), min_files=1) if dirty else (None, [])
+
+
+def test_mor_fused_fold_is_one_commit_and_feeds_like_merge_plus_fold(spark, tmp_path):
+    """With ``max_dv_fraction`` the buckets the merge's own vectors push
+    over the threshold are rewritten INSIDE the merge commit: one log
+    version, the folded buckets' files removed (no sidecar staged for
+    them), clean buckets vectored. Its change feed equals the feed of
+    the pure-MoR commit followed by the separate fold commit — the
+    rewritten-but-unchanged rows feed nothing."""
+    fused = _seed(spark, str(tmp_path / "fused"), n=40)
+    pair = _seed(spark, str(tmp_path / "pair"), n=40)
+    warm = [(k, 50.0 + k, "p", "u", "800000", None) for k in (1, 2, 3)]
+    for t in (fused, pair):  # tiny postimage files: any vector folds them
+        t.merge_cdc_batch_mor(_ev(spark, warm))
+    v0 = fused.latest_version()
+    assert pair.latest_version() == v0
+    wave = [
+        (1, 111.0, "z", "u", "900000", None),    # update of a postimage
+        (2, None, None, "d", "900000", "true"),  # delete of a postimage
+        (500, 5.0, "n", "c", "900000", None),    # insert
+        (3, 1.0, "x", "u", "000001", None),      # stale: loses, feeds nothing
+        (20, 2020.0, "y", "u", "900000", None),  # update of an init image
+    ]
+    v, _ = fused.merge_cdc_batch_mor(_ev(spark, wave), max_dv_fraction=0.3)
+    assert v == v0 + 1 == fused.latest_version()
+    e = fused._read_entry(v)
+    assert e["mode"] == "merge_mor" and e["removes"]
+    assert not set(e["removes"]) & (set(e["file_dvs"]) | set(e["dv_added"]))
+    live = set(resolve_with_checkpoint(fused))
+    assert not set(e["removes"]) & live
+
+    pair.merge_cdc_batch_mor(_ev(spark, wave))
+    fv, folded = _sink_fold(pair, 0.3)
+    assert fv == v0 + 2 and folded
+
+    def state(t):
+        return {(r["id"], r["amount"], r["g"]) for r in t.read_state().collect()}
+
+    assert state(fused) == state(pair)
+    feed = _feed_rows(fused, v0)
+    assert feed == _feed_rows(pair, v0)
+    ids = sorted(
+        r["id"] for r in table_changes(fused, v0).select("id").collect()
+    )
+    assert ids == [1, 1, 2, 20, 20, 500]  # pre+post, delete, pre+post, insert
+
+
+def test_feed_and_mv_over_a_fold_at_a_checkpoint_version(spark, tmp_path):
+    """A commit that removes vectored files at a CHECKPOINT version must
+    read those files' rows with the vectors they had before it (the
+    checkpoint keeps only live files' vectors): the fold feeds nothing
+    and the mv fold stays exact."""
+    t = _seed(spark, str(tmp_path / "t"), n=40, checkpoint_interval=2)
+    t.delete_where(F.col("amount").between(10.0, 14.0))  # v1: vectors
+    v, _ = t.compact_buckets(min_files=1)  # v2: fold lands on the checkpoint
+    assert v == 2 and os.path.exists(os.path.join(t.log_dir, "00000002.checkpoint.json"))
+    assert table_changes(t, 1).count() == 0
+    assert sorted(r["id"] for r in table_changes(t, 0).collect()) == [10, 11, 12, 13, 14]
+    mv = {r["g"]: r["n_rows"] for r in fold_mv(t, ["g"], "amount").collect()}
+    direct = {r["g"]: r["count"] for r in t.read_state().groupBy("g").count().collect()}
+    assert mv == direct
 
 
 def test_mor_mv_and_compaction_absorb(spark, tmp_path):
@@ -181,6 +288,82 @@ def test_mor_conflicts_with_concurrent_delete(spark, tmp_path):
     with pytest.raises(ConcurrentWriteError):
         t1.merge_cdc_batch_mor(_ev(spark, [(5, 1.0, "a", "u", "990000", None)]))
 
+    # a fused fold reads EVERY file of the folded bucket, bloom-skipped
+    # ones included: a concurrent delete on such a file must conflict
+    # too, or the fold would rewrite the deleted row back to life
+    t, post5, other, _ = _fold_race_table(spark, str(tmp_path / "fold"))
+    racer = BucketedTxLogTable(spark, t.path)
+    orig_t = t._try_commit
+    seen: list[dict] = []
+
+    def race_fold(version, entry):
+        if not seen:
+            seen.append(entry)
+            racer.delete_where(F.col("id") == 5)  # vectors only post5
+        return orig_t(version, entry)
+
+    t._try_commit = race_fold
+    with pytest.raises(ConcurrentWriteError):
+        t.merge_cdc_batch_mor(
+            _ev(spark, [(other, 1.0, "a", "u", "990000", None)]), max_dv_fraction=0.0
+        )
+    # the bloom probe skipped post5, the fold removes it
+    assert set(post5) <= set(seen[0]["removes"])
+    st = {r["id"] for r in BucketedTxLogTable(spark, t.path).read_state().collect()}
+    assert 5 not in st and len(st) == 39
+
+
+def _fold_race_table(spark, path):
+    """A 2-bucket bloom table where key 5's postimage sits in a file of
+    its own: a merge of ``other`` (same bucket) bloom-skips that file,
+    and its fused fold (threshold 0.0) must still remove it. Returns
+    (table, key 5's postimage files, other, a key of the other bucket)."""
+    from cdc_streaming_pipeline_spark.operators.merge import touched_buckets
+
+    t = BucketedTxLogTable(
+        spark, path, key_cols=["id"], n_buckets=2,
+        stats_cols=["amount"], bloom_cols=["id"],
+    )
+    t.init_from_events(
+        spark.createDataFrame(
+            [(i, float(i), "a", "r", f"{i:06d}", None) for i in range(40)], S
+        )
+    )
+    t.merge_cdc_batch_mor(_ev(spark, [(5, 5555.0, "z", "u", "900000", None)]))
+    post5 = t._read_entry(t.latest_version())["adds"]
+
+    def bucket(k):
+        return touched_buckets(_ev(spark, [(k, 0.0, "a", "u", "0", None)]), ["id"], 2)[0]
+
+    other = next(k for k in range(6, 40) if bucket(k) == bucket(5))
+    far = next(k for k in range(6, 40) if bucket(k) != bucket(5))
+    return t, post5, other, far
+
+
+def test_mor_fused_fold_retries_past_disjoint_commit(spark, tmp_path):
+    """The files a fused fold removes are part of its read set, not
+    foreign files in its bucket: a lost race against a commit in the
+    OTHER bucket retries and lands, with both writes in the state."""
+    t, post5, other, far = _fold_race_table(spark, str(tmp_path / "t"))
+    racer = BucketedTxLogTable(spark, t.path)
+    orig_t = t._try_commit
+    fired: list[int] = []
+
+    def race(version, entry):
+        if not fired:
+            fired.append(version)
+            racer.merge_cdc_batch_mor(_ev(spark, [(far, 77.0, "a", "u", "990000", None)]))
+        return orig_t(version, entry)
+
+    t._try_commit = race
+    v, _ = t.merge_cdc_batch_mor(
+        _ev(spark, [(other, 1.0, "a", "u", "990000", None)]), max_dv_fraction=0.0
+    )
+    assert v == fired[0] + 1
+    assert set(post5) <= set(t._read_entry(v)["removes"])
+    st = {r["id"]: r["amount"] for r in t.read_state().collect()}
+    assert st[other] == 1.0 and st[far] == 77.0 and st[5] == 5555.0 and len(st) == 40
+
 
 def test_mor_point_merge_bloom_prunes_scan(spark, tmp_path, monkeypatch):
     """With bloom sidecars on the key column, a point merge reads only
@@ -228,6 +411,62 @@ def test_mor_point_merge_bloom_prunes_scan(spark, tmp_path, monkeypatch):
     assert seen and seen[0] == 1, seen
     st = {r["id"]: r["amount"] for r in t.read_state().collect()}
     assert st[other] == 7777.0 and st[5] == 5555.0 and len(st) == 200
+
+
+def _put_json(path, rows):
+    import json as _json
+
+    with open(path, "w") as f:
+        for r in rows:
+            keys = ("id", "amount", "g", "_op", "_lsn", "_deleted")
+            f.write(_json.dumps(dict(zip(keys, r))) + "\n")
+
+
+def test_mor_stream_sink_lands_one_version_per_batch(spark, tmp_path):
+    """With no external deletes, the MoR sink's DV-debt fold rides the
+    merge commit: every micro-batch — folds included — lands as exactly
+    ONE log version, and the state stays model-exact."""
+    from cdc_streaming_pipeline_spark.streaming.pipeline import (
+        bucketed_merge_stream_sink,
+    )
+
+    src = tmp_path / "src"
+    src.mkdir()
+    table_path = str(tmp_path / "table")
+    expect = {i: float(i) for i in range(24)}
+    _put_json(src / "w000.json", [(i, float(i), "a", "r", "0001", None) for i in range(24)])
+    n_batches = 7
+    for w in range(1, n_batches):
+        keys = [(w + j) % 9 for j in range(3)]
+        for k in keys:
+            expect[k] = 1000.0 * w + k
+        _put_json(
+            src / f"w{w:03d}.json",
+            [(k, 1000.0 * w + k, "a", "u", f"{w + 1:04d}", None) for k in keys],
+        )
+    q = (
+        bucketed_merge_stream_sink(
+            spark.readStream.schema(S).option("maxFilesPerTrigger", "1").json(str(src)),
+            table_path,
+            str(tmp_path / "ckpt"),
+            key_cols=["id"],
+            n_buckets=4,
+            stats_cols=["amount"],
+            max_dv_fraction=0.3,
+            merge_mode="mor",
+        )
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(600)
+
+    t = BucketedTxLogTable(spark, table_path)
+    assert {r["id"]: r["amount"] for r in t.read_state().collect()} == expect
+    hist = t.history()
+    assert len(hist) == n_batches, [e["mode"] for e in hist]
+    assert [e["txn"][1] for e in hist] == list(range(n_batches))
+    assert all(e["mode"] == "merge_mor" for e in hist[1:])
+    assert any(e["removes"] for e in hist[1:])  # folds happened, in-commit
 
 
 @pytest.mark.slowsuite
