@@ -38,6 +38,7 @@ the protocol demonstrated here.
 
 from __future__ import annotations
 
+import dataclasses
 import datetime as _dt
 import json
 import math
@@ -1205,16 +1206,19 @@ def _bucket_overlap(t: int, n_ours: int, tag: int, n_theirs: int) -> bool:
     return t % g == tag % g
 
 
-#: per-handle bounds on the parsed-entry and parsed-checkpoint caches: a
-#: resolution replays at most checkpoint_interval entries past one
-#: checkpoint, so these hold every hot object with room for time travel,
-#: while a handle that lives across an unbounded stream stays bounded
+#: per-handle bounds on the parsed-entry and Snapshot caches: a
+#: snapshot replays at most checkpoint_interval entries past one
+#: checkpoint, whose own Snapshot stays cached as the replay base, so
+#: these hold every hot object with room for time travel, while a
+#: handle that lives across an unbounded stream stays bounded
 ENTRY_CACHE_MAX = 256
-CHECKPOINT_CACHE_MAX = 4
+SNAPSHOT_CACHE_MAX = 4
 
 
 def _cache_put(cache: dict, key, value, cap: int) -> None:
-    """Insert, evicting the oldest insertion once ``cap`` is reached."""
+    """Insert (or refresh) as the newest, evicting the least recently
+    put once ``cap`` is reached."""
+    cache.pop(key, None)
     if len(cache) >= cap:
         cache.pop(next(iter(cache)))
     cache[key] = value
@@ -1245,15 +1249,15 @@ class TxLogTable:
         # decision defaults to the blob store's conditional put.
         self.blob = blob_backend or DEFAULT_BLOB
         self._put_if_absent = commit_backend or self.blob.put_if_absent
-        # parsed log entries and checkpoints by version: both are
-        # immutable once published (an entry once its put_if_absent won,
-        # a checkpoint at v is never rewritten), so one handle parses
-        # each at most once however many resolvers replay it. Only
-        # successful parses are kept; the _last_checkpoint pointer and
-        # existence probes always go to the store. Callers treat the
-        # returned dicts as read-only.
+        # parsed log entries and folded Snapshots by version: both are
+        # immutable once published (an entry once its put_if_absent won;
+        # a version's state never changes), so one handle parses each
+        # entry at most once and replays each version at most once while
+        # it stays cached. Only successful parses are kept; the
+        # _last_checkpoint pointer and existence probes always go to the
+        # store. Callers treat the cached objects as read-only.
         self._entry_cache: dict[int, dict] = {}
-        self._checkpoint_cache: dict[int, dict] = {}
+        self._snapshots: dict[int, Snapshot] = {}
         os.makedirs(self.log_dir, exist_ok=True)
         os.makedirs(self.data_dir, exist_ok=True)
 
@@ -1264,21 +1268,32 @@ class TxLogTable:
 
     def latest_version(self) -> int | None:
         """Newest committed version. Committed versions are DENSE
-        consecutive integers (every writer races for latest+1; the
-        SQLite backend heals a crashed winner's file before reporting a
-        loss, so a materialized v implies materialized v-1), which lets
-        this probe upward from the last checkpoint instead of listing
-        the whole log directory — O(commits-since-checkpoint), the same
-        bound as snapshot resolution. Falls back to the full listing
-        when no checkpoint exists yet."""
-        ck = _last_checkpoint_version(self)
-        if ck is None:
+        consecutive integers that are never deleted (every writer races
+        for latest+1; the SQLite backend heals a crashed winner's file
+        before reporting a loss, so a materialized v implies
+        materialized v-1), which lets this probe upward from a version
+        known to exist instead of listing the whole log directory."""
+        return self._head()[0]
+
+    def _head(self) -> tuple[int | None, int | None]:
+        """(newest committed version, the ``_last_checkpoint`` pointer if
+        this call read one). The probe starts at the newest version this
+        handle has already read or replayed; a cold handle, or one more
+        than a commit behind, reads the pointer and starts there when it
+        is ahead. A log without a checkpoint is listed once, on a cold
+        handle."""
+        head = max([*self._entry_cache, *self._snapshots], default=None)
+        ptr = None
+        if head is None or self.blob.exists(self._entry_path(head + 2)):
+            ptr = _last_checkpoint_version(self)
+            if ptr is not None and (head is None or ptr > head):
+                head = ptr
+        if head is None:
             versions = self._versions()
-            return versions[-1] if versions else None
-        v = ck
-        while self.blob.exists(self._entry_path(v + 1)):
-            v += 1
-        return v
+            return (versions[-1] if versions else None), ptr
+        while self.blob.exists(self._entry_path(head + 1)):
+            head += 1
+        return head, ptr
 
     def _versions(self) -> list[int]:
         names = (
@@ -1322,17 +1337,6 @@ class TxLogTable:
             return []
         lo = max(0, latest - limit + 1)
         return [self._read_entry(v) for v in range(lo, latest + 1)]
-
-    def _snapshot_files(self, version: int | None = None) -> list[str]:
-        files: list[str] = []
-        for v in self._versions():
-            if version is not None and v > version:
-                break
-            e = self._read_entry(v)
-            removed = set(e.get("removes", []))
-            files = [f for f in files if f not in removed]
-            files.extend(e.get("adds", []))
-        return files
 
     # ---- write path -----------------------------------------------------
 
@@ -1384,8 +1388,7 @@ class TxLogTable:
         entry probe from the recorded commit, bounded by how far back
         the asked-for epoch landed."""
         writer, epoch = txn
-        _, _, txns = resolve_snapshot_state(self)
-        rec = txns.get(writer)
+        rec = snapshot(self).txns.get(writer)
         if rec is None or epoch > rec[0]:
             return None
         if epoch == rec[0]:
@@ -1513,10 +1516,10 @@ class TxLogTable:
         DataFrame is pinned to the resolved immutable file list —
         snapshot isolation against any later commit. Resolution uses
         the newest usable checkpoint (falls back to full log replay)."""
-        files = resolve_with_checkpoint(self, version)
-        if not files:
+        snap = snapshot(self, version)
+        if not snap.files:
             raise FileNotFoundError(f"no committed data at version {version}")
-        return self._read_snapshot_files(files, version)
+        return self._read_snapshot_files(snap.files, snap.version)
 
     def _read_snapshot_files(self, files: list[str], version: int | None = None) -> DataFrame:
         """mergeSchema read of snapshot files with the version's DELETION
@@ -1530,7 +1533,7 @@ class TxLogTable:
         fraction after a selective delete is a handful of files, so the
         read costs what a clean read costs plus an anti-join over the
         touched slice (measured in .benchmarks/SCALE10_r12.md)."""
-        dvs = resolve_file_dvs(self, version)
+        dvs = snapshot(self, version).dvs
         dirty = [f for f in files if f in dvs]
         if not dirty:
             return self._raw_read(files, version)
@@ -1558,8 +1561,7 @@ class TxLogTable:
         wid = wid_at(version) if wid_at is not None else {}
         if not wid:
             return self.spark.read.option("mergeSchema", "true").parquet(*files)
-        target = self.latest_version() if version is None else version
-        sj = _resolve_schema_json(self, target)
+        sj = snapshot(self, version).schema
         if sj is None:
             return self.spark.read.option("mergeSchema", "true").parquet(*files)
         return self.spark.read.schema(_widened_struct(sj, wid)).parquet(*files)
@@ -1638,11 +1640,10 @@ class TxLogTable:
 
     def _empty_frame(self, version: int | None = None) -> DataFrame:
         """A zero-row DataFrame with the table's schema as of
-        ``version``, recovered from (newest first): the schema recorded
-        in a log entry or checkpoint (a DOWNWARD probe bounded by the
-        newest checkpoint, which carries the schema it resolved — not a
-        full-log read), or any still-on-disk file ever referenced by
-        the log. Raises only when the log carries no schema evidence."""
+        ``version``, recovered from (newest first): the newest schema
+        recorded in a log entry or checkpoint (the snapshot's), or any
+        still-on-disk file ever referenced by the log. Raises only when
+        the log carries no schema evidence."""
         from pyspark.sql.types import StructType
 
         target = self.latest_version() if version is None else version
@@ -1686,13 +1687,12 @@ class TxLogTable:
         filter is still applied, so the result is exact regardless of
         how coarse the stats are. Returns (df, files_read,
         files_total) so callers/tests can see the pruning."""
-        files = resolve_with_checkpoint(self, version)
+        snap = snapshot(self, version)
+        files, version = snap.files, snap.version
         if not files:
             raise FileNotFoundError(f"no committed data at version {version}")
-        stats = resolve_file_stats(self, version)
-        nulls = resolve_file_nulls(self, version)
         pred = _normalize_pred((col, "between", lo, hi))
-        keep = [f for f in files if _pred_survives(f, pred, stats, {}, nulls)]
+        keep = [f for f in files if _pred_survives(f, pred, snap.stats, {}, snap.nulls)]
         from pyspark.sql import functions as F
 
         if not keep:
@@ -2725,10 +2725,9 @@ class BucketedTxLogTable(TxLogTable):
             # keeps entries for files added-then-removed since the
             # checkpoint, and a dead file's layout must not veto a count
             # every live file actually permits
-            layouts = resolve_file_layouts(self, base)
+            pinned = snapshot(self, base)
             live_layouts = {
-                layouts.get(f, self.n_buckets)
-                for f in resolve_with_checkpoint(self, base)
+                pinned.layouts.get(f, self.n_buckets) for f in pinned.files
             } | {self.n_buckets}
             bad = [n for n in live_layouts if new_n_buckets % n != 0]
             if bad:
@@ -2884,10 +2883,11 @@ class BucketedTxLogTable(TxLogTable):
         if base is None:
             return None, 0
         self._refresh_meta(base)
-        snap, bmap, _ = resolve_snapshot_state(self, base)
-        layouts = resolve_file_layouts(self, base)
+        pinned = snapshot(self, base)
         stale = [
-            f for f in snap if layouts.get(f, self.n_buckets) != self.n_buckets
+            f
+            for f in pinned.files
+            if pinned.layouts.get(f, self.n_buckets) != self.n_buckets
         ]
         if max_files is not None:
             stale = stale[:max_files]
@@ -2917,6 +2917,49 @@ class BucketedTxLogTable(TxLogTable):
             write_checkpoint(self, version)
         return version, len(stale)
 
+    def _read_set_intact(
+        self, new: Snapshot, ours: set[str], dv_read: dict, touched: set[int]
+    ) -> bool:
+        """A merge that lost the version race may retry on top of ``new``
+        iff the interleaved commits changed nothing in ITS buckets:
+
+        - every file of its read set ``ours`` is still live, with the
+          vector it was read with (``dv_read``) — a concurrent
+          delete_where on OUR files changes their visible rows in place,
+          and retrying would resurrect the concurrently-deleted rows;
+        - no foreign file landed in a ``touched`` bucket, by the
+          layout-SYMMETRIC overlap test (gcd rule): a racing lazy
+          rebucket can land foreign files under a LARGER layout n' than
+          this handle's N, where a one-sided ``t % n' == tag`` test
+          misses true overlaps (N=8, t=3 vs n'=16, tag=11) and both
+          writers would commit images of the same key;
+        - no foreign file WITHOUT a bucket tag appeared (a plain
+          commit()/compact interleaved): it may hold rows of any bucket
+          including ours — the rule the merge-start path applies to
+          untagged snapshots — else the merged buckets coexist with its
+          rows and read_state() surfaces duplicate/stale keys."""
+        live = set(new.files)
+        return (
+            ours <= live
+            and all(new.dvs.get(f) == dv_read.get(f) for f in ours)
+            and not any(
+                f not in ours
+                and (
+                    f not in new.buckets
+                    or any(
+                        _bucket_overlap(
+                            t,
+                            self.n_buckets,
+                            new.buckets[f],
+                            new.layouts.get(f, self.n_buckets),
+                        )
+                        for t in touched
+                    )
+                )
+                for f in live
+            )
+        )
+
     def merge_cdc_batch(
         self,
         batch: DataFrame,
@@ -2928,7 +2971,7 @@ class BucketedTxLogTable(TxLogTable):
 
         Metadata cost is O(commits-since-checkpoint): the snapshot,
         bucket map, and txn state resolve through the newest checkpoint
-        (``resolve_snapshot_state``), and every
+        (``snapshot``), and every
         ``checkpoint_interval``-th merge writes the next checkpoint — so
         at CDC cadence (a merge per minute for a year ≈ 500k commits)
         each merge reads a bounded log suffix, not the whole history.
@@ -2948,9 +2991,10 @@ class BucketedTxLogTable(TxLogTable):
             raise FileNotFoundError("merge into an uninitialized table; call init_from_events")
         self._refresh_meta(base)  # adopt an out-of-band rebucket's layout
         batch = self._to_physical(batch)
-        snap, bmap, txns = resolve_snapshot_state(self, base)
+        pinned = snapshot(self, base)
+        snap, bmap = pinned.files, pinned.buckets
         if txn is not None:
-            done = txns.get(txn[0])
+            done = pinned.txns.get(txn[0])
             if done is not None and txn[1] <= done[0]:
                 return done[1], []  # replayed micro-batch: already applied
         touched = set(
@@ -2972,7 +3016,7 @@ class BucketedTxLogTable(TxLogTable):
         # files written under an old divisor layout are still selected
         # exactly, and this merge's rewrite migrates them to the
         # current layout as a side effect.
-        layouts = resolve_file_layouts(self, base)
+        layouts = pinned.layouts
         old = [
             f
             for f in snap
@@ -2991,7 +3035,7 @@ class BucketedTxLogTable(TxLogTable):
         # adding/removing files, so the retry path must compare this
         # (resurrecting concurrently-deleted rows otherwise)
         ours = set(old)
-        dv_ours = {f: m for f, m in resolve_file_dvs(self, base).items() if f in ours}
+        dv_ours = {f: m for f, m in pinned.dvs.items() if f in ours}
         merged = (
             batch
             if prev is None
@@ -3002,9 +3046,7 @@ class BucketedTxLogTable(TxLogTable):
         )
         adds, buckets = self._stage_bucketed(
             new_state,
-            salt_n=self._merge_salt_n(
-                old, len(touched), resolve_file_bytes(self, base)
-            ),
+            salt_n=self._merge_salt_n(old, len(touched), pinned.bytes),
             n_buckets_hint=len(touched),
         )
         staged_facts = self._staged_skipping_facts(adds, new_state.columns)
@@ -3038,64 +3080,19 @@ class BucketedTxLogTable(TxLogTable):
                 if self.checkpoint_interval and version % self.checkpoint_interval == 0:
                     write_checkpoint(self, version)
                 return version, sorted(touched)
-            # lost the race: file-granular revalidation. The read set
-            # (old files of touched buckets) is still valid iff the
-            # interleaved commits changed nothing in OUR buckets.
-            new_base = self.latest_version()
-            new_snap_l, new_bmap, new_txns = resolve_snapshot_state(self, new_base)
+            # lost the race: file-granular revalidation against ONE
+            # snapshot of the new head
+            new = snapshot(self, self.latest_version())
             if txn is not None:
-                done = new_txns.get(txn[0])
+                done = new.txns.get(txn[0])
                 if done is not None and txn[1] <= done[0]:
                     return done[1], []  # the interleaved commit WAS this txn
-            new_snap = set(new_snap_l)
-            still_there = ours <= new_snap
-            # layout-SYMMETRIC overlap test (gcd rule): a racing lazy
-            # rebucket can land foreign files under a LARGER layout n'
-            # than this handle's N — the old one-sided `t % n' == tag`
-            # test reduced to `t == tag` there and missed true overlaps
-            # (N=8, t=3 vs n'=16, tag=11), letting both writers commit
-            # images of the same key when our touched buckets held no
-            # old files (still_there trivially true).
-            new_layouts = resolve_file_layouts(self, new_base)
-            others_in_our_buckets = any(
-                f not in ours
-                and f in new_bmap
-                and any(
-                    _bucket_overlap(
-                        t, self.n_buckets, new_bmap[f], new_layouts.get(f, self.n_buckets)
-                    )
-                    for t in touched
-                )
-                for f in new_snap
-            )
-            # a foreign file with NO bucket tag (a plain commit()/compact
-            # interleaved) may hold rows of ANY bucket including ours —
-            # the same reason the merge-start path refuses untagged
-            # snapshots; the retry path must apply the identical rule or
-            # the merged buckets coexist with the foreign file's rows
-            # and read_state() surfaces duplicate/stale keys.
-            foreign_untagged = any(
-                f not in ours and f not in new_bmap for f in new_snap
-            )
-            # a concurrent delete_where that touched OUR files changes
-            # their visible rows in place — the merged output was
-            # computed against the old DV state, so retrying would
-            # resurrect the concurrently-deleted rows
-            new_dvs = resolve_file_dvs(self, new_base)
-            dvs_changed = any(
-                new_dvs.get(f) != dv_ours.get(f) for f in ours
-            )
-            if (
-                still_there
-                and not others_in_our_buckets
-                and not foreign_untagged
-                and not dvs_changed
-            ):
-                base = new_base  # disjoint-bucket interleave: safe retry
+            if self._read_set_intact(new, ours, dv_ours, touched):
+                base = new.version  # disjoint-bucket interleave: safe retry
                 continue
             raise ConcurrentWriteError(
                 f"merge of buckets {sorted(touched)} conflicts with a commit "
-                f"at version {new_base}"
+                f"at version {new.version}"
             )
         raise ConcurrentWriteError(f"merge gave up after {max_retries} retries")
 
@@ -3162,9 +3159,10 @@ class BucketedTxLogTable(TxLogTable):
             )
         self._refresh_meta(base)
         batch = self._to_physical(batch)
-        snap, bmap, txns = resolve_snapshot_state(self, base)
+        pinned = snapshot(self, base)
+        snap, bmap = pinned.files, pinned.buckets
         if txn is not None:
-            done = txns.get(txn[0])
+            done = pinned.txns.get(txn[0])
             if done is not None and txn[1] <= done[0]:
                 return done[1], []  # replayed micro-batch: already applied
         # Fused batch probe (MoR wall parity, SCALE10_r15): ONE capped
@@ -3222,7 +3220,7 @@ class BucketedTxLogTable(TxLogTable):
                 f"{len(untagged)} snapshot files carry no bucket tag — not a "
                 "bucket-pure table (mixed with plain commits?)"
             )
-        layouts = resolve_file_layouts(self, base)
+        layouts = pinned.layouts
         old = [
             f
             for f in snap
@@ -3250,7 +3248,7 @@ class BucketedTxLogTable(TxLogTable):
                 # key values come from the fused probe above — no
                 # second batch job
                 vals = [_dict_norm(v) for v in probe_keys]
-                blooms = resolve_file_blooms(self, base)
+                blooms = pinned.blooms
                 old = [
                     f
                     for f in old
@@ -3259,7 +3257,7 @@ class BucketedTxLogTable(TxLogTable):
                         and _bloom_pruned(bf, vals, self.blob)
                     )
                 ]
-        dvs = resolve_file_dvs(self, base)
+        dvs = pinned.dvs
         old_set = set(old)
         dv_ours = {f: m for f, m in dvs.items() if f in old_set}
         dv_dir = os.path.join(self.data_dir, "_dv")
@@ -3314,9 +3312,7 @@ class BucketedTxLogTable(TxLogTable):
                     f: dvs.get(f, {}).get("n", 0) + new_n.get(f, 0)
                     for f in bucket_files
                 }
-                fold = self._mor_fold_files(
-                    deleted, bmap, touched, base, max_dv_fraction
-                )
+                fold = self._mor_fold_files(deleted, pinned, touched, max_dv_fraction)
             fold_set = set(fold)
             parts = []
             if oldk is not None:
@@ -3418,51 +3414,25 @@ class BucketedTxLogTable(TxLogTable):
                 if self.checkpoint_interval and version % self.checkpoint_interval == 0:
                     write_checkpoint(self, version)
                 return version, sorted(touched)
-            new_base = self.latest_version()
-            new_snap_l, new_bmap, new_txns = resolve_snapshot_state(self, new_base)
+            new = snapshot(self, self.latest_version())
             if txn is not None:
-                done = new_txns.get(txn[0])
+                done = new.txns.get(txn[0])
                 if done is not None and txn[1] <= done[0]:
                     return done[1], []
-            new_snap = set(new_snap_l)
-            still_there = ours <= new_snap
-            new_layouts = resolve_file_layouts(self, new_base)
-            others_in_our_buckets = any(
-                f not in ours
-                and f in new_bmap
-                and any(
-                    _bucket_overlap(
-                        t, self.n_buckets, new_bmap[f], new_layouts.get(f, self.n_buckets)
-                    )
-                    for t in touched
-                )
-                for f in new_snap
-            )
-            foreign_untagged = any(
-                f not in ours and f not in new_bmap for f in new_snap
-            )
-            new_dvs = resolve_file_dvs(self, new_base)
-            dvs_changed = any(new_dvs.get(f) != dv_read.get(f) for f in ours)
-            if (
-                still_there
-                and not others_in_our_buckets
-                and not foreign_untagged
-                and not dvs_changed
-            ):
-                base = new_base  # disjoint-bucket interleave: safe retry
+            if self._read_set_intact(new, ours, dv_read, touched):
+                base = new.version  # disjoint-bucket interleave: safe retry
                 continue
             raise ConcurrentWriteError(
                 f"merge_mor of buckets {sorted(touched)} conflicts with a "
-                f"commit at version {new_base}"
+                f"commit at version {new.version}"
             )
         raise ConcurrentWriteError(f"merge_mor gave up after {max_retries} retries")
 
     def _mor_fold_files(
         self,
         deleted: dict[str, int],
-        bmap: dict[str, int],
+        snap: Snapshot,
         touched: set[int],
-        base: int,
         max_dv_fraction: float,
     ) -> list[str]:
         """The files a MoR merge folds in its own commit: ``deleted``
@@ -3470,14 +3440,13 @@ class BucketedTxLogTable(TxLogTable):
         this merge's vectors land; each touched bucket holding a file
         over the DV-debt threshold is folded whole, so every file
         covering it is returned."""
-        dirty = dv_debt_files(deleted, resolve_file_nulls(self, base), max_dv_fraction)
+        dirty = dv_debt_files(deleted, snap.nulls, max_dv_fraction)
         if not dirty:
             return []
-        layouts = resolve_file_layouts(self, base)
 
         def covers(f: str, t: int) -> bool:
             return _bucket_overlap(
-                t, self.n_buckets, bmap[f], layouts.get(f, self.n_buckets)
+                t, self.n_buckets, snap.buckets[f], snap.layouts.get(f, self.n_buckets)
             )
 
         folded = {t for t in touched if any(covers(f, t) for f in dirty)}
@@ -3516,10 +3485,10 @@ class BucketedTxLogTable(TxLogTable):
         if base is None:
             return None, []
         self._refresh_meta(base)  # re-staging hashes with n_buckets
-        snap, bmap, _ = resolve_snapshot_state(self, base)
-        layouts = resolve_file_layouts(self, base)
+        pinned = snapshot(self, base)
+        bmap, layouts = pinned.buckets, pinned.layouts
         per_bucket: dict[int, list[str]] = {}
-        for f in snap:
+        for f in pinned.files:
             tag = bmap.get(f)
             if tag is None:
                 continue
@@ -3538,7 +3507,7 @@ class BucketedTxLogTable(TxLogTable):
         from cdc_streaming_pipeline_spark.operators.merge import BUCKET_COL
 
         if cluster_cols and cluster_parts is None:
-            sizes = resolve_file_bytes(self, base)
+            sizes = pinned.bytes
             known = [sizes[f] for f in old if f in sizes]
             total = sum(known) if known else 0
             cluster_parts = max(
@@ -3666,13 +3635,10 @@ class BucketedTxLogTable(TxLogTable):
 
         if not predicates:
             raise ValueError("read_state_pruned needs at least one predicate")
-        files = resolve_with_checkpoint(self, version)
+        snap = snapshot(self, version)
+        files, version = snap.files, snap.version
         if not files:
             raise FileNotFoundError(f"no committed data at version {version}")
-        stats = resolve_file_stats(self, version)
-        dicts = resolve_file_dicts(self, version)
-        nulls = resolve_file_nulls(self, version)
-        blooms = resolve_file_blooms(self, version)
         # facts are keyed by PHYSICAL column names; probe columns arrive
         # logical — translate before fact lookup, keep the residual
         # filters on the logical frame
@@ -3685,7 +3651,9 @@ class BucketedTxLogTable(TxLogTable):
             f
             for f in files
             if all(
-                _pred_survives(f, p, stats, dicts, nulls, blooms, self.blob)
+                _pred_survives(
+                    f, p, snap.stats, snap.dicts, snap.nulls, snap.blooms, self.blob
+                )
                 for p in normd
             )
         ]
@@ -3727,21 +3695,20 @@ class BucketedTxLogTable(TxLogTable):
         ``read_state_filtered``, ``delete_where`` and ``update_where``:
         walk the Column into a prune tree, translate probe columns to
         physical names, keep every file the facts cannot rule out."""
-        files = resolve_with_checkpoint(self, version)
+        snap = snapshot(self, version)
+        files = list(snap.files)
         tree = _column_prune_tree(predicate)
         if tree is _TRUE or not files:
             return list(files), files
-        stats = resolve_file_stats(self, version)
-        dicts = resolve_file_dicts(self, version)
-        nulls = resolve_file_nulls(self, version)
-        blooms = resolve_file_blooms(self, version)
         ntree = _map_tree_cols(
-            _normalize_tree(tree), lambda c: self._phys_name(c, version)
+            _normalize_tree(tree), lambda c: self._phys_name(c, snap.version)
         )
         keep = [
             f
             for f in files
-            if _tree_survives(f, ntree, stats, dicts, nulls, blooms, self.blob)
+            if _tree_survives(
+                f, ntree, snap.stats, snap.dicts, snap.nulls, snap.blooms, self.blob
+            )
         ]
         return keep, files
 
@@ -4546,70 +4513,35 @@ def write_checkpoint(table: TxLogTable, version: int | None = None) -> int:
     snapshot resolution O(commits-since-checkpoint) when a table has
     accumulated thousands of commits (Delta's _last_checkpoint).
 
-    The checkpoint carries everything a writer needs to resolve state
-    without a full replay (Delta checkpoints store the same three):
-    - ``files`` — the live file list,
-    - ``file_buckets`` — the bucket tag of every live file (the fact
-      ``BucketedTxLogTable.merge_cdc_batch`` prunes on),
-    - ``txns`` — per-writer latest (epoch, version) idempotence state.
+    The checkpoint is the LIVE-restricted ``Snapshot``: the live file
+    list, the per-writer txn state, every fact map of ``_FACT_KEYS``
+    (bucket tags, stats, sizes, layouts, dictionaries, null counts,
+    bloom references, deletion vectors) keyed by live files only — so
+    it stays O(live) — and the newest recorded schema and table meta.
+    A checkpoint lacking any fact map is skipped by readers.
 
     Writing a checkpoint is itself incremental (it resolves through the
     previous checkpoint), so a steady-cadence auto-checkpoint keeps the
     metadata cost of EVERY operation bounded regardless of table age.
     Idempotent and crash-safe: the checkpoint is derived state; a torn
-    write is simply ignored by the reader's try/except and replay falls
-    back to the previous checkpoint or the full log."""
-    v = table.latest_version() if version is None else version
-    files, buckets, txns = resolve_snapshot_state(table, v)
-    stats = resolve_file_stats(table, v)
-    live = set(files)
-    ck = {
-        "version": v,
-        "files": files,
-        "file_buckets": buckets,
-        "txns": txns,
-        # data-skipping stats restricted to LIVE files, so
-        # read_where's stats resolution is also bounded by the
-        # checkpoint suffix (and the checkpoint stays O(live))
-        "file_stats": {f: s for f, s in stats.items() if f in live},
-        # per-file byte sizes (salt sizing, growth policies) — same
-        # live-only restriction, same bounded resolution
-        "file_bytes": {
-            f: s for f, s in resolve_file_bytes(table, v).items() if f in live
-        },
-        # per-file write-time layout (lazy-rebucket pruning) — same shape
-        "file_layouts": {
-            f: n for f, n in resolve_file_layouts(table, v).items() if f in live
-        },
-        # per-file value dictionaries (equality/IN pruning) — same shape
-        "file_dicts": {
-            f: d for f, d in resolve_file_dicts(table, v).items() if f in live
-        },
-        # per-file null counts (IS [NOT] NULL pruning) — same shape
-        "file_nulls": {
-            f: d for f, d in resolve_file_nulls(table, v).items() if f in live
-        },
-        # per-file bloom sidecar references (point-lookup pruning) — same
-        "file_blooms": {
-            f: d for f, d in resolve_file_blooms(table, v).items() if f in live
-        },
-        # per-file deletion vectors (merge-on-read deletes) — correctness
-        # facts, not optimizations: the live restriction is the same but
-        # readers RAISE on a missing sidecar instead of degrading
-        "file_dvs": {
-            f: d for f, d in resolve_file_dvs(table, v).items() if f in live
-        },
-    }
-    # carry the newest recorded schema forward so _empty_frame and the
-    # next checkpoint's own schema resolution never probe past a
-    # checkpoint (bounded like every other metadata path)
-    sj = _resolve_schema_json(table, v)
-    if sj is not None:
-        ck["schema"] = sj
-    tm = resolve_table_meta(table, v)
-    if tm is not None:
-        ck["table_meta"] = tm
+    write is simply skipped by the reader and replay falls back to the
+    previous checkpoint or the full log."""
+    snap = snapshot(table, version).live()
+    v = snap.version
+    ck = {"version": v, "files": snap.files, "txns": snap.txns}
+    ck.update({key: getattr(snap, name) for name, (_, key) in _FACT_KEYS.items()})
+    if snap.schema is not None:
+        ck["schema"] = snap.schema
+    if snap.table_meta is not None:
+        ck["table_meta"] = snap.table_meta
     table.blob.put_text(_checkpoint_path(table, v), json.dumps(ck))
+    # what a reader would load from the file just written
+    _cache_put(
+        table._snapshots,
+        v,
+        dataclasses.replace(snap, checkpoint_version=v),
+        SNAPSHOT_CACHE_MAX,
+    )
     # the _last_checkpoint POINTER (Delta's): O(1) checkpoint discovery
     # instead of listing the accumulated checkpoint files (at CDC
     # cadence with a checkpoint every 10 merges, those are O(age)/10 —
@@ -4633,247 +4565,244 @@ def _last_checkpoint_version(table: TxLogTable) -> int | None:
         return None  # pointer absent/torn: derived state, callers fall back
 
 
-def _load_checkpoint(table: TxLogTable, version: int) -> dict:
-    """The parsed checkpoint at ``version``, parsed at most once per
-    handle (a checkpoint is never rewritten); raises like the blob GET
-    or the JSON parse, and a failed load is not cached."""
-    ck = table._checkpoint_cache.get(version)
-    if ck is None:
+#: Snapshot fact map -> (log-entry key, checkpoint key): the one place
+#: the two formats' names meet. They agree except for the write-time
+#: layout, recorded as ``file_layout_n`` in entries and ``file_layouts``
+#: in checkpoints. Every map folds by file key, the newest entry wins;
+#: ``buckets`` alone also forgets the files an entry removes.
+_FACT_KEYS = {
+    "buckets": ("file_buckets", "file_buckets"),
+    "stats": ("file_stats", "file_stats"),
+    "bytes": ("file_bytes", "file_bytes"),
+    "layouts": ("file_layout_n", "file_layouts"),
+    "dicts": ("file_dicts", "file_dicts"),
+    "nulls": ("file_nulls", "file_nulls"),
+    "blooms": ("file_blooms", "file_blooms"),
+    "dvs": ("file_dvs", "file_dvs"),
+}
+
+
+@dataclasses.dataclass(frozen=True)
+class Snapshot:
+    """Every log fact of one table version, folded in ONE pass over the
+    newest usable checkpoint and the log suffix after it — Delta's log
+    replay (Armbrust et al., VLDB 2020). ``snapshot`` builds and caches
+    it per handle, so the containers are shared: treat them as
+    read-only (the ``resolve_*`` functions hand out copies).
+
+    ``files`` is the live file list in log order; ``txns`` maps each
+    writer to [latest epoch, the version it committed as]; the fact
+    maps of ``_FACT_KEYS`` are described by the matching
+    ``resolve_file_*`` function; ``schema`` and ``table_meta`` are the
+    newest recorded values; ``checkpoint_version`` is the checkpoint
+    the replay started from (None: the full log). Fact maps keep the
+    facts of files removed after that checkpoint; ``live()`` drops
+    them. ``version`` is None only for a table with no commit."""
+
+    version: int | None
+    files: list = dataclasses.field(default_factory=list)
+    txns: dict = dataclasses.field(default_factory=dict)
+    buckets: dict = dataclasses.field(default_factory=dict)
+    stats: dict = dataclasses.field(default_factory=dict)
+    bytes: dict = dataclasses.field(default_factory=dict)
+    layouts: dict = dataclasses.field(default_factory=dict)
+    dicts: dict = dataclasses.field(default_factory=dict)
+    nulls: dict = dataclasses.field(default_factory=dict)
+    blooms: dict = dataclasses.field(default_factory=dict)
+    dvs: dict = dataclasses.field(default_factory=dict)
+    schema: dict | None = None
+    table_meta: dict | None = None
+    checkpoint_version: int | None = None
+
+    def live(self) -> "Snapshot":
+        """This snapshot with every fact map restricted to live files —
+        the shape checkpoints, clones and ``describe_detail`` use."""
+        keep = set(self.files)
+        return dataclasses.replace(
+            self,
+            **{
+                name: {f: m for f, m in getattr(self, name).items() if f in keep}
+                for name in _FACT_KEYS
+            },
+        )
+
+
+def _checkpoint_snapshot(table: TxLogTable, version: int) -> Snapshot | None:
+    """The checkpoint at ``version`` as a Snapshot, cached on the handle;
+    None when it is absent, torn, or missing a fact map. A checkpoint
+    is derived state, so a bad one is skipped and replay falls back to
+    an older checkpoint or the full log — a missing map is never read
+    as empty."""
+    try:
         ck = json.loads(table.blob.get_text(_checkpoint_path(table, version)))
-        _cache_put(table._checkpoint_cache, version, ck, CHECKPOINT_CACHE_MAX)
-    return ck
+        snap = Snapshot(
+            version,
+            files=list(ck["files"]),
+            txns=dict(ck["txns"]),
+            schema=ck.get("schema"),
+            table_meta=ck.get("table_meta"),
+            checkpoint_version=version,
+            **{name: dict(ck[key]) for name, (_, key) in _FACT_KEYS.items()},
+        )
+    except (OSError, ValueError, KeyError, TypeError):
+        return None
+    _cache_put(table._snapshots, version, snap, SNAPSHOT_CACHE_MAX)
+    return snap
 
 
-def _best_checkpoint(table: TxLogTable, target: int) -> dict | None:
-    # fast path: the pointer names the newest checkpoint; usable iff it
-    # doesn't overshoot the pinned version
-    ptr = _last_checkpoint_version(table)
-    start = target
-    if ptr is not None and ptr <= target:
-        try:
-            return _load_checkpoint(table, ptr)
-        except (OSError, json.JSONDecodeError):
-            start = ptr - 1  # torn checkpoint behind a valid pointer
-    # Newest checkpoint <= target WITHOUT listing-and-parsing every
-    # checkpoint file (the old glob fallback was O(age/interval) full
-    # JSON parses and fired on every pointer overshoot — notably
-    # vacuum's horizon and near-past time travel, re-introducing the
-    # O(age) wall on exactly the maintenance paths): probe DOWNWARD for
-    # existence. In steady state a checkpoint exists within
-    # checkpoint_interval versions, so this is O(interval) stat calls;
-    # a log with no checkpoint below target pays O(target) stats, still
-    # far below parsing each checkpoint's full file list.
+def _best_checkpoint(
+    table: TxLogTable, target: int, ptr: int | None = None
+) -> Snapshot | None:
+    """The newest usable checkpoint at or below ``target``. The
+    ``_last_checkpoint`` pointer (``ptr``, when the caller already read
+    it) names it when it does not overshoot; otherwise — an overshoot
+    from near-past time travel or vacuum's horizon, or a bad checkpoint
+    behind the pointer — probe DOWNWARD for existence: O(checkpoint
+    interval) stat calls in steady state, never a listing or a parse
+    of every checkpoint."""
+    if ptr is None:
+        ptr = _last_checkpoint_version(table)
+    start = ptr if ptr is not None and ptr <= target else target
     for v in range(start, -1, -1):
-        if v in table._checkpoint_cache:
-            return table._checkpoint_cache[v]
-        if not table.blob.exists(_checkpoint_path(table, v)):
+        cached = table._snapshots.get(v)
+        if cached is not None and cached.checkpoint_version == v:
+            _cache_put(table._snapshots, v, cached, SNAPSHOT_CACHE_MAX)  # keep it hot
+            return cached
+        if v != ptr and not table.blob.exists(_checkpoint_path(table, v)):
             continue
-        try:
-            return _load_checkpoint(table, v)
-        except (OSError, json.JSONDecodeError):
-            continue  # torn/unreadable checkpoint: derived state, skip
+        ck = _checkpoint_snapshot(table, v)
+        if ck is not None:
+            return ck
     return None
+
+
+def snapshot(table: TxLogTable, version: int | None = None) -> Snapshot:
+    """The table's ``Snapshot`` at ``version`` (default: latest): ONE
+    checkpoint lookup and ONE forward pass over the log suffix after
+    it, folding every entry into every fact at once —
+    O(commits-since-checkpoint), not O(table age). Cached per handle
+    by version (committed versions are immutable), so the many metadata
+    reads of one operation share a single replay.
+
+    A version past the head raises ValueError: the replay caches only
+    versions whose entry it read. A negative version is the empty
+    state before version 0."""
+    ptr = None
+    if version is None:
+        version, ptr = table._head()
+        if version is None:
+            return Snapshot(None)  # nothing committed yet
+    snap = table._snapshots.get(version)
+    if snap is None:
+        base = (_best_checkpoint(table, version, ptr) if version >= 0 else None) or Snapshot(-1)
+        snap = _replay(table, base, version)
+    if version >= 0:
+        _cache_put(table._snapshots, version, snap, SNAPSHOT_CACHE_MAX)
+    return snap
+
+
+def _replay(table: TxLogTable, base: Snapshot, version: int) -> Snapshot:
+    """Fold entries base.version+1 .. ``version`` onto a copy of ``base``."""
+    files = dict.fromkeys(base.files)  # an ordered set: log order kept
+    txns = {w: list(r) for w, r in base.txns.items()}
+    facts = {name: dict(getattr(base, name)) for name in _FACT_KEYS}
+    schema, meta = base.schema, base.table_meta
+    for v in range(base.version + 1, version + 1):
+        try:
+            e = table._read_entry(v)
+        except FileNotFoundError:
+            raise ValueError(
+                f"version {version} is past the head of {table.path} "
+                f"(no log entry {v})"
+            ) from None
+        for f in e.get("removes", ()):
+            files.pop(f, None)
+            facts["buckets"].pop(f, None)
+        files.update(dict.fromkeys(e.get("adds", ())))
+        for name, (key, _) in _FACT_KEYS.items():
+            facts[name].update(e.get(key, ()))
+        if e.get("txn"):
+            w, ep = e["txn"]
+            if w not in txns or ep >= txns[w][0]:
+                txns[w] = [ep, e["version"]]
+        schema = e.get("schema", schema)
+        meta = e.get("table_meta", meta)
+    return Snapshot(
+        version,
+        files=list(files),
+        txns=txns,
+        schema=schema,
+        table_meta=meta,
+        checkpoint_version=base.checkpoint_version,
+        **facts,
+    )
 
 
 def resolve_snapshot_state(
     table: TxLogTable, version: int | None = None
 ) -> tuple[list[str], dict[str, int], dict[str, list[int]]]:
     """(files, {file: bucket}, {writer: [epoch, commit_version]}) at
-    ``version``, replaying only the log suffix after the newest usable
-    checkpoint — O(commits-since-checkpoint), not O(table age). This is
-    the one resolution path shared by reads, merges, conflict
-    revalidation, and checkpoint writing itself.
-
-    Pre-v2 checkpoints (``files`` only) still bound the FILE replay;
-    bucket/txn state then conservatively replays the full log for just
-    those two maps (correct, slower — self-heals at the next
-    checkpoint, which always writes all three)."""
-    target = table.latest_version() if version is None else version
-    if target is None:
-        return [], {}, {}
-    best = _best_checkpoint(table, target)
-    files = list(best["files"]) if best else []
-    start = best["version"] + 1 if best else 0
-    if best is not None and "file_buckets" not in best:
-        # legacy checkpoint: files are usable, bucket/txn state is not —
-        # those two replay from 0 (entries are cached per resolution pass)
-        buckets: dict[str, int] = {}
-        txns: dict[str, list[int]] = {}
-        bt_start = 0
-    else:
-        buckets = dict(best["file_buckets"]) if best else {}
-        txns = {k: list(v) for k, v in best.get("txns", {}).items()} if best else {}
-        bt_start = start
-    for v in table._versions_between(min(start, bt_start), target):
-        e = table._read_entry(v)
-        if v >= bt_start:
-            removed = set(e.get("removes", []))
-            if removed:
-                buckets = {f: b for f, b in buckets.items() if f not in removed}
-            buckets.update(
-                {f: int(b) for f, b in e.get("file_buckets", {}).items()}
-            )
-            if e.get("txn"):
-                w, ep = e["txn"]
-                cur = txns.get(w)
-                if cur is None or ep >= cur[0]:
-                    txns[w] = [ep, e["version"]]
-        if v >= start:
-            removed = set(e.get("removes", []))
-            files = [f for f in files if f not in removed]
-            files.extend(e.get("adds", []))
-    return files, buckets, txns
+    ``version`` — the state reads, merges, conflict revalidation and
+    checkpoint writing share. Like every ``resolve_*`` function, a copy
+    of the cached ``snapshot``: callers may mutate it."""
+    s = snapshot(table, version)
+    return list(s.files), dict(s.buckets), {w: list(r) for w, r in s.txns.items()}
 
 
 def resolve_file_stats(table: TxLogTable, version: int | None = None) -> dict:
-    """{file: {col: [min, max]}} accumulated up to ``version`` through
-    the newest checkpoint that carries ``file_stats`` — the read_where
-    data-skipping resolution, bounded like every other metadata path
-    (checkpoints written before stats were checkpointed replay the full
-    log for stats only; self-heals at the next checkpoint)."""
-    target = table.latest_version() if version is None else version
-    if target is None:
-        return {}
-    best = _best_checkpoint(table, target)
-    if best is not None and "file_stats" in best:
-        stats = dict(best["file_stats"])
-        start = best["version"] + 1
-    else:
-        stats = {}
-        start = 0
-    for v in table._versions_between(start, target):
-        stats.update(table._read_entry(v).get("file_stats", {}))
-    return stats
+    """{file: {col: [min, max]}} up to ``version`` — the read_where
+    data-skipping facts."""
+    return dict(snapshot(table, version).stats)
 
 
 def resolve_file_bytes(table: TxLogTable, version: int | None = None) -> dict:
-    """{file: bytes} accumulated up to ``version`` through the newest
-    checkpoint that carries ``file_bytes`` — how the merge path sizes
-    its salt without stat()ing data files (backend-independent; legacy
-    logs without recorded sizes resolve to a partial map and the
-    consumer falls back per-file)."""
-    target = table.latest_version() if version is None else version
-    if target is None:
-        return {}
-    best = _best_checkpoint(table, target)
-    if best is not None and "file_bytes" in best:
-        out = dict(best["file_bytes"])
-        start = best["version"] + 1
-    else:
-        out = {}
-        start = 0
-    for v in table._versions_between(start, target):
-        out.update(table._read_entry(v).get("file_bytes", {}))
-    return out
+    """{file: bytes} up to ``version`` — how the merge path sizes its
+    salt without stat()ing data files (backend-independent; a file
+    without a recorded size makes the consumer fall back per file)."""
+    return dict(snapshot(table, version).bytes)
 
 
 def resolve_file_layouts(table: TxLogTable, version: int | None = None) -> dict:
-    """{file: n_buckets-at-write} accumulated up to ``version`` through
-    the newest checkpoint that carries ``file_layouts`` — what makes a
-    LAZY rebucket sound: after a metadata-only layout change, live
-    files written under an OLD (divisor) bucket count are still
-    prunable exactly, because a file tagged ``b`` under ``n`` holds
-    precisely the keys whose bucket under the current ``N`` (n | N)
-    satisfies ``t % n == b``. Files absent from the map (legacy logs)
-    are treated as written under the CURRENT layout by consumers."""
-    target = table.latest_version() if version is None else version
-    if target is None:
-        return {}
-    best = _best_checkpoint(table, target)
-    if best is not None and "file_layouts" in best:
-        out = dict(best["file_layouts"])
-        start = best["version"] + 1
-    else:
-        out = {}
-        start = 0
-    for v in table._versions_between(start, target):
-        out.update(table._read_entry(v).get("file_layout_n", {}))
-    return out
+    """{file: n_buckets-at-write} up to ``version`` — what makes a LAZY
+    rebucket sound: after a metadata-only layout change, live files
+    written under an OLD (divisor) bucket count are still prunable
+    exactly, because a file tagged ``b`` under ``n`` holds precisely
+    the keys whose bucket under the current ``N`` (n | N) satisfies
+    ``t % n == b``. Consumers treat a file absent from the map as
+    written under the CURRENT layout."""
+    return dict(snapshot(table, version).layouts)
 
 
 def resolve_file_dicts(table: TxLogTable, version: int | None = None) -> dict:
-    """{file: {col: [values...]}} accumulated up to ``version`` through
-    the newest checkpoint that carries ``file_dicts`` — the equality/IN
+    """{file: {col: [values...]}} up to ``version`` — the equality/IN
     pruning twin of ``resolve_file_stats``: a file absent from the map
     (or a column absent from a file's dict) is read conservatively."""
-    target = table.latest_version() if version is None else version
-    if target is None:
-        return {}
-    best = _best_checkpoint(table, target)
-    if best is not None and "file_dicts" in best:
-        out = dict(best["file_dicts"])
-        start = best["version"] + 1
-    else:
-        out = {}
-        start = 0
-    for v in table._versions_between(start, target):
-        out.update(table._read_entry(v).get("file_dicts", {}))
-    return out
+    return dict(snapshot(table, version).dicts)
 
 
 def resolve_file_nulls(table: TxLogTable, version: int | None = None) -> dict:
-    """{file: {col: [null_count, row_count]}} accumulated up to
-    ``version`` through the newest checkpoint that carries
-    ``file_nulls`` — what makes ``IS NULL`` / ``IS NOT NULL``
-    predicates prunable (Delta's nullCount stats) and lets range/IN
-    predicates drop all-null files, whose [min, max] are null and were
-    previously unprunable. Missing facts are read conservatively."""
-    target = table.latest_version() if version is None else version
-    if target is None:
-        return {}
-    best = _best_checkpoint(table, target)
-    if best is not None and "file_nulls" in best:
-        out = dict(best["file_nulls"])
-        start = best["version"] + 1
-    else:
-        out = {}
-        start = 0
-    for v in table._versions_between(start, target):
-        out.update(table._read_entry(v).get("file_nulls", {}))
-    return out
+    """{file: {col: [null_count, row_count]}} up to ``version`` — what
+    makes ``IS NULL`` / ``IS NOT NULL`` predicates prunable (Delta's
+    nullCount stats) and lets range/IN predicates drop all-null files,
+    whose [min, max] are null. Missing facts are read conservatively."""
+    return dict(snapshot(table, version).nulls)
 
 
 def resolve_file_blooms(table: TxLogTable, version: int | None = None) -> dict:
-    """{file: {col: {path, m, k, dtype}}} accumulated up to ``version``
-    through the newest checkpoint that carries ``file_blooms`` — the
+    """{file: {col: {path, m, k, dtype}}} up to ``version`` — the
     point-lookup pruning fact for high-cardinality columns (sidecar
     bitmaps; the log holds only the reference). Missing facts are read
     conservatively, like every other skipping map."""
-    target = table.latest_version() if version is None else version
-    if target is None:
-        return {}
-    best = _best_checkpoint(table, target)
-    if best is not None and "file_blooms" in best:
-        out = dict(best["file_blooms"])
-        start = best["version"] + 1
-    else:
-        out = {}
-        start = 0
-    for v in table._versions_between(start, target):
-        out.update(table._read_entry(v).get("file_blooms", {}))
-    return out
+    return dict(snapshot(table, version).blooms)
 
 
 def resolve_file_dvs(table: TxLogTable, version: int | None = None) -> dict:
-    """{file: {"path": dv_sidecar, "n": deleted_rows}} at ``version``
-    through the newest checkpoint that carries ``file_dvs``. Each
-    delete commit records the file's CUMULATIVE vector, so the fold's
-    latest-entry-wins update is the correct merge — and time travel to
-    a pre-delete version resolves the older (or no) vector, restoring
-    the deleted rows exactly."""
-    target = table.latest_version() if version is None else version
-    if target is None:
-        return {}
-    best = _best_checkpoint(table, target)
-    if best is not None and "file_dvs" in best:
-        out = dict(best["file_dvs"])
-        start = best["version"] + 1
-    else:
-        out = {}
-        start = 0
-    for v in table._versions_between(start, target):
-        out.update(table._read_entry(v).get("file_dvs", {}))
-    return out
+    """{file: {"path": dv_sidecar, "n": deleted_rows}} at ``version``.
+    Each delete commit records the file's CUMULATIVE vector, so the
+    fold's latest-entry-wins update is the correct merge — and time
+    travel to a pre-delete version resolves the older (or no) vector,
+    restoring the deleted rows exactly."""
+    return dict(snapshot(table, version).dvs)
 
 
 def dv_debt_files(deleted: dict[str, int], nulls: dict, max_fraction: float) -> set[str]:
@@ -4894,83 +4823,25 @@ def dv_debt_files(deleted: dict[str, int], nulls: dict, max_fraction: float) -> 
 
 
 def resolve_with_checkpoint(table: TxLogTable, version: int | None = None) -> list[str]:
-    """Snapshot file list using the newest usable checkpoint <= version.
-
-    Files-only fast path: unlike ``resolve_snapshot_state`` it never
-    pays a bucket/txn replay, so a legacy (files-only) checkpoint still
-    bounds the read path at O(commits-since-checkpoint)."""
-    target = table.latest_version() if version is None else version
-    if target is None:
-        return []
-    best = _best_checkpoint(table, target)
-    files = list(best["files"]) if best else []
-    start = best["version"] + 1 if best else 0
-    for v in table._versions_between(start, target):
-        e = table._read_entry(v)
-        removed = set(e.get("removes", []))
-        files = [f for f in files if f not in removed]
-        files.extend(e.get("adds", []))
-    return files
+    """The live file list at ``version``."""
+    return list(snapshot(table, version).files)
 
 
 def _resolve_schema_json(table: TxLogTable, target: int) -> dict | None:
-    """Newest recorded schema at or below ``target``: probe log entries
-    DOWNWARD from target to the newest usable checkpoint, then the
-    checkpoint's own ``schema`` (recorded when it was written, resolved
-    the same way) — O(commits-since-checkpoint). Legacy checkpoints
-    without a schema fall through to probing the rest of the log
-    (self-heals at the next checkpoint write)."""
-    best = _best_checkpoint(table, target)
-    floor = best["version"] if best is not None else -1
-    for v in range(target, floor, -1):
-        if not table.blob.exists(table._entry_path(v)):
-            continue
-        e = table._read_entry(v)
-        if "schema" in e:
-            return e["schema"]
-    if best is not None:
-        if "schema" in best:
-            return best["schema"]
-        for v in range(floor, -1, -1):  # legacy checkpoint: keep probing
-            if not table.blob.exists(table._entry_path(v)):
-                continue
-            e = table._read_entry(v)
-            if "schema" in e:
-                return e["schema"]
-    return None
+    """Newest recorded schema at or below ``target`` (shared: read-only)."""
+    return snapshot(table, target).schema
 
 
 def resolve_table_meta(table: TxLogTable, version: int | None = None) -> dict | None:
     """Newest recorded table metadata (key_cols / n_buckets / order_col)
-    at or below ``version`` — the bucketed table's layout contract,
-    resolved exactly like the schema: downward entry probe bounded by
-    the newest checkpoint (which carries the meta it resolved). The log
-    is the source of truth for the bucket layout: a writer OPENING the
-    table with a different n_buckets would select the wrong old files
-    in a merge and surface duplicate keys — recording the layout makes
-    that a loud ValueError instead of silent corruption, and lets
+    at or below ``version`` — the bucketed table's layout contract. The
+    log is the source of truth for the bucket layout: a writer OPENING
+    the table with a different n_buckets would select the wrong old
+    files in a merge and surface duplicate keys — recording the layout
+    makes that a loud ValueError instead of silent corruption, and lets
     ``rebucket`` evolve the layout as a log fact."""
-    target = table.latest_version() if version is None else version
-    if target is None:
-        return None
-    best = _best_checkpoint(table, target)
-    floor = best["version"] if best is not None else -1
-    for v in range(target, floor, -1):
-        if not table.blob.exists(table._entry_path(v)):
-            continue
-        e = table._read_entry(v)
-        if "table_meta" in e:
-            return e["table_meta"]
-    if best is not None:
-        if "table_meta" in best:
-            return best["table_meta"]
-        for v in range(floor, -1, -1):  # legacy checkpoint: keep probing
-            if not table.blob.exists(table._entry_path(v)):
-                continue
-            e = table._read_entry(v)
-            if "table_meta" in e:
-                return e["table_meta"]
-    return None
+    meta = snapshot(table, version).table_meta
+    return None if meta is None else dict(meta)
 
 
 def describe_detail(table: TxLogTable, version: int | None = None) -> dict:
@@ -4981,44 +4852,35 @@ def describe_detail(table: TxLogTable, version: int | None = None) -> dict:
     checkpoint — everything an operator needs to decide whether to
     compact / migrate / recluster, at O(metadata-since-checkpoint) cost
     whatever the table's size. No data file is opened."""
-    v = table.latest_version() if version is None else version
-    if v is None:
+    snap = snapshot(table, version).live()
+    if snap.version is None:
         raise FileNotFoundError("describe_detail of an uninitialized table")
-    snap, bmap, _ = resolve_snapshot_state(table, v)
-    live = set(snap)
-    sizes = {f: s for f, s in resolve_file_bytes(table, v).items() if f in live}
-    layouts = {f: n for f, n in resolve_file_layouts(table, v).items() if f in live}
-    stats = resolve_file_stats(table, v)
-    dicts = resolve_file_dicts(table, v)
-    nulls = resolve_file_nulls(table, v)
-    blooms = resolve_file_blooms(table, v)
-    dvs = resolve_file_dvs(table, v)
+    files = snap.files
     per_bucket: dict[int, int] = {}
-    for f in snap:
-        b = bmap.get(f)
+    for f in files:
+        b = snap.buckets.get(f)
         if b is not None:
             per_bucket[b] = per_bucket.get(b, 0) + 1
     layout_hist: dict[int, int] = {}
     default_n = getattr(table, "n_buckets", None)
-    for f in snap:
-        n = layouts.get(f, default_n)
+    for f in files:
+        n = snap.layouts.get(f, default_n)
         layout_hist[n] = layout_hist.get(n, 0) + 1
-    best = _best_checkpoint(table, v)
     return {
-        "version": v,
-        "n_files": len(snap),
-        "total_bytes": sum(sizes.values()) if sizes else None,
-        "table_meta": resolve_table_meta(table, v),
+        "version": snap.version,
+        "n_files": len(files),
+        "total_bytes": sum(snap.bytes.values()) if snap.bytes else None,
+        "table_meta": dict(snap.table_meta) if snap.table_meta else None,
         "buckets_live": len(per_bucket),
         "max_files_per_bucket": max(per_bucket.values()) if per_bucket else 0,
         "layout_histogram": dict(sorted(layout_hist.items(), key=lambda kv: str(kv[0]))),
-        "files_with_stats": sum(1 for f in snap if stats.get(f)),
-        "files_with_dicts": sum(1 for f in snap if dicts.get(f)),
-        "files_with_null_facts": sum(1 for f in snap if nulls.get(f)),
-        "files_with_blooms": sum(1 for f in snap if blooms.get(f)),
-        "files_with_dvs": sum(1 for f in snap if dvs.get(f)),
-        "dv_deleted_rows": sum(dvs[f]["n"] for f in snap if f in dvs),
-        "checkpoint_version": best["version"] if best else None,
+        "files_with_stats": sum(1 for f in files if snap.stats.get(f)),
+        "files_with_dicts": sum(1 for f in files if snap.dicts.get(f)),
+        "files_with_null_facts": sum(1 for f in files if snap.nulls.get(f)),
+        "files_with_blooms": sum(1 for f in files if snap.blooms.get(f)),
+        "files_with_dvs": sum(1 for f in files if snap.dvs.get(f)),
+        "dv_deleted_rows": sum(m["n"] for m in snap.dvs.values()),
+        "checkpoint_version": snap.checkpoint_version,
     }
 
 
@@ -5041,51 +4903,27 @@ def clone_table(src: TxLogTable, dest_path: str, version: int | None = None,
     and the clone's older reads break (the documented shallow-clone
     retention caveat; Delta's is identical). Writer txn tags are NOT
     carried: the clone is a fresh exactly-once namespace."""
-    v = src.latest_version() if version is None else version
-    if v is None:
+    snap = snapshot(src, version).live()
+    if snap.version is None:
         raise FileNotFoundError("clone of an uninitialized table")
-    snap, bmap, _ = resolve_snapshot_state(src, v)
-    live = set(snap)
     entry = {
         "version": 0,
         "mode": "clone",
-        "adds": sorted(snap),
+        "adds": sorted(snap.files),
         "removes": [],
-        "n_files": len(snap),
-        "file_buckets": {f: b for f, b in bmap.items() if f in live},
-        "file_bytes": {
-            f: s for f, s in resolve_file_bytes(src, v).items() if f in live
-        },
-        "file_layout_n": {
-            f: n for f, n in resolve_file_layouts(src, v).items() if f in live
-        },
-        "file_dicts": {
-            f: d for f, d in resolve_file_dicts(src, v).items() if f in live
-        },
-        "file_stats": {
-            f: s for f, s in resolve_file_stats(src, v).items() if f in live
-        },
-        "file_nulls": {
-            f: s for f, s in resolve_file_nulls(src, v).items() if f in live
-        },
-        # bloom sidecar refs point into the SOURCE's data_dir, exactly
-        # like the shared data files — same shallow-clone retention
-        # caveat, same conservative degradation (an unreadable sidecar
-        # keeps the file; unreadable DATA raises)
-        "file_blooms": {
-            f: d for f, d in resolve_file_blooms(src, v).items() if f in live
-        },
-        # deletion vectors are CORRECTNESS facts: the clone must keep
-        # applying them or the source's deleted rows reappear in the fork
-        "file_dvs": {
-            f: d for f, d in resolve_file_dvs(src, v).items() if f in live
-        },
-        "cloned_from": {"path": src.path, "version": v},
+        "n_files": len(snap.files),
+        # every fact map rides along: bloom sidecar refs point into the
+        # SOURCE's data_dir exactly like the shared data files (same
+        # shallow-clone retention caveat, same conservative degradation:
+        # an unreadable sidecar keeps the file, unreadable DATA raises),
+        # and deletion vectors are CORRECTNESS facts — without them the
+        # source's deleted rows would reappear in the fork
+        **{key: getattr(snap, name) for name, (key, _) in _FACT_KEYS.items()},
+        "cloned_from": {"path": src.path, "version": snap.version},
     }
-    sj = _resolve_schema_json(src, v)
-    if sj is not None:
-        entry["schema"] = sj
-    meta = resolve_table_meta(src, v)
+    if snap.schema is not None:
+        entry["schema"] = snap.schema
+    meta = snap.table_meta
     if meta is not None:
         entry["table_meta"] = meta
         dest = BucketedTxLogTable(
@@ -5143,10 +4981,9 @@ def analyze_table(
     base = table.latest_version()
     if base is None:
         raise FileNotFoundError("analyze of an uninitialized table")
-    live = resolve_with_checkpoint(table, base)
-    stats = resolve_file_stats(table, base)
+    snap = snapshot(table, base)
+    live, stats, blooms = snap.files, snap.stats, snap.blooms
     bcols = list(getattr(table, "bloom_cols", None) or [])
-    blooms = resolve_file_blooms(table, base) if bcols else {}
     # fact maps are keyed by PHYSICAL names (_staged_skipping_facts
     # translates before writing); the coverage test must compare in the
     # same namespace or a post-rename logical policy sees every file as

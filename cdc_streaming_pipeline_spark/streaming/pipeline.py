@@ -586,24 +586,23 @@ def bucketed_merge_stream_sink(
             # the buckets its own vectors push over the threshold, so
             # what is left here is delete_where/update_where debt the
             # merge did not rewrite — normally nothing. Metadata-only
-            # check: vectors, row counts and bucket tags all come from
-            # the log.
+            # check: vectors, live files, bucket tags and row counts all
+            # come from ONE log snapshot, pinned to one version.
             from cdc_streaming_pipeline_spark.sources.txlog import (
                 dv_debt_files,
-                resolve_file_dvs,
-                resolve_file_nulls,
-                resolve_snapshot_state,
+                snapshot,
             )
 
-            dvs = resolve_file_dvs(table)
-            if dvs:
-                live, bmap, _ = resolve_snapshot_state(table)
-                debt = {f: dvs[f]["n"] for f in live if f in dvs and f in bmap}
+            snap = snapshot(table)
+            if snap.dvs:
+                debt = {
+                    f: snap.dvs[f]["n"]
+                    for f in snap.files
+                    if f in snap.dvs and f in snap.buckets
+                }
                 dirty = {
-                    bmap[f]
-                    for f in dv_debt_files(
-                        debt, resolve_file_nulls(table), max_dv_fraction
-                    )
+                    snap.buckets[f]
+                    for f in dv_debt_files(debt, snap.nulls, max_dv_fraction)
                 }
                 if dirty:
                     try:

@@ -7,6 +7,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from cdc_streaming_pipeline_spark.sources.txlog import ConcurrentWriteError, TxLogTable
+from tests.txlog_replay import replayed_files
 
 
 def _df(spark, lo, hi):
@@ -75,10 +76,10 @@ def test_compact_shrinks_files_keeps_content_and_history(spark, tmp_path):
     t = TxLogTable(spark, str(tmp_path / "t"))
     for i in range(4):
         t.commit(_df(spark, i * 10, i * 10 + 3).repartition(3))
-    pre_files = len(t._snapshot_files())
+    pre_files = len(replayed_files(t))
     pre_vals = _vals(t.read())
     v = t.compact()
-    assert len(t._snapshot_files()) == 1 < pre_files
+    assert len(replayed_files(t)) == 1 < pre_files
     assert _vals(t.read()) == pre_vals  # logical no-op
     assert _vals(t.read(v - 1)) == pre_vals  # pre-compaction still readable
     assert _vals(t.read(0)) == [0, 1, 2]  # deep history intact
@@ -177,8 +178,55 @@ def test_merge_cdc_batch_copy_on_write(spark, tmp_path):
         t.commit(seed, mode="overwrite", base=v - 1)
 
 
+def _assert_snapshot_is_fold(table, version):
+    """Every Snapshot field at ``version``, resolved on a FRESH handle
+    (nothing cached), equals the from-zero fold of the raw entries.
+    Fact maps agree on every live file; facts a checkpoint dropped with
+    their dead files may be missing, but any that are kept are the
+    log's. The ``resolve_*`` functions return the same values."""
+    from cdc_streaming_pipeline_spark.sources import txlog
+    from tests.txlog_replay import ENTRY_FACTS, fold_log
+
+    fresh = txlog.TxLogTable(table.spark, table.path, blob_backend=table.blob)
+    snap = txlog.snapshot(fresh, version)
+    want = fold_log(table, version)
+    assert snap.version == want["version"] == version
+    assert snap.files == want["files"]
+    for name in ("buckets", "txns", "schema", "table_meta"):
+        assert getattr(snap, name) == want[name], (version, name)
+    live = set(snap.files)
+    for name in ENTRY_FACTS.values():
+        got = getattr(snap, name)
+        assert {f: m for f, m in got.items() if f in live} == {
+            f: m for f, m in want[name].items() if f in live
+        }, (version, name)
+        assert all(want[name].get(f) == m for f, m in got.items()), (version, name)
+    assert txlog.resolve_snapshot_state(fresh, version) == (
+        snap.files, snap.buckets, snap.txns
+    )
+    for name, fn in (
+        ("stats", txlog.resolve_file_stats),
+        ("bytes", txlog.resolve_file_bytes),
+        ("layouts", txlog.resolve_file_layouts),
+        ("dicts", txlog.resolve_file_dicts),
+        ("nulls", txlog.resolve_file_nulls),
+        ("blooms", txlog.resolve_file_blooms),
+        ("dvs", txlog.resolve_file_dvs),
+    ):
+        assert fn(fresh, version) == getattr(snap, name)
+    assert txlog.resolve_with_checkpoint(fresh, version) == snap.files
+    assert txlog.resolve_table_meta(fresh, version) == snap.table_meta
+    assert txlog._resolve_schema_json(fresh, version) == snap.schema
+    return snap
+
+
 def test_checkpoint_resolution_equals_full_replay(spark, tmp_path):
+    import json
+    import os as _os
+
     from cdc_streaming_pipeline_spark.sources.txlog import (
+        BucketedTxLogTable,
+        analyze_table,
         resolve_with_checkpoint,
         write_checkpoint,
     )
@@ -189,15 +237,57 @@ def test_checkpoint_resolution_equals_full_replay(spark, tmp_path):
     write_checkpoint(t, 2)
     # checkpoint + tail replay == full replay, at and past the checkpoint
     for v in (2, 3, 4, None):
-        assert resolve_with_checkpoint(t, v) == t._snapshot_files(v)
+        assert resolve_with_checkpoint(t, v) == replayed_files(t, v)
     # below the checkpoint: full replay path still exact
-    assert resolve_with_checkpoint(t, 1) == t._snapshot_files(1)
+    assert resolve_with_checkpoint(t, 1) == replayed_files(t, 1)
     # torn checkpoint is ignored, not fatal
-    import os as _os
-
     with open(_os.path.join(t.log_dir, "00000099.checkpoint.json"), "w") as f:
         f.write("{not json")
-    assert resolve_with_checkpoint(t, 4) == t._snapshot_files(4)
+    assert resolve_with_checkpoint(t, 4) == replayed_files(t, 4)
+
+    # A bucketed lifecycle touching every fact map: every version's
+    # Snapshot equals the from-zero fold, whichever checkpoint it
+    # starts from
+    s = "id bigint, amount double, g string, _op string, _lsn string, _deleted string"
+    b = BucketedTxLogTable(
+        spark, str(tmp_path / "b"), key_cols=["id"], n_buckets=4,
+        checkpoint_interval=0, bloom_cols=["id"],
+    )
+    b.init_from_events(spark.createDataFrame(
+        [(i, float(i), "abc"[i % 3], "r", f"{i:06d}", None) for i in range(40)], s
+    ), txn=("w", 0))                                                    # v0
+    b.merge_cdc_batch_mor(spark.createDataFrame(
+        [(3, 300.0, "z", "u", "000100", None), (50, 5.0, "n", "c", "000100", None)], s
+    ), txn=("w", 1))                                                    # v1
+    b.merge_cdc_batch_mor(spark.createDataFrame(
+        [(4, None, None, "d", "000200", "true")], s
+    ), txn=("w", 2), max_dv_fraction=0.0)                               # v2: fused fold
+    assert b._read_entry(2)["removes"]
+    b.delete_where(F.col("id") < 2)                                     # v3
+    b.update_where(F.col("id").between(10, 12), {"amount": F.lit(-1.0)})  # v4
+    b.rebucket(8, rewrite=False)                                        # v5
+    b.rename_column("g", "grp")                                         # v6
+    assert analyze_table(b, ["amount"]) == 7                            # v7
+    b.merge_cdc_batch_mor(spark.createDataFrame(
+        [(20, 2.0, "q", "u", "000300", None)], s
+    ).withColumnRenamed("g", "grp"), txn=("w", 3), max_dv_fraction=0.0)  # v8: fold
+    assert b.latest_version() == 8 and b._read_entry(8)["removes"]
+    # removes land in both checkpoint suffixes (v2 after 1, v8 after 5)
+    write_checkpoint(b, 1)
+    write_checkpoint(b, 5)  # the pointer names 5
+    ck_of = {v: None if v < 1 else 1 if v < 5 else 5 for v in range(9)}
+    for v in range(9):  # v < 5: the pointer overshoots, probe downward
+        assert _assert_snapshot_is_fold(b, v).checkpoint_version == ck_of[v]
+    # a torn checkpoint behind the pointer: replay falls back to 5
+    with open(_os.path.join(b.log_dir, "00000007.checkpoint.json"), "w") as f:
+        f.write("{not json")
+    with open(_os.path.join(b.log_dir, "_last_checkpoint"), "w") as f:
+        json.dump({"version": 7}, f)
+    for v in range(9):
+        assert _assert_snapshot_is_fold(b, v).checkpoint_version == ck_of[v]
+    # resolving past the head is an error, not a silent clamp
+    with pytest.raises(ValueError, match="past the head"):
+        _assert_snapshot_is_fold(b, 9)
 
 
 def test_vacuum_reclaims_only_unreachable_files(spark, tmp_path):
@@ -286,7 +376,7 @@ def test_vacuum_age_guard_spares_fresh_staged_files(spark, tmp_path):
     assert all(os.path.exists(p) for p in staged)
     # age the unreferenced v0 files artificially; the in-flight stage
     # stays fresh and survives even an aggressive retention window
-    old = [p for p in t._snapshot_files(0)]
+    old = [p for p in replayed_files(t, 0)]
     for p in old:
         os.utime(p, (1, 1))
     deleted = vacuum(t, retain_versions=2, min_age_seconds=60)
@@ -463,3 +553,132 @@ def test_txn_version_resolves_through_checkpoint(spark, tmp_path):
     assert t.txn_version(("w", 2)) == 2
     # replayed commit is a no-op returning the recorded version
     assert t.commit(_df(spark, 100, 101), txn=("w", 8)) == 8
+
+
+def test_snapshot_cache_never_serves_past_the_head(spark, tmp_path):
+    """A resolution past the head raises instead of silently clamping
+    to the latest state — so no snapshot is ever cached under a version
+    its replay did not reach: handle A asks for v+1 before handle B
+    commits it, and after B's commit A sees exactly B's state. Maps
+    handed out by ``resolve_*`` are copies: mutating one changes
+    nothing the next resolution returns."""
+    from cdc_streaming_pipeline_spark.sources.txlog import (
+        resolve_file_stats,
+        resolve_snapshot_state,
+        resolve_with_checkpoint,
+    )
+    from tests.txlog_replay import fold_log
+
+    a = TxLogTable(spark, str(tmp_path / "t"))
+    b = TxLogTable(spark, str(tmp_path / "t"))
+    v = a.commit(_df(spark, 0, 3), stats_cols=["k"])
+    assert resolve_with_checkpoint(a, v) == replayed_files(a, v)
+    with pytest.raises(ValueError, match="past the head"):
+        resolve_with_checkpoint(a, v + 1)
+    assert b.commit(_df(spark, 10, 13), stats_cols=["k"]) == v + 1
+    assert resolve_with_checkpoint(a, v + 1) == replayed_files(a, v + 1)
+    assert a.latest_version() == v + 1
+    assert _vals(a.read()) == [0, 1, 2, 10, 11, 12]
+
+    files, buckets, txns = resolve_snapshot_state(a)
+    files.append("/nowhere.parquet")
+    txns["intruder"] = [0, 0]
+    resolve_with_checkpoint(a).clear()
+    stats = resolve_file_stats(a)
+    stats.clear()
+    assert resolve_snapshot_state(a) == (replayed_files(a), {}, {})
+    assert resolve_file_stats(a) == fold_log(a)["stats"] != {}
+
+
+def test_checkpoint_missing_a_fact_map_is_skipped(spark, tmp_path):
+    """A checkpoint lacking a required fact map is skipped like a torn
+    one — replay falls back to an older checkpoint or the full log —
+    and the missing map is never read as empty."""
+    import json
+
+    from cdc_streaming_pipeline_spark.sources.txlog import (
+        _checkpoint_path,
+        resolve_file_stats,
+        snapshot,
+        write_checkpoint,
+    )
+    from tests.txlog_replay import fold_log
+
+    t = TxLogTable(spark, str(tmp_path / "t"))
+    for q in range(4):
+        t.commit(_df(spark, q * 100, q * 100 + 50).coalesce(1), stats_cols=["k"])
+    write_checkpoint(t, 1)
+    write_checkpoint(t, 3)
+
+    def drop_key(version, key):
+        path = _checkpoint_path(t, version)
+        with open(path) as f:
+            ck = json.load(f)
+        del ck[key]
+        with open(path, "w") as f:
+            json.dump(ck, f)
+
+    want = fold_log(t)["stats"]
+    assert len(want) == 4
+    drop_key(3, "file_stats")
+    fresh = TxLogTable(spark, t.path)
+    assert snapshot(fresh).checkpoint_version == 1
+    assert resolve_file_stats(fresh) == want
+    df, files_read, files_total = fresh.read_where("k", 120, 130)
+    assert (files_read, files_total) == (1, 4)
+    assert _vals(df) == list(range(120, 131))
+
+    drop_key(1, "files")  # no usable checkpoint left: the full log
+    fresh = TxLogTable(spark, t.path)
+    assert snapshot(fresh).checkpoint_version is None
+    assert resolve_file_stats(fresh) == want
+    assert snapshot(fresh).files == replayed_files(t)
+
+
+def test_pruned_read_costs_suffix_plus_two_log_gets(spark, tmp_path):
+    """One log replay per snapshot, counted at the blob seam: opening a
+    fresh handle and running a pruned ``read_state_where`` GETs at most
+    the entries since the checkpoint plus two log-metadata objects (the
+    ``_last_checkpoint`` pointer and the checkpoint). Sidecars (bloom,
+    deletion vector) are data-skipping reads, not log metadata."""
+    import os
+
+    from cdc_streaming_pipeline_spark.blob import PosixBlobStore
+    from cdc_streaming_pipeline_spark.sources.txlog import (
+        BucketedTxLogTable,
+        write_checkpoint,
+    )
+
+    class CountingStore(PosixBlobStore):
+        def __init__(self):
+            self.gets: list[str] = []
+
+        def get(self, path: str) -> bytes:
+            self.gets.append(path)
+            return super().get(path)
+
+    store = CountingStore()
+    s = "id bigint, amount double, _op string, _lsn string, _deleted string"
+    path = str(tmp_path / "t")
+    t = BucketedTxLogTable(
+        spark, path, key_cols=["id"], n_buckets=4, stats_cols=["amount"],
+        checkpoint_interval=0, blob_backend=store,
+    )
+    t.init_from_events(spark.createDataFrame(
+        [(i, float(i), "r", "0001", None) for i in range(40)], s
+    ))
+    for w in range(1, 6):
+        t.merge_cdc_batch_mor(spark.createDataFrame(
+            [(w, 100.0 + w, "u", f"{w + 1:04d}", None)], s
+        ))
+    write_checkpoint(t, 3)
+    suffix = t.latest_version() - 3
+    assert suffix == 2
+
+    store.gets.clear()
+    fresh = BucketedTxLogTable(spark, path, blob_backend=store)
+    df, files_read, files_total = fresh.read_state_where("amount", 103.0, 104.0)
+    log_gets = [p for p in store.gets if os.path.dirname(p) == fresh.log_dir]
+    assert len(log_gets) <= suffix + 2, log_gets
+    assert {r["id"] for r in df.collect()} == {3, 4}
+    assert files_read < files_total

@@ -22,6 +22,7 @@ from cdc_streaming_pipeline_spark.sources.txlog import (
     SQLiteCommitBackend,
     posix_put_if_absent,
 )
+from tests.txlog_replay import replayed_files
 
 N_BUCKETS = 8
 
@@ -122,11 +123,11 @@ def test_untouched_buckets_byte_identical_and_unread(spark, tmp_path):
     bmap0 = t._bucket_map(0)
     batch = _events(spark, [(7, "UPD", "u", "0002", None)])
     (tb,) = _buckets_of(spark, [7]).values()
-    pre = {p: (_sha(p), os.path.getmtime(p)) for p in t._snapshot_files(0)}
+    pre = {p: (_sha(p), os.path.getmtime(p)) for p in replayed_files(t, 0)}
 
     v, touched = t.merge_cdc_batch(batch)
     assert touched == [tb]
-    post_files = t._snapshot_files(v)
+    post_files = replayed_files(t, v)
     bmap1 = t._bucket_map(v)
     # every untouched bucket's file survives under the SAME path with the
     # SAME bytes and mtime — never rewritten, never even opened for write
@@ -154,7 +155,7 @@ def test_merge_cost_reads_only_touched_files(spark, tmp_path):
     bmap = t._bucket_map()
     batch = _events(spark, [(11, "x", "u", "0002", None)])
     (tb,) = _buckets_of(spark, [11]).values()
-    old = [f for f in t._snapshot_files() if bmap[f] == tb]
+    old = [f for f in replayed_files(t) if bmap[f] == tb]
     # the entry's removes == exactly the touched bucket's files
     v, _ = t.merge_cdc_batch(batch)
     assert sorted(t._read_entry(v)["removes"]) == sorted(old)
@@ -318,13 +319,13 @@ def test_salted_staging_spreads_large_bucket_over_files(spark, tmp_path):
     )
     t.init_from_events(_seed(spark, n=200))
     bmap0 = t._bucket_map(0)
-    pre = {p: _sha(p) for p in t._snapshot_files(0)}
+    pre = {p: _sha(p) for p in replayed_files(t, 0)}
     (tb,) = _buckets_of(spark, [7]).values()
 
     v, touched = t.merge_cdc_batch(_events(spark, [(7, "UPD", "u", "0002", None)]))
     assert touched == [tb]
     bmap1 = t._bucket_map(v)
-    new_touched = [p for p in t._snapshot_files(v) if bmap1[p] == tb]
+    new_touched = [p for p in replayed_files(t, v) if bmap1[p] == tb]
     assert len(new_touched) >= 2  # rewrite parallelized across tasks/files
     # untouched buckets byte-identical under the same paths
     for p, b in bmap0.items():

@@ -21,6 +21,7 @@ from cdc_streaming_pipeline_spark.sources.txlog import (
     resolve_file_stats,
     write_checkpoint,
 )
+from tests.txlog_replay import replayed_files
 
 SCHEMA = "id bigint, amount double, _op string, _lsn string, _deleted string"
 
@@ -99,7 +100,7 @@ def test_stats_less_writer_stays_exact_conservatively(spark, tmp_path):
     # its stats-less files are in the read set despite the range
     v = t.latest_version()
     assert set(t._read_entry(v)["adds"]) <= set(
-        f for f in t._snapshot_files()
+        f for f in replayed_files(t)
     )
     assert read >= len(t._read_entry(v)["adds"])
 
@@ -422,7 +423,7 @@ def test_dict_gate_is_per_file_column_pair(spark, tmp_path):
 
     # plan pin on the seam: the collect_set for a column runs ONLY over
     # that column's candidate files (CASE WHEN input_file ∈ ...)
-    snap = t._snapshot_files()
+    snap = replayed_files(t)
     # the seam takes RAW URIs as input_file_name returns them
     job = t._dict_job({"status": [f"file://{snap[0]}"]})
     plan = job._jdf.queryExecution().optimizedPlan().toString()

@@ -33,6 +33,7 @@ from cdc_streaming_pipeline_spark.sources.txlog import (
     resolve_file_nulls,
     resolve_file_stats,
 )
+from tests.txlog_replay import replayed_files
 
 DEC_SCHEMA = "id bigint, amount decimal(12,2), _op string, _lsn string, _deleted string"
 
@@ -574,7 +575,7 @@ def test_analyze_table_backfills_facts_for_statsless_files(spark, tmp_path):
     assert v is not None
     e = probe_handle._read_entry(v)
     assert e["mode"] == "analyze" and e["adds"] == [] and e["removes"] == []
-    snap = set(probe_handle._snapshot_files())
+    snap = set(replayed_files(probe_handle))
     assert set(e["file_stats"]) == snap  # exactly the uncovered files
     # facts-only entry: dictionaries recorded too (status is low-card)
     assert any("status" in d for d in resolve_file_dicts(probe_handle).values())
@@ -624,7 +625,7 @@ def test_analyze_table_bounded_and_mixed_coverage(spark, tmp_path):
 
     stats = resolve_file_stats(t)
     assert all(
-        "amount" in stats.get(f, {}) for f in t._snapshot_files()
+        "amount" in stats.get(f, {}) for f in replayed_files(t)
     )
     df, read, total = t.read_state_where("amount", 4000.0, 6000.0)
     assert {r["id"] for r in df.collect()} == {1000} and read < total

@@ -2,16 +2,19 @@
 AGES (r13 verdict item 4).
 
 Every skipping/correctness fact (stats, dicts, nulls, blooms, deletion
-vectors, bucket tags, layouts, byte sizes) resolves through the newest
-checkpoint plus the post-checkpoint log suffix. Checkpoints restrict
-every fact map to LIVE files, so resolution cost is
-O(live files + commits-since-checkpoint) — independent of how many
-commits the table has accumulated. This tool PROVES that shape the way
-SCALE10_r11 proved it for vacuum/compact: age the log to 500 and then
-5,000 commits (live-file count held CONSTANT — each synthetic commit
-adds one file and removes one, the steady-state CDC shape) with a
-checkpoint every 10 commits, and time every resolver from a FRESH
-handle at both ages. Flat wall + flat bytes-read = no fold is O(age).
+vectors, bucket tags, layouts, byte sizes) is folded by ONE
+``snapshot`` replay: the newest checkpoint plus the post-checkpoint log
+suffix. Checkpoints restrict every fact map to LIVE files, so
+resolution cost is O(live files + commits-since-checkpoint) —
+independent of how many commits the table has accumulated. This tool
+PROVES that shape the way SCALE10_r11 proved it for vacuum/compact: age
+the log to 500 and then 5,000 commits (live-file count held CONSTANT —
+each synthetic commit adds one file and removes one, the steady-state
+CDC shape) with a checkpoint every 10 commits, and time the snapshot
+build, and all ten ``resolve_*`` reads on top of it, from a FRESH
+handle at both ages; the log-metadata GETs of one build are counted at
+the blob seam. Flat wall + flat GETs + flat bytes-read = no fold is
+O(age).
 
 Synthetic commits exercise the resolution path only (entries carry real
 fact payloads; no data bytes move) — resolution is pure metadata, so
@@ -34,21 +37,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from cdc_streaming_pipeline_spark.blob import PosixBlobStore
 from cdc_streaming_pipeline_spark.session import get_spark
+from cdc_streaming_pipeline_spark.sources import txlog
 from cdc_streaming_pipeline_spark.sources.txlog import (
     BucketedTxLogTable,
-    _best_checkpoint,
+    TxLogTable,
     _checkpoint_path,
     _last_checkpoint_version,
-    resolve_file_blooms,
-    resolve_file_bytes,
-    resolve_file_dicts,
-    resolve_file_dvs,
-    resolve_file_layouts,
-    resolve_file_nulls,
-    resolve_file_stats,
-    resolve_snapshot_state,
-    resolve_with_checkpoint,
+    snapshot,
     write_checkpoint,
 )
 
@@ -87,34 +84,52 @@ def _synth_commit(t: BucketedTxLogTable, i: int, window: list[str]) -> None:
         write_checkpoint(t, v)
 
 
-RESOLVERS = {
-    "snapshot": resolve_with_checkpoint,
-    "snapshot_state": lambda t, v=None: resolve_snapshot_state(t, v),
-    "stats": resolve_file_stats,
-    "dicts": resolve_file_dicts,
-    "nulls": resolve_file_nulls,
-    "blooms": resolve_file_blooms,
-    "dvs": resolve_file_dvs,
-    "bytes": resolve_file_bytes,
-    "layouts": resolve_file_layouts,
-}
+RESOLVERS = [
+    "resolve_snapshot_state", "resolve_with_checkpoint", "resolve_table_meta",
+    "resolve_file_stats", "resolve_file_bytes", "resolve_file_layouts",
+    "resolve_file_dicts", "resolve_file_nulls", "resolve_file_blooms",
+    "resolve_file_dvs",
+]
 
 
-def _measure(spark, path: str) -> dict:
-    out: dict = {}
-    for name, fn in RESOLVERS.items():
-        walls = []
-        for _ in range(5):
-            t = BucketedTxLogTable(spark, path)  # fresh handle: no caches
-            t0 = time.perf_counter()
-            fn(t)
-            walls.append(time.perf_counter() - t0)
-        out[name + "_ms"] = round(1000 * min(walls), 2)
-    t = BucketedTxLogTable(spark, path)
+class _CountingStore(PosixBlobStore):
+    def __init__(self):
+        self.gets = 0
+        self.bytes_read = 0
+
+    def get(self, path: str) -> bytes:
+        data = super().get(path)
+        self.gets += 1
+        self.bytes_read += len(data)
+        return data
+
+
+def _min_ms(path: str, fn) -> float:
+    walls = []
+    for _ in range(5):
+        t = TxLogTable(None, path)  # fresh handle: no caches
+        t0 = time.perf_counter()
+        fn(t)
+        walls.append(time.perf_counter() - t0)
+    return round(1000 * min(walls), 2)
+
+
+def _measure(path: str) -> dict:
+    out: dict = {
+        "snapshot_ms": _min_ms(path, snapshot),
+        "resolve_all_ms": _min_ms(
+            path, lambda t: [getattr(txlog, name)(t) for name in RESOLVERS]
+        ),
+    }
+    store = _CountingStore()
+    t = TxLogTable(None, path, blob_backend=store)
+    snap = snapshot(t)
+    out["log_gets"] = store.gets
+    out["log_bytes_read"] = store.bytes_read
     ckv = _last_checkpoint_version(t)
     out["checkpoint_bytes"] = os.path.getsize(_checkpoint_path(t, ckv))
-    out["entries_after_checkpoint"] = t.latest_version() - ckv
-    out["live_files"] = len(resolve_with_checkpoint(t))
+    out["entries_after_checkpoint"] = snap.version - ckv
+    out["live_files"] = len(snap.files)
     return out
 
 
@@ -145,7 +160,7 @@ def main() -> None:
             done = age
             aging_wall = time.time() - t0
             row = {"age_commits": t.latest_version(), "aging_wall_s": round(aging_wall, 1)}
-            row.update(_measure(spark, path))
+            row.update(_measure(path))
             print(json.dumps(row))
     finally:
         shutil.rmtree(root, ignore_errors=True)

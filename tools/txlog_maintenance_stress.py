@@ -1,22 +1,25 @@
 """Maintenance-path metadata cost vs table age (r10 verdict #1).
 
-r10 made the HOT path (merge/read resolution) O(commits-since-
-checkpoint); the MAINTENANCE paths still replayed the log from zero:
-``vacuum`` called ``_snapshot_files`` once per retained version
-(O(retain x age)), ``compact``/``commit(mode="overwrite")`` replayed
-their removes from zero. At the CDC design point (~500k commits/year)
-a daily vacuum pays the exact replay wall the merge path eliminated.
+The maintenance paths resolve through the same checkpoint-bounded
+``snapshot`` as the hot path. A from-zero replay instead — ``vacuum``
+replaying once per retained version (O(retain x age)),
+``compact``/``commit(mode="overwrite")`` replaying their removes from
+zero — pays, at the CDC design point (~500k commits/year), a daily
+replay wall that grows with the table's age.
 
 This is a DRIVER-ONLY stress (no Spark session, no data files): it
 synthesizes a bucket-shaped log — version 0 adds 64 files, every later
 commit replaces one — with checkpoints every 10 commits, then at each
 age milestone measures:
 
-- ``vacuum`` wall (new shape: ONE checkpoint-bounded resolution at the
-  horizon + the retained suffix's adds),
-- the r10 shape it replaces (``_snapshot_files`` per retained version),
-- ``compact``'s removes resolution (``resolve_with_checkpoint``) vs its
-  old from-zero ``_snapshot_files``.
+- ``vacuum`` wall (ONE checkpoint-bounded snapshot at the horizon +
+  the retained suffix's adds),
+- the from-zero shape (a full replay per retained version),
+- ``compact``'s removes resolution (``snapshot(...).files``) vs a
+  from-zero replay.
+
+Every measured call runs on a FRESH handle, so no cached entry or
+snapshot flatters either shape.
 
 Run:  python tools/txlog_maintenance_stress.py [max_commits]
 Emits a markdown table for .benchmarks/SCALE10_r11.md.
@@ -24,12 +27,13 @@ Emits a markdown table for .benchmarks/SCALE10_r11.md.
 
 from __future__ import annotations
 
+import json
 import sys
 import time
 
 from cdc_streaming_pipeline_spark.sources.txlog import (
     TxLogTable,
-    resolve_with_checkpoint,
+    snapshot,
     vacuum,
     write_checkpoint,
 )
@@ -40,9 +44,17 @@ def _mk_table(path: str) -> TxLogTable:
     return TxLogTable(spark=None, path=path)
 
 
-def _commit_entry(t: TxLogTable, version: int, adds, removes) -> None:
-    import json
+def _replay_from_zero(t: TxLogTable, version: int) -> list[str]:
+    """The live files at ``version`` by parsing every entry from 0."""
+    files: list[str] = []
+    for v in range(version + 1):
+        e = json.loads(t.blob.get_text(t._entry_path(v)))
+        removed = set(e.get("removes", []))
+        files = [f for f in files if f not in removed] + e.get("adds", [])
+    return files
 
+
+def _commit_entry(t: TxLogTable, version: int, adds, removes) -> None:
     ok = t._put_if_absent(
         t._entry_path(version),
         json.dumps(
@@ -95,23 +107,23 @@ def main() -> int:
             if v % 10 == 0:
                 write_checkpoint(t, v)
 
-        new_vac = _min_of(lambda: vacuum(t, retain_versions=5, min_age_seconds=0.0))
+        latest = t.latest_version()
+        horizon = max(latest - 5 + 1, 0)
+        new_vac = _min_of(
+            lambda: vacuum(_mk_table(t.path), retain_versions=5, min_age_seconds=0.0)
+        )
 
         def old_shape():
-            latest = t.latest_version()
-            horizon = max(latest - 5 + 1, 0)
             live: set[str] = set()
             for rv in range(horizon, latest + 1):
-                live.update(t._snapshot_files(rv))
+                live.update(_replay_from_zero(t, rv))
             return live
 
         old_vac = _min_of(old_shape, n=3)
-        new_cmp = _min_of(lambda: resolve_with_checkpoint(t, t.latest_version()))
-        old_cmp = _min_of(lambda: t._snapshot_files(t.latest_version()), n=3)
+        new_cmp = _min_of(lambda: snapshot(_mk_table(t.path), latest).files)
+        old_cmp = _min_of(lambda: _replay_from_zero(t, latest), n=3)
         # the two shapes agree on the live set (correctness of the fast path)
-        latest = t.latest_version()
-        horizon = max(latest - 5 + 1, 0)
-        fast = set(resolve_with_checkpoint(t, horizon))
+        fast = set(snapshot(t, horizon).files)
         for rv in t._versions_between(horizon + 1, latest):
             fast.update(t._read_entry(rv).get("adds", []))
         assert fast == old_shape(), "live-set mismatch between shapes"
