@@ -38,30 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cdc_streaming_pipeline_spark.functions.vector import cosine_pd
-
-
-_PERSIST_CACHE: "deque[DataFrame]" = None  # lazily built below
-_PERSIST_CACHE_MAX = 8
-
-
-def _persist_bounded(df: DataFrame) -> DataFrame:
-    """``persist()`` with a bounded eviction registry (the dedup.py
-    pattern): frames persisted here feed several branches of ONE
-    returned plan (ivf_pq's normalized corpus: codebook sample, encode
-    scan, exact-rerank scan), so they must stay cached while that plan
-    executes, but a long-lived session must not accumulate cached
-    blocks forever. Oldest evicts non-blocking — a consumer still
-    running against an evicted frame just recomputes it."""
-    global _PERSIST_CACHE
-    if _PERSIST_CACHE is None:
-        from collections import deque
-
-        _PERSIST_CACHE = deque()
-    df = df.persist()
-    _PERSIST_CACHE.append(df)
-    while len(_PERSIST_CACHE) > _PERSIST_CACHE_MAX:
-        _PERSIST_CACHE.popleft().unpersist(blocking=False)
-    return df
+from cdc_streaming_pipeline_spark.operators.dedup import _persist_transient
 
 
 def _fan_out(df: DataFrame) -> DataFrame:
@@ -811,8 +788,8 @@ def ivf_pq_topk(
     )
     # The normalized corpus feeds up to THREE full passes — the codebook
     # sample sort, the encode scan, and the exact-rerank scan — so
-    # persist it once (bounded registry; per-row values are
-    # bit-identical under any partitioning). Fan the encode scan out
+    # persist it once (dedup's bounded transient registry; per-row
+    # values are bit-identical under any partitioning). Fan the encode scan out
     # only when the corpus is at least sample-sized (pq_fit's sample
     # tells us) AND narrower than the core count: a Python batch stage
     # carries ~0.2 s fixed per-task overhead, so a 5k-row corpus keeps
@@ -820,7 +797,7 @@ def ivf_pq_topk(
     # The per-batch shortlist selection composes exactly under
     # rebatching (batch top-N ⊇ global top-N members, consistent
     # (dist, id) total order), so the output is unchanged.
-    normed = _persist_bounded(normed)
+    normed = _persist_transient(normed)
     if not memo_hit:
         fit_stats: dict = {}
         codebooks = pq_fit(

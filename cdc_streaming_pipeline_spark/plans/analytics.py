@@ -23,7 +23,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cdc_streaming_pipeline_spark.functions.precision import davg, dsum, sql_davg, sql_dsum
-from cdc_streaming_pipeline_spark.sources.tables import load_table
+from cdc_streaming_pipeline_spark.sources.tables import fixture, load_table
 
 
 def q1_pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1163,9 +1163,6 @@ def salted_revenue_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_DERBY_MEMO: dict[tuple[str, str], str] = {}
-
-
 def lineitem_price_equidepth_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-depth histogram over a FACT-scale column: 20 equal-count
     price bands of lineitem extendedprice with per-band bounds — the
@@ -1274,34 +1271,28 @@ def daily_new_users_cumulative(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _derby_nation_url(spark: SparkSession, sf_dir: str) -> str:
-    """Seed — once per (session, sf_dir) — an embedded Derby database with
-    the parquet `nation` table and return its JDBC url. Derby ships inside
-    Spark's own jars (no external driver), so this stands in for the
-    operational Postgres the reference polls (postgres/init/init.sql);
-    because the rows come FROM the parquet table, the DuckDB oracle can
-    replicate the federated query exactly."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _DERBY_MEMO:
-        return _DERBY_MEMO[key]
-    import hashlib
-    import os
-    import tempfile
-
+    """Seed — once per session, as a ``fixture`` — an embedded Derby
+    database with the parquet `nation` table and return its JDBC url.
+    Derby ships inside Spark's own jars (no external driver), so this
+    stands in for the operational Postgres the reference polls
+    (postgres/init/init.sql); because the rows come FROM the parquet
+    table, the DuckDB oracle can replicate the federated query exactly."""
     from cdc_streaming_pipeline_spark.sources.jdbc import DERBY_DRIVER
 
-    digest = hashlib.md5(f"{key[0]}:{sf_dir}".encode()).hexdigest()[:8]
-    url = f"jdbc:derby:{os.path.join(tempfile.gettempdir(), f'fed_nation_{digest}')};create=true"
-    (
-        load_table(spark, sf_dir, "nation")
-        .write.format("jdbc")
-        .option("url", url)
-        .option("dbtable", "nation")
-        .option("driver", DERBY_DRIVER)
-        .mode("overwrite")
-        .save()
-    )
-    _DERBY_MEMO[key] = url
-    return url
+    def build(root: str) -> str:
+        url = f"jdbc:derby:{root};create=true"
+        (
+            load_table(spark, sf_dir, "nation")
+            .write.format("jdbc")
+            .option("url", url)
+            .option("dbtable", "nation")
+            .option("driver", DERBY_DRIVER)
+            .mode("overwrite")
+            .save()
+        )
+        return url
+
+    return fixture(spark, sf_dir, "fed_nation", build)
 
 
 def jdbc_federated_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -24,6 +24,8 @@ string order == numeric order. Totals flow through unchanged doubles
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -42,7 +44,7 @@ from cdc_streaming_pipeline_spark.schemas import (
     OP_COL,
     TABLE_COL,
 )
-from cdc_streaming_pipeline_spark.sources.tables import load_table
+from cdc_streaming_pipeline_spark.sources.tables import fixture, load_table
 
 from cdc_streaming_pipeline_spark.schemas import LSN_WIDTH as _LSN_PAD
 from cdc_streaming_pipeline_spark.schemas import pad_lsn
@@ -93,6 +95,13 @@ def _order_event_log(o: DataFrame) -> DataFrame:
         _flat_event(k, F.lit("reinstated"), total0, "c", 4, False).alias("value")
     )
     return snap.union(upd).union(dele).union(tomb).union(reins)
+
+
+def _flat_events(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, Column]:
+    """The tombstone-filtered flat event log and its wave column
+    (``_lsn = k*10 + wave``: 1 = snapshot, 2-4 = the change waves)."""
+    flat = filter_tombstones(_order_event_log(_orders(spark, sf_dir))).select("value.*")
+    return flat, F.substring(F.col(LSN_COL), -1, 1).cast("int")
 
 
 def cdc_latest_state(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -213,17 +222,15 @@ def cdc_demux_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     return demux(wide, "customer").select("id", "name", "email", OP_COL, LSN_COL)
 
 
-_CUTOFF_CACHE: dict[str, int] = {}
-
-
 def _cutoff_key(spark: SparkSession, sf_dir: str) -> int:
     """Half the max order key — the demo cutoff for the zero-arg driver
-    contract. Computed ONCE per sf_dir (one bounded max aggregate) and
-    memoized, so repeated query builds add no driver-side action."""
-    if sf_dir not in _CUTOFF_CACHE:
-        o = _orders(spark, sf_dir)
-        _CUTOFF_CACHE[sf_dir] = (o.agg(F.max("o_orderkey")).first()[0] or 0) // 2
-    return _CUTOFF_CACHE[sf_dir]
+    contract. One bounded max aggregate per session (a ``fixture``), so
+    repeated query builds add no driver-side action."""
+
+    def build(_root: str) -> int:
+        return (_orders(spark, sf_dir).agg(F.max("o_orderkey")).first()[0] or 0) // 2
+
+    return fixture(spark, sf_dir, "cutoff", build)
 
 
 def cdc_state_as_of(
@@ -234,7 +241,7 @@ def cdc_state_as_of(
     the table as of any point in the change history — no snapshot storage,
     one filter + the same window dedup. The as-of LSN is a PARAMETER of the
     view; the plan contains no data-dependent driver action. The zero-arg
-    driver registration defaults it to the memoized demo cutoff: between
+    driver registration defaults it to the per-session demo cutoff: between
     half the keys' update and delete events, so keys whose delete is 'in
     the future' must still be visible.
 
@@ -299,45 +306,27 @@ def cdc_split_corrupt(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).crossJoin(bad.agg(F.count("*").alias("n_bad")))
 
 
-_SNAPSHOT_MEMO: dict[tuple[str, str], str] = {}
-
-
 def _merged_snapshot_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build — once per (session, sf_dir) — the bucket-partitioned merged
-    snapshot (init from the op='r' batch, then one partition-pruned
-    merge of the change batch) and return its directory. Memoized like
-    plans/docs.py:_memo_gemm: the two heaviest registered CDC queries
-    (`cdc_merge_partitioned`, `cdc_compliance_erasure`) both start from
-    exactly this state, and the snapshot build is two partitioned write
-    jobs — the dominant cost of either query — so building it twice per
-    session is pure waste. Consumers must not mutate the memoized
-    directory; erasure clones it first."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _SNAPSHOT_MEMO:
-        return _SNAPSHOT_MEMO[key]
-    import hashlib
-    import os
-    import tempfile
-
+    """The bucket-partitioned merged snapshot (init from the op='r'
+    batch, then one partition-pruned merge of the change batch), built
+    once per session by ``fixture``: the two heaviest registered CDC
+    queries (`cdc_merge_partitioned`, `cdc_compliance_erasure`) both
+    start from exactly this state, and the snapshot build is two
+    partitioned write jobs — the dominant cost of either query — so
+    building it twice per session is pure waste. Consumers must not
+    mutate the directory; erasure clones it first."""
     from cdc_streaming_pipeline_spark.operators.merge import (
         init_snapshot,
         merge_cdc_batch,
     )
 
-    log = _order_event_log(_orders(spark, sf_dir))
-    flat = filter_tombstones(log).select("value.*")
-    off = F.substring(F.col(LSN_COL), -1, 1).cast("int")  # _lsn = k*10 + off
-    batch1 = flat.filter(off == 1)
-    batch2 = flat.filter(off > 1)
+    def build(snap: str) -> str:
+        flat, off = _flat_events(spark, sf_dir)
+        init_snapshot(flat.filter(off == 1), snap, key_cols=["id"], n_buckets=16)
+        merge_cdc_batch(spark, snap, flat.filter(off > 1), key_cols=["id"], n_buckets=16)
+        return snap
 
-    digest = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:{sf_dir}".encode()
-    ).hexdigest()[:8]
-    snap = os.path.join(tempfile.gettempdir(), f"cdc_merge_snap_{digest}")
-    init_snapshot(batch1, snap, key_cols=["id"], n_buckets=16)
-    merge_cdc_batch(spark, snap, batch2, key_cols=["id"], n_buckets=16)
-    _SNAPSHOT_MEMO[key] = snap
-    return snap
+    return fixture(spark, sf_dir, "cdc_merge_snap", build)
 
 
 def cdc_merge_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -391,16 +380,15 @@ def cdc_compliance_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     requested keys are gone and that nothing else was disturbed by the
     targeted rewrite.
 
-    Starts from a CLONE of the session's memoized merged snapshot
+    Starts from a CLONE of the session's merged-snapshot fixture
     (`_merged_snapshot_path`) rather than rebuilding one — the merge is
     certified equal to the full-recompute latest-state, so the starting
     bytes are the same state and the second full snapshot write is
     skipped. The directory clone is a driver-side copy here (a distcp on
     a real deployment); erasure then rewrites only the pruned buckets of
-    the clone, leaving the memoized snapshot untouched for
+    the clone, leaving the fixture untouched for
     cdc_merge_partitioned."""
     import hashlib
-    import os
     import shutil
     import tempfile
 
@@ -427,9 +415,6 @@ def cdc_compliance_erasure(spark: SparkSession, sf_dir: str) -> DataFrame:
     return read_snapshot(spark, snap).select("id", "status", "total_amount", OP_COL)
 
 
-_SCD2_INIT_MEMO: set[tuple[str, str]] = set()
-
-
 def cdc_scd2_merge_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental SCD2 maintenance (operators/merge.py:merge_scd2_batch):
     bootstrap the version table from the initial-load batch, then merge
@@ -438,35 +423,26 @@ def cdc_scd2_merge_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     pruned recompute exact. Final table must equal the full-recompute
     SCD2 history, so this reuses cdc_scd2_history's closed-form oracle
     verbatim."""
-    import hashlib
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.operators.merge import (
         init_scd2,
         merge_scd2_batch,
         read_scd2,
     )
 
-    log = _order_event_log(_orders(spark, sf_dir))
-    flat = filter_tombstones(log).select("value.*")
-    off = F.substring(F.col(LSN_COL), -1, 1).cast("int")  # _lsn = k*10 + off
-    digest = hashlib.md5(
-        f"{spark.sparkContext.applicationId}:{sf_dir}:scd2".encode()
-    ).hexdigest()[:8]
-    path = os.path.join(tempfile.gettempdir(), f"cdc_scd2_snap_{digest}")
-    # Bootstrap once per (session, sf_dir) — the _merged_snapshot_path
-    # memo pattern: the initial-load write is shared setup, while the
-    # MERGE below runs on every call because it IS the operator under
-    # measurement. Re-merging the same batch onto the already-merged
-    # table is exact by the replay-dedupe contract (pinned by
-    # tests/test_merge.py's replay-idempotency row), so repeat calls time
-    # the true incremental cost: pruned-bucket read + recompute +
-    # dynamic overwrite, no bootstrap write.
-    memo_key = (spark.sparkContext.applicationId, path)
-    if memo_key not in _SCD2_INIT_MEMO:
+    flat, off = _flat_events(spark, sf_dir)
+
+    # Bootstrap once per session (a ``fixture``): the initial-load write
+    # is shared setup, while the MERGE below runs on every call because
+    # it IS the operator under measurement. Re-merging the same batch
+    # onto the already-merged table is exact by the replay-dedupe
+    # contract (pinned by tests/test_merge.py's replay-idempotency row),
+    # so repeat calls time the true incremental cost: pruned-bucket read
+    # + recompute + dynamic overwrite, no bootstrap write.
+    def build(path: str) -> str:
         init_scd2(flat.filter(off == 1), path, key_cols=["id"], n_buckets=16)
-        _SCD2_INIT_MEMO.add(memo_key)
+        return path
+
+    path = fixture(spark, sf_dir, "cdc_scd2", build)
     merge_scd2_batch(spark, path, flat.filter(off > 1), key_cols=["id"], n_buckets=16)
     return read_scd2(spark, path).select(
         "id", "status", "total_amount", OP_COL, "valid_from", "valid_to", "is_current"
@@ -709,39 +685,26 @@ def cdc_txn_atomic_apply(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_TXLOG_MEMO: dict = {}
-
-
 def _timetravel_table(spark: SparkSession, sf_dir: str) -> str:
-    """Build — once per (session, sf_dir) — a three-version TxLogTable
-    from the orders fixture: v0 = initial cohort (k%3==1), v1 = append
-    second cohort (k%3==2), v2 = overwrite that erases the k%5 cohort
-    (the GDPR-compaction shape). Memoized like _merged_snapshot_path."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _TXLOG_MEMO:
-        return _TXLOG_MEMO[key]
-    import os
-    import tempfile
-
+    """A three-version TxLogTable from the orders fixture, built once
+    per session by ``fixture``: v0 = initial cohort (k%3==1), v1 =
+    append second cohort (k%3==2), v2 = overwrite that erases the k%5
+    cohort (the GDPR-compaction shape)."""
     from cdc_streaming_pipeline_spark.sources.txlog import TxLogTable
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"txlog-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-    )
-    o = _orders(spark, sf_dir)
-    k = F.col("o_orderkey")
-    img = o.select(
-        k.alias("id"), F.col("o_totalprice").alias("total_amount")
-    )
-    t = TxLogTable(spark, path)
-    if t.latest_version() is None:
+    def build(path: str) -> str:
+        k = F.col("o_orderkey")
+        img = _orders(spark, sf_dir).select(
+            k.alias("id"), F.col("o_totalprice").alias("total_amount")
+        )
+        t = TxLogTable(spark, path)
         t.commit(img.filter(k % 3 == 1))
         t.commit(img.filter(k % 3 == 2))
         survivors = t.read(1).filter(F.col("id") % 5 != 0)
         t.commit(survivors, mode="overwrite", base=1)
-    _TXLOG_MEMO[key] = path
-    return path
+        return path
+
+    return fixture(spark, sf_dir, "timetravel", build)
 
 
 def table_time_travel(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -807,9 +770,7 @@ def table_sql_topn_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     layer — top-25 by total_amount with id tiebreak."""
     from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
 
-    table_deletion_vectors(spark, sf_dir)  # build/memoize the DV fixture
-    key = (spark.sparkContext.applicationId, sf_dir, "dv_table")
-    path, _, _ = _TXLOG_MEMO[key]
+    path, _, _ = _dv_table(spark, sf_dir)
     BucketedTxLogTable(spark, path).to_view("dv_sql_v")
     return spark.sql(
         """
@@ -831,9 +792,7 @@ def table_sql_cdf_view(spark: SparkSession, sf_dir: str) -> DataFrame:
     reads straight through the merge-on-read layer."""
     from cdc_streaming_pipeline_spark.catalog import register_txlog_changes
 
-    table_deletion_vectors(spark, sf_dir)  # build/memoize the DV fixture
-    key = (spark.sparkContext.applicationId, sf_dir, "dv_table")
-    path, pre, _ = _TXLOG_MEMO[key]
+    path, pre, _ = _dv_table(spark, sf_dir)
     register_txlog_changes(spark, path, "dv_sql_cdf", from_version=pre)
     return spark.sql(
         """
@@ -856,33 +815,37 @@ def cdc_txlog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     would get ConcurrentWriteError, not a lost update. Final state must
     equal the closed-form latest-state oracle; the pre-merge version
     stays readable (asserted in tests/test_txlog.py)."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.sources.txlog import (
         TxLogTable,
         merge_cdc_batch_txlog,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "cdc_merge")
-    path = _TXLOG_MEMO.get(key)
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-merge-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
-        log = _order_event_log(_orders(spark, sf_dir))
-        flat = filter_tombstones(log).select("value.*")
-        off = F.substring(F.col(LSN_COL), -1, 1).cast("int")
+    def build(path: str) -> str:
+        flat, off = _flat_events(spark, sf_dir)
         t = TxLogTable(spark, path)
-        if t.latest_version() is None:
-            seed = flat.filter(off == 1).select("id", "status", "total_amount")
-            t.commit(seed)
-            merge_cdc_batch_txlog(t, flat.filter(off > 1), key_cols=["id"])
-        _TXLOG_MEMO[key] = path
-    from cdc_streaming_pipeline_spark.sources.txlog import TxLogTable as _T
+        t.commit(flat.filter(off == 1).select("id", "status", "total_amount"))
+        merge_cdc_batch_txlog(t, flat.filter(off > 1), key_cols=["id"])
+        return path
 
-    return _T(spark, path).read().select("id", "status", "total_amount")
+    path = fixture(spark, sf_dir, "cdc_merge", build)
+    return TxLogTable(spark, path).read().select("id", "status", "total_amount")
+
+
+def _bucketed_merge_table(spark: SparkSession, sf_dir: str, mor: bool = False) -> str:
+    """The bucket-pure table seeded from the snapshot wave with the change
+    wave merged in as ONE commit — a bucket rewrite, or a merge-on-read
+    (deletion vectors + appends) when ``mor`` — built once per session."""
+    from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
+
+    def build(path: str) -> str:
+        flat, off = _flat_events(spark, sf_dir)
+        t = BucketedTxLogTable(spark, path, key_cols=["id"], n_buckets=16)
+        t.init_from_events(flat.filter(off == 1))
+        merge = t.merge_cdc_batch_mor if mor else t.merge_cdc_batch
+        merge(flat.filter(off > 1))
+        return path
+
+    return fixture(spark, sf_dir, "cdc_merge_mor" if mor else "cdc_merge_inc", build)
 
 
 def cdc_txlog_merge_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -897,26 +860,9 @@ def cdc_txlog_merge_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     spread, not table size — the scale-correct replacement for the
     full-rewrite cdc_txlog_merge demonstration. Final state must equal
     the same closed-form latest-state oracle."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
 
-    key = (spark.sparkContext.applicationId, sf_dir, "cdc_merge_inc")
-    path = _TXLOG_MEMO.get(key)
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-bmerge-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
-        log = _order_event_log(_orders(spark, sf_dir))
-        flat = filter_tombstones(log).select("value.*")
-        off = F.substring(F.col(LSN_COL), -1, 1).cast("int")
-        t = BucketedTxLogTable(spark, path, key_cols=["id"], n_buckets=16)
-        if t.latest_version() is None:
-            t.init_from_events(flat.filter(off == 1))
-            t.merge_cdc_batch(flat.filter(off > 1))
-        _TXLOG_MEMO[key] = path
+    path = _bucketed_merge_table(spark, sf_dir)
     t = BucketedTxLogTable(spark, path, key_cols=["id"], n_buckets=16)
     return t.read_state().select("id", "status", "total_amount")
 
@@ -933,26 +879,9 @@ def cdc_txlog_merge_mor(spark: SparkSession, sf_dir: str) -> DataFrame:
     final state must equal the SAME closed-form oracle the rewrite
     path is certified against, proving the two merge strategies
     interchangeable per batch."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
 
-    key = (spark.sparkContext.applicationId, sf_dir, "cdc_merge_mor")
-    path = _TXLOG_MEMO.get(key)
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-mormerge-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
-        log = _order_event_log(_orders(spark, sf_dir))
-        flat = filter_tombstones(log).select("value.*")
-        off = F.substring(F.col(LSN_COL), -1, 1).cast("int")
-        t = BucketedTxLogTable(spark, path, key_cols=["id"], n_buckets=16)
-        if t.latest_version() is None:
-            t.init_from_events(flat.filter(off == 1))
-            t.merge_cdc_batch_mor(flat.filter(off > 1))
-        _TXLOG_MEMO[key] = path
+    path = _bucketed_merge_table(spark, sf_dir, mor=True)
     t = BucketedTxLogTable(spark, path, key_cols=["id"], n_buckets=16)
     return t.read_state().select("id", "status", "total_amount")
 
@@ -971,48 +900,37 @@ def cdc_stream_merge_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     no-op). Wave application order doesn't matter: merges keep the raw
     max-LSN row per key, so the final state converges to the same
     latest-row-wins oracle the batch merge is certified against."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
     from cdc_streaming_pipeline_spark.streaming.pipeline import (
+        await_available_now,
         bucketed_merge_stream_sink,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "stream_merge")
-    path = _TXLOG_MEMO.get(key)
-    if path is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-smerge-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
+    def build(root: str) -> str:
         path = os.path.join(root, "table")
         src, ckpt = os.path.join(root, "src"), os.path.join(root, "ckpt")
-        t = BucketedTxLogTable(spark, path, key_cols=["id"], n_buckets=16)
-        if t.latest_version() is None:
-            log = _order_event_log(_orders(spark, sf_dir))
-            flat = filter_tombstones(log).select("value.*")
-            off = F.substring(F.col(LSN_COL), -1, 1).cast("int")
-            os.makedirs(src, exist_ok=True)
-            for wave in (1, 2, 3):
-                cond = (off == wave) if wave < 3 else (off >= wave)
-                flat.filter(cond).coalesce(1).write.mode("overwrite").json(
-                    os.path.join(src, f"wave{wave}")
-                )
-            stream = (
-                spark.readStream.schema(flat.schema)
-                .option("maxFilesPerTrigger", 1)
-                .json(os.path.join(src, "wave*"))
+        flat, off = _flat_events(spark, sf_dir)
+        for wave in (1, 2, 3):
+            cond = (off == wave) if wave < 3 else (off >= wave)
+            flat.filter(cond).coalesce(1).write.mode("overwrite").json(
+                os.path.join(src, f"wave{wave}")
             )
-            q = (
-                bucketed_merge_stream_sink(
-                    stream, path, ckpt, key_cols=["id"], n_buckets=16
-                )
-                .trigger(availableNow=True)
-                .start()
+        stream = (
+            spark.readStream.schema(flat.schema)
+            .option("maxFilesPerTrigger", 1)
+            .json(os.path.join(src, "wave*"))
+        )
+        q = (
+            bucketed_merge_stream_sink(
+                stream, path, ckpt, key_cols=["id"], n_buckets=16
             )
-            q.awaitTermination(300)
-        _TXLOG_MEMO[key] = path
+            .trigger(availableNow=True)
+            .start()
+        )
+        await_available_now(q, 300)
+        return path
+
+    path = fixture(spark, sf_dir, "stream_merge", build)
     t = BucketedTxLogTable(spark, path, key_cols=["id"], n_buckets=16)
     return t.read_state().select("id", "status", "total_amount")
 
@@ -1024,33 +942,25 @@ def table_pruned_range_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     proportional I/O instead of a snapshot scan. Output proves both the
     pruning (files_read < files_total) and exactness (count + exact-
     decimal total equal the closed-form oracle)."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.functions.precision import dsum
     from cdc_streaming_pipeline_spark.sources.txlog import TxLogTable
 
-    key = (spark.sparkContext.applicationId, sf_dir, "skipping")
-    path = _TXLOG_MEMO.get(key)
     o = _orders(spark, sf_dir)
     k = F.col("o_orderkey")
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-skip-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
+
+    def build(path: str) -> str:
         t = TxLogTable(spark, path)
-        if t.latest_version() is None:
-            mx = o.agg(F.max(k)).collect()[0][0]
-            img = o.select(k.alias("id"), F.col("o_totalprice").alias("total_amount"))
-            for q in range(4):
-                lo_b, hi_b = q * (mx + 1) // 4, (q + 1) * (mx + 1) // 4
-                t.commit(
-                    img.filter((F.col("id") >= lo_b) & (F.col("id") < hi_b)).coalesce(1),
-                    stats_cols=["id"],
-                )
-        _TXLOG_MEMO[key] = path
-    t = TxLogTable(spark, path)
+        mx = o.agg(F.max(k)).collect()[0][0]
+        img = o.select(k.alias("id"), F.col("o_totalprice").alias("total_amount"))
+        for q in range(4):
+            lo_b, hi_b = q * (mx + 1) // 4, (q + 1) * (mx + 1) // 4
+            t.commit(
+                img.filter((F.col("id") >= lo_b) & (F.col("id") < hi_b)).coalesce(1),
+                stats_cols=["id"],
+            )
+        return path
+
+    t = TxLogTable(spark, fixture(spark, sf_dir, "skipping", build))
     mx = o.agg(F.max(k)).collect()[0][0]
     lo, hi = mx // 2, mx // 2 + mx // 8  # inside quartiles 2-3
     df, files_read, files_total = t.read_where("id", lo, hi)
@@ -1639,8 +1549,7 @@ def cdc_mv_through_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     the closed-form final-state rollup."""
     from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable, fold_mv
 
-    cdc_txlog_merge_incremental(spark, sf_dir)  # ensure the fixture exists
-    path = _TXLOG_MEMO[(spark.sparkContext.applicationId, sf_dir, "cdc_merge_inc")]
+    path = _bucketed_merge_table(spark, sf_dir)
     t = BucketedTxLogTable(spark, path, key_cols=["id"], n_buckets=16)
     return fold_mv(t, ["status"], "total_amount").orderBy("status")
 
@@ -1679,77 +1588,69 @@ def cdc_stream_merge_schema_drift(spark: SparkSession, sf_dir: str) -> DataFrame
     records its evolved schema, so the final ``read_state`` serves the
     WIDENED schema with NULL channel for rows last written narrow —
     hash-green against the closed-form oracle."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
     from cdc_streaming_pipeline_spark.streaming.pipeline import (
+        await_available_now,
         bucketed_merge_stream_sink,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "stream_drift")
-    path = _TXLOG_MEMO.get(key)
-    if path is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-sdrift-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
+    def build(root: str) -> str:
         path = os.path.join(root, "table")
-        t = BucketedTxLogTable(spark, path, key_cols=["id"], n_buckets=16)
-        if t.latest_version() is None:
-            o = _orders(spark, sf_dir)
-            k = F.col("o_orderkey")
-            narrow = o.select(
-                k.alias("id"),
-                F.lit("pending").alias("status"),
-                F.col("o_totalprice").alias("total_amount"),
-                F.lit("r").alias(OP_COL),
-                _lsn(k, 1).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            chan = F.when(k % 2 == 0, "web").otherwise("app")
-            upd = o.filter(k % 3 == 0).select(
-                k.alias("id"),
-                F.col("o_orderstatus").alias("status"),
-                (F.col("o_totalprice") + 100.0).alias("total_amount"),
-                F.lit("u").alias(OP_COL),
-                _lsn(k, 2).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-                chan.alias("channel"),
-            )
-            dele = o.filter(k % 5 == 0).select(
-                k.alias("id"),
-                F.lit(None).cast("string").alias("status"),
-                F.lit(None).cast("double").alias("total_amount"),
-                F.lit("d").alias(OP_COL),
-                _lsn(k, 3).alias(LSN_COL),
-                F.lit("true").alias(DELETED_COL),
-                F.lit(None).cast("string").alias("channel"),
-            )
-            src1, src2 = os.path.join(root, "v1"), os.path.join(root, "v2")
-            narrow.coalesce(1).write.mode("overwrite").json(src1)
-            upd.coalesce(1).write.mode("overwrite").json(os.path.join(src2, "b"))
-            dele.coalesce(1).write.mode("overwrite").json(os.path.join(src2, "c"))
+        o = _orders(spark, sf_dir)
+        k = F.col("o_orderkey")
+        narrow = o.select(
+            k.alias("id"),
+            F.lit("pending").alias("status"),
+            F.col("o_totalprice").alias("total_amount"),
+            F.lit("r").alias(OP_COL),
+            _lsn(k, 1).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        chan = F.when(k % 2 == 0, "web").otherwise("app")
+        upd = o.filter(k % 3 == 0).select(
+            k.alias("id"),
+            F.col("o_orderstatus").alias("status"),
+            (F.col("o_totalprice") + 100.0).alias("total_amount"),
+            F.lit("u").alias(OP_COL),
+            _lsn(k, 2).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+            chan.alias("channel"),
+        )
+        dele = o.filter(k % 5 == 0).select(
+            k.alias("id"),
+            F.lit(None).cast("string").alias("status"),
+            F.lit(None).cast("double").alias("total_amount"),
+            F.lit("d").alias(OP_COL),
+            _lsn(k, 3).alias(LSN_COL),
+            F.lit("true").alias(DELETED_COL),
+            F.lit(None).cast("string").alias("channel"),
+        )
+        src1, src2 = os.path.join(root, "v1"), os.path.join(root, "v2")
+        narrow.coalesce(1).write.mode("overwrite").json(src1)
+        upd.coalesce(1).write.mode("overwrite").json(os.path.join(src2, "b"))
+        dele.coalesce(1).write.mode("overwrite").json(os.path.join(src2, "c"))
 
-            def run(src, schema, writer, ckpt):
-                stream = (
-                    spark.readStream.schema(schema)
-                    .option("maxFilesPerTrigger", 1)
-                    .json(src)
+        def run(src, schema, writer, ckpt):
+            stream = (
+                spark.readStream.schema(schema)
+                .option("maxFilesPerTrigger", 1)
+                .json(src)
+            )
+            q = (
+                bucketed_merge_stream_sink(
+                    stream, path, os.path.join(root, ckpt),
+                    key_cols=["id"], n_buckets=16, writer_id=writer,
                 )
-                q = (
-                    bucketed_merge_stream_sink(
-                        stream, path, os.path.join(root, ckpt),
-                        key_cols=["id"], n_buckets=16, writer_id=writer,
-                    )
-                    .trigger(availableNow=True)
-                    .start()
-                )
-                q.awaitTermination(300)
+                .trigger(availableNow=True)
+                .start()
+            )
+            await_available_now(q, 300)
 
-            run(src1, narrow.schema, "drift_sink_v1", "ckpt1")
-            run(os.path.join(src2, "*"), upd.schema, "drift_sink_v2", "ckpt2")
-        _TXLOG_MEMO[key] = path
+        run(src1, narrow.schema, "drift_sink_v1", "ckpt1")
+        run(os.path.join(src2, "*"), upd.schema, "drift_sink_v2", "ckpt2")
+        return path
+
+    path = fixture(spark, sf_dir, "stream_drift", build)
     t = BucketedTxLogTable(spark, path, key_cols=["id"], n_buckets=16)
     return t.read_state().select("id", "status", "total_amount", "channel")
 
@@ -1779,51 +1680,44 @@ def table_rebucket_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     post-rebucket merges prune the RIGHT files (a stale-8-bucket merge
     would duplicate keys; tests/test_txlog_rebucket.py pins that path
     too)."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
 
-    key = (spark.sparkContext.applicationId, sf_dir, "rebucket")
-    path = _TXLOG_MEMO.get(key)
     o = _orders(spark, sf_dir)
     k = F.col("o_orderkey")
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-rebucket-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
+
+    def build(path: str) -> str:
         t = BucketedTxLogTable(spark, path, key_cols=["id"], n_buckets=8)
-        if t.latest_version() is None:
-            snap = o.select(
-                k.alias("id"),
-                F.lit("pending").alias("status"),
-                F.col("o_totalprice").alias("total_amount"),
-                F.lit("r").alias(OP_COL),
-                _lsn(k, 1).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.init_from_events(snap)
-            upd = o.filter(k % 3 == 0).select(
-                k.alias("id"),
-                F.col("o_orderstatus").alias("status"),
-                (F.col("o_totalprice") + 100.0).alias("total_amount"),
-                F.lit("u").alias(OP_COL),
-                _lsn(k, 2).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.merge_cdc_batch(upd)
-            t.rebucket(16)
-            dele = o.filter(k % 5 == 0).select(
-                k.alias("id"),
-                F.lit(None).cast("string").alias("status"),
-                F.lit(None).cast("double").alias("total_amount"),
-                F.lit("d").alias(OP_COL),
-                _lsn(k, 3).alias(LSN_COL),
-                F.lit("true").alias(DELETED_COL),
-            )
-            t.merge_cdc_batch(dele)
-        _TXLOG_MEMO[key] = path
+        snap = o.select(
+            k.alias("id"),
+            F.lit("pending").alias("status"),
+            F.col("o_totalprice").alias("total_amount"),
+            F.lit("r").alias(OP_COL),
+            _lsn(k, 1).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.init_from_events(snap)
+        upd = o.filter(k % 3 == 0).select(
+            k.alias("id"),
+            F.col("o_orderstatus").alias("status"),
+            (F.col("o_totalprice") + 100.0).alias("total_amount"),
+            F.lit("u").alias(OP_COL),
+            _lsn(k, 2).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.merge_cdc_batch(upd)
+        t.rebucket(16)
+        dele = o.filter(k % 5 == 0).select(
+            k.alias("id"),
+            F.lit(None).cast("string").alias("status"),
+            F.lit(None).cast("double").alias("total_amount"),
+            F.lit("d").alias(OP_COL),
+            _lsn(k, 3).alias(LSN_COL),
+            F.lit("true").alias(DELETED_COL),
+        )
+        t.merge_cdc_batch(dele)
+        return path
+
+    path = fixture(spark, sf_dir, "rebucket", build)
     t = BucketedTxLogTable(spark, path)  # layout resolves from the log
     return t.read_state().select("id", "status", "total_amount")
 
@@ -1851,44 +1745,37 @@ def table_stats_skipping_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame
     files (``pruned`` = files_read < files_total, asserted TRUE by the
     oracle) and both probes must be value-exact — the recent-range
     dashboard query against a 100 TB table at proportional I/O."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.functions.precision import dsum
     from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
 
-    key = (spark.sparkContext.applicationId, sf_dir, "stats_skip_bucketed")
-    path = _TXLOG_MEMO.get(key)
     o = _orders(spark, sf_dir)
     k = F.col("o_orderkey")
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-statskip-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
+
+    def build(path: str) -> str:
         t = BucketedTxLogTable(
             spark, path, key_cols=["id"], n_buckets=16, stats_cols=["total_amount"]
         )
-        if t.latest_version() is None:
-            snap = o.select(
-                k.alias("id"),
-                F.col("o_totalprice").cast("double").alias("total_amount"),
-                F.lit("r").alias(OP_COL),
-                _lsn(k, 1).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.init_from_events(snap)
-            hot = o.join(o.agg(F.min(k).alias("mk")), k == F.col("mk")).select(
-                k.alias("id"),
-                (F.col("o_totalprice").cast("double") + 10_000_000.0).alias(
-                    "total_amount"
-                ),
-                F.lit("u").alias(OP_COL),
-                _lsn(k, 2).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.merge_cdc_batch(hot)
-        _TXLOG_MEMO[key] = path
+        snap = o.select(
+            k.alias("id"),
+            F.col("o_totalprice").cast("double").alias("total_amount"),
+            F.lit("r").alias(OP_COL),
+            _lsn(k, 1).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.init_from_events(snap)
+        hot = o.join(o.agg(F.min(k).alias("mk")), k == F.col("mk")).select(
+            k.alias("id"),
+            (F.col("o_totalprice").cast("double") + 10_000_000.0).alias(
+                "total_amount"
+            ),
+            F.lit("u").alias(OP_COL),
+            _lsn(k, 2).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.merge_cdc_batch(hot)
+        return path
+
+    path = fixture(spark, sf_dir, "stats_skip_bucketed", build)
     t = BucketedTxLogTable(spark, path, stats_cols=["total_amount"])
     hot_df, hr, ht = t.read_state_where("total_amount", 9_000_000.0, 20_000_000.0)
     hot = hot_df.agg(
@@ -1937,37 +1824,30 @@ def table_clustered_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     band. Output proves pruning happened (``pruned`` asserted 'yes' by
     the oracle — at least one slice skipped at every SF) and value
     exactness of the pruned read."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.functions.precision import dsum
     from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
 
-    key = (spark.sparkContext.applicationId, sf_dir, "clustered_skip")
-    path = _TXLOG_MEMO.get(key)
     o = _orders(spark, sf_dir)
     k = F.col("o_orderkey")
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-clusterskip-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
+
+    def build(path: str) -> str:
         t = BucketedTxLogTable(
             spark, path, key_cols=["id"], n_buckets=16, stats_cols=["total_amount"]
         )
-        if t.latest_version() is None:
-            snap = o.select(
-                k.alias("id"),
-                F.col("o_totalprice").cast("double").alias("total_amount"),
-                F.lit("r").alias(OP_COL),
-                _lsn(k, 1).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.init_from_events(snap)
-            t.compact_buckets(
-                min_files=1, cluster_cols=["total_amount"], cluster_parts=64
-            )
-        _TXLOG_MEMO[key] = path
+        snap = o.select(
+            k.alias("id"),
+            F.col("o_totalprice").cast("double").alias("total_amount"),
+            F.lit("r").alias(OP_COL),
+            _lsn(k, 1).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.init_from_events(snap)
+        t.compact_buckets(
+            min_files=1, cluster_cols=["total_amount"], cluster_parts=64
+        )
+        return path
+
+    path = fixture(spark, sf_dir, "clustered_skip", build)
     t = BucketedTxLogTable(spark, path, stats_cols=["total_amount"])
     df, fr, ft = t.read_state_where("total_amount", 1000.0, 2000.0)
     return df.agg(
@@ -2000,55 +1880,46 @@ def table_zorder_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     Fixture: orders with (amount, customer), z-order-compacted into 64
     tiles; probes: the 2-D box, plus each 1-D band alone — all three
     must prune ('yes' asserted by the oracle) and be value-exact."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.functions.precision import dsum
     from cdc_streaming_pipeline_spark.operators.layout import zorder_value
     from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
 
-    key = (spark.sparkContext.applicationId, sf_dir, "zorder_skip")
-    memo = _TXLOG_MEMO.get(key)
     o = _orders(spark, sf_dir)
     k = F.col("o_orderkey")
-    if memo is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-zorder-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
+
+    def build(path: str) -> tuple[str, int]:
         cmax = int(o.agg(F.max("o_custkey")).collect()[0][0])
         t = BucketedTxLogTable(
             spark, path, key_cols=["id"], n_buckets=8,
             stats_cols=["total_amount", "customer"],
         )
-        if t.latest_version() is None:
-            snap = o.select(
-                k.alias("id"),
-                F.col("o_totalprice").cast("double").alias("total_amount"),
-                F.col("o_custkey").alias("customer"),
-                F.lit("r").alias(OP_COL),
-                _lsn(k, 1).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.init_from_events(snap)
-            # quantize each dimension to 10 bits over its domain, then
-            # morton-interleave — the cluster expression IS a Column,
-            # which compact_buckets range-partitions on
-            q_amt = F.least(
-                F.lit(1023), (F.col("total_amount") / 600.0).cast("int")
-            )
-            q_cust = F.least(
-                F.lit(1023),
-                (F.col("customer") / F.lit(max(cmax // 1024, 1))).cast("int"),
-            )
-            t.compact_buckets(
-                min_files=1,
-                cluster_cols=[zorder_value([q_amt, q_cust], bits=10)],
-                cluster_parts=64,
-            )
-        _TXLOG_MEMO[key] = (path, cmax)
-        memo = (path, cmax)
-    path, cmax = memo
+        snap = o.select(
+            k.alias("id"),
+            F.col("o_totalprice").cast("double").alias("total_amount"),
+            F.col("o_custkey").alias("customer"),
+            F.lit("r").alias(OP_COL),
+            _lsn(k, 1).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.init_from_events(snap)
+        # quantize each dimension to 10 bits over its domain, then
+        # morton-interleave — the cluster expression IS a Column,
+        # which compact_buckets range-partitions on
+        q_amt = F.least(
+            F.lit(1023), (F.col("total_amount") / 600.0).cast("int")
+        )
+        q_cust = F.least(
+            F.lit(1023),
+            (F.col("customer") / F.lit(max(cmax // 1024, 1))).cast("int"),
+        )
+        t.compact_buckets(
+            min_files=1,
+            cluster_cols=[zorder_value([q_amt, q_cust], bits=10)],
+            cluster_parts=64,
+        )
+        return path, cmax
+
+    path, cmax = fixture(spark, sf_dir, "zorder_skip", build)
     t = BucketedTxLogTable(spark, path, stats_cols=["total_amount", "customer"])
 
     def probe(preds, name):
@@ -2111,48 +1982,41 @@ def table_dict_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     by status into 64 slices, then merge ONE key to a brand-new status.
     The new-status probe must read only the merge's files and the 'P'
     probe must skip the value-pure 'F'/'O' slices; both value-exact."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.functions.precision import dsum
     from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
 
-    key = (spark.sparkContext.applicationId, sf_dir, "dict_skip")
-    path = _TXLOG_MEMO.get(key)
     o = _orders(spark, sf_dir)
     k = F.col("o_orderkey")
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-dictskip-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
+
+    def build(path: str) -> str:
         t = BucketedTxLogTable(
             spark, path, key_cols=["id"], n_buckets=16,
             stats_cols=["status", "total_amount"]
         )
-        if t.latest_version() is None:
-            snap = o.select(
-                k.alias("id"),
-                F.col("o_orderstatus").alias("status"),
-                F.col("o_totalprice").cast("double").alias("total_amount"),
-                F.lit("r").alias(OP_COL),
-                _lsn(k, 1).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.init_from_events(snap)
-            t.compact_buckets(
-                min_files=1, cluster_cols=["status"], cluster_parts=64
-            )
-            hot = o.join(o.agg(F.min(k).alias("mk")), k == F.col("mk")).select(
-                k.alias("id"),
-                F.lit("escalated").alias("status"),
-                F.col("o_totalprice").cast("double").alias("total_amount"),
-                F.lit("u").alias(OP_COL),
-                _lsn(k, 2).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.merge_cdc_batch(hot)
-        _TXLOG_MEMO[key] = path
+        snap = o.select(
+            k.alias("id"),
+            F.col("o_orderstatus").alias("status"),
+            F.col("o_totalprice").cast("double").alias("total_amount"),
+            F.lit("r").alias(OP_COL),
+            _lsn(k, 1).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.init_from_events(snap)
+        t.compact_buckets(
+            min_files=1, cluster_cols=["status"], cluster_parts=64
+        )
+        hot = o.join(o.agg(F.min(k).alias("mk")), k == F.col("mk")).select(
+            k.alias("id"),
+            F.lit("escalated").alias("status"),
+            F.col("o_totalprice").cast("double").alias("total_amount"),
+            F.lit("u").alias(OP_COL),
+            _lsn(k, 2).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.merge_cdc_batch(hot)
+        return path
+
+    path = fixture(spark, sf_dir, "dict_skip", build)
     t = BucketedTxLogTable(spark, path, stats_cols=["status", "total_amount"])
 
     def probe(values, name):
@@ -2208,6 +2072,42 @@ ORACLE["table_dict_skipping"] = """
 """
 
 
+def _decimal_skip_table(spark: SparkSession, sf_dir: str) -> str:
+    """Orders seeded with DECIMAL(12,2) amounts (stats on the amount),
+    then ONE key merged to price+10M; built once per session."""
+    from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
+
+    o = _orders(spark, sf_dir)
+    k = F.col("o_orderkey")
+    amt = F.col("o_totalprice").cast("decimal(12,2)")
+
+    def build(path: str) -> str:
+        t = BucketedTxLogTable(
+            spark, path, key_cols=["id"], n_buckets=16, stats_cols=["total_amount"]
+        )
+        snap = o.select(
+            k.alias("id"),
+            amt.alias("total_amount"),
+            F.lit("r").alias(OP_COL),
+            _lsn(k, 1).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.init_from_events(snap)
+        hot = o.join(o.agg(F.min(k).alias("mk")), k == F.col("mk")).select(
+            k.alias("id"),
+            (amt + F.lit(10_000_000)).cast("decimal(12,2)").alias(
+                "total_amount"
+            ),
+            F.lit("u").alias(OP_COL),
+            _lsn(k, 2).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.merge_cdc_batch(hot)
+        return path
+
+    return fixture(spark, sf_dir, "stats_skip_decimal", build)
+
+
 def table_stats_skipping_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed data-skipping on the schema's canonical MONEY type
     (sources/txlog.py:_stat_norm + read_state_where): a DECIMAL(12,2)
@@ -2220,45 +2120,11 @@ def table_stats_skipping_decimal(spark: SparkSession, sf_dir: str) -> DataFrame:
     price+10M; hot probes must read only the merge's files
     (``pruned`` = 'yes', asserted by the oracle) and every probe is
     value-exact against DuckDB's own decimal arithmetic."""
-    import os
-    import tempfile
     from decimal import Decimal
 
     from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
 
-    key = (spark.sparkContext.applicationId, sf_dir, "stats_skip_decimal")
-    path = _TXLOG_MEMO.get(key)
-    o = _orders(spark, sf_dir)
-    k = F.col("o_orderkey")
-    amt = F.col("o_totalprice").cast("decimal(12,2)")
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-decskip-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
-        t = BucketedTxLogTable(
-            spark, path, key_cols=["id"], n_buckets=16, stats_cols=["total_amount"]
-        )
-        if t.latest_version() is None:
-            snap = o.select(
-                k.alias("id"),
-                amt.alias("total_amount"),
-                F.lit("r").alias(OP_COL),
-                _lsn(k, 1).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.init_from_events(snap)
-            hot = o.join(o.agg(F.min(k).alias("mk")), k == F.col("mk")).select(
-                k.alias("id"),
-                (amt + F.lit(10_000_000)).cast("decimal(12,2)").alias(
-                    "total_amount"
-                ),
-                F.lit("u").alias(OP_COL),
-                _lsn(k, 2).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.merge_cdc_batch(hot)
-        _TXLOG_MEMO[key] = path
+    path = _decimal_skip_table(spark, sf_dir)
     t = BucketedTxLogTable(spark, path, stats_cols=["total_amount"])
 
     def probe(lo, hi, name, na=False):
@@ -2316,37 +2182,30 @@ def table_null_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     the all-non-null slices, the isnotnull probe must skip the pure-
     null slices, and a range probe must skip null slices too — each
     'yes' asserted by the oracle, values exact."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
 
-    key = (spark.sparkContext.applicationId, sf_dir, "null_skip")
-    path = _TXLOG_MEMO.get(key)
     o = _orders(spark, sf_dir)
     k = F.col("o_orderkey")
     amt = F.when(k % 7 != 0, F.col("o_totalprice").cast("double"))
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-nullskip-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
+
+    def build(path: str) -> str:
         t = BucketedTxLogTable(
             spark, path, key_cols=["id"], n_buckets=8, stats_cols=["total_amount"]
         )
-        if t.latest_version() is None:
-            snap = o.select(
-                k.alias("id"),
-                amt.alias("total_amount"),
-                F.lit("r").alias(OP_COL),
-                _lsn(k, 1).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.init_from_events(snap)
-            t.compact_buckets(
-                min_files=1, cluster_cols=["total_amount"], cluster_parts=32
-            )
-        _TXLOG_MEMO[key] = path
+        snap = o.select(
+            k.alias("id"),
+            amt.alias("total_amount"),
+            F.lit("r").alias(OP_COL),
+            _lsn(k, 1).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.init_from_events(snap)
+        t.compact_buckets(
+            min_files=1, cluster_cols=["total_amount"], cluster_parts=32
+        )
+        return path
+
+    path = fixture(spark, sf_dir, "null_skip", build)
     t = BucketedTxLogTable(spark, path, stats_cols=["total_amount"])
 
     def probe(preds, name):
@@ -2404,34 +2263,27 @@ def table_text_stats_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle) and return exactly DuckDB's answer on the full strings —
     the conservative-bounds construction (prefix ≤ every value it
     summarizes, bumped prefix > all of them) proven at the gate."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
 
-    key = (spark.sparkContext.applicationId, sf_dir, "text_skip")
-    path = _TXLOG_MEMO.get(key)
     docs = load_table(spark, sf_dir, "documents")
     k = F.col("doc_id")
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-textskip-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
+
+    def build(path: str) -> str:
         t = BucketedTxLogTable(
             spark, path, key_cols=["id"], n_buckets=4, stats_cols=["text"]
         )
-        if t.latest_version() is None:
-            snap = docs.select(
-                k.alias("id"),
-                F.col("text"),
-                F.lit("r").alias(OP_COL),
-                _lsn(k, 1).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.init_from_events(snap)
-            t.compact_buckets(min_files=1, cluster_cols=["text"], cluster_parts=32)
-        _TXLOG_MEMO[key] = path
+        snap = docs.select(
+            k.alias("id"),
+            F.col("text"),
+            F.lit("r").alias(OP_COL),
+            _lsn(k, 1).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.init_from_events(snap)
+        t.compact_buckets(min_files=1, cluster_cols=["text"], cluster_parts=32)
+        return path
+
+    path = fixture(spark, sf_dir, "text_skip", build)
     t = BucketedTxLogTable(spark, path, stats_cols=["text"])
 
     def probe(lo, hi, name):
@@ -2469,52 +2321,42 @@ def table_analyze_backfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     fixture really was unanalyzed), the post-analyze range read
     (pruned='yes'), and a dictionary IN probe (pruned='yes'); all
     value-exact vs the closed-form oracle."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.sources.txlog import (
         BucketedTxLogTable,
         analyze_table,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "analyze_backfill")
-    memo = _TXLOG_MEMO.get(key)
     o = _orders(spark, sf_dir)
     k = F.col("o_orderkey")
-    if memo is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-analyze-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
+
+    def build(path: str) -> tuple[str, str]:
         t = BucketedTxLogTable(spark, path, key_cols=["id"], n_buckets=8)
-        pre_pruned = "no"
-        if t.latest_version() is None:
-            snap = o.select(
-                k.alias("id"),
-                F.col("o_orderstatus").alias("status"),
-                F.col("o_totalprice").cast("double").alias("total_amount"),
-                F.lit("r").alias(OP_COL),
-                _lsn(k, 1).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.init_from_events(snap)  # stats-less writer
-            # cluster on (status, amount) so BOTH post-analyze probes
-            # prune at every SF: slices are status-pure runs with
-            # narrow amount ranges inside each status group
-            t.compact_buckets(
-                min_files=1,
-                cluster_cols=["status", "total_amount"],
-                cluster_parts=32,
-            )
-            probe = BucketedTxLogTable(
-                spark, path, stats_cols=["total_amount", "status"]
-            )
-            _, r0, t0 = probe.read_state_where("total_amount", 1000.0, 2000.0)
-            pre_pruned = "yes" if r0 < t0 else "no"
-            analyze_table(probe, ["total_amount", "status"])
-        _TXLOG_MEMO[key] = (path, pre_pruned)
-        memo = _TXLOG_MEMO[key]
-    path, pre_pruned = memo
+        snap = o.select(
+            k.alias("id"),
+            F.col("o_orderstatus").alias("status"),
+            F.col("o_totalprice").cast("double").alias("total_amount"),
+            F.lit("r").alias(OP_COL),
+            _lsn(k, 1).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.init_from_events(snap)  # stats-less writer
+        # cluster on (status, amount) so BOTH post-analyze probes
+        # prune at every SF: slices are status-pure runs with
+        # narrow amount ranges inside each status group
+        t.compact_buckets(
+            min_files=1,
+            cluster_cols=["status", "total_amount"],
+            cluster_parts=32,
+        )
+        probe = BucketedTxLogTable(
+            spark, path, stats_cols=["total_amount", "status"]
+        )
+        _, r0, t0 = probe.read_state_where("total_amount", 1000.0, 2000.0)
+        pre_pruned = "yes" if r0 < t0 else "no"
+        analyze_table(probe, ["total_amount", "status"])
+        return path, pre_pruned
+
+    path, pre_pruned = fixture(spark, sf_dir, "analyze_backfill", build)
     t = BucketedTxLogTable(spark, path, stats_cols=["total_amount", "status"])
 
     def agg(df, fr, ft, name, flag=None):
@@ -2574,11 +2416,9 @@ def table_filtered_read(spark: SparkSession, sf_dir: str) -> DataFrame:
     filter."""
     from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
 
-    # share the table_stats_skipping_decimal fixture (memoized)
-    table_stats_skipping_decimal(spark, sf_dir)
-    key = (spark.sparkContext.applicationId, sf_dir, "stats_skip_decimal")
+    # shares the table_stats_skipping_decimal fixture
     t = BucketedTxLogTable(
-        spark, _TXLOG_MEMO[key], stats_cols=["total_amount"]
+        spark, _decimal_skip_table(spark, sf_dir), stats_cols=["total_amount"]
     )
 
     def probe(pred, name):
@@ -2641,43 +2481,36 @@ def table_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     merge's files; a value present nowhere must read ZERO files; a real
     customer's ~10 orders never cover all 16 buckets, so that probe
     prunes too — each 'yes' asserted by the oracle, values exact."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
 
-    key = (spark.sparkContext.applicationId, sf_dir, "bloom_skip")
-    path = _TXLOG_MEMO.get(key)
     o = _orders(spark, sf_dir)
     k = F.col("o_orderkey")
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-bloomskip-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
+
+    def build(path: str) -> str:
         t = BucketedTxLogTable(
             spark, path, key_cols=["id"], n_buckets=16, bloom_cols=["customer"]
         )
-        if t.latest_version() is None:
-            snap = o.select(
-                k.alias("id"),
-                F.col("o_custkey").alias("customer"),
-                F.col("o_totalprice").cast("double").alias("total_amount"),
-                F.lit("r").alias(OP_COL),
-                _lsn(k, 1).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.init_from_events(snap)
-            hot = o.join(o.agg(F.min(k).alias("mk")), k == F.col("mk")).select(
-                k.alias("id"),
-                F.lit(-424242).cast("bigint").alias("customer"),
-                F.col("o_totalprice").cast("double").alias("total_amount"),
-                F.lit("u").alias(OP_COL),
-                _lsn(k, 2).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.merge_cdc_batch(hot)
-        _TXLOG_MEMO[key] = path
+        snap = o.select(
+            k.alias("id"),
+            F.col("o_custkey").alias("customer"),
+            F.col("o_totalprice").cast("double").alias("total_amount"),
+            F.lit("r").alias(OP_COL),
+            _lsn(k, 1).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.init_from_events(snap)
+        hot = o.join(o.agg(F.min(k).alias("mk")), k == F.col("mk")).select(
+            k.alias("id"),
+            F.lit(-424242).cast("bigint").alias("customer"),
+            F.col("o_totalprice").cast("double").alias("total_amount"),
+            F.lit("u").alias(OP_COL),
+            _lsn(k, 2).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.merge_cdc_batch(hot)
+        return path
+
+    path = fixture(spark, sf_dir, "bloom_skip", build)
     t = BucketedTxLogTable(spark, path, bloom_cols=["customer"])
     # the cold probe's value: the customer holding the MAX order key
     # (bounded 1-row lookup, mirrored in the oracle's subquery)
@@ -2707,6 +2540,39 @@ def table_bloom_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _dv_table(spark: SparkSession, sf_dir: str) -> tuple[str, int, bool]:
+    """The orders snapshot as a bucketed state table with the mid-range
+    amount band deleted by deletion vectors, built once per session.
+    Returns (path, pre-delete version, whether the delete rewrote any
+    live file)."""
+    from cdc_streaming_pipeline_spark.sources.txlog import (
+        BucketedTxLogTable,
+        resolve_with_checkpoint,
+    )
+
+    def build(path: str) -> tuple[str, int, bool]:
+        o = _orders(spark, sf_dir)
+        k = F.col("o_orderkey")
+        t = BucketedTxLogTable(
+            spark, path, key_cols=["id"], n_buckets=16, stats_cols=["total_amount"]
+        )
+        snap = o.select(
+            k.alias("id"),
+            F.col("o_totalprice").cast("double").alias("total_amount"),
+            F.lit("r").alias(OP_COL),
+            _lsn(k, 1).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.init_from_events(snap)
+        pre = t.latest_version()
+        files_before = sorted(resolve_with_checkpoint(t))
+        t.delete_where(F.col("total_amount").between(50_000.0, 100_000.0))
+        rewrote = sorted(resolve_with_checkpoint(t)) != files_before
+        return path, pre, rewrote
+
+    return fixture(spark, sf_dir, "dv_table", build)
+
+
 def table_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge-on-read DELETE (sources/txlog.py:delete_where +
     _apply_dvs — Delta deletion vectors / Iceberg positional deletes):
@@ -2718,44 +2584,9 @@ def table_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     'no' asserts the live file list is byte-identical across the delete
     commit), and TIME TRAVEL to the pre-delete version (vectors are
     versioned facts — the old snapshot restores every row exactly)."""
-    import os
-    import tempfile
+    from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
 
-    from cdc_streaming_pipeline_spark.sources.txlog import (
-        BucketedTxLogTable,
-        resolve_with_checkpoint,
-    )
-
-    key = (spark.sparkContext.applicationId, sf_dir, "dv_table")
-    memo = _TXLOG_MEMO.get(key)
-    o = _orders(spark, sf_dir)
-    k = F.col("o_orderkey")
-    if memo is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-dv-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
-        t = BucketedTxLogTable(
-            spark, path, key_cols=["id"], n_buckets=16, stats_cols=["total_amount"]
-        )
-        if t.latest_version() is None:
-            snap = o.select(
-                k.alias("id"),
-                F.col("o_totalprice").cast("double").alias("total_amount"),
-                F.lit("r").alias(OP_COL),
-                _lsn(k, 1).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.init_from_events(snap)
-            pre = t.latest_version()
-            files_before = sorted(resolve_with_checkpoint(t))
-            t.delete_where(F.col("total_amount").between(50_000.0, 100_000.0))
-            rewrote = sorted(resolve_with_checkpoint(t)) != files_before
-            memo = (path, pre, rewrote)
-            _TXLOG_MEMO[key] = memo
-        else:
-            memo = _TXLOG_MEMO[key]
-    path, pre, rewrote = memo
+    path, pre, rewrote = _dv_table(spark, sf_dir)
     t = BucketedTxLogTable(spark, path)
 
     def probe(df, name):
@@ -2787,49 +2618,38 @@ def table_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     version (vectors + appended files are versioned facts), and the
     CHANGE FEED's update_preimage/update_postimage rows — each stated
     closed-form by the oracle."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.sources.txlog import (
         BucketedTxLogTable,
         table_changes,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "upd_table")
-    memo = _TXLOG_MEMO.get(key)
     o = _orders(spark, sf_dir)
     k = F.col("o_orderkey")
-    if memo is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-upd-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
+
+    def build(path: str) -> tuple[str, int]:
         t = BucketedTxLogTable(
             spark, path, key_cols=["id"], n_buckets=16, stats_cols=["total_amount"]
         )
-        if t.latest_version() is None:
-            snap = o.select(
-                k.alias("id"),
-                F.col("o_totalprice").cast("double").alias("total_amount"),
-                F.col("o_orderstatus").alias("status"),
-                F.lit("r").alias(OP_COL),
-                _lsn(k, 1).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.init_from_events(snap)
-            pre = t.latest_version()
-            t.update_where(
-                F.col("total_amount").between(50_000.0, 100_000.0),
-                {
-                    "total_amount": F.col("total_amount") + 1_000_000.0,
-                    "status": F.lit("BUMPED"),
-                },
-            )
-            memo = (path, pre)
-            _TXLOG_MEMO[key] = memo
-        else:
-            memo = _TXLOG_MEMO[key]
-    path, pre = memo
+        snap = o.select(
+            k.alias("id"),
+            F.col("o_totalprice").cast("double").alias("total_amount"),
+            F.col("o_orderstatus").alias("status"),
+            F.lit("r").alias(OP_COL),
+            _lsn(k, 1).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.init_from_events(snap)
+        pre = t.latest_version()
+        t.update_where(
+            F.col("total_amount").between(50_000.0, 100_000.0),
+            {
+                "total_amount": F.col("total_amount") + 1_000_000.0,
+                "status": F.lit("BUMPED"),
+            },
+        )
+        return path, pre
+
+    path, pre = fixture(spark, sf_dir, "upd_table", build)
     t = BucketedTxLogTable(spark, path)
 
     def probe(df, name):
@@ -2859,6 +2679,45 @@ def table_update_where(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _feed_upstream(spark: SparkSession, sf_dir: str, apath: str):
+    """Table A of the change-feed round trips, seeded from the orders
+    snapshot, and a callable that lands A's upstream wave: a CDC merge
+    of the k%3 updates, a MoR delete and a MoR update."""
+    from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
+
+    o = _orders(spark, sf_dir)
+    k = F.col("o_orderkey")
+    a = BucketedTxLogTable(spark, apath, key_cols=["id"], n_buckets=16)
+    a.init_from_events(
+        o.select(
+            k.alias("id"),
+            F.lit("pending").alias("status"),
+            F.col("o_totalprice").cast("double").alias("total_amount"),
+            F.lit("r").alias(OP_COL),
+            _lsn(k, 1).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+    )
+
+    def land_changes() -> None:
+        upd = o.filter(k % 3 == 0).select(
+            k.alias("id"),
+            F.col("o_orderstatus").alias("status"),
+            (F.col("o_totalprice").cast("double") + 100.0).alias("total_amount"),
+            F.lit("u").alias(OP_COL),
+            _lsn(k, 2).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        a.merge_cdc_batch(upd)
+        a.delete_where(F.col("total_amount") > 400_000.0)
+        a.update_where(
+            F.col("total_amount").between(1_000.0, 2_000.0),
+            {"status": F.lit("AUDITED")},
+        )
+
+    return a, land_changes
+
+
 def cdc_feed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The change feed as a CDC SOURCE
     (sources/txlog.py:ChangeFeedSource + feed_as_cdc_events): table A's
@@ -2872,61 +2731,26 @@ def cdc_feed_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     and a second poll carries them over. Returns B's state — the oracle
     states A's expected state closed-form, so hash-equality proves the
     feed is SUFFICIENT to reconstruct the table."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.sources.txlog import (
         BucketedTxLogTable,
         ChangeFeedSource,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "feed_rt")
-    memo = _TXLOG_MEMO.get(key)
-    o = _orders(spark, sf_dir)
-    k = F.col("o_orderkey")
-    if memo is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-feedrt-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
+    def build(root: str) -> str:
         apath, bpath = os.path.join(root, "a"), os.path.join(root, "b")
-        a = BucketedTxLogTable(spark, apath, key_cols=["id"], n_buckets=16)
-        if a.latest_version() is None:
-            snap = o.select(
-                k.alias("id"),
-                F.lit("pending").alias("status"),
-                F.col("o_totalprice").cast("double").alias("total_amount"),
-                F.lit("r").alias(OP_COL),
-                _lsn(k, 1).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            a.init_from_events(snap)
-            src = ChangeFeedSource(a)
-            events, cur = src.poll()
-            b = BucketedTxLogTable(spark, bpath, key_cols=["id"], n_buckets=16)
-            b.init_from_events(events, txn=("feed", cur))
-            src.advance(cur)
-            # upstream wave: CDC merge, MoR delete, MoR update
-            upd = o.filter(k % 3 == 0).select(
-                k.alias("id"),
-                F.col("o_orderstatus").alias("status"),
-                (F.col("o_totalprice").cast("double") + 100.0).alias("total_amount"),
-                F.lit("u").alias(OP_COL),
-                _lsn(k, 2).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            a.merge_cdc_batch(upd)
-            a.delete_where(F.col("total_amount") > 400_000.0)
-            a.update_where(
-                F.col("total_amount").between(1_000.0, 2_000.0),
-                {"status": F.lit("AUDITED")},
-            )
-            events, cur = src.poll()
-            b.merge_cdc_batch(events, txn=("feed", cur))
-            src.advance(cur)
-        memo = bpath
-        _TXLOG_MEMO[key] = memo
-    b = BucketedTxLogTable(spark, memo)
+        a, land_changes = _feed_upstream(spark, sf_dir, apath)
+        src = ChangeFeedSource(a)
+        events, cur = src.poll()
+        b = BucketedTxLogTable(spark, bpath, key_cols=["id"], n_buckets=16)
+        b.init_from_events(events, txn=("feed", cur))
+        src.advance(cur)
+        land_changes()
+        events, cur = src.poll()
+        b.merge_cdc_batch(events, txn=("feed", cur))
+        src.advance(cur)
+        return bpath
+
+    b = BucketedTxLogTable(spark, fixture(spark, sf_dir, "feed_rt", build))
     return b.read_state().select("id", "status", "total_amount")
 
 
@@ -2944,63 +2768,30 @@ def cdc_feed_stream_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     streaming query against one checkpoint — the second resumes from
     the checkpointed cursor. Returns B's state; the oracle states A's
     expected state closed-form."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
     from cdc_streaming_pipeline_spark.streaming.feed_source import (
         feed_replication_stream,
     )
+    from cdc_streaming_pipeline_spark.streaming.pipeline import await_available_now
 
-    key = (spark.sparkContext.applicationId, sf_dir, "feed_stream_rt")
-    memo = _TXLOG_MEMO.get(key)
-    o = _orders(spark, sf_dir)
-    k = F.col("o_orderkey")
-    if memo is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-feedstrm-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
+    def build(root: str) -> str:
         apath, bpath = os.path.join(root, "a"), os.path.join(root, "b")
         ckpt = os.path.join(root, "ckpt")
-        a = BucketedTxLogTable(spark, apath, key_cols=["id"], n_buckets=16)
-        if a.latest_version() is None:
-            snap = o.select(
-                k.alias("id"),
-                F.lit("pending").alias("status"),
-                F.col("o_totalprice").cast("double").alias("total_amount"),
-                F.lit("r").alias(OP_COL),
-                _lsn(k, 1).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            a.init_from_events(snap)
+        _, land_changes = _feed_upstream(spark, sf_dir, apath)
 
-            def run_stream():
-                q = feed_replication_stream(
-                    spark, apath, bpath, ckpt, key_cols=["id"],
-                    n_buckets=16, available_now=True,
-                )
-                q.awaitTermination(600)
+        def run_stream():
+            q = feed_replication_stream(
+                spark, apath, bpath, ckpt, key_cols=["id"],
+                n_buckets=16, available_now=True,
+            )
+            await_available_now(q, 600)
 
-            run_stream()  # snapshot replicates
-            upd = o.filter(k % 3 == 0).select(
-                k.alias("id"),
-                F.col("o_orderstatus").alias("status"),
-                (F.col("o_totalprice").cast("double") + 100.0).alias("total_amount"),
-                F.lit("u").alias(OP_COL),
-                _lsn(k, 2).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            a.merge_cdc_batch(upd)
-            a.delete_where(F.col("total_amount") > 400_000.0)
-            a.update_where(
-                F.col("total_amount").between(1_000.0, 2_000.0),
-                {"status": F.lit("AUDITED")},
-            )
-            run_stream()  # restart from the checkpointed cursor
-        memo = bpath
-        _TXLOG_MEMO[key] = memo
-    b = BucketedTxLogTable(spark, memo)
+        run_stream()  # snapshot replicates
+        land_changes()
+        run_stream()  # restart from the checkpointed cursor
+        return bpath
+
+    b = BucketedTxLogTable(spark, fixture(spark, sf_dir, "feed_stream_rt", build))
     return b.read_state().select("id", "status", "total_amount")
 
 
@@ -3018,51 +2809,41 @@ def table_type_widening(spark: SparkSession, sf_dir: str) -> DataFrame:
     amount (>10^10) NEED the wide types. Probes pin the value surface,
     the presented TYPES per era (time travel reads narrow), and a
     stats-pruned point read of the hot value."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
 
     HOT_QTY = 1 << 40
-    key = (spark.sparkContext.applicationId, sf_dir, "widen_table")
-    memo = _TXLOG_MEMO.get(key)
+
     o = _orders(spark, sf_dir)
     k = F.col("o_orderkey")
-    if memo is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-widen-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
+
+    def build(path: str) -> tuple[str, int]:
         t = BucketedTxLogTable(
             spark, path, key_cols=["id"], n_buckets=16, stats_cols=["qty"]
         )
-        if t.latest_version() is None:
-            snap = o.select(
-                k.alias("id"),
-                (k % 100_000).cast("int").alias("qty"),
-                F.col("o_totalprice").cast("decimal(10,2)").alias("amount"),
-                F.lit("r").alias(OP_COL),
-                _lsn(k, 1).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.init_from_events(snap)
-            pre = t.latest_version()
-            t.widen_column("qty", "bigint")
-            t.widen_column("amount", "decimal(12,2)")
-            hot = o.join(o.agg(F.min(k).alias("mk")), k == F.col("mk")).select(
-                k.alias("id"),
-                F.lit(HOT_QTY).cast("bigint").alias("qty"),
-                F.lit("9999999999.99").cast("decimal(12,2)").alias("amount"),
-                F.lit("u").alias(OP_COL),
-                _lsn(k, 2).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.merge_cdc_batch(hot)
-            memo = (path, pre)
-            _TXLOG_MEMO[key] = memo
-        else:
-            memo = _TXLOG_MEMO[key]
-    path, pre = memo
+        snap = o.select(
+            k.alias("id"),
+            (k % 100_000).cast("int").alias("qty"),
+            F.col("o_totalprice").cast("decimal(10,2)").alias("amount"),
+            F.lit("r").alias(OP_COL),
+            _lsn(k, 1).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.init_from_events(snap)
+        pre = t.latest_version()
+        t.widen_column("qty", "bigint")
+        t.widen_column("amount", "decimal(12,2)")
+        hot = o.join(o.agg(F.min(k).alias("mk")), k == F.col("mk")).select(
+            k.alias("id"),
+            F.lit(HOT_QTY).cast("bigint").alias("qty"),
+            F.lit("9999999999.99").cast("decimal(12,2)").alias("amount"),
+            F.lit("u").alias(OP_COL),
+            _lsn(k, 2).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.merge_cdc_batch(hot)
+        return path, pre
+
+    path, pre = fixture(spark, sf_dir, "widen_table", build)
     t = BucketedTxLogTable(spark, path)
 
     def probe(df, name, pruned):
@@ -3099,62 +2880,52 @@ def table_widen_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     — and an insert whose key only a bigint can hold. Probes: final
     state (count/sum/type/bucket-spread), time travel to the pre-widen
     era (narrow type, pre-update values), and the wide-key row."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
 
     WIDE_ID = (1 << 42) + 7
-    key = (spark.sparkContext.applicationId, sf_dir, "widen_key_table")
-    memo = _TXLOG_MEMO.get(key)
+
     o = _orders(spark, sf_dir)
     k = F.col("o_orderkey")
-    if memo is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-widenkey-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
+
+    def build(path: str) -> tuple[str, int, int]:
         t = BucketedTxLogTable(
             spark, path, key_cols=["id"], n_buckets=16, stats_cols=["amount"]
         )
-        if t.latest_version() is None:
-            snap = o.select(
-                k.cast("int").alias("id"),
-                F.col("o_totalprice").cast("double").alias("amount"),
-                F.lit("r").alias(OP_COL),
-                _lsn(k, 1).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.init_from_events(snap)
-            t.delete_where(F.col("id") % 10 == 3)  # vectors live pre-widen
-            pre = t.latest_version()
-            t.widen_key("id", "bigint", n_buckets=32)
-            # narrow-typed post-widen batch: one surviving key, cast INT
-            surv = o.filter(k % 10 != 3)
-            hot = surv.join(surv.agg(F.min(k).alias("mk")), k == F.col("mk")).select(
-                k.cast("int").alias("id"),
-                (F.col("o_totalprice").cast("double") + 5_000_000.0).alias(
-                    "amount"
-                ),
-                F.lit("u").alias(OP_COL),
-                _lsn(k, 2).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.merge_cdc_batch(hot)
-            nb = len(t._read_entry(t.latest_version())["buckets"])
-            wide_row = spark.range(1).select(
-                F.lit(WIDE_ID).cast("bigint").alias("id"),
-                F.lit(424242.5).alias("amount"),
-                F.lit("c").alias(OP_COL),
-                F.lpad(F.lit(str(WIDE_ID * 10 + 2)), 12, "0").alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.merge_cdc_batch(wide_row)
-            memo = (path, pre, nb)
-            _TXLOG_MEMO[key] = memo
-        else:
-            memo = _TXLOG_MEMO[key]
-    path, pre, nb = memo
+        snap = o.select(
+            k.cast("int").alias("id"),
+            F.col("o_totalprice").cast("double").alias("amount"),
+            F.lit("r").alias(OP_COL),
+            _lsn(k, 1).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.init_from_events(snap)
+        t.delete_where(F.col("id") % 10 == 3)  # vectors live pre-widen
+        pre = t.latest_version()
+        t.widen_key("id", "bigint", n_buckets=32)
+        # narrow-typed post-widen batch: one surviving key, cast INT
+        surv = o.filter(k % 10 != 3)
+        hot = surv.join(surv.agg(F.min(k).alias("mk")), k == F.col("mk")).select(
+            k.cast("int").alias("id"),
+            (F.col("o_totalprice").cast("double") + 5_000_000.0).alias(
+                "amount"
+            ),
+            F.lit("u").alias(OP_COL),
+            _lsn(k, 2).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.merge_cdc_batch(hot)
+        nb = len(t._read_entry(t.latest_version())["buckets"])
+        wide_row = spark.range(1).select(
+            F.lit(WIDE_ID).cast("bigint").alias("id"),
+            F.lit(424242.5).alias("amount"),
+            F.lit("c").alias(OP_COL),
+            F.lpad(F.lit(str(WIDE_ID * 10 + 2)), 12, "0").alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.merge_cdc_batch(wide_row)
+        return path, pre, nb
+
+    path, pre, nb = fixture(spark, sf_dir, "widen_key_table", build)
     t = BucketedTxLogTable(spark, path)
 
     def probe(df, name, flag):
@@ -3194,51 +2965,40 @@ def table_column_mapping(spark: SparkSession, sf_dir: str) -> DataFrame:
     set is exactly (id, revenue); a pruned read probed by the NEW name
     hits the physical stats ('yes'); and time travel to the pre-rename
     version reads under the OLD names with the original values."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
 
-    key = (spark.sparkContext.applicationId, sf_dir, "colmap_table")
-    memo = _TXLOG_MEMO.get(key)
     o = _orders(spark, sf_dir)
     k = F.col("o_orderkey")
-    if memo is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-colmap-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
+
+    def build(path: str) -> tuple[str, int]:
         t = BucketedTxLogTable(
             spark, path, key_cols=["id"], n_buckets=16, stats_cols=["amount"]
         )
-        if t.latest_version() is None:
-            snap = o.select(
-                k.alias("id"),
-                F.col("o_totalprice").cast("double").alias("amount"),
-                F.col("o_orderstatus").alias("status"),
-                F.lit("r").alias(OP_COL),
-                _lsn(k, 1).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.init_from_events(snap)
-            pre = t.latest_version()
-            t.rename_column("amount", "revenue")
-            t.drop_column("status")
-            hot = o.join(o.agg(F.min(k).alias("mk")), k == F.col("mk")).select(
-                k.alias("id"),
-                (F.col("o_totalprice").cast("double") + 10_000_000.0).alias(
-                    "revenue"
-                ),
-                F.lit("u").alias(OP_COL),
-                _lsn(k, 2).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.merge_cdc_batch(hot)
-            _TXLOG_MEMO[key] = (path, pre)
-            memo = (path, pre)
-        else:
-            memo = _TXLOG_MEMO[key]
-    path, pre = memo
+        snap = o.select(
+            k.alias("id"),
+            F.col("o_totalprice").cast("double").alias("amount"),
+            F.col("o_orderstatus").alias("status"),
+            F.lit("r").alias(OP_COL),
+            _lsn(k, 1).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.init_from_events(snap)
+        pre = t.latest_version()
+        t.rename_column("amount", "revenue")
+        t.drop_column("status")
+        hot = o.join(o.agg(F.min(k).alias("mk")), k == F.col("mk")).select(
+            k.alias("id"),
+            (F.col("o_totalprice").cast("double") + 10_000_000.0).alias(
+                "revenue"
+            ),
+            F.lit("u").alias(OP_COL),
+            _lsn(k, 2).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.merge_cdc_batch(hot)
+        return path, pre
+
+    path, pre = fixture(spark, sf_dir, "colmap_table", build)
     t = BucketedTxLogTable(spark, path)
 
     df, fr, ft = t.read_state_where("revenue", 9_000_000.0, 20_000_000.0)
@@ -3294,55 +3054,48 @@ def cdc_change_feed_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     old vs new sums, tombstones and DV deletes emit the deleted images,
     unchanged rows of rewritten buckets emit NOTHING — with the
     closed-form oracle restating each (version, change_type) group."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.sources.txlog import (
         BucketedTxLogTable,
         table_changes,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "cdf_table")
-    path = _TXLOG_MEMO.get(key)
     o = _orders(spark, sf_dir)
     k = F.col("o_orderkey")
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-cdf-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
+
+    def build(path: str) -> str:
         t = BucketedTxLogTable(spark, path, key_cols=["id"], n_buckets=16)
-        if t.latest_version() is None:
-            snap = o.select(
-                k.alias("id"),
-                F.col("o_totalprice").cast("double").alias("amount"),
-                F.lit("r").alias(OP_COL),
-                _lsn(k, 1).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.init_from_events(snap)
-            upd = o.filter(k % 10 == 3).select(
-                k.alias("id"),
-                (F.col("o_totalprice").cast("double") + 1000.0).alias("amount"),
-                F.lit("u").alias(OP_COL),
-                _lsn(k, 2).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            tomb = o.filter(k % 10 == 6).select(
-                k.alias("id"),
-                F.lit(None).cast("double").alias("amount"),
-                F.lit("d").alias(OP_COL),
-                _lsn(k, 2).alias(LSN_COL),
-                F.lit("true").alias(DELETED_COL),
-            )
-            ins = spark.createDataFrame(
-                [(-1, 11.5, "c", "00000000000002", None),
-                 (-2, 22.5, "c", "00000000000002", None)],
-                "id bigint, amount double, _op string, _lsn string, _deleted string",
-            )
-            t.merge_cdc_batch(upd.unionByName(tomb).unionByName(ins))
-            t.delete_where(F.col("amount").between(50_000.0, 100_000.0))
-        _TXLOG_MEMO[key] = path
+        snap = o.select(
+            k.alias("id"),
+            F.col("o_totalprice").cast("double").alias("amount"),
+            F.lit("r").alias(OP_COL),
+            _lsn(k, 1).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.init_from_events(snap)
+        upd = o.filter(k % 10 == 3).select(
+            k.alias("id"),
+            (F.col("o_totalprice").cast("double") + 1000.0).alias("amount"),
+            F.lit("u").alias(OP_COL),
+            _lsn(k, 2).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        tomb = o.filter(k % 10 == 6).select(
+            k.alias("id"),
+            F.lit(None).cast("double").alias("amount"),
+            F.lit("d").alias(OP_COL),
+            _lsn(k, 2).alias(LSN_COL),
+            F.lit("true").alias(DELETED_COL),
+        )
+        ins = spark.createDataFrame(
+            [(-1, 11.5, "c", "00000000000002", None),
+             (-2, 22.5, "c", "00000000000002", None)],
+            "id bigint, amount double, _op string, _lsn string, _deleted string",
+        )
+        t.merge_cdc_batch(upd.unionByName(tomb).unionByName(ins))
+        t.delete_where(F.col("amount").between(50_000.0, 100_000.0))
+        return path
+
+    path = fixture(spark, sf_dir, "cdf_table", build)
     t = BucketedTxLogTable(spark, path)
     return (
         table_changes(t, 0)
@@ -3561,57 +3314,48 @@ def table_clone_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     updates but NOT the source's deletes, proving the fork is
     independent both ways while sharing every pre-clone file. The
     closed-form oracle states the clone's expected state."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.sources.txlog import (
         BucketedTxLogTable,
         clone_table,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "clone_div")
-    paths = _TXLOG_MEMO.get(key)
     o = _orders(spark, sf_dir)
     k = F.col("o_orderkey")
-    if paths is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"txlog-clone-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
+
+    def build(root: str) -> str:
         src_p, dst_p = os.path.join(root, "src"), os.path.join(root, "dst")
         t = BucketedTxLogTable(spark, src_p, key_cols=["id"], n_buckets=16)
-        if t.latest_version() is None:
-            snap = o.select(
-                k.alias("id"),
-                F.lit("pending").alias("status"),
-                F.col("o_totalprice").alias("total_amount"),
-                F.lit("r").alias(OP_COL),
-                _lsn(k, 1).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            t.init_from_events(snap)
-            c = clone_table(t, dst_p)
-            upd = o.filter(k % 3 == 0).select(
-                k.alias("id"),
-                F.col("o_orderstatus").alias("status"),
-                (F.col("o_totalprice") + 100.0).alias("total_amount"),
-                F.lit("u").alias(OP_COL),
-                _lsn(k, 2).alias(LSN_COL),
-                F.lit(None).cast("string").alias(DELETED_COL),
-            )
-            c.merge_cdc_batch(upd)  # lands on the CLONE only
-            dele = o.filter(k % 5 == 0).select(
-                k.alias("id"),
-                F.lit(None).cast("string").alias("status"),
-                F.lit(None).cast("decimal(15,2)").alias("total_amount"),
-                F.lit("d").alias(OP_COL),
-                _lsn(k, 2).alias(LSN_COL),
-                F.lit("true").alias(DELETED_COL),
-            )
-            t.merge_cdc_batch(dele)  # lands on the SOURCE only
-        _TXLOG_MEMO[key] = (src_p, dst_p)
-        paths = (src_p, dst_p)
-    c = BucketedTxLogTable(spark, paths[1])
+        snap = o.select(
+            k.alias("id"),
+            F.lit("pending").alias("status"),
+            F.col("o_totalprice").alias("total_amount"),
+            F.lit("r").alias(OP_COL),
+            _lsn(k, 1).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        t.init_from_events(snap)
+        c = clone_table(t, dst_p)
+        upd = o.filter(k % 3 == 0).select(
+            k.alias("id"),
+            F.col("o_orderstatus").alias("status"),
+            (F.col("o_totalprice") + 100.0).alias("total_amount"),
+            F.lit("u").alias(OP_COL),
+            _lsn(k, 2).alias(LSN_COL),
+            F.lit(None).cast("string").alias(DELETED_COL),
+        )
+        c.merge_cdc_batch(upd)  # lands on the CLONE only
+        dele = o.filter(k % 5 == 0).select(
+            k.alias("id"),
+            F.lit(None).cast("string").alias("status"),
+            F.lit(None).cast("decimal(15,2)").alias("total_amount"),
+            F.lit("d").alias(OP_COL),
+            _lsn(k, 2).alias(LSN_COL),
+            F.lit("true").alias(DELETED_COL),
+        )
+        t.merge_cdc_batch(dele)  # lands on the SOURCE only
+        return dst_p
+
+    c = BucketedTxLogTable(spark, fixture(spark, sf_dir, "clone_div", build))
     return c.read_state().select("id", "status", "total_amount")
 
 

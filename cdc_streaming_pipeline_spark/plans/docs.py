@@ -11,6 +11,8 @@ the brute-force/exact baselines, containment of high-Jaccard truth).
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -20,7 +22,7 @@ from cdc_streaming_pipeline_spark.operators import multimodal as mm
 from cdc_streaming_pipeline_spark.operators import sampling as sp
 from cdc_streaming_pipeline_spark.operators import similarity as sim
 from cdc_streaming_pipeline_spark.operators import text as tx
-from cdc_streaming_pipeline_spark.sources.tables import load_table
+from cdc_streaming_pipeline_spark.sources.tables import fixture, load_table
 
 NEAR_DUP_COSINE = 0.4  # driver testdata embeddings are near-orthogonal; 0.4 ≈ p99.95
 ANN_QUERY_IDS = 10  # vec_id < 10 are the query set
@@ -691,25 +693,22 @@ def doc_pii_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_CENTROIDS: dict[str, object] = {}
-_IVF_PQ_FIT: dict[str, dict] = {}
-
-
 def ann_topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN: k-means cells (distributed Lloyd) + probe the 8 nearest of
     16 cells per query. Recall floor vs brute force asserted in tests.
 
-    The index BUILD (5 Lloyd rounds, each a corpus scan) is memoized per
-    sf_dir — an IVF index is built once and probed many times in any real
-    deployment, so the registered query measures the PROBE path warm, the
-    same way the landed-table query amortizes its one-time write."""
+    The index BUILD (5 Lloyd rounds, each a corpus scan) is a
+    ``fixture``, fit once per session — an IVF index is built once and
+    probed many times in any real deployment, so the registered query
+    measures the PROBE path warm, the same way the landed-table query
+    amortizes its one-time write."""
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") < ANN_QUERY_IDS)
-    if sf_dir not in _IVF_CENTROIDS:
-        _IVF_CENTROIDS[sf_dir] = cl.kmeans_fit(emb, k=16)
+    centroids = fixture(
+        spark, sf_dir, "ivf_centroids", lambda _root: cl.kmeans_fit(emb, k=16)
+    )
     return cl.ivf_topk(
-        emb, queries, k=ANN_K, n_clusters=16, n_probe=8,
-        centroids=_IVF_CENTROIDS[sf_dir],
+        emb, queries, k=ANN_K, n_clusters=16, n_probe=8, centroids=centroids
     )
 
 
@@ -1270,40 +1269,26 @@ def minhash_incremental_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     return dd.minhash_lsh_incremental(batch, corpus)
 
 
-_IVF_INDEX_MEMO: dict[tuple[str, str], tuple] = {}
-
-
 def ann_topk_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN serving from a PERSISTED IVF index
     (operators/cluster.py:write_ivf_index / ivf_topk_from_index): the
     corpus is written cell-partitioned once per session (fit + write
-    memoized, the merge-snapshot pattern), and each query batch reads
+    are a ``fixture``), and each query batch reads
     ONLY its probed cells' partitions — partition pruning turns the
     n_probe/n_clusters compute saving into an I/O saving, the 100 TB
     serving path. Output-identical to the in-memory IVF with the same
     centroids (pinned in tests/test_ivf_index.py). Replay-certified
     (k-means-seeded); recall gates live with the other ANN variants."""
-    import hashlib
-    import os
-    import tempfile
 
-    from cdc_streaming_pipeline_spark.operators import cluster as cl
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _IVF_INDEX_MEMO:
-        digest = hashlib.md5(f"{key}:ivf".encode()).hexdigest()[:8]
-        path = os.path.join(tempfile.gettempdir(), f"ivf_index_{digest}")
+    def build(path: str) -> str:
         emb = load_table(spark, sf_dir, "embeddings")
-        cent = cl.kmeans_fit(emb, k=16, seed=42)
-        cl.write_ivf_index(emb, path, cent)
-        _IVF_INDEX_MEMO[key] = (path,)
-    (path,) = _IVF_INDEX_MEMO[key]
+        cl.write_ivf_index(emb, path, cl.kmeans_fit(emb, k=16, seed=42))
+        return path
+
+    path = fixture(spark, sf_dir, "ivf_index", build)
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
     return cl.ivf_topk_from_index(spark, path, queries, k=5, n_probe=8)
-
-
-_IVF_APPEND_MEMO: dict[tuple[str, str], tuple] = {}
 
 
 def ann_topk_ivf_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1318,28 +1303,18 @@ def ann_topk_ivf_appended(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_ivf_index.py::test_append_then_serve_equals_rebuild,
     along with old-file immutability). Replay-certified (k-means replay);
     recall gates live with the other ANN variants."""
-    import hashlib
-    import os
-    import tempfile
 
-    from cdc_streaming_pipeline_spark.operators import cluster as cl
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _IVF_APPEND_MEMO:
-        digest = hashlib.md5(f"{key}:ivf_app".encode()).hexdigest()[:8]
-        path = os.path.join(tempfile.gettempdir(), f"ivf_appended_{digest}")
+    def build(path: str) -> str:
         emb = load_table(spark, sf_dir, "embeddings")
         cent = cl.kmeans_fit(emb, k=16, seed=42)
         cl.write_ivf_index(emb.filter(F.col("vec_id") % 2 == 0), path, cent)
         cl.append_to_ivf_index(emb.filter(F.col("vec_id") % 2 == 1), path)
-        _IVF_APPEND_MEMO[key] = (path,)
-    (path,) = _IVF_APPEND_MEMO[key]
+        return path
+
+    path = fixture(spark, sf_dir, "ivf_appended", build)
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
     return cl.ivf_topk_from_index(spark, path, queries, k=5, n_probe=8)
-
-
-_IVF_STREAM_MEMO: dict[tuple, tuple] = {}
 
 
 def ann_topk_ivf_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1357,47 +1332,35 @@ def ann_topk_ivf_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bootstrap-wave-fit) centroids — which is exactly what the
     pure-Python replay recomputes (tools/py_oracles.py:
     ann_topk_ivf_stream_oracle)."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.streaming.ann_sink import (
         ann_stream_sink,
         ivf_topk_stream_store,
     )
+    from cdc_streaming_pipeline_spark.streaming.pipeline import await_available_now
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    memo = _IVF_STREAM_MEMO.get(key)
-    if memo is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"ivfstream-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
+    def build(root: str) -> tuple[str, str]:
         spool = os.path.join(root, "spool")
         ckpt = os.path.join(root, "ckpt")
         cells_path = os.path.join(root, "cells")
         vectors_path = os.path.join(root, "vectors")
-        if not os.path.exists(vectors_path):
-            os.makedirs(spool, exist_ok=True)
-            emb = load_table(spark, sf_dir, "embeddings").select(
-                "vec_id", "embedding"
+        emb = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
+        for w in range(3):
+            emb.filter(F.col("vec_id") % 3 == w).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(spool, f"wave{w}"))
+            q = ann_stream_sink(
+                spark.readStream.schema(
+                    "vec_id bigint, embedding array<double>"
+                ).parquet(os.path.join(spool, "*")),
+                ckpt,
+                available_now=True,
+                cells_path=cells_path,
+                vectors_path=vectors_path,
             )
-            for w in range(3):
-                emb.filter(F.col("vec_id") % 3 == w).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(os.path.join(spool, f"wave{w}"))
-                q = ann_stream_sink(
-                    spark.readStream.schema(
-                        "vec_id bigint, embedding array<double>"
-                    ).parquet(os.path.join(spool, "*")),
-                    ckpt,
-                    available_now=True,
-                    cells_path=cells_path,
-                    vectors_path=vectors_path,
-                )
-                q.awaitTermination(900)
-        memo = (cells_path, vectors_path)
-        _IVF_STREAM_MEMO[key] = memo
-    cells_path, vectors_path = memo
+            await_available_now(q, 900)
+        return cells_path, vectors_path
+
+    cells_path, vectors_path = fixture(spark, sf_dir, "ivf_stream", build)
     emb = load_table(spark, sf_dir, "embeddings")
     queries = emb.filter(F.col("vec_id") % 50 == 0)
     return ivf_topk_stream_store(
@@ -1405,24 +1368,20 @@ def ann_topk_ivf_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BPE_MEMO: dict[tuple[str, str], list] = {}
-
-
 def _trained_merges(spark: SparkSession, sf_dir: str) -> list:
-    """Train once per (session, sf_dir) — the merge table is a pure
+    """Train once per session (a ``fixture``) — the merge table is a pure
     function of the corpus, and BOTH bpe queries (training output +
-    corpus-wide application) start from it. Same memo pattern as
-    _memo_gemm / the merge snapshot."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _BPE_MEMO:
-        from cdc_streaming_pipeline_spark.operators.bpe import (
-            train_bpe,
-            word_frequency_table,
-        )
+    corpus-wide application) start from it."""
+    from cdc_streaming_pipeline_spark.operators.bpe import (
+        train_bpe,
+        word_frequency_table,
+    )
 
+    def build(_root: str) -> list:
         docs = load_table(spark, sf_dir, "documents")
-        _BPE_MEMO[key] = train_bpe(word_frequency_table(docs), n_merges=24)
-    return _BPE_MEMO[key]
+        return train_bpe(word_frequency_table(docs), n_merges=24)
+
+    return fixture(spark, sf_dir, "bpe_merges", build)
 
 
 def bpe_vocab_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1506,39 +1465,30 @@ def ann_topk_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     # m=16/ks=64: 16-byte codes (16x vs float32); ADC-only recall ~0.55
     # on the near-orthogonal driver vectors (the quantization worst
     # case), lifted to 0.84 by the default n_rerank=50 refine.
-    # The index FIT (k-means cells + PQ codebooks) is memoized per
-    # sf_dir — the same policy as ann_topk_ivf's _IVF_CENTROIDS above:
-    # an IVF-PQ index is fit once and served many times, so the
-    # registered query measures the SERVE path (encode + ADC + exact
-    # re-rank, all per call) warm.
+    # The index FIT (k-means cells + PQ codebooks) lands in a
+    # per-session ``fixture`` dict, like ann_topk_ivf's centroids: an
+    # IVF-PQ index is fit once and served many times, so the registered
+    # query measures the SERVE path (encode + ADC + exact re-rank, all
+    # per call) warm.
     return ivf_pq_topk(
         emb, qs, k=ANN_K, m=16, ks=64,
-        fit_memo=_IVF_PQ_FIT.setdefault(sf_dir, {}),
+        fit_memo=fixture(spark, sf_dir, "ivf_pq_fit", lambda _root: {}),
     )
 
 
-_SEARCH_INDEX_MEMO: dict = {}
 SEARCH_TERMS = ["merge", "scan", "filter"]
 
 
 def _search_index_path(spark: SparkSession, sf_dir: str) -> str:
-    """Build — once per (session, sf_dir) — the bucket-partitioned
-    inverted index over documents (operators/search.py)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key in _SEARCH_INDEX_MEMO:
-        return _SEARCH_INDEX_MEMO[key]
-    import os
-    import tempfile
-
+    """The bucket-partitioned inverted index over documents
+    (operators/search.py), built once per session by ``fixture``."""
     from cdc_streaming_pipeline_spark.operators.search import write_inverted_index
 
-    path = os.path.join(
-        tempfile.gettempdir(),
-        f"invidx-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-    )
-    write_inverted_index(load_table(spark, sf_dir, "documents"), path)
-    _SEARCH_INDEX_MEMO[key] = path
-    return path
+    def build(path: str) -> str:
+        write_inverted_index(load_table(spark, sf_dir, "documents"), path)
+        return path
+
+    return fixture(spark, sf_dir, "search_index", build)
 
 
 def keyword_search_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1631,9 +1581,6 @@ def phrase_search_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     return phrase_search(spark, path, ["hash", "join"], k=10)
 
 
-_SEARCH_DELETE_MEMO: dict = {}
-
-
 def search_after_delete_reindex(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Delete/update layer of the inverted index, end-to-end
     (operators/search.py:delete_from_index): index the corpus, DELETE
@@ -1647,9 +1594,6 @@ def search_after_delete_reindex(spark: SparkSession, sf_dir: str) -> DataFrame:
     sidecar-maintained, so the ranking must equal a from-scratch index
     of the post-update corpus: the DuckDB oracle recomputes exactly
     that ranking from raw text."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.operators.search import (
         append_to_index,
         delete_from_index,
@@ -1657,13 +1601,7 @@ def search_after_delete_reindex(spark: SparkSession, sf_dir: str) -> DataFrame:
         write_inverted_index,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir)
-    path = _SEARCH_DELETE_MEMO.get(key)
-    if path is None:
-        path = os.path.join(
-            tempfile.gettempdir(),
-            f"invidx-del-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
+    def build(path: str) -> str:
         docs = load_table(spark, sf_dir, "documents")
         write_inverted_index(docs, path)
         cohort = docs.filter(F.col("doc_id") % 97 == 3)
@@ -1674,7 +1612,9 @@ def search_after_delete_reindex(spark: SparkSession, sf_dir: str) -> DataFrame:
             "text", F.concat(F.col("text"), F.lit(" merge merge"))
         )
         append_to_index(updated, path)
-        _SEARCH_DELETE_MEMO[key] = path
+        return path
+
+    path = fixture(spark, sf_dir, "search_delete", build)
     return search_topk(spark, path, SEARCH_TERMS, k=10)
 
 
@@ -3729,6 +3669,39 @@ ORACLE["split_drift_wasserstein"] = f"""
 """
 
 
+def _dedup_stream_corpus(spark: SparkSession, sf_dir: str, mode: str) -> str:
+    """Stream the documents in THREE waves (doc_id % 3) through the dedup
+    sink in ``mode`` ('exact' or 'minhash'), one availableNow run per
+    wave against one checkpoint; returns the landed corpus table's path.
+    Built once per session by ``fixture``."""
+    from cdc_streaming_pipeline_spark.streaming.dedup_sink import dedup_stream_sink
+    from cdc_streaming_pipeline_spark.streaming.pipeline import await_available_now
+
+    def build(root: str) -> str:
+        spool = os.path.join(root, "spool")
+        paths = {"corpus_path": os.path.join(root, "corpus")}
+        if mode == "minhash":
+            paths["index_path"] = os.path.join(root, "index")
+            paths["sigs_path"] = os.path.join(root, "sigs")
+        docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
+        for w in range(3):
+            docs.filter(F.col("doc_id") % 3 == w).coalesce(1).write.mode(
+                "overwrite"
+            ).parquet(os.path.join(spool, f"wave{w}"))
+            q = dedup_stream_sink(
+                spark.readStream.schema("doc_id bigint, text string")
+                .parquet(os.path.join(spool, "*")),
+                os.path.join(root, "ckpt"),
+                mode=mode,
+                available_now=True,
+                **paths,
+            )
+            await_available_now(q, 900)
+        return paths["corpus_path"]
+
+    return fixture(spark, sf_dir, f"dedup_stream_{mode}", build)
+
+
 def dedup_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming corpus ingestion with ONLINE exact dedup
     (streaming/dedup_sink.py — the live half of the batch dedup
@@ -3741,41 +3714,9 @@ def dedup_stream_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     The oracle states the winner closed-form: per fingerprint, the doc
     with the smallest (wave, doc_id). Crash-replay and the minhash
     (near-dup) mode are pinned in tests/test_dedup_stream.py."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
-    from cdc_streaming_pipeline_spark.streaming.dedup_sink import dedup_stream_sink
 
-    key = (spark.sparkContext.applicationId, sf_dir, "dedup_stream")
-    memo = _STREAM_MEMO.get(key)
-    if memo is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"dedupstream-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
-        spool = os.path.join(root, "spool")
-        ckpt = os.path.join(root, "ckpt")
-        corpus_path = os.path.join(root, "corpus")
-        if not os.path.exists(corpus_path):
-            os.makedirs(spool, exist_ok=True)
-            docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-            for w in range(3):
-                docs.filter(F.col("doc_id") % 3 == w).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(os.path.join(spool, f"wave{w}"))
-                q = dedup_stream_sink(
-                    spark.readStream.schema("doc_id bigint, text string")
-                    .parquet(os.path.join(spool, "*")),
-                    ckpt,
-                    mode="exact",
-                    available_now=True,
-                    corpus_path=corpus_path,
-                )
-                q.awaitTermination(600)
-        memo = corpus_path
-        _STREAM_MEMO[key] = memo
-    c = BucketedTxLogTable(spark, memo)
+    c = BucketedTxLogTable(spark, _dedup_stream_corpus(spark, sf_dir, "exact"))
     return c.read_state().select("fp", "doc_id")
 
 
@@ -3792,49 +3733,12 @@ def dedup_stream_ingest_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the same xxhash64 shingle/signature/band kernels
     (tools/py_oracles.py:dedup_stream_ingest_minhash_oracle) — the
     hash-seeded family has no SQL closed form."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
-    from cdc_streaming_pipeline_spark.streaming.dedup_sink import dedup_stream_sink
 
-    key = (spark.sparkContext.applicationId, sf_dir, "dedup_stream_minhash")
-    memo = _STREAM_MEMO.get(key)
-    if memo is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"dedupstreammh-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
-        spool = os.path.join(root, "spool")
-        ckpt = os.path.join(root, "ckpt")
-        paths = dict(
-            corpus_path=os.path.join(root, "corpus"),
-            index_path=os.path.join(root, "index"),
-            sigs_path=os.path.join(root, "sigs"),
-        )
-        if not os.path.exists(paths["corpus_path"]):
-            os.makedirs(spool, exist_ok=True)
-            docs = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-            for w in range(3):
-                docs.filter(F.col("doc_id") % 3 == w).coalesce(1).write.mode(
-                    "overwrite"
-                ).parquet(os.path.join(spool, f"wave{w}"))
-                q = dedup_stream_sink(
-                    spark.readStream.schema("doc_id bigint, text string")
-                    .parquet(os.path.join(spool, "*")),
-                    ckpt,
-                    mode="minhash",
-                    available_now=True,
-                    **paths,
-                )
-                q.awaitTermination(900)
-        memo = paths["corpus_path"]
-        _STREAM_MEMO[key] = memo
-    c = BucketedTxLogTable(spark, memo)
+    c = BucketedTxLogTable(spark, _dedup_stream_corpus(spark, sf_dir, "minhash"))
     return c.read_state().select("doc_id")
 
 
-_STREAM_MEMO: dict = {}
 QUERIES["dedup_stream_ingest"] = dedup_stream_ingest
 QUERIES["dedup_stream_ingest_minhash"] = dedup_stream_ingest_minhash
 ORACLE["dedup_stream_ingest"] = f"""

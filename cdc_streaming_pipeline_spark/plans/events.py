@@ -19,13 +19,12 @@ from __future__ import annotations
 
 import hashlib
 import os
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cdc_streaming_pipeline_spark.operators.cdc import with_time_partitions
-from cdc_streaming_pipeline_spark.sources.tables import load_table
+from cdc_streaming_pipeline_spark.sources.tables import fixture, load_table
 
 SESSION_GAP_US = 30 * 60 * 1_000_000  # 30-minute inactivity gap
 
@@ -92,12 +91,8 @@ def _landed_events_table(spark: SparkSession, sf_dir: str) -> str:
     by year/month/day/hour from event time) and declare a catalog external
     table over the directory — the engine twin of the reference's Hive
     external table over the connector's landed files
-    (cdc_pipeline_dag.py:358-387). Idempotent per (session, sf_dir): the
-    write + DDL run once; every later call reads the catalog table."""
-    digest = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    table = f"events_landed_{digest}"
-    if spark.catalog.tableExists(table):
-        return table
+    (cdc_pipeline_dag.py:358-387). A ``fixture``: the write + DDL run
+    once per session; every later call reads the catalog table."""
     from cdc_streaming_pipeline_spark.catalog import (
         analyze_table,
         create_external_table,
@@ -106,26 +101,30 @@ def _landed_events_table(spark: SparkSession, sf_dir: str) -> str:
     )
     from cdc_streaming_pipeline_spark.sources.event_log import write_event_log
 
-    path = os.path.join(tempfile.gettempdir(), f"cdc_spark_landed_{digest}")
-    ev = load_table(spark, sf_dir, "events")
-    # Land one fixed week (the driver events span 2024-01-01..30 at every
-    # SF): the demo exercises the full P1 write + DDL + MSCK + pruned-read
-    # mechanics; 168 hour dirs instead of 720 keeps the ONE-TIME landing
-    # cost bounded (parquet-file creation overhead dominates this write).
-    ev = ev.filter((F.col("ts") >= "2024-01-01") & (F.col("ts") < "2024-01-08"))
-    ev = with_time_partitions(ev, "ts")
-    # route each hour to ONE task before the partitioned write — otherwise
-    # every task opens a file in every hour dir (32x the files, and the
-    # write is all file-open/commit overhead)
-    ev = ev.repartition("year", "month", "day", "hour")
-    write_event_log(ev, path, fmt="parquet", ts_col="ts", mode="overwrite")
-    create_external_table(spark, table, path, fmt="parquet")
-    recover_partitions(spark, table)  # partition dirs -> catalog, else 0 rows
-    refresh_table(spark, table)
-    # post-landing statistics: rowCount/sizeInBytes into the catalog, the
-    # same ANALYZE cycle a warehouse runs after each landing batch
-    analyze_table(spark, table)
-    return table
+    def build(path: str) -> str:
+        table = f"events_landed_{hashlib.md5(sf_dir.encode()).hexdigest()[:8]}"
+        ev = load_table(spark, sf_dir, "events")
+        # Land one fixed week (the driver events span 2024-01-01..30 at
+        # every SF): the demo exercises the full P1 write + DDL + MSCK +
+        # pruned-read mechanics; 168 hour dirs instead of 720 keeps the
+        # ONE-TIME landing cost bounded (parquet-file creation overhead
+        # dominates this write).
+        ev = ev.filter((F.col("ts") >= "2024-01-01") & (F.col("ts") < "2024-01-08"))
+        ev = with_time_partitions(ev, "ts")
+        # route each hour to ONE task before the partitioned write —
+        # otherwise every task opens a file in every hour dir (32x the
+        # files, and the write is all file-open/commit overhead)
+        ev = ev.repartition("year", "month", "day", "hour")
+        write_event_log(ev, path, fmt="parquet", ts_col="ts", mode="overwrite")
+        create_external_table(spark, table, path, fmt="parquet")
+        recover_partitions(spark, table)  # partition dirs -> catalog, else 0 rows
+        refresh_table(spark, table)
+        # post-landing statistics: rowCount/sizeInBytes into the catalog,
+        # the same ANALYZE cycle a warehouse runs after each landing batch
+        analyze_table(spark, table)
+        return table
+
+    return fixture(spark, sf_dir, "events_landed", build)
 
 
 def events_landed_partition_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -644,23 +643,21 @@ def _sketch_store(spark: SparkSession, sf_dir: str) -> str:
     never rescans events. Batches = event_id % 8 (any partitioning
     works — merge is associative; order-invariance pinned in
     tests/test_sketches.py)."""
-    store = os.path.join(
-        tempfile.gettempdir(),
-        f"sketchstore-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-    )
-    if not os.path.exists(store):
-        ev = load_table(spark, sf_dir, "events")
+
+    def build(store: str) -> str:
         (
-            ev.withColumn("_batch", F.pmod(F.col("event_id"), F.lit(8)))
+            load_table(spark, sf_dir, "events")
+            .withColumn("_batch", F.pmod(F.col("event_id"), F.lit(8)))
             .groupBy("_batch", "event_type")
             .agg(
                 F.hll_sketch_agg("user_id", F.lit(14)).alias("hll"),
                 F.expr("kll_sketch_agg_double(value)").alias("kll"),
             )
-            .write.mode("ignore")
-            .parquet(store)
+            .write.parquet(store)
         )
-    return store
+        return store
+
+    return fixture(spark, sf_dir, "sketch_store", build)
 
 
 def hll_users_rollup_merged(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1439,79 +1436,68 @@ def stream_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     proving the streaming state machinery — merge-on-arrival,
     watermark finalization, exactly-once file sink — changes nothing
     about the answer."""
-    import os
-    import tempfile
+    from cdc_streaming_pipeline_spark.streaming.pipeline import await_available_now
 
-    key = (spark.sparkContext.applicationId, sf_dir, "stream_sessions")
-    out = _STREAM_SESS_MEMO.get(key)
-    if out is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"ssess-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
+    def build(root: str) -> str:
         src, out, ckpt = (os.path.join(root, d) for d in ("src", "out", "ckpt"))
-        if not os.path.exists(out):
-            ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
-            day = F.dayofmonth("ts")
-            waves = (day <= 10, (day > 10) & (day <= 20), day > 20)
-            for i, cond in enumerate(waves):
-                ev.filter(cond).coalesce(1).write.mode("append").parquet(
-                    os.path.join(src, f"w{i}")
-                )
-            sentinel = spark.sql(
-                "SELECT CAST(-1 AS LONG) user_id, TIMESTAMP '2025-01-01' ts,"
-                " CAST(0.0 AS DOUBLE) value"
+        ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "value")
+        day = F.dayofmonth("ts")
+        waves = (day <= 10, (day > 10) & (day <= 20), day > 20)
+        for i, cond in enumerate(waves):
+            ev.filter(cond).coalesce(1).write.mode("append").parquet(
+                os.path.join(src, f"w{i}")
             )
-            sentinel.coalesce(1).write.mode("append").parquet(
-                os.path.join(src, "w2")
+        sentinel = spark.sql(
+            "SELECT CAST(-1 AS LONG) user_id, TIMESTAMP '2025-01-01' ts,"
+            " CAST(0.0 AS DOUBLE) value"
+        )
+        sentinel.coalesce(1).write.mode("append").parquet(
+            os.path.join(src, "w2")
+        )
+        stream = (
+            spark.readStream.schema("user_id long, ts timestamp, value double")
+            .option("maxFilesPerTrigger", 1)
+            .parquet(os.path.join(src, "w*"))
+        )
+        sess = (
+            stream.withWatermark("ts", "1 hour")
+            .groupBy(F.session_window(F.col("ts"), "30 minutes"), "user_id")
+            .agg(
+                F.count("*").alias("n_events"),
+                F.round(F.sum(F.col("value").cast("decimal(28,6)")), 2)
+                .cast("double")
+                .alias("sum_value"),
             )
-            stream = (
-                spark.readStream.schema("user_id long, ts timestamp, value double")
-                .option("maxFilesPerTrigger", 1)
-                .parquet(os.path.join(src, "w*"))
+            .select(
+                "user_id",
+                F.unix_micros(F.col("session_window.start")).alias(
+                    "session_start_us"
+                ),
+                F.unix_micros(F.col("session_window.end")).alias(
+                    "session_end_us"
+                ),
+                "n_events",
+                "sum_value",
             )
-            sess = (
-                stream.withWatermark("ts", "1 hour")
-                .groupBy(F.session_window(F.col("ts"), "30 minutes"), "user_id")
-                .agg(
-                    F.count("*").alias("n_events"),
-                    F.round(F.sum(F.col("value").cast("decimal(28,6)")), 2)
-                    .cast("double")
-                    .alias("sum_value"),
-                )
-                .select(
-                    "user_id",
-                    F.unix_micros(F.col("session_window.start")).alias(
-                        "session_start_us"
-                    ),
-                    F.unix_micros(F.col("session_window.end")).alias(
-                        "session_end_us"
-                    ),
-                    "n_events",
-                    "sum_value",
-                )
-            )
-            q = (
-                sess.writeStream.format("parquet")
-                .option("path", out)
-                .option("checkpointLocation", ckpt)
-                .outputMode("append")
-                .trigger(availableNow=True)
-                .start()
-            )
-            q.awaitTermination(300)
-        _STREAM_SESS_MEMO[key] = out
+        )
+        q = (
+            sess.writeStream.format("parquet")
+            .option("path", out)
+            .option("checkpointLocation", ckpt)
+            .outputMode("append")
+            .trigger(availableNow=True)
+            .start()
+        )
+        await_available_now(q, 300)
+        return out
+
+    out = fixture(spark, sf_dir, "stream_sessions", build)
     return spark.read.parquet(out).filter(F.col("user_id") >= 0)
 
-
-_STREAM_SESS_MEMO: dict = {}
 
 QUERIES["stream_session_stats"] = stream_session_stats
 # the streamed sessions must equal the batch session_window rollup
 ORACLE["stream_session_stats"] = ORACLE["session_window_stats"]
-
-
-_STREAM_PSI_MEMO: dict = {}
 
 
 def stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1526,58 +1512,51 @@ def stream_drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
     monitor rides any CDC stream at 100 TB cadence. Wave 0's self-PSI
     is exactly 0; drift must grow with the shift. Output is keyed by
     the in-data wave tag, independent of micro-batch arrival order."""
-    import os
-    import tempfile
-
     from cdc_streaming_pipeline_spark.streaming.pipeline import (
+        await_available_now,
         psi_drift_monitor_sink,
     )
 
-    key = (spark.sparkContext.applicationId, sf_dir, "stream_psi")
-    out = _STREAM_PSI_MEMO.get(key)
-    if out is None:
-        root = os.path.join(
-            tempfile.gettempdir(),
-            f"spsi-{spark.sparkContext.applicationId}-{abs(hash(sf_dir)) % 10**8}",
-        )
+    def build(root: str) -> str:
         src, out, ckpt = (os.path.join(root, d) for d in ("src", "out", "ckpt"))
-        if not os.path.exists(out):
-            w = (F.col("event_id") % 3).cast("long")
-            ev = load_table(spark, sf_dir, "events").select(
-                w.alias("wave"),
-                (F.col("value") + w.cast("double") * 30.0).alias("value"),
+        w = (F.col("event_id") % 3).cast("long")
+        ev = load_table(spark, sf_dir, "events").select(
+            w.alias("wave"),
+            (F.col("value") + w.cast("double") * 30.0).alias("value"),
+        )
+        for i in range(3):
+            ev.filter(F.col("wave") == i).coalesce(1).write.mode(
+                "append"
+            ).parquet(os.path.join(src, f"w{i}"))
+        ref = {
+            int(r["_b"]): int(r["_c"])
+            for r in ev.filter(F.col("wave") == 0)
+            .groupBy(
+                F.greatest(
+                    F.lit(0), F.least(F.floor(F.col("value") / 50.0), F.lit(9))
+                ).alias("_b")
             )
-            for i in range(3):
-                ev.filter(F.col("wave") == i).coalesce(1).write.mode(
-                    "append"
-                ).parquet(os.path.join(src, f"w{i}"))
-            ref = {
-                int(r["_b"]): int(r["_c"])
-                for r in ev.filter(F.col("wave") == 0)
-                .groupBy(
-                    F.greatest(
-                        F.lit(0), F.least(F.floor(F.col("value") / 50.0), F.lit(9))
-                    ).alias("_b")
-                )
-                .agg(F.count("*").alias("_c"))
-                .collect()
-            }
-            q = (
-                psi_drift_monitor_sink(
-                    spark.readStream.schema("wave long, value double")
-                    .option("maxFilesPerTrigger", 1)
-                    .parquet(os.path.join(src, "w*")),
-                    out,
-                    ckpt,
-                    value_col="value",
-                    tag_col="wave",
-                    ref_counts=ref,
-                )
-                .trigger(availableNow=True)
-                .start()
+            .agg(F.count("*").alias("_c"))
+            .collect()
+        }
+        q = (
+            psi_drift_monitor_sink(
+                spark.readStream.schema("wave long, value double")
+                .option("maxFilesPerTrigger", 1)
+                .parquet(os.path.join(src, "w*")),
+                out,
+                ckpt,
+                value_col="value",
+                tag_col="wave",
+                ref_counts=ref,
             )
-            q.awaitTermination(300)
-        _STREAM_PSI_MEMO[key] = out
+            .trigger(availableNow=True)
+            .start()
+        )
+        await_available_now(q, 300)
+        return out
+
+    out = fixture(spark, sf_dir, "stream_psi", build)
     return (
         spark.read.parquet(out)
         .select(F.col("tag").alias("wave"), "n_events", "psi")

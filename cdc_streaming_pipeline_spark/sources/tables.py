@@ -8,7 +8,12 @@ in sources/event_log.py for compatibility; analytical tables are parquet.
 
 from __future__ import annotations
 
+import hashlib
 import os
+import shutil
+import tempfile
+from collections.abc import Callable
+from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -27,6 +32,8 @@ TABLE_NAMES = (
 )
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+
+_FIXTURES: dict[tuple[str, str, str], object] = {}
 
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -54,6 +61,29 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # overhead-dominated micro-batches. Operators whose per-row compute is
     # genuinely heavy fan out themselves (operators/dedup._parallelize).
     return df
+
+
+def fixture(
+    spark: SparkSession, sf_dir: str, name: str, build: Callable[[str], Any]
+) -> Any:
+    """Build a query fixture once per (session, sf_dir, name) and return
+    what ``build(root)`` returned: a table path, a tuple of facts about
+    it, a fitted model. ``root`` is a scratch directory owned by this
+    fixture alone; it is resolved per call, so a repointed ``TMPDIR``
+    takes effect. Every build starts from an empty root, and a build that
+    raises is neither memoized nor left on disk, so the next call
+    rebuilds from scratch instead of serving a half-built table."""
+    key = (spark.sparkContext.applicationId, sf_dir, name)
+    if key not in _FIXTURES:
+        digest = hashlib.md5(f"{key[0]}:{sf_dir}".encode()).hexdigest()[:8]
+        root = os.path.join(tempfile.gettempdir(), f"fixture-{name}-{digest}")
+        shutil.rmtree(root, ignore_errors=True)
+        try:
+            _FIXTURES[key] = build(root)
+        except BaseException:
+            shutil.rmtree(root, ignore_errors=True)
+            raise
+    return _FIXTURES[key]
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -181,13 +181,19 @@ class CdcStreamingPipeline:
     def run_once(self, timeout_seconds: int = 120) -> None:
         """Process everything currently in the source, then stop
         (deterministic test/backfill mode)."""
-        query = self.start(available_now=True)
-        query.awaitTermination(timeout_seconds)
-        if query.isActive:
-            query.stop()
-            raise TimeoutError(f"{self.name}: availableNow batch exceeded {timeout_seconds}s")
-        if query.exception() is not None:
-            raise query.exception()
+        await_available_now(self.start(available_now=True), timeout_seconds)
+
+
+def await_available_now(query: StreamingQuery, timeout_s: float) -> None:
+    """Wait for an availableNow query to drain its source. A query still
+    running after ``timeout_s`` is stopped and raises ``TimeoutError``;
+    a failed one re-raises its error — a partial run is never silent."""
+    query.awaitTermination(timeout_s)
+    if query.isActive:
+        query.stop()
+        raise TimeoutError(f"{query.name}: availableNow run exceeded {timeout_s}s")
+    if query.exception() is not None:
+        raise query.exception()
 
 
 def read_latest_state(
