@@ -323,7 +323,9 @@ def _merged_snapshot_path(spark: SparkSession, sf_dir: str) -> str:
     def build(snap: str) -> str:
         flat, off = _flat_events(spark, sf_dir)
         init_snapshot(flat.filter(off == 1), snap, key_cols=["id"], n_buckets=16)
-        merge_cdc_batch(spark, snap, flat.filter(off > 1), key_cols=["id"], n_buckets=16)
+        merge_cdc_batch(
+            spark, snap, flat.filter(off > 1), key_cols=["id"], n_buckets=16
+        )
         return snap
 
     return fixture(spark, sf_dir, "cdc_merge_snap", build)
