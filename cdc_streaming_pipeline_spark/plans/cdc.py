@@ -809,28 +809,26 @@ def table_sql_cdf_view(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cdc_txlog_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Lakehouse CDC landing (sources/txlog.py:merge_cdc_batch_txlog):
-    seed a TxLogTable from the snapshot wave (op='r'), then MERGE the
-    change wave (updates / delete-rewrites / re-inserts) as ONE
-    copy-on-write commit that declares its base version — readers flip
-    atomically from pre-merge to post-merge state and a racing writer
-    would get ConcurrentWriteError, not a lost update. Final state must
-    equal the closed-form latest-state oracle; the pre-merge version
-    stays readable (asserted in tests/test_txlog.py)."""
-    from cdc_streaming_pipeline_spark.sources.txlog import (
-        TxLogTable,
-        merge_cdc_batch_txlog,
-    )
+    """Lakehouse CDC landing as a plain copy-on-write MERGE
+    (sources/txlog.py:BucketedTxLogTable.merge_cdc_batch on ONE bucket):
+    seed the table from the snapshot wave (op='r'), then MERGE the
+    change waves (updates / delete-rewrites / re-inserts) as ONE commit
+    that rewrites the whole table and declares its base version —
+    readers flip atomically from pre-merge to post-merge state and a
+    racing writer would get ConcurrentWriteError, not a lost update.
+    Final state must equal the closed-form latest-state oracle; the
+    pre-merge version stays readable (asserted in tests/test_txlog.py)."""
+    from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
 
     def build(path: str) -> str:
         flat, off = _flat_events(spark, sf_dir)
-        t = TxLogTable(spark, path)
-        t.commit(flat.filter(off == 1).select("id", "status", "total_amount"))
-        merge_cdc_batch_txlog(t, flat.filter(off > 1), key_cols=["id"])
+        t = BucketedTxLogTable(spark, path, key_cols=["id"], n_buckets=1)
+        t.init_from_events(flat.filter(off == 1))
+        t.merge_cdc_batch(flat.filter(off > 1))
         return path
 
-    path = fixture(spark, sf_dir, "cdc_merge", build)
-    return TxLogTable(spark, path).read().select("id", "status", "total_amount")
+    t = BucketedTxLogTable(spark, fixture(spark, sf_dir, "cdc_merge", build))
+    return t.read_state().select("id", "status", "total_amount")
 
 
 def _bucketed_merge_table(spark: SparkSession, sf_dir: str, mor: bool = False) -> str:
@@ -859,8 +857,8 @@ def cdc_txlog_merge_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     (tests/test_txlog_bucketed.py pins this), readers flip atomically,
     and conflicts are detected at file granularity, so disjoint-bucket
     merges interleave. Merge cost is proportional to the batch's bucket
-    spread, not table size — the scale-correct replacement for the
-    full-rewrite cdc_txlog_merge demonstration. Final state must equal
+    spread, not table size, where the one-bucket cdc_txlog_merge
+    rewrites the whole table every time. Final state must equal
     the same closed-form latest-state oracle."""
     from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
 

@@ -1728,54 +1728,6 @@ class TxLogTable:
         return version
 
 
-def merge_cdc_batch_txlog(
-    table: TxLogTable,
-    batch: DataFrame,
-    key_cols: list[str],
-    order_col: str = "_lsn",
-) -> int:
-    """Copy-on-write CDC MERGE into a TxLogTable — the lakehouse landing
-    pattern: read a PINNED snapshot, apply latest-row-wins upsert/delete
-    semantics against it, and commit the new state as an overwrite that
-    DECLARES the pinned version as its base. A concurrent commit between
-    read and log create surfaces as ConcurrentWriteError instead of a
-    silent lost update, and readers flip atomically from the old state
-    to the new (never a mix).
-
-    The snapshot's rows re-enter the merge ranked BELOW every batch
-    event (empty-string order key; the LSN contract is zero-padded
-    numeric strings, so '' sorts first) — a key untouched by the batch
-    keeps its image, a touched key takes the batch's latest image, and
-    a final 'd' removes the key. Returns the committed version.
-
-    DEMONSTRATION ONLY at scale: this is the naive full-rewrite MERGE —
-    every batch reads and rewrites the whole table. The production path
-    is ``BucketedTxLogTable.merge_cdc_batch`` (below), which commits
-    per-bucket file replacements in one log entry and whose cost is
-    proportional to the batch's bucket spread, not table size.
-    """
-    from pyspark.sql import functions as F
-
-    from cdc_streaming_pipeline_spark.operators.cdc import latest_state
-    from cdc_streaming_pipeline_spark.schemas import DELETED_COL, OP_COL
-
-    base = table.latest_version()
-    current = table.read(base)
-    data_cols = [c for c in current.columns]
-    cur = (
-        current.withColumn(OP_COL, F.lit("r"))
-        .withColumn(order_col, F.lit(""))
-        .withColumn(DELETED_COL, F.lit(None).cast("string"))
-    )
-    combined = cur.unionByName(
-        batch.select(*data_cols, OP_COL, order_col, DELETED_COL)
-    )
-    new_state = latest_state(combined, key_cols=key_cols, order_col=order_col).select(
-        *data_cols
-    )
-    return table.commit(new_state, mode="overwrite", base=base)
-
-
 class BucketedTxLogTable(TxLogTable):
     """TxLogTable whose data files are BUCKET-PURE: every data file holds
     rows of exactly one key bucket (``pmod(xxhash64(keys), n_buckets)``,
@@ -1792,9 +1744,12 @@ class BucketedTxLogTable(TxLogTable):
       byte-identical under the same paths across the commit — and the
       reader still flips atomically between complete snapshots.
     - Merge cost is proportional to the batch's bucket spread
-      (touched/n_buckets of the table), not table size — the property
-      the full-rewrite ``merge_cdc_batch_txlog`` lacks and the reason
-      that one is demoted to a demonstration.
+      (touched/n_buckets of the table), not table size. A one-bucket
+      table is the degenerate case: every merge rewrites the whole
+      table, the plain copy-on-write MERGE.
+    - ``merge_cdc_batch_mor`` is the same merge kernel under another
+      fold rule: touched buckets keep their files, the batch keys'
+      stored images are deletion-vectored and their winners appended.
     - Conflict rule is FILE-granular (the Delta conflict matrix's real
       rule, not the whole-table approximation): on losing the version
       race, the merge re-resolves; if the interleaved commits did not
@@ -1864,8 +1819,9 @@ class BucketedTxLogTable(TxLogTable):
         self.checkpoint_interval = checkpoint_interval
         # salted-staging sizing target: COMPRESSED bytes of old files one
         # writer task may rewrite before the merge spreads the bucket
-        # over more tasks/files. It bounds writer-task LATENCY (the r9
-        # floor), not output-file size — merge outputs are interim files
+        # over more tasks/files. It bounds writer-task LATENCY (one task
+        # per bucket grows with bucket size), not output-file size —
+        # merge outputs are interim files
         # that the next touch of the bucket (or compact()) rewrites, so
         # small-file pressure is secondary to the rewrite wall.
         self.target_file_bytes = target_file_bytes
@@ -1967,22 +1923,22 @@ class BucketedTxLogTable(TxLogTable):
         n_touched: int,
         file_bytes: dict[str, int] | None = None,
     ) -> int:
-        """Writer tasks per touched bucket for this merge's rewrite.
+        """Writer tasks per touched bucket for this merge's rewrite of
+        ``old_files`` (the files it folds; none means salt 1).
 
-        One task per bucket (the r9 design) puts a floor under merge
-        latency that GROWS with bucket size (n_buckets is fixed at table
-        creation): a 1-bucket merge measured SLOWER than an 8-bucket one
-        (SCALE10_r9.md). Spread each touched bucket's rewrite over
-        enough tasks that (a) the merge uses the cluster's parallelism
-        and (b) output files stay near ``target_file_bytes`` — small
-        merges keep salt 1 so file counts don't balloon.
+        One task per bucket puts a floor under merge latency that GROWS
+        with bucket size (n_buckets is fixed at table creation), so a
+        table with few large buckets merges slower than one with many
+        small ones. Spread each touched bucket's rewrite over enough
+        tasks that (a) the merge uses the cluster's parallelism and (b)
+        output files stay near ``target_file_bytes`` — small merges
+        keep salt 1 so file counts don't balloon.
 
         Sizes come from the LOG (``file_bytes``, recorded at stage time
         and resolved through checkpoints) — backend-independent, no data
         stat calls in the merge path. Files whose size the log lacks
-        (legacy entries) fall back to a local stat; if even that fails
-        the parallelism cap applies, which can balloon file counts for
-        small buckets — the r10 wart recording sizes removes."""
+        fall back to a local stat; if even that fails the parallelism
+        cap applies, which can balloon file counts for small buckets."""
         if not old_files:
             return 1
         old_bytes: int | None = 0
@@ -2967,7 +2923,9 @@ class BucketedTxLogTable(TxLogTable):
         txn: tuple[str, int] | None = None,
     ) -> tuple[int, list[int]]:
         """Merge one CDC batch, rewriting ONLY its touched buckets as one
-        atomic log entry. Returns (committed version, touched buckets).
+        atomic log entry (copy-on-write): the merge kernel with every
+        touched bucket folded. Returns (committed version, touched
+        buckets).
 
         Metadata cost is O(commits-since-checkpoint): the snapshot,
         bucket map, and txn state resolve through the newest checkpoint
@@ -2983,118 +2941,7 @@ class BucketedTxLogTable(TxLogTable):
         micro-batch replayed after a streaming restart lands zero
         duplicate rows. Epochs must be monotonic per writer (Structured
         Streaming's batchId contract)."""
-        from cdc_streaming_pipeline_spark.operators.cdc import latest_state
-        from cdc_streaming_pipeline_spark.operators.merge import touched_buckets
-
-        base = self.latest_version()
-        if base is None:
-            raise FileNotFoundError("merge into an uninitialized table; call init_from_events")
-        self._refresh_meta(base)  # adopt an out-of-band rebucket's layout
-        batch = self._to_physical(batch)
-        pinned = snapshot(self, base)
-        snap, bmap = pinned.files, pinned.buckets
-        if txn is not None:
-            done = pinned.txns.get(txn[0])
-            if done is not None and txn[1] <= done[0]:
-                return done[1], []  # replayed micro-batch: already applied
-        touched = set(
-            touched_buckets(batch, self.key_cols, self.n_buckets)
-        )
-        if not touched:
-            return base, []
-        untagged = [f for f in snap if f not in bmap]
-        if untagged:
-            raise ValueError(
-                f"{len(untagged)} snapshot files carry no bucket tag — not a "
-                "bucket-pure table (mixed with plain commits?)"
-            )
-        # COVERING-rule pruning: a file tagged ``b`` under write-time
-        # layout ``n`` holds exactly the keys whose CURRENT bucket t
-        # satisfies t % n == b (sound because lazy rebucket only moves
-        # to multiples of every live layout). Uniform-layout tables
-        # reduce to the plain ``bmap[f] in touched`` test; mid-migration
-        # files written under an old divisor layout are still selected
-        # exactly, and this merge's rewrite migrates them to the
-        # current layout as a side effect.
-        layouts = pinned.layouts
-        old = [
-            f
-            for f in snap
-            if any(
-                _bucket_overlap(t, self.n_buckets, bmap[f], layouts.get(f, self.n_buckets))
-                for t in touched
-            )
-        ]
-        prev = (
-            self._read_snapshot_files(old, base)
-            if old
-            else None
-        )
-        # DV state of the read set at plan time: a concurrent
-        # delete_where on a touched file changes its ROWS without
-        # adding/removing files, so the retry path must compare this
-        # (resurrecting concurrently-deleted rows otherwise)
-        ours = set(old)
-        dv_ours = {f: m for f, m in pinned.dvs.items() if f in ours}
-        merged = (
-            batch
-            if prev is None
-            else prev.unionByName(batch, allowMissingColumns=True)
-        )
-        new_state = latest_state(
-            merged, key_cols=self.key_cols, order_col=self.order_col, drop_deleted=False
-        )
-        adds, buckets = self._stage_bucketed(
-            new_state,
-            salt_n=self._merge_salt_n(old, len(touched), pinned.bytes),
-            n_buckets_hint=len(touched),
-        )
-        staged_facts = self._staged_skipping_facts(adds, new_state.columns)
-        for _ in range(max_retries):
-            version = base + 1
-            entry = {
-                "version": version,
-                "mode": "merge",
-                "adds": adds,
-                "removes": sorted(old),
-                "n_files": len(adds),
-                "file_buckets": buckets,
-                "file_bytes": self._staged_bytes(adds),
-                "file_layout_n": {f: self.n_buckets for f in adds},
-                "buckets": sorted(touched),
-                # the MERGED schema, unioned with the previously
-                # recorded one so the record stays MONOTONE: a merge
-                # touching only drift-less buckets must not shrink the
-                # recorded schema below a column other buckets carry —
-                # the invariant the widened-table explicit-schema read
-                # (and _empty_frame generally) relies on
-                "schema": _schema_union(
-                    _resolve_schema_json(self, base),
-                    new_state.schema.jsonValue(),
-                ),
-            }
-            entry.update(staged_facts)
-            if txn is not None:
-                entry["txn"] = [txn[0], txn[1]]
-            if self._try_commit(version, entry):
-                if self.checkpoint_interval and version % self.checkpoint_interval == 0:
-                    write_checkpoint(self, version)
-                return version, sorted(touched)
-            # lost the race: file-granular revalidation against ONE
-            # snapshot of the new head
-            new = snapshot(self, self.latest_version())
-            if txn is not None:
-                done = new.txns.get(txn[0])
-                if done is not None and txn[1] <= done[0]:
-                    return done[1], []  # the interleaved commit WAS this txn
-            if self._read_set_intact(new, ours, dv_ours, touched):
-                base = new.version  # disjoint-bucket interleave: safe retry
-                continue
-            raise ConcurrentWriteError(
-                f"merge of buckets {sorted(touched)} conflicts with a commit "
-                f"at version {new.version}"
-            )
-        raise ConcurrentWriteError(f"merge gave up after {max_retries} retries")
+        return self._merge(batch, max_retries, txn, fold_rule="all")
 
     def merge_cdc_batch_mor(
         self,
@@ -3123,18 +2970,19 @@ class BucketedTxLogTable(TxLogTable):
         would vector (``dv_debt_files``); a touched bucket holding a file
         over the threshold is rewritten whole — all its DV-applied rows,
         bloom-skipped files included, merged with the batch and staged
-        one file per bucket, what ``compact_buckets`` would write — and
-        its files are removed instead of vectored. Clean buckets keep
-        vectors plus appended postimages. The batch still lands as ONE
-        log version, so a streaming sink needs no second fold commit.
-        ``None`` (the default) keeps the pure-MoR commit.
+        the way ``merge_cdc_batch`` stages a bucket — and its files are
+        removed instead of vectored. Clean buckets keep vectors plus
+        appended postimages. The batch still lands as ONE log version,
+        so a streaming sink needs no second fold commit. ``None`` (the
+        default) keeps the pure-MoR commit.
 
-        Semantics are IDENTICAL to ``merge_cdc_batch``: per key the
-        greatest ``order_col`` wins among (stored image, batch events),
-        tombstones are stored (a stale replay still loses), schema
-        drift unions. Even a stale-only batch re-appends the unchanged
-        winner (correct, slightly wasteful — the change feed emits
-        NOTHING for it because pre- and post-image compare equal).
+        Semantics are IDENTICAL to ``merge_cdc_batch`` (the same kernel
+        under another fold rule): per key the greatest ``order_col``
+        wins among (stored image, batch events), tombstones are stored
+        (a stale replay still loses), schema drift unions. Even a
+        stale-only batch re-appends the unchanged winner (correct,
+        slightly wasteful — the change feed emits NOTHING for it because
+        pre- and post-image compare equal).
 
         Conflict rule is merge's file-granular rule PLUS the DV rule:
         retry after a lost race only if the read set (the scanned files
@@ -3144,6 +2992,24 @@ class BucketedTxLogTable(TxLogTable):
 
         Returns (version, touched buckets); replayed ``txn`` batches
         no-op exactly like the rewrite path."""
+        return self._merge(batch, max_retries, txn, fold_rule=max_dv_fraction)
+
+    def _merge(
+        self,
+        batch: DataFrame,
+        max_retries: int,
+        txn: tuple[str, int] | None,
+        fold_rule: float | str | None,
+    ) -> tuple[int, list[int]]:
+        """The one CDC merge behind ``merge_cdc_batch`` and
+        ``merge_cdc_batch_mor``. ``fold_rule`` picks the touched buckets
+        rewritten whole (files removed, DV-applied rows restaged):
+        ``"all"`` folds every one (copy-on-write, mode ``"merge"``); a
+        fraction folds those with a file over that DV-debt threshold
+        once this merge's vectors land; ``None`` folds none. A bucket
+        not folded keeps its files: the stored images of the batch's
+        keys are deletion-vectored and their winners appended (mode
+        ``"merge_mor"``)."""
         from cdc_streaming_pipeline_spark.operators.cdc import latest_state
         from cdc_streaming_pipeline_spark.operators.merge import (
             BUCKET_COL,
@@ -3152,12 +3018,14 @@ class BucketedTxLogTable(TxLogTable):
         )
         from pyspark.sql import functions as F
 
+        fold_all = fold_rule == "all"
+        mode = "merge" if fold_all else "merge_mor"
         base = self.latest_version()
         if base is None:
             raise FileNotFoundError(
                 "merge into an uninitialized table; call init_from_events"
             )
-        self._refresh_meta(base)
+        self._refresh_meta(base)  # adopt an out-of-band rebucket's layout
         batch = self._to_physical(batch)
         pinned = snapshot(self, base)
         snap, bmap = pinned.files, pinned.buckets
@@ -3165,53 +3033,46 @@ class BucketedTxLogTable(TxLogTable):
             done = pinned.txns.get(txn[0])
             if done is not None and txn[1] <= done[0]:
                 return done[1], []  # replayed micro-batch: already applied
-        # Fused batch probe (MoR wall parity, SCALE10_r15): ONE capped
-        # collect yields BOTH the touched buckets and the leading-key
-        # values the bloom prune needs — a trickle merge pays one tiny
-        # job where it paid two (touched_buckets + the bloom key
-        # collect). Past the cap the distinct-bucket aggregate runs as
-        # before and bloom pruning is skipped (its existing bulk rule).
-        _probe_cap = 4096
-        kb = with_key_bucket(
-            batch.select(*self.key_cols), self.key_cols, self.n_buckets
-        ).select(self.key_cols[0], BUCKET_COL)
-        # first try RAW rows (no distinct → no exchange, CollectLimit
-        # early-exits): a trickle batch resolves in one narrow job and
-        # Python dedups; a mid-size batch retries with a LEADING-KEY
-        # grouping; only a bulk batch (> cap distinct key0 values) pays
-        # the full bucket aggregate.
-        probe = kb.limit(_probe_cap + 1).collect()
-        if len(probe) <= _probe_cap:
-            touched = {int(r[BUCKET_COL]) for r in probe}
-            probe_keys: list | None = list({r[self.key_cols[0]] for r in probe})
-        elif len({r[self.key_cols[0]] for r in probe}) > _probe_cap:
-            # The cap+1 sampled rows ALREADY exceed the distinct-key0 cap
-            # (all-unique keys — the bulk-load shape), so the grouped
-            # retry below is guaranteed to blow its limit too: skip the
-            # whole-batch aggregate it would have wasted (r16 verdict #1
-            # — one full groupBy job saved per bulk merge) and go
-            # straight to the bounded distinct-bucket probe.
+        probe_keys, trickle = None, False
+        if not fold_all:
+            # the key probe feeds the stored-image scan's bloom pruning.
+            # One capped collect yields both the touched buckets and the
+            # leading-key values, so a trickle merge pays one tiny job
+            # instead of two (touched_buckets plus a key collect). Raw
+            # rows first (no distinct, so no exchange, and CollectLimit
+            # exits early): a trickle batch resolves in one narrow job
+            # and Python dedups.
+            cap, key0 = 4096, self.key_cols[0]
+            kb = with_key_bucket(
+                batch.select(*self.key_cols), self.key_cols, self.n_buckets
+            ).select(key0, BUCKET_COL)
+            probe = kb.limit(cap + 1).collect()
+            trickle = len(probe) <= cap
+            if trickle:
+                touched = {int(r[BUCKET_COL]) for r in probe}
+                probe_keys = list({r[key0] for r in probe})
+            elif len({r[key0] for r in probe}) <= cap:
+                # a mid-size batch retries grouped by the leading key.
+                # The cap counts DISTINCT key0 values, not (key0, bucket)
+                # pairs: a composite key hashes one key0 into many
+                # buckets, so the pair count could pass the cap while
+                # the key0 set fits. Each group carries its bucket set,
+                # so one job still yields both outputs.
+                grouped = (
+                    kb.groupBy(key0)
+                    .agg(F.collect_set(BUCKET_COL).alias("_bkts"))
+                    .limit(cap + 1)
+                    .collect()
+                )
+                if len(grouped) <= cap:
+                    touched = {int(b) for r in grouped for b in r["_bkts"]}
+                    probe_keys = [r[key0] for r in grouped]
+        if probe_keys is None:
+            # a fold-all merge (no scan to feed), or a batch past the
+            # probe cap (the cap+1 sampled rows already hold more
+            # distinct key0 values, the bulk-load shape, or the grouped
+            # retry blew it): one distinct-bucket job, no bloom pruning
             touched = set(touched_buckets(batch, self.key_cols, self.n_buckets))
-            probe_keys = None
-        else:
-            # r15 ADVICE: cap the retry on DISTINCT key0 values, not
-            # distinct (key0, bucket) pairs — a composite-key batch
-            # hashes one key0 into many buckets, so the pair-distinct
-            # form could blow the cap (losing bloom pruning) while the
-            # key0 set itself fits. Each group carries its bucket set,
-            # so one job still yields BOTH probe outputs.
-            grouped = (
-                kb.groupBy(self.key_cols[0])
-                .agg(F.collect_set(BUCKET_COL).alias("_bkts"))
-                .limit(_probe_cap + 1)
-                .collect()
-            )
-            if len(grouped) <= _probe_cap:
-                touched = {int(b) for r in grouped for b in r["_bkts"]}
-                probe_keys = [r[self.key_cols[0]] for r in grouped]
-            else:
-                touched = set(touched_buckets(batch, self.key_cols, self.n_buckets))
-                probe_keys = None
         if not touched:
             return base, []
         untagged = [f for f in snap if f not in bmap]
@@ -3220,8 +3081,15 @@ class BucketedTxLogTable(TxLogTable):
                 f"{len(untagged)} snapshot files carry no bucket tag — not a "
                 "bucket-pure table (mixed with plain commits?)"
             )
+        # COVERING-rule selection: a file tagged ``b`` under write-time
+        # layout ``n`` holds exactly the keys whose CURRENT bucket t
+        # satisfies t % n == b (sound because lazy rebucket only moves
+        # to multiples of every live layout). Uniform-layout tables
+        # reduce to the plain ``bmap[f] in touched`` test; mid-migration
+        # files written under an old divisor layout are still selected
+        # exactly, and a fold rewrites them under the current layout.
         layouts = pinned.layouts
-        old = [
+        bucket_files = [
             f
             for f in snap
             if any(
@@ -3231,7 +3099,9 @@ class BucketedTxLogTable(TxLogTable):
                 for t in touched
             )
         ]
-        bucket_files = old  # before bloom pruning: the fold's candidates
+        # the stored-image scan: a fold-all merge rewrites every file it
+        # would scan, so it scans none
+        old = [] if fold_all else bucket_files
         # Bloom-assisted scan pruning: bucket overlap bounds the files
         # that COULD hold the batch's keys; when the leading key column
         # carries bloom sidecars and the key set is small (the CDC
@@ -3260,8 +3130,6 @@ class BucketedTxLogTable(TxLogTable):
         dvs = pinned.dvs
         old_set = set(old)
         dv_ours = {f: m for f, m in dvs.items() if f in old_set}
-        dv_dir = os.path.join(self.data_dir, "_dv")
-        os.makedirs(dv_dir, exist_ok=True)
         if old:
             raw = self._raw_read(old, base)
             # threshold-gated: small prior vectors broadcast (keeps the
@@ -3288,14 +3156,17 @@ class BucketedTxLogTable(TxLogTable):
         else:
             oldk = None
         try:
-            fold: list[str] = []
             pairs = None
-            if max_dv_fraction is not None:
+            if fold_all:
+                fold = bucket_files
+            elif fold_rule is None:
+                fold = []
+            else:
                 # this merge's vectored rows per file, before staging
                 if oldk is None:
                     new_n = {}
-                elif len(probe) <= _probe_cap:
-                    # a trickle batch (<= _probe_cap rows) bounds its
+                elif trickle:
+                    # a trickle batch (one the raw-row probe held) bounds its
                     # stored images, so ONE plain collect (no limit: a
                     # capped take scans partitions in several jobs) both
                     # scores the fold and feeds the vector staging
@@ -3312,7 +3183,7 @@ class BucketedTxLogTable(TxLogTable):
                     f: dvs.get(f, {}).get("n", 0) + new_n.get(f, 0)
                     for f in bucket_files
                 }
-                fold = self._mor_fold_files(deleted, pinned, touched, max_dv_fraction)
+                fold = self._mor_fold_files(deleted, pinned, touched, fold_rule)
             fold_set = set(fold)
             parts = []
             if oldk is not None:
@@ -3323,7 +3194,10 @@ class BucketedTxLogTable(TxLogTable):
             # a folded bucket's every DV-applied row is rewritten. Files
             # the stored-image scan read reuse its merged schema and
             # vector relation (no second footer-merge job or sidecar
-            # load); files the bloom probe skipped are read on their own
+            # load); files the scan did not read are read on their own —
+            # a fold-all merge through the shared snapshot read (only
+            # vectored files pay the anti-join), the MoR fold's
+            # bloom-skipped remainder as one read
             scanned = [f for f in fold if f in old_set]
             if scanned:
                 fr = visible_keyed(self.spark.read.schema(raw.schema).parquet(*scanned))
@@ -3331,7 +3205,9 @@ class BucketedTxLogTable(TxLogTable):
             skipped = [f for f in fold if f not in old_set]
             if skipped:
                 parts.append(
-                    _apply_dvs(
+                    self._read_snapshot_files(skipped, base)
+                    if fold_all
+                    else _apply_dvs(
                         self.spark, self._raw_read(skipped, base), skipped, dvs, self.blob
                     )
                 )
@@ -3345,13 +3221,17 @@ class BucketedTxLogTable(TxLogTable):
                 drop_deleted=False,
             )
             adds, buckets = self._stage_bucketed(
-                new_state, n_buckets_hint=len(touched)
+                new_state,
+                salt_n=self._merge_salt_n(fold, len(touched), pinned.bytes),
+                n_buckets_hint=len(touched),
             )
             staged_facts = self._staged_skipping_facts(adds, new_state.columns)
             # vectors only for the files that stay live: a folded file
             # is removed, so it gets no sidecar
             vectored = old_set - fold_set
             if vectored:
+                dv_dir = os.path.join(self.data_dir, "_dv")
+                os.makedirs(dv_dir, exist_ok=True)
                 # oldk is cached and sized by the batch's keys, so the
                 # threshold gate's capped collect is cheap; a trickle
                 # merge stages its vectors driver-side (one Python job
@@ -3377,11 +3257,14 @@ class BucketedTxLogTable(TxLogTable):
         finally:
             if oldk is not None:
                 oldk.unpersist()
-        file_dvs = {
-            r["file"]: {"path": r["cum_path"], "n": r["n_cum"]} for r in rows
-        }
-        dv_added = {
-            r["file"]: {"path": r["add_path"], "n": r["n_add"]} for r in rows
+        # a copy-on-write entry carries no vector facts at all
+        dv_facts = {} if fold_all else {
+            "file_dvs": {
+                r["file"]: {"path": r["cum_path"], "n": r["n_cum"]} for r in rows
+            },
+            "dv_added": {
+                r["file"]: {"path": r["add_path"], "n": r["n_add"]} for r in rows
+            },
         }
         # the read set: scanned files plus every file the fold rewrites
         ours = old_set | fold_set
@@ -3390,18 +3273,23 @@ class BucketedTxLogTable(TxLogTable):
             version = base + 1
             entry = {
                 "version": version,
-                "mode": "merge_mor",
+                "mode": mode,
                 "adds": adds,
                 "removes": sorted(fold),
                 "n_files": len(adds),
                 "file_buckets": buckets,
                 "file_bytes": self._staged_bytes(adds),
                 "file_layout_n": {f: self.n_buckets for f in adds},
-                "file_dvs": file_dvs,
-                "dv_added": dv_added,
+                **dv_facts,
                 # an old-layout folded file can carry rows of buckets
                 # beyond the touched ones; record every bucket written
                 "buckets": sorted(touched | set(buckets.values())),
+                # the MERGED schema, unioned with the previously
+                # recorded one so the record stays MONOTONE: a merge
+                # touching only drift-less buckets must not shrink the
+                # recorded schema below a column other buckets carry —
+                # the invariant the widened-table explicit-schema read
+                # (and _empty_frame generally) relies on
                 "schema": _schema_union(
                     _resolve_schema_json(self, base),
                     new_state.schema.jsonValue(),
@@ -3414,19 +3302,21 @@ class BucketedTxLogTable(TxLogTable):
                 if self.checkpoint_interval and version % self.checkpoint_interval == 0:
                     write_checkpoint(self, version)
                 return version, sorted(touched)
+            # lost the race: file-granular revalidation against ONE
+            # snapshot of the new head
             new = snapshot(self, self.latest_version())
             if txn is not None:
                 done = new.txns.get(txn[0])
                 if done is not None and txn[1] <= done[0]:
-                    return done[1], []
+                    return done[1], []  # the interleaved commit WAS this txn
             if self._read_set_intact(new, ours, dv_read, touched):
                 base = new.version  # disjoint-bucket interleave: safe retry
                 continue
             raise ConcurrentWriteError(
-                f"merge_mor of buckets {sorted(touched)} conflicts with a "
+                f"{mode} of buckets {sorted(touched)} conflicts with a "
                 f"commit at version {new.version}"
             )
-        raise ConcurrentWriteError(f"merge_mor gave up after {max_retries} retries")
+        raise ConcurrentWriteError(f"{mode} gave up after {max_retries} retries")
 
     def _mor_fold_files(
         self,

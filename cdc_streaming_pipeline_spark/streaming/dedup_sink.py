@@ -32,11 +32,12 @@ detection re-reads unchanged state, recomputes the SAME novel set, and
 the already-committed merges no-op on their tags (pinned with a
 mid-batch crash in tests/test_dedup_stream.py).
 
-The LANDING is merge-on-read (``merge_cdc_batch_mor``), so the write
-side is O(batch) like the probe side: novel rows append as bucket-pure
-files and NO existing bucket file is rewritten (r14 verdict item 1 —
-the copy-on-write ``merge_cdc_batch`` rewrote every touched bucket,
-O(corpus) per trickle batch once ids spread across all buckets). The
+The LANDING is merge-on-read (``merge_cdc_batch_mor``: the merge
+kernel with no bucket folded), so the write side is O(batch) like the
+probe side: novel rows append as bucket-pure files and NO existing
+bucket file is rewritten — the fold-every-touched-bucket rule of
+``merge_cdc_batch`` would rewrite O(corpus) per trickle batch once ids
+spread across all buckets. The
 MoR stored-image scan is ALSO O(batch): every state table blooms its
 leading key column, and a novel id's sidecar lookup prunes every
 candidate file, so a pure-insert merge reads zero stored files. What

@@ -145,7 +145,6 @@ def feed_replication_stream(
     n_buckets: int = 16,
     writer_id: str = "feed_stream",
     max_versions_per_trigger: int = 100,
-    merge_mode: str = "rewrite",
     available_now: bool = False,
     processing_time: str | None = None,
     dest_kwargs: dict | None = None,
@@ -160,12 +159,11 @@ def feed_replication_stream(
     cursor-in-checkpoint half now owned by Spark. Returns the
     ``StreamingQuery``.
 
-    ``merge_mode='mor'`` lands batches with ``merge_cdc_batch_mor``
-    (deletion-vector the stored images, append winners) — the
-    sustained-ingest shape; ``'rewrite'`` uses the bucket-rewrite
-    merge. Kill/restart mid-stream is pinned in
-    tests/test_feed_stream.py: the replayed range no-ops on its txn
-    tag and B converges to A exactly."""
+    Batches land with ``merge_cdc_batch``, the merge kernel folding
+    every touched bucket (copy-on-write); ``bucketed_merge_stream_sink``
+    is the sink that lands with the deletion-vector rule. Kill/restart
+    mid-stream is pinned in tests/test_feed_stream.py: the replayed
+    range no-ops on its txn tag and B converges to A exactly."""
     from cdc_streaming_pipeline_spark.sources.txlog import (
         BucketedTxLogTable,
         feed_as_cdc_events,
@@ -198,8 +196,6 @@ def feed_replication_stream(
             if events.isEmpty():
                 return
             dest.init_from_events(events, txn=(writer_id, hi))
-        elif merge_mode == "mor":
-            dest.merge_cdc_batch_mor(events, txn=(writer_id, hi))
         else:
             dest.merge_cdc_batch(events, txn=(writer_id, hi))
 

@@ -40,10 +40,10 @@ def _state(t):
     return {r["id"]: r["amount"] for r in t.read_state().collect()}
 
 
-def _run(spark, apath, bpath, ckpt, **kw):
+def _run(spark, apath, bpath, ckpt):
     q = feed_replication_stream(
         spark, apath, bpath, ckpt, key_cols=["id"], n_buckets=4,
-        available_now=True, **kw
+        available_now=True,
     )
     q.awaitTermination(300)
 
@@ -87,23 +87,6 @@ def test_feed_stream_roundtrip_restart_and_replay(spark, tmp_path):
     b = BucketedTxLogTable(spark, bpath)
     assert b.latest_version() == v_after_run2, "replayed range re-landed"
     assert _state(b) == _state(a)
-
-
-def test_feed_stream_mor_landing(spark, tmp_path):
-    """merge_mode='mor': batches land via deletion vectors + appended
-    winners — same replica, no bucket rewrites on the destination."""
-    apath, bpath = str(tmp_path / "a"), str(tmp_path / "b")
-    ckpt = str(tmp_path / "ckpt")
-    a = _seed(spark, apath, n=30)
-    _run(spark, apath, bpath, ckpt, merge_mode="mor")
-    a.merge_cdc_batch(
-        spark.createDataFrame([(5, 555.0, "u", "9" * 12, None)], S)
-    )
-    _run(spark, apath, bpath, ckpt, merge_mode="mor")
-    b = BucketedTxLogTable(spark, bpath)
-    assert _state(b) == _state(a)
-    modes = {e.get("mode") for e in b.history()}
-    assert "merge_mor" in modes
 
 
 def test_versions_source_rate_limit(spark, tmp_path):

@@ -150,28 +150,33 @@ def test_streaming_sink_exactly_once_through_restart(spark, tmp_path):
 
 
 def test_merge_cdc_batch_copy_on_write(spark, tmp_path):
-    """Upsert + delete semantics land as one atomic version; the
-    pre-merge snapshot stays readable; a stale concurrent merge fails."""
-    from cdc_streaming_pipeline_spark.sources.txlog import merge_cdc_batch_txlog
+    """On a one-bucket table every merge rewrites the whole table:
+    upsert + delete semantics land as one atomic version; the pre-merge
+    snapshot stays readable; a stale concurrent overwrite fails."""
+    from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
 
-    t = TxLogTable(spark, str(tmp_path / "t"))
+    t = BucketedTxLogTable(spark, str(tmp_path / "t"), key_cols=["id"], n_buckets=1)
+    S = "id bigint, status string, _op string, _lsn string, _deleted string"
     seed = spark.createDataFrame(
-        [(1, "a"), (2, "b"), (3, "c")], "id bigint, status string"
+        [(1, "a", "r", "0000", None), (2, "b", "r", "0000", None), (3, "c", "r", "0000", None)],
+        S,
     )
-    t.commit(seed)
+    t.init_from_events(seed)
     batch = spark.createDataFrame(
         [
             (2, "B", "u", "0001", None),          # update key 2
             (3, "c", "d", "0002", "true"),        # delete key 3
             (4, "d", "c", "0003", None),          # insert key 4
         ],
-        "id bigint, status string, _op string, _lsn string, _deleted string",
+        S,
     )
-    v = merge_cdc_batch_txlog(t, batch, key_cols=["id"])
-    got = {r["id"]: r["status"] for r in t.read().collect()}
+    v, _ = t.merge_cdc_batch(batch)
+    got = {r["id"]: r["status"] for r in t.read_state().collect()}
     assert got == {1: "a", 2: "B", 4: "d"}
+    # copy-on-write: the merge replaced every file of the table
+    assert sorted(t._read_entry(v)["removes"]) == sorted(replayed_files(t, v - 1))
     # pre-merge state intact under the previous version
-    pre = {r["id"]: r["status"] for r in t.read(v - 1).collect()}
+    pre = {r["id"]: r["status"] for r in t.read_state(v - 1).collect()}
     assert pre == {1: "a", 2: "b", 3: "c"}
     # a second writer merging against the now-stale base conflicts
     with pytest.raises(ConcurrentWriteError):

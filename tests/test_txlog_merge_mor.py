@@ -80,7 +80,17 @@ def test_mor_equals_rewrite_merge_over_random_waves(spark, tmp_path):
     tables must produce identical state at every step — stale events,
     tombstones, re-inserts and drift included. The fold threshold is
     one more input: pure MoR (None), a fold when a file's debt passes
-    20%, and a fold on ANY vector (0.0) all agree with the rewrite."""
+    20%, and a fold on ANY vector (0.0) all agree with the rewrite.
+    Both merges run one kernel, so every table is also checked against
+    a pure-Python fold of seed + waves that shares no engine code, and
+    each rewrite entry against the copy-on-write shape: mode "merge",
+    no vector facts, every file of the touched buckets removed."""
+    from tests.txlog_replay import fold_log
+
+    # the rows _seed writes: key -> (winning _lsn, image or None)
+    ref = {
+        i: (f"{i:06d}", (i, float(i), ["a", "b", "c"][i % 3])) for i in range(60)
+    }
     rng = random.Random(777)
     a = _seed(spark, str(tmp_path / "rewrite"), n=60)
     mors = {
@@ -111,13 +121,27 @@ def test_mor_equals_rewrite_merge_over_random_waves(spark, tmp_path):
     waves.append([(k, float(k), "b", "u", f"99{k:06d}", None) for k in range(4500)])
     folded = 0
     for step, wave in enumerate(waves, 1):
-        a.merge_cdc_batch(_ev(spark, wave))
+        # greatest _lsn per key wins, a stale event loses, and a winning
+        # delete removes the key (its tombstone still fences staler ones)
+        for k, amount, g, op, lsn, _ in wave:
+            if k not in ref or lsn > ref[k][0]:
+                ref[k] = (lsn, None if op == "d" else (k, amount, g))
+        want = {img for _, img in ref.values() if img is not None}
+        v, touched = a.merge_cdc_batch(_ev(spark, wave))
+        e = a._read_entry(v)
+        assert e["mode"] == "merge"
+        assert "file_dvs" not in e and "dv_added" not in e
+        before = fold_log(a, v - 1)
+        assert sorted(e["removes"]) == sorted(
+            f for f in before["files"] if before["buckets"][f] in touched
+        ), f"rewrite removes at step {step}"
         sa = {(r["id"], r["amount"], r["g"]) for r in a.read_state().collect()}
+        assert sa == want, f"rewrite diverges from the reference at step {step}"
         for frac, b in mors.items():
             v, _ = b.merge_cdc_batch_mor(_ev(spark, wave), max_dv_fraction=frac)
             folded += bool(b._read_entry(v)["removes"])
             sb = {(r["id"], r["amount"], r["g"]) for r in b.read_state().collect()}
-            assert sa == sb, f"divergence at step {step} (max_dv_fraction={frac})"
+            assert sa == sb == want, f"divergence at step {step} (max_dv_fraction={frac})"
     assert folded  # the fused fold actually ran
 
 
