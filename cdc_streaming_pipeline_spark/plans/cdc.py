@@ -2181,7 +2181,12 @@ def table_null_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     (repartitionByRange sorts nulls first). The isnull probe must skip
     the all-non-null slices, the isnotnull probe must skip the pure-
     null slices, and a range probe must skip null slices too — each
-    'yes' asserted by the oracle, values exact."""
+    'yes' asserted by the oracle, values exact. A pure-null slice needs
+    a range boundary inside some bucket's null run, and the boundaries
+    come from a sample whose seed shifts with the session's history:
+    64 slices over 8 buckets make a slice narrower than a bucket's null
+    run (1/7 of its rows), so the run holds a boundary unless the
+    sample is far off in every bucket at once."""
     from cdc_streaming_pipeline_spark.sources.txlog import BucketedTxLogTable
 
     o = _orders(spark, sf_dir)
@@ -2201,7 +2206,7 @@ def table_null_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         t.init_from_events(snap)
         t.compact_buckets(
-            min_files=1, cluster_cols=["total_amount"], cluster_parts=32
+            min_files=1, cluster_cols=["total_amount"], cluster_parts=64
         )
         return path
 
