@@ -20,6 +20,20 @@ from pyspark.sql import SparkSession
 _DEFAULT_CPUS = os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4))
 
 
+def _default_driver_memory() -> str:
+    """``spark.driver.memory`` unless $SPARK_GRAFT_DRIVER_MEM sets it: half
+    of physical memory, in whole GiB (at least 1). In local mode the
+    driver JVM is the whole engine, and it also carries off-heap memory
+    (metaspace, code cache, network buffers) next to the Python process
+    and its workers; a heap cap above physical memory lets the JVM grow
+    until the kernel kills it instead of collecting garbage."""
+    env = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if env:
+        return env
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{max(1, phys // 2 >> 30)}g"
+
+
 def _default_local_dir() -> str | None:
     """Scratch dir for shuffle files / spills (``spark.local.dir``).
 
@@ -61,7 +75,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", _default_driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", "64m")
         # Whole-stage-codegen class cache (static conf, default 100

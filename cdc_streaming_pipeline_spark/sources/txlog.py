@@ -38,6 +38,7 @@ the protocol demonstrated here.
 
 from __future__ import annotations
 
+import contextlib
 import dataclasses
 import datetime as _dt
 import json
@@ -53,7 +54,15 @@ from pyspark.sql import DataFrame, SparkSession
 
 
 class ConcurrentWriteError(RuntimeError):
-    """An overwrite lost the race: its base snapshot is stale."""
+    """A commit lost the version race and may not retry (its read set
+    changed, or it reads the whole table), or it ran out of retries."""
+
+
+#: attempts a retrying commit makes before it gives up. One bound for
+#: every kind, the highest any kind used before, so no kind gives up
+#: sooner; a retry re-resolves only the interleaved log suffix and
+#: re-checks the read set, it never re-stages data.
+COMMIT_RETRIES = 20
 
 
 class LayoutMismatchError(ValueError):
@@ -607,6 +616,16 @@ def _dv_stage_executor_side(
         )
         .collect()  # ONE row per touched file — file-level metadata only
     )
+
+
+def _dv_facts(rows: list) -> dict:
+    """The entry fields of the vectors ``_dv_stage`` wrote: each file's
+    cumulative vector (``file_dvs``) and this commit's own positions
+    (``dv_added``)."""
+    return {
+        "file_dvs": {r["file"]: {"path": r["cum_path"], "n": r["n_cum"]} for r in rows},
+        "dv_added": {r["file"]: {"path": r["add_path"], "n": r["n_add"]} for r in rows},
+    }
 
 
 def _dv_stage(
@@ -1233,6 +1252,10 @@ class TxLogTable:
     in the protocol changes — the log entry content, replay, and
     conflict rules are backend-independent."""
 
+    #: a commit whose version is a positive multiple of this writes a
+    #: checkpoint (``_publish``); None writes none
+    checkpoint_interval: int | None = None
+
     def __init__(
         self, spark: SparkSession, path: str, commit_backend=None, blob_backend=None
     ):
@@ -1376,6 +1399,64 @@ class TxLogTable:
         entry.setdefault("ts", time.time())
         return self._put_if_absent(self._entry_path(version), json.dumps(entry))
 
+    def _publish(self, base: int | None, build, txn=None, still_valid=None) -> int:
+        """The one commit step every write goes through: race for
+        version ``base + 1`` (0 on an empty log) with the entry
+        ``build(base)`` returns, tagged with ``txn``; a winning commit
+        at a positive multiple of ``checkpoint_interval`` then writes
+        the checkpoint. Returns the committed version.
+
+        ``build`` runs again on every attempt, so entry fields derived
+        from the base (an alter's re-resolved meta, a merge's unioned
+        schema) match the version they land on. After a lost race:
+
+        - a ``txn`` whose writer already recorded this epoch or a later
+          one at the new head means the write landed before (a replayed
+          micro-batch): that recorded version is returned, nothing more
+          is written;
+        - ``still_valid=None`` raises: one attempt, for writes whose
+          read set is the whole table or that must land at version 0;
+        - otherwise ``still_valid(snapshot at the new head)`` decides:
+          false raises a conflict, true retries on the new head, up to
+          ``COMMIT_RETRIES`` attempts."""
+        for _ in range(COMMIT_RETRIES):
+            version = (-1 if base is None else base) + 1
+            entry = {"version": version, **build(base)}
+            if txn is not None:
+                entry["txn"] = [txn[0], txn[1]]
+            if self._try_commit(version, entry):
+                every = self.checkpoint_interval
+                if every and version > 0 and version % every == 0:
+                    write_checkpoint(self, version)
+                return version
+            what = f"{entry['mode']} commit"
+            new = snapshot(self) if txn is not None or still_valid else None
+            if txn is not None:
+                done = new.txns.get(txn[0])
+                if done is not None and txn[1] <= done[0]:
+                    return done[1]
+            if still_valid is None:
+                raise ConcurrentWriteError(
+                    f"{what} lost the race for version {version}"
+                    + ("; table already initialized" if version == 0 else "")
+                )
+            if not still_valid(new):
+                raise ConcurrentWriteError(
+                    f"{what} conflicts with a commit at version {new.version}"
+                )
+            base = new.version
+        raise ConcurrentWriteError(f"{what} gave up after {COMMIT_RETRIES} retries")
+
+    def _add_facts(self, adds: list[str], buckets: dict[str, int] | None = None) -> dict:
+        """The entry fields describing the files a commit adds; a
+        bucketed write also records each file's bucket and the layout it
+        was hashed under."""
+        out = {"adds": adds, "n_files": len(adds), "file_bytes": self._staged_bytes(adds)}
+        if buckets is not None:
+            out["file_buckets"] = buckets
+            out["file_layout_n"] = {f: self.n_buckets for f in adds}
+        return out
+
     def txn_version(self, txn: tuple[str, int]) -> int | None:
         """The version a (writer_id, epoch) transaction committed as, or
         None — the idempotence lookup for exactly-once streaming sinks.
@@ -1446,7 +1527,6 @@ class TxLogTable:
         base: int | None = None,
         txn: tuple[str, int] | None = None,
         stats_cols: list[str] | None = None,
-        max_retries: int = 20,
     ) -> int:
         """Stage ``df``'s files once, then race for the next version.
 
@@ -1469,45 +1549,27 @@ class TxLogTable:
             if done is not None:
                 return done
         adds = self._stage(df)
-        file_facts = self._file_stats(adds, stats_cols) if stats_cols else None
         base = self.latest_version() if base is None else base
-        # overwrite's read set resolves through the newest checkpoint —
-        # O(commits-since-checkpoint) like every other metadata path, not
-        # a from-zero log replay (r10 verdict: maintenance paths were the
-        # last O(table-age) holdouts)
-        removes = resolve_with_checkpoint(self, base) if mode == "overwrite" else []
-        for _ in range(max_retries):
-            version = (base if base is not None else -1) + 1
-            entry = {
-                "version": version,
-                "mode": mode,
-                "adds": adds,
-                "removes": removes,
-                "n_files": len(adds),
-                "file_bytes": self._staged_bytes(adds),
-                # the committed schema: lets readers build a correctly
-                # typed EMPTY frame even when the snapshot resolves to
-                # zero files (never-written table, all-removed state, or
-                # an empty-adds commit) — read_changes' caught-up path
-                "schema": df.schema.jsonValue(),
-            }
-            if file_facts:
-                entry.update(file_facts)
-            if txn is not None:
-                entry["txn"] = [txn[0], txn[1]]
-            if self._try_commit(version, entry):
-                return version
-            new_base = self.latest_version()
-            if mode == "overwrite":
-                raise ConcurrentWriteError(
-                    f"overwrite of version {base} lost to a commit at {new_base}"
-                )
-            if txn is not None:
-                done = self.txn_version(txn)
-                if done is not None:
-                    return done
-            base = new_base
-        raise ConcurrentWriteError(f"append gave up after {max_retries} retries")
+        entry = {
+            "mode": mode,
+            **self._add_facts(adds),
+            # overwrite's read set is the snapshot at ``base``, resolved
+            # through the newest checkpoint: a from-zero replay would make
+            # every overwrite cost O(table age)
+            "removes": resolve_with_checkpoint(self, base) if mode == "overwrite" else [],
+            # the committed schema: lets readers build a correctly typed
+            # EMPTY frame even when the snapshot resolves to zero files
+            # (never-written table, all-removed state, or an empty-adds
+            # commit) — read_changes' caught-up path
+            "schema": df.schema.jsonValue(),
+            **(self._file_stats(adds, stats_cols) if stats_cols else {}),
+        }
+        return self._publish(
+            base,
+            lambda _: entry,
+            txn=txn,
+            still_valid=(lambda _: True) if mode == "append" else None,
+        )
 
     # ---- read path -------------------------------------------------------
 
@@ -1711,21 +1773,13 @@ class TxLogTable:
         earlier version remains readable (old files stay on disk)."""
         current = self.latest_version()
         snap = self.read(current).coalesce(target_partitions)
-        adds = self._stage(snap)
-        removes = resolve_with_checkpoint(self, current)  # checkpoint-bounded
-        version = current + 1
         entry = {
-            "version": version,
             "mode": "compact",
-            "adds": adds,
-            "removes": removes,
-            "n_files": len(adds),
-            "file_bytes": self._staged_bytes(adds),
+            **self._add_facts(self._stage(snap)),
+            "removes": resolve_with_checkpoint(self, current),  # checkpoint-bounded
             "schema": snap.schema.jsonValue(),
         }
-        if not self._try_commit(version, entry):
-            raise ConcurrentWriteError(f"compaction of version {current} lost the race")
-        return version
+        return self._publish(current, lambda _: entry)
 
 
 class BucketedTxLogTable(TxLogTable):
@@ -1813,9 +1867,10 @@ class BucketedTxLogTable(TxLogTable):
         self.key_cols = list(key_cols)
         self.n_buckets = 64 if n_buckets is None else n_buckets
         self.order_col = "_lsn" if order_col is None else order_col
-        # Delta's every-10-commits policy: after a successful merge whose
-        # version is a multiple of this, write a checkpoint so the NEXT
-        # merge's metadata resolution replays at most this many entries.
+        # Delta's every-10-commits policy: after any commit whose version
+        # is a positive multiple of this, write a checkpoint so the NEXT
+        # operation's metadata resolution replays at most this many
+        # entries.
         self.checkpoint_interval = checkpoint_interval
         # salted-staging sizing target: COMPRESSED bytes of old files one
         # writer task may rewrite before the merge spreads the bucket
@@ -1980,23 +2035,14 @@ class BucketedTxLogTable(TxLogTable):
         )
         adds, buckets = self._stage_bucketed(state)
         entry = {
-            "version": 0,
             "mode": "append",
-            "adds": adds,
+            **self._add_facts(adds, buckets),
             "removes": [],
-            "n_files": len(adds),
-            "file_buckets": buckets,
-            "file_bytes": self._staged_bytes(adds),
-            "file_layout_n": {f: self.n_buckets for f in adds},
             "schema": state.schema.jsonValue(),
             "table_meta": self._meta_dict(),
+            **self._staged_skipping_facts(adds, state.columns),
         }
-        entry.update(self._staged_skipping_facts(adds, state.columns))
-        if txn is not None:
-            entry["txn"] = [txn[0], txn[1]]
-        if not self._try_commit(0, entry):
-            raise ConcurrentWriteError("table already initialized")
-        return 0
+        return self._publish(None, lambda _: entry, txn=txn)
 
     #: per-file dictionary-stats cap: value SETS are recorded only for
     #: (file, column) pairs with at most this many distinct values —
@@ -2549,7 +2595,7 @@ class BucketedTxLogTable(TxLogTable):
             rev.get(p, p) for p in phys if p not in set(self.dropped_cols)
         ]
 
-    def _commit_alter(self, mutate, max_retries: int = 5) -> int:
+    def _commit_alter(self, mutate) -> int:
         """Commit one metadata mutation with lost-update protection:
         ``mutate()`` must RE-RESOLVE the table meta (``_refresh_meta``)
         and re-apply the intended change on top of whatever it finds —
@@ -2560,23 +2606,19 @@ class BucketedTxLogTable(TxLogTable):
         ``mutate`` instead of committing garbage). ``mutate`` may return
         a dict of extra entry fields (widen records the verified union
         schema)."""
-        for _ in range(max_retries):
-            base = self.latest_version()
+
+        def build(_):
             extra = mutate()
-            version = base + 1
-            entry = {
-                "version": version,
+            return {
                 "mode": "alter",
                 "adds": [],
                 "removes": [],
                 "n_files": 0,
                 "table_meta": self._meta_dict(),
+                **(extra or {}),
             }
-            if extra:
-                entry.update(extra)
-            if self._try_commit(version, entry):
-                return version
-        raise ConcurrentWriteError("alter gave up after retries")
+
+        return self._publish(self.latest_version(), build, still_valid=lambda _: True)
 
     def rename_column(self, old: str, new: str) -> int:
         """Rename a column as ONE metadata commit — no file rewrite
@@ -2643,6 +2685,20 @@ class BucketedTxLogTable(TxLogTable):
 
         return self._commit_alter(mutate)
 
+    @contextlib.contextmanager
+    def _layout_change(self, n_buckets: int, type_widening: dict):
+        """Adopt a new layout on this handle for the staging and the
+        ``table_meta`` of one commit; if anything fails before that
+        commit lands (a lost race included), the handle's fields go
+        back to the layout the log still records."""
+        old = self.n_buckets, self.type_widening
+        self.n_buckets, self.type_widening = n_buckets, type_widening
+        try:
+            yield
+        except BaseException:
+            self.n_buckets, self.type_widening = old
+            raise
+
     def rebucket(self, new_n_buckets: int, rewrite: bool = True) -> int:
         """Change the table's bucket count — the layout-evolution
         maintenance op (Delta/Iceberg partition evolution, bucket
@@ -2692,56 +2748,40 @@ class BucketedTxLogTable(TxLogTable):
                     f"every live layout; offending layouts: {sorted(bad)} "
                     "(use rewrite=True for arbitrary counts)"
                 )
-            old_n = self.n_buckets
-            self.n_buckets = new_n_buckets
-            version = base + 1
-            entry = {
-                "version": version,
-                "mode": "rebucket",
-                "adds": [],
-                "removes": [],
-                "n_files": 0,
-                "file_buckets": {},
-                "table_meta": self._meta_dict(),
-            }
-            if not self._try_commit(version, entry):
-                self.n_buckets = old_n
-                raise ConcurrentWriteError(f"lazy rebucket lost the race at {version}")
-            if self.checkpoint_interval and version % self.checkpoint_interval == 0:
-                write_checkpoint(self, version)
-            return version
+            with self._layout_change(new_n_buckets, self.type_widening):
+                entry = {
+                    "mode": "rebucket",
+                    "adds": [],
+                    "removes": [],
+                    "n_files": 0,
+                    "file_buckets": {},
+                    "table_meta": self._meta_dict(),
+                }
+                return self._publish(base, lambda _: entry)
         snap = resolve_with_checkpoint(self, base)
         df = self._read_snapshot_files(snap, base)
         from cdc_streaming_pipeline_spark.operators.merge import BUCKET_COL
 
-        old_n = self.n_buckets
-        self.n_buckets = new_n_buckets  # _stage_bucketed hashes with this
-        try:
-            adds, buckets = self._stage_bucketed(df.drop(BUCKET_COL), salt_n=1)
-        except BaseException:
-            self.n_buckets = old_n
-            raise
-        version = base + 1
+        # _stage_bucketed hashes with the new count
+        with self._layout_change(new_n_buckets, self.type_widening):
+            return self._publish_rewrite(base, df.drop(BUCKET_COL), snap)
+
+    def _publish_rewrite(self, base: int, df: DataFrame, removes: list[str]) -> int:
+        """Stage ``df`` bucket-pure under the handle's layout and commit
+        it as a ``rebucket`` entry replacing ``removes`` — the whole-table
+        rewrite ``rebucket`` and ``widen_key`` share. One attempt: the
+        read set is the whole table."""
+        adds, buckets = self._stage_bucketed(df, salt_n=1)
         entry = {
-            "version": version,
             "mode": "rebucket",
-            "adds": adds,
-            "removes": sorted(snap),
-            "n_files": len(adds),
-            "file_buckets": buckets,
-            "file_bytes": self._staged_bytes(adds),
-            "file_layout_n": {f: self.n_buckets for f in adds},
+            **self._add_facts(adds, buckets),
+            "removes": sorted(removes),
             "buckets": sorted(set(buckets.values())),
-            "schema": df.drop(BUCKET_COL).schema.jsonValue(),
+            "schema": df.schema.jsonValue(),
             "table_meta": self._meta_dict(),
+            **self._staged_skipping_facts(adds, df.columns),
         }
-        entry.update(self._staged_skipping_facts(adds, df.columns))
-        if not self._try_commit(version, entry):
-            self.n_buckets = old_n
-            raise ConcurrentWriteError(f"rebucket lost the race at {version}")
-        if self.checkpoint_interval and version % self.checkpoint_interval == 0:
-            write_checkpoint(self, version)
-        return version
+        return self._publish(base, lambda _: entry)
 
     def widen_key(
         self, name: str, new_type: str, n_buckets: int | None = None
@@ -2795,36 +2835,11 @@ class BucketedTxLogTable(TxLogTable):
         snap = resolve_with_checkpoint(self, base)
         df = self._read_snapshot_files(snap, base).drop(BUCKET_COL)
         df = df.withColumn(phys, F.col(phys).cast(new_type))
-        old_n, old_wid = self.n_buckets, dict(self.type_widening)
-        if n_buckets is not None:
-            self.n_buckets = n_buckets
-        self.type_widening[phys] = new_type  # future batches hash WIDE
-        try:
-            adds, buckets = self._stage_bucketed(df, salt_n=1)
-        except BaseException:
-            self.n_buckets, self.type_widening = old_n, old_wid
-            raise
-        version = base + 1
-        entry = {
-            "version": version,
-            "mode": "rebucket",
-            "adds": adds,
-            "removes": sorted(snap),
-            "n_files": len(adds),
-            "file_buckets": buckets,
-            "file_bytes": self._staged_bytes(adds),
-            "file_layout_n": {f: self.n_buckets for f in adds},
-            "buckets": sorted(set(buckets.values())),
-            "schema": df.schema.jsonValue(),
-            "table_meta": self._meta_dict(),
-        }
-        entry.update(self._staged_skipping_facts(adds, df.columns))
-        if not self._try_commit(version, entry):
-            self.n_buckets, self.type_widening = old_n, old_wid
-            raise ConcurrentWriteError(f"widen_key lost the race at {version}")
-        if self.checkpoint_interval and version % self.checkpoint_interval == 0:
-            write_checkpoint(self, version)
-        return version
+        with self._layout_change(
+            self.n_buckets if n_buckets is None else n_buckets,
+            {**self.type_widening, phys: new_type},  # future batches hash WIDE
+        ):
+            return self._publish_rewrite(base, df, snap)
 
     def migrate_buckets(self, max_files: int | None = None) -> tuple[int | None, int]:
         """Finish a lazy rebucket eagerly, in bounded steps: rewrite up
@@ -2832,9 +2847,11 @@ class BucketedTxLogTable(TxLogTable):
         the current one, bucket-pure under the current count. Returns
         (version, files migrated) — (None, 0) when the table is fully
         migrated. Each step is one per-file-replacement commit with the
-        same conflict semantics as a merge, so it interleaves with
-        disjoint writers; run it from the maintenance window (or let
-        ordinary merges migrate the hot buckets for free)."""
+        same conflict rule as a merge (``_read_set_intact``: the files it
+        rewrites, with the vectors it read them with, and the buckets it
+        writes), so it interleaves with disjoint writers; run it from the
+        maintenance window (or let ordinary merges migrate the hot
+        buckets for free)."""
         base = self.latest_version()
         if base is None:
             return None, 0
@@ -2851,27 +2868,28 @@ class BucketedTxLogTable(TxLogTable):
             return None, 0
         from cdc_streaming_pipeline_spark.operators.merge import BUCKET_COL
 
-        df = self._read_snapshot_files(stale, base)
-        adds, buckets = self._stage_bucketed(df.drop(BUCKET_COL), salt_n=1)
-        version = base + 1
+        df = self._read_snapshot_files(stale, base).drop(BUCKET_COL)
+        adds, buckets = self._stage_bucketed(df, salt_n=1)
         entry = {
-            "version": version,
             "mode": "migrate",
-            "adds": adds,
+            **self._add_facts(adds, buckets),
             "removes": sorted(stale),
-            "n_files": len(adds),
-            "file_buckets": buckets,
-            "file_bytes": self._staged_bytes(adds),
-            "file_layout_n": {f: self.n_buckets for f in adds},
             "buckets": sorted(set(buckets.values())),
-            "schema": df.drop(BUCKET_COL).schema.jsonValue(),
+            "schema": df.schema.jsonValue(),
+            **self._staged_skipping_facts(adds, df.columns),
         }
-        entry.update(self._staged_skipping_facts(adds, df.columns))
-        if not self._try_commit(version, entry):
-            raise ConcurrentWriteError(f"bucket migration lost the race at {version}")
-        if self.checkpoint_interval and version % self.checkpoint_interval == 0:
-            write_checkpoint(self, version)
-        return version, len(stale)
+        return self._publish(
+            base, lambda _: entry, still_valid=self._rewrite_rule(pinned, stale, entry)
+        ), len(stale)
+
+    def _rewrite_rule(self, pinned: Snapshot, files: list[str], entry: dict):
+        """The ``still_valid`` rule of a commit that rewrites ``files``
+        (read at ``pinned``) into the buckets ``entry`` records: the
+        merge's file-granular rule over that read set."""
+        ours = set(files)
+        dv_read = {f: m for f, m in pinned.dvs.items() if f in ours}
+        touched = set(entry["buckets"])
+        return lambda new: self._read_set_intact(new, ours, dv_read, touched)
 
     def _read_set_intact(
         self, new: Snapshot, ours: set[str], dv_read: dict, touched: set[int]
@@ -2919,7 +2937,6 @@ class BucketedTxLogTable(TxLogTable):
     def merge_cdc_batch(
         self,
         batch: DataFrame,
-        max_retries: int = 20,
         txn: tuple[str, int] | None = None,
     ) -> tuple[int, list[int]]:
         """Merge one CDC batch, rewriting ONLY its touched buckets as one
@@ -2941,12 +2958,11 @@ class BucketedTxLogTable(TxLogTable):
         micro-batch replayed after a streaming restart lands zero
         duplicate rows. Epochs must be monotonic per writer (Structured
         Streaming's batchId contract)."""
-        return self._merge(batch, max_retries, txn, fold_rule="all")
+        return self._merge(batch, txn, fold_rule="all")
 
     def merge_cdc_batch_mor(
         self,
         batch: DataFrame,
-        max_retries: int = 20,
         txn: tuple[str, int] | None = None,
         max_dv_fraction: float | None = None,
     ) -> tuple[int, list[int]]:
@@ -2992,12 +3008,11 @@ class BucketedTxLogTable(TxLogTable):
 
         Returns (version, touched buckets); replayed ``txn`` batches
         no-op exactly like the rewrite path."""
-        return self._merge(batch, max_retries, txn, fold_rule=max_dv_fraction)
+        return self._merge(batch, txn, fold_rule=max_dv_fraction)
 
     def _merge(
         self,
         batch: DataFrame,
-        max_retries: int,
         txn: tuple[str, int] | None,
         fold_rule: float | str | None,
     ) -> tuple[int, list[int]]:
@@ -3257,66 +3272,40 @@ class BucketedTxLogTable(TxLogTable):
         finally:
             if oldk is not None:
                 oldk.unpersist()
-        # a copy-on-write entry carries no vector facts at all
-        dv_facts = {} if fold_all else {
-            "file_dvs": {
-                r["file"]: {"path": r["cum_path"], "n": r["n_cum"]} for r in rows
-            },
-            "dv_added": {
-                r["file"]: {"path": r["add_path"], "n": r["n_add"]} for r in rows
-            },
+        entry = {
+            "mode": mode,
+            **self._add_facts(adds, buckets),
+            "removes": sorted(fold),
+            # a copy-on-write entry carries no vector facts at all
+            **({} if fold_all else _dv_facts(rows)),
+            # an old-layout folded file can carry rows of buckets
+            # beyond the touched ones; record every bucket written
+            "buckets": sorted(touched | set(buckets.values())),
+            **staged_facts,
         }
         # the read set: scanned files plus every file the fold rewrites
         ours = old_set | fold_set
         dv_read = {f: m for f, m in dvs.items() if f in ours}
-        for _ in range(max_retries):
-            version = base + 1
-            entry = {
-                "version": version,
-                "mode": mode,
-                "adds": adds,
-                "removes": sorted(fold),
-                "n_files": len(adds),
-                "file_buckets": buckets,
-                "file_bytes": self._staged_bytes(adds),
-                "file_layout_n": {f: self.n_buckets for f in adds},
-                **dv_facts,
-                # an old-layout folded file can carry rows of buckets
-                # beyond the touched ones; record every bucket written
-                "buckets": sorted(touched | set(buckets.values())),
-                # the MERGED schema, unioned with the previously
-                # recorded one so the record stays MONOTONE: a merge
-                # touching only drift-less buckets must not shrink the
-                # recorded schema below a column other buckets carry —
-                # the invariant the widened-table explicit-schema read
-                # (and _empty_frame generally) relies on
+        v = self._publish(
+            base,
+            # the MERGED schema, unioned with the one recorded at the
+            # base it lands on so the record stays MONOTONE: a merge
+            # touching only drift-less buckets must not shrink the
+            # recorded schema below a column other buckets carry — the
+            # invariant the widened-table explicit-schema read (and
+            # _empty_frame generally) relies on
+            lambda b: {
+                **entry,
                 "schema": _schema_union(
-                    _resolve_schema_json(self, base),
-                    new_state.schema.jsonValue(),
+                    _resolve_schema_json(self, b), new_state.schema.jsonValue()
                 ),
-            }
-            entry.update(staged_facts)
-            if txn is not None:
-                entry["txn"] = [txn[0], txn[1]]
-            if self._try_commit(version, entry):
-                if self.checkpoint_interval and version % self.checkpoint_interval == 0:
-                    write_checkpoint(self, version)
-                return version, sorted(touched)
-            # lost the race: file-granular revalidation against ONE
-            # snapshot of the new head
-            new = snapshot(self, self.latest_version())
-            if txn is not None:
-                done = new.txns.get(txn[0])
-                if done is not None and txn[1] <= done[0]:
-                    return done[1], []  # the interleaved commit WAS this txn
-            if self._read_set_intact(new, ours, dv_read, touched):
-                base = new.version  # disjoint-bucket interleave: safe retry
-                continue
-            raise ConcurrentWriteError(
-                f"{mode} of buckets {sorted(touched)} conflicts with a "
-                f"commit at version {new.version}"
-            )
-        raise ConcurrentWriteError(f"{mode} gave up after {max_retries} retries")
+            },
+            txn=txn,
+            # file-granular revalidation: a disjoint-bucket interleave
+            # retries on the new head
+            still_valid=lambda new: self._read_set_intact(new, ours, dv_read, touched),
+        )
+        return v, sorted(touched)
 
     def _mor_fold_files(
         self,
@@ -3393,8 +3382,9 @@ class BucketedTxLogTable(TxLogTable):
         if not targets:
             return None, []
         old = sorted({f for b in targets for f in per_bucket[b]})
-        df = self._read_snapshot_files(old, base)
         from cdc_streaming_pipeline_spark.operators.merge import BUCKET_COL
+
+        df = self._read_snapshot_files(old, base).drop(BUCKET_COL)
 
         if cluster_cols and cluster_parts is None:
             sizes = pinned.bytes
@@ -3404,34 +3394,21 @@ class BucketedTxLogTable(TxLogTable):
                 len(targets), -(-total // self.target_file_bytes) if total else 1
             )
         adds, new_buckets = self._stage_bucketed(
-            df.drop(BUCKET_COL),
-            salt_n=1,
-            cluster_cols=cluster_cols,
-            cluster_parts=cluster_parts,
+            df, salt_n=1, cluster_cols=cluster_cols, cluster_parts=cluster_parts
         )
-        version = base + 1
         entry = {
-            "version": version,
             "mode": "merge",  # per-bucket replacement: same replay rule
-            "adds": adds,
-            "removes": sorted(old),
-            "n_files": len(adds),
-            "file_buckets": new_buckets,
-            "file_bytes": self._staged_bytes(adds),
-            "file_layout_n": {f: self.n_buckets for f in adds},
+            **self._add_facts(adds, new_buckets),
+            "removes": old,
             # an old-layout input file can carry rows of buckets beyond
             # the targets; record every bucket this commit rewrote
             "buckets": sorted(set(new_buckets.values()) | set(targets)),
-            "schema": df.drop(BUCKET_COL).schema.jsonValue(),
+            "schema": df.schema.jsonValue(),
+            **self._staged_skipping_facts(adds, df.columns),
         }
-        entry.update(self._staged_skipping_facts(adds, df.columns))
-        if not self._try_commit(version, entry):
-            raise ConcurrentWriteError(
-                f"bucket compaction of {targets} lost the race at {version}"
-            )
-        if self.checkpoint_interval and version % self.checkpoint_interval == 0:
-            write_checkpoint(self, version)
-        return version, targets
+        return self._publish(
+            base, lambda _: entry, still_valid=self._rewrite_rule(pinned, old, entry)
+        ), targets
 
     def _queryable_snapshot(self, version: int | None = None) -> DataFrame:
         """SQL sees the latest-state view: deletion vectors applied,
@@ -3641,9 +3618,7 @@ class BucketedTxLogTable(TxLogTable):
         df = df.filter(~F.col("_is_deleted")).drop(*drop)
         return df.filter(predicate), len(keep), len(files)
 
-    def delete_where(
-        self, predicate, max_retries: int = 5
-    ) -> tuple[int | None, int, int]:
+    def delete_where(self, predicate) -> tuple[int | None, int, int]:
         """Merge-on-read DELETE (Delta deletion vectors / Iceberg
         positional deletes): mark every state row matching ``predicate``
         (a plain Spark Column) deleted by writing per-file ROW-INDEX
@@ -3718,45 +3693,25 @@ class BucketedTxLogTable(TxLogTable):
         rows = _dv_stage_executor_side(matched, prior, dv_dir, self.blob)
         if not rows:
             return None, 0, 0
-        file_dvs = {
-            r["file"]: {"path": r["cum_path"], "n": r["n_cum"]} for r in rows
-        }
-        dv_added = {
-            r["file"]: {"path": r["add_path"], "n": r["n_add"]} for r in rows
-        }
-        n_deleted = sum(r["n_add"] for r in rows)
-        for _ in range(max_retries):
-            version = base + 1
-            entry = {
-                "version": version,
-                "mode": "delete",
-                "adds": [],
-                "removes": [],
-                "n_files": 0,
-                "file_dvs": file_dvs,
-                "dv_added": dv_added,
-            }
-            if self._try_commit(version, entry):
-                if self.checkpoint_interval and version % self.checkpoint_interval == 0:
-                    write_checkpoint(self, version)
-                return version, len(file_dvs), n_deleted
-            new_base = self.latest_version()
-            new_files = set(resolve_with_checkpoint(self, new_base))
-            new_dvs = resolve_file_dvs(self, new_base)
-            if all(f in new_files for f in file_dvs) and all(
-                new_dvs.get(f) == dvs.get(f) for f in file_dvs
-            ):
-                base = new_base  # disjoint interleave: vectors still valid
-                continue
-            raise ConcurrentWriteError(
-                "delete_where conflicts with a concurrent commit touching "
-                "the same files"
-            )
-        raise ConcurrentWriteError(f"delete_where gave up after {max_retries} retries")
+        entry = {"mode": "delete", "adds": [], "removes": [], "n_files": 0, **_dv_facts(rows)}
+        touched = entry["file_dvs"]
+        version = self._publish(
+            base,
+            lambda _: entry,
+            still_valid=lambda new: self._vectors_intact(new, dvs, touched),
+        )
+        return version, len(touched), sum(r["n_add"] for r in rows)
 
-    def update_where(
-        self, predicate, assignments: dict, max_retries: int = 5
-    ) -> tuple[int | None, int, int]:
+    @staticmethod
+    def _vectors_intact(new: Snapshot, dvs: dict, files) -> bool:
+        """A DV commit that lost the race may retry on top of ``new``
+        iff each file it vectors is still live with the vector it read
+        (``dvs``): a concurrent delete or rewrite of the same file
+        invalidates the cumulative vector it computed."""
+        live = set(new.files)
+        return all(f in live and new.dvs.get(f) == dvs.get(f) for f in files)
+
+    def update_where(self, predicate, assignments: dict) -> tuple[int | None, int, int]:
         """Merge-on-read UPDATE (Delta's DV-backed MERGE/UPDATE): set
         ``assignments`` (logical column → Column expression or literal)
         on every state row matching ``predicate``, as ONE commit that
@@ -3858,13 +3813,6 @@ class BucketedTxLogTable(TxLogTable):
             )
             if not rows:
                 return None, 0, 0
-            file_dvs = {
-                r["file"]: {"path": r["cum_path"], "n": r["n_cum"]} for r in rows
-            }
-            dv_added = {
-                r["file"]: {"path": r["add_path"], "n": r["n_add"]} for r in rows
-            }
-            n_updated = sum(r["n_add"] for r in rows)
 
             # new images → bucket-pure appended files (from the cached
             # matched slice, so the postimage rows are exactly the DV'd
@@ -3884,45 +3832,24 @@ class BucketedTxLogTable(TxLogTable):
         finally:
             matched.unpersist()
 
-        for _ in range(max_retries):
-            version = base + 1
-            entry = {
-                "version": version,
-                "mode": "update",
-                "adds": adds,
-                "removes": [],
-                "n_files": len(adds),
-                "file_buckets": buckets,
-                "file_bytes": self._staged_bytes(adds),
-                "file_layout_n": {f: self.n_buckets for f in adds},
-                "file_dvs": file_dvs,
-                "dv_added": dv_added,
-            }
-            entry.update(staged_facts)
-            if self._try_commit(version, entry):
-                if self.checkpoint_interval and version % self.checkpoint_interval == 0:
-                    write_checkpoint(self, version)
-                return version, len(file_dvs), n_updated
-            new_base = self.latest_version()
-            new_files, new_bmap, _ = resolve_snapshot_state(self, new_base)
-            new_set = set(new_files)
-            new_dvs = resolve_file_dvs(self, new_base)
-            ours = set(keep)
-            foreign_untagged = any(
-                f not in ours and f not in new_bmap for f in new_set
+        entry = {
+            "mode": "update",
+            **self._add_facts(adds, buckets),
+            "removes": [],
+            **_dv_facts(rows),
+            **staged_facts,
+        }
+        touched = entry["file_dvs"]
+
+        def still_valid(new: Snapshot) -> bool:
+            # the vectors still hold, and no untagged foreign file landed
+            # (it could restate our keys)
+            return self._vectors_intact(new, dvs, touched) and not any(
+                f not in keep_set and f not in new.buckets for f in new.files
             )
-            if (
-                all(f in new_set for f in file_dvs)
-                and all(new_dvs.get(f) == dvs.get(f) for f in file_dvs)
-                and not foreign_untagged
-            ):
-                base = new_base  # disjoint interleave: images still valid
-                continue
-            raise ConcurrentWriteError(
-                "update_where conflicts with a concurrent commit touching "
-                "the same files"
-            )
-        raise ConcurrentWriteError(f"update_where gave up after {max_retries} retries")
+
+        version = self._publish(base, lambda _: entry, still_valid=still_valid)
+        return version, len(touched), sum(r["n_add"] for r in rows)
 
 
 def table_changes(
@@ -4797,7 +4724,6 @@ def clone_table(src: TxLogTable, dest_path: str, version: int | None = None,
     if snap.version is None:
         raise FileNotFoundError("clone of an uninitialized table")
     entry = {
-        "version": 0,
         "mode": "clone",
         "adds": sorted(snap.files),
         "removes": [],
@@ -4837,8 +4763,7 @@ def clone_table(src: TxLogTable, dest_path: str, version: int | None = None,
         )
     if dest.latest_version() is not None:
         raise FileExistsError(f"clone destination {dest_path} already has a log")
-    if not dest._try_commit(0, entry):
-        raise ConcurrentWriteError(f"clone destination {dest_path} raced")
+    dest._publish(None, lambda _: entry)
     if hasattr(dest, "_refresh_meta"):
         dest._refresh_meta(None)  # adopt column mapping from the entry
     return dest
@@ -4903,25 +4828,8 @@ def analyze_table(
         facts = table._file_stats(missing, [c for c in cols if c in columns])
     if not facts:
         return None
-    for _ in range(20):
-        version = base + 1
-        entry = {
-            "version": version,
-            "mode": "analyze",
-            "adds": [],
-            "removes": [],
-            "n_files": 0,
-        }
-        entry.update(facts)
-        if table._try_commit(version, entry):
-            if (
-                getattr(table, "checkpoint_interval", None)
-                and version % table.checkpoint_interval == 0
-            ):
-                write_checkpoint(table, version)
-            return version
-        base = table.latest_version()
-    raise ConcurrentWriteError("analyze gave up after 20 retries")
+    entry = {"mode": "analyze", "adds": [], "removes": [], "n_files": 0, **facts}
+    return table._publish(base, lambda _: entry, still_valid=lambda _: True)
 
 
 def vacuum(

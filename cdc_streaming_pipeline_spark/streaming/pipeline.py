@@ -29,6 +29,7 @@ identical.
 
 from __future__ import annotations
 
+import functools
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -457,7 +458,6 @@ def bucketed_merge_stream_sink(
     vacuum_retain_versions: int = 10,
     vacuum_min_age_seconds: float = 3600.0,
     target_file_bytes: int = 8 << 20,
-    conflict_retries: int = 5,
     stats_cols: list[str] | None = None,
     cluster_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
@@ -539,6 +539,7 @@ def bucketed_merge_stream_sink(
         BucketedTxLogTable,
         vacuum,
     )
+    from cdc_streaming_pipeline_spark.streaming.sink_util import land
 
     def _merge(batch_df: DataFrame, batch_id: int) -> None:
         from cdc_streaming_pipeline_spark.sources.txlog import (
@@ -561,27 +562,17 @@ def bucketed_merge_stream_sink(
         )
         if resolve_table_meta(table) is None:
             table.n_buckets = n_buckets
-        tag = (writer_id, int(batch_id))
-        # Conflict retry: a same-bucket commit from OUTSIDE this stream
-        # (another writer, a manual compact/rebucket/maintenance window)
-        # raises ConcurrentWriteError; re-invoking merge_cdc_batch
-        # RE-DERIVES from the new base (latest_state over fresh snapshot
-        # + batch), so retrying is exact, and the txn tag keeps even a
-        # retried-after-partial-visibility batch exactly-once.
-        for attempt in range(conflict_retries + 1):
-            try:
-                if table.latest_version() is None:
-                    table.init_from_events(batch_df, txn=tag)
-                elif merge_mode == "mor":
-                    table.merge_cdc_batch_mor(
-                        batch_df, txn=tag, max_dv_fraction=max_dv_fraction
-                    )
-                else:
-                    table.merge_cdc_batch(batch_df, txn=tag)
-                break
-            except ConcurrentWriteError:
-                if attempt == conflict_retries:
-                    raise
+        # a same-bucket commit from OUTSIDE this stream (another writer,
+        # a manual compact/rebucket/maintenance window) makes the merge
+        # raise ConcurrentWriteError; ``land`` re-runs it, RE-DERIVING
+        # from the new base (latest_state over fresh snapshot + batch)
+        if merge_mode == "mor":
+            merge = functools.partial(
+                table.merge_cdc_batch_mor, max_dv_fraction=max_dv_fraction
+            )
+        else:
+            merge = table.merge_cdc_batch
+        land(table, batch_df, (writer_id, int(batch_id)), merge)
         if max_files_per_bucket is not None:
             try:
                 table.compact_buckets(

@@ -11,6 +11,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+#: times a sink re-runs a batch's landing after losing it to a writer
+#: outside the stream. Each re-run re-derives the merge from the new
+#: head, and the txn tag keeps it exactly-once.
+LAND_RETRIES = 5
+
 
 def cdc_shape(df: DataFrame, batch_id: int) -> DataFrame:
     """Stamp the CDC bookkeeping columns a txlog merge expects."""
@@ -48,35 +53,35 @@ def open_table(spark: SparkSession, path: str, key_cols: list[str], **kw):
         return BucketedTxLogTable(spark, path, **kw)
 
 
-def land_mor(
-    table,
-    df: DataFrame,
-    batch_id: int,
-    txn: tuple[str, int],
-    conflict_retries: int = 5,
-) -> None:
+def land(table, batch: DataFrame, txn: tuple[str, int], merge) -> None:
+    """Land one CDC-shaped batch: ``init_from_events`` on an empty table,
+    ``merge(batch, txn=txn)`` after. A landing lost to an EXTERNAL
+    writer (a manual compaction window, another maintenance process)
+    runs again, up to ``LAND_RETRIES`` times: the merge re-resolves from
+    the new base and the txn tag keeps even a
+    retried-after-partial-visibility batch exactly-once — the stream
+    must not die on a losable race."""
+    from cdc_streaming_pipeline_spark.sources.txlog import ConcurrentWriteError
+
+    for attempt in range(LAND_RETRIES + 1):
+        try:
+            if table.latest_version() is None:
+                table.init_from_events(batch, txn=txn)
+            else:
+                merge(batch, txn=txn)
+            return
+        except ConcurrentWriteError:
+            if attempt == LAND_RETRIES:
+                raise
+
+
+def land_mor(table, df: DataFrame, batch_id: int, txn: tuple[str, int]) -> None:
     """Land one table's new rows O(batch): bootstrap on first batch,
     merge-on-read after — appended bucket-pure files, zero bucket
     rewrites, and (keys being novel + leading-key blooms) a stored-image
-    scan the sidecars prune to nothing. A commit lost to an EXTERNAL
-    writer (a manual compaction window, another maintenance process)
-    retries: the merge re-resolves from the new base and the txn tag
-    keeps even a retried-after-partial-visibility batch exactly-once —
-    the stream must not die on a losable race
-    (streaming/pipeline.py's rule)."""
-    from cdc_streaming_pipeline_spark.sources.txlog import ConcurrentWriteError
-
-    shaped = cdc_shape(df, batch_id)
-    for attempt in range(conflict_retries + 1):
-        try:
-            if table.latest_version() is None:
-                table.init_from_events(shaped, txn=txn)
-            else:
-                table.merge_cdc_batch_mor(shaped, txn=txn)
-            return
-        except ConcurrentWriteError:
-            if attempt == conflict_retries:
-                raise
+    scan the sidecars prune to nothing. Lost races retry as ``land``
+    says."""
+    land(table, cdc_shape(df, batch_id), txn, table.merge_cdc_batch_mor)
 
 
 def maintain(
