@@ -1399,12 +1399,16 @@ class TxLogTable:
         entry.setdefault("ts", time.time())
         return self._put_if_absent(self._entry_path(version), json.dumps(entry))
 
-    def _publish(self, base: int | None, build, txn=None, still_valid=None) -> int:
+    def _publish(
+        self, base: int | None, build, txn=None, still_valid=None, landed=None
+    ) -> int:
         """The one commit step every write goes through: race for
         version ``base + 1`` (0 on an empty log) with the entry
-        ``build(base)`` returns, tagged with ``txn``; a winning commit
-        at a positive multiple of ``checkpoint_interval`` then writes
-        the checkpoint. Returns the committed version.
+        ``build(base)`` returns (no adds, removes or files unless it
+        says so), tagged with ``txn``; a winning commit calls
+        ``landed(version)`` and then, at a positive multiple of
+        ``checkpoint_interval``, writes the checkpoint. Returns the
+        committed version.
 
         ``build`` runs again on every attempt, so entry fields derived
         from the base (an alter's re-resolved meta, a merge's unioned
@@ -1421,10 +1425,13 @@ class TxLogTable:
           ``COMMIT_RETRIES`` attempts."""
         for _ in range(COMMIT_RETRIES):
             version = (-1 if base is None else base) + 1
-            entry = {"version": version, **build(base)}
+            entry = {"version": version, "adds": [], "removes": [], "n_files": 0}
+            entry.update(build(base))
             if txn is not None:
                 entry["txn"] = [txn[0], txn[1]]
             if self._try_commit(version, entry):
+                if landed is not None:
+                    landed(version)
                 every = self.checkpoint_interval
                 if every and version > 0 and version % every == 0:
                     write_checkpoint(self, version)
@@ -1446,6 +1453,17 @@ class TxLogTable:
                 )
             base = new.version
         raise ConcurrentWriteError(f"{what} gave up after {COMMIT_RETRIES} retries")
+
+    def _monotone(self, entry: dict, schema: dict):
+        """The ``build`` of a write to part of the table: ``entry`` with
+        ``schema`` unioned with the one recorded at each attempt's base.
+        The record stays MONOTONE — no write shrinks it below a column
+        other buckets carry, which the widened-table explicit-schema
+        read (and ``_empty_frame``) relies on."""
+        return lambda b: {
+            **entry,
+            "schema": _schema_union(_resolve_schema_json(self, b), schema),
+        }
 
     def _add_facts(self, adds: list[str], buckets: dict[str, int] | None = None) -> dict:
         """The entry fields describing the files a commit adds; a
@@ -2037,7 +2055,6 @@ class BucketedTxLogTable(TxLogTable):
         entry = {
             "mode": "append",
             **self._add_facts(adds, buckets),
-            "removes": [],
             "schema": state.schema.jsonValue(),
             "table_meta": self._meta_dict(),
             **self._staged_skipping_facts(adds, state.columns),
@@ -2609,14 +2626,7 @@ class BucketedTxLogTable(TxLogTable):
 
         def build(_):
             extra = mutate()
-            return {
-                "mode": "alter",
-                "adds": [],
-                "removes": [],
-                "n_files": 0,
-                "table_meta": self._meta_dict(),
-                **(extra or {}),
-            }
+            return {"mode": "alter", "table_meta": self._meta_dict(), **(extra or {})}
 
         return self._publish(self.latest_version(), build, still_valid=lambda _: True)
 
@@ -2688,15 +2698,19 @@ class BucketedTxLogTable(TxLogTable):
     @contextlib.contextmanager
     def _layout_change(self, n_buckets: int, type_widening: dict):
         """Adopt a new layout on this handle for the staging and the
-        ``table_meta`` of one commit; if anything fails before that
-        commit lands (a lost race included), the handle's fields go
-        back to the layout the log still records."""
+        ``table_meta`` of one commit, published with the ``landed``
+        callback this yields. If anything fails before that commit lands
+        (a lost race included), the handle's fields go back to the
+        layout the log still records; a failure after it lands (the
+        checkpoint write) keeps the new one, which the log now records."""
         old = self.n_buckets, self.type_widening
         self.n_buckets, self.type_widening = n_buckets, type_widening
+        done: list[int] = []
         try:
-            yield
+            yield done.append
         except BaseException:
-            self.n_buckets, self.type_widening = old
+            if not done:
+                self.n_buckets, self.type_widening = old
             raise
 
     def rebucket(self, new_n_buckets: int, rewrite: bool = True) -> int:
@@ -2748,29 +2762,29 @@ class BucketedTxLogTable(TxLogTable):
                     f"every live layout; offending layouts: {sorted(bad)} "
                     "(use rewrite=True for arbitrary counts)"
                 )
-            with self._layout_change(new_n_buckets, self.type_widening):
+            with self._layout_change(new_n_buckets, self.type_widening) as landed:
                 entry = {
                     "mode": "rebucket",
-                    "adds": [],
-                    "removes": [],
-                    "n_files": 0,
                     "file_buckets": {},
                     "table_meta": self._meta_dict(),
                 }
-                return self._publish(base, lambda _: entry)
+                return self._publish(base, lambda _: entry, landed=landed)
         snap = resolve_with_checkpoint(self, base)
         df = self._read_snapshot_files(snap, base)
         from cdc_streaming_pipeline_spark.operators.merge import BUCKET_COL
 
         # _stage_bucketed hashes with the new count
-        with self._layout_change(new_n_buckets, self.type_widening):
-            return self._publish_rewrite(base, df.drop(BUCKET_COL), snap)
+        with self._layout_change(new_n_buckets, self.type_widening) as landed:
+            return self._publish_rewrite(base, df.drop(BUCKET_COL), snap, landed)
 
-    def _publish_rewrite(self, base: int, df: DataFrame, removes: list[str]) -> int:
+    def _publish_rewrite(
+        self, base: int, df: DataFrame, removes: list[str], landed
+    ) -> int:
         """Stage ``df`` bucket-pure under the handle's layout and commit
         it as a ``rebucket`` entry replacing ``removes`` — the whole-table
-        rewrite ``rebucket`` and ``widen_key`` share. One attempt: the
-        read set is the whole table."""
+        rewrite ``rebucket`` and ``widen_key`` share, ``landed`` being
+        their ``_layout_change`` callback. One attempt: the read set is
+        the whole table."""
         adds, buckets = self._stage_bucketed(df, salt_n=1)
         entry = {
             "mode": "rebucket",
@@ -2781,7 +2795,7 @@ class BucketedTxLogTable(TxLogTable):
             "table_meta": self._meta_dict(),
             **self._staged_skipping_facts(adds, df.columns),
         }
-        return self._publish(base, lambda _: entry)
+        return self._publish(base, lambda _: entry, landed=landed)
 
     def widen_key(
         self, name: str, new_type: str, n_buckets: int | None = None
@@ -2838,8 +2852,8 @@ class BucketedTxLogTable(TxLogTable):
         with self._layout_change(
             self.n_buckets if n_buckets is None else n_buckets,
             {**self.type_widening, phys: new_type},  # future batches hash WIDE
-        ):
-            return self._publish_rewrite(base, df, snap)
+        ) as landed:
+            return self._publish_rewrite(base, df, snap, landed)
 
     def migrate_buckets(self, max_files: int | None = None) -> tuple[int | None, int]:
         """Finish a lazy rebucket eagerly, in bounded steps: rewrite up
@@ -2875,21 +2889,26 @@ class BucketedTxLogTable(TxLogTable):
             **self._add_facts(adds, buckets),
             "removes": sorted(stale),
             "buckets": sorted(set(buckets.values())),
-            "schema": df.schema.jsonValue(),
             **self._staged_skipping_facts(adds, df.columns),
         }
-        return self._publish(
-            base, lambda _: entry, still_valid=self._rewrite_rule(pinned, stale, entry)
-        ), len(stale)
+        return self._publish_partial(base, pinned, stale, entry, df), len(stale)
 
-    def _rewrite_rule(self, pinned: Snapshot, files: list[str], entry: dict):
-        """The ``still_valid`` rule of a commit that rewrites ``files``
-        (read at ``pinned``) into the buckets ``entry`` records: the
-        merge's file-granular rule over that read set."""
+    def _publish_partial(
+        self, base: int, pinned: Snapshot, files: list[str], entry: dict, df: DataFrame
+    ) -> int:
+        """Commit ``entry``, a rewrite of ``files`` (read at ``pinned``)
+        into ``df`` staged in the buckets the entry records, under a
+        merge's rules: the recorded schema stays monotone and a lost
+        race retries iff the merge's file-granular rule holds over that
+        read set."""
         ours = set(files)
         dv_read = {f: m for f, m in pinned.dvs.items() if f in ours}
         touched = set(entry["buckets"])
-        return lambda new: self._read_set_intact(new, ours, dv_read, touched)
+        return self._publish(
+            base,
+            self._monotone(entry, df.schema.jsonValue()),
+            still_valid=lambda new: self._read_set_intact(new, ours, dv_read, touched),
+        )
 
     def _read_set_intact(
         self, new: Snapshot, ours: set[str], dv_read: dict, touched: set[int]
@@ -3288,18 +3307,7 @@ class BucketedTxLogTable(TxLogTable):
         dv_read = {f: m for f, m in dvs.items() if f in ours}
         v = self._publish(
             base,
-            # the MERGED schema, unioned with the one recorded at the
-            # base it lands on so the record stays MONOTONE: a merge
-            # touching only drift-less buckets must not shrink the
-            # recorded schema below a column other buckets carry — the
-            # invariant the widened-table explicit-schema read (and
-            # _empty_frame generally) relies on
-            lambda b: {
-                **entry,
-                "schema": _schema_union(
-                    _resolve_schema_json(self, b), new_state.schema.jsonValue()
-                ),
-            },
+            self._monotone(entry, new_state.schema.jsonValue()),
             txn=txn,
             # file-granular revalidation: a disjoint-bucket interleave
             # retries on the new head
@@ -3403,12 +3411,9 @@ class BucketedTxLogTable(TxLogTable):
             # an old-layout input file can carry rows of buckets beyond
             # the targets; record every bucket this commit rewrote
             "buckets": sorted(set(new_buckets.values()) | set(targets)),
-            "schema": df.schema.jsonValue(),
             **self._staged_skipping_facts(adds, df.columns),
         }
-        return self._publish(
-            base, lambda _: entry, still_valid=self._rewrite_rule(pinned, old, entry)
-        ), targets
+        return self._publish_partial(base, pinned, old, entry, df), targets
 
     def _queryable_snapshot(self, version: int | None = None) -> DataFrame:
         """SQL sees the latest-state view: deletion vectors applied,
@@ -3693,7 +3698,7 @@ class BucketedTxLogTable(TxLogTable):
         rows = _dv_stage_executor_side(matched, prior, dv_dir, self.blob)
         if not rows:
             return None, 0, 0
-        entry = {"mode": "delete", "adds": [], "removes": [], "n_files": 0, **_dv_facts(rows)}
+        entry = {"mode": "delete", **_dv_facts(rows)}
         touched = entry["file_dvs"]
         version = self._publish(
             base,
@@ -3835,7 +3840,6 @@ class BucketedTxLogTable(TxLogTable):
         entry = {
             "mode": "update",
             **self._add_facts(adds, buckets),
-            "removes": [],
             **_dv_facts(rows),
             **staged_facts,
         }
@@ -4726,7 +4730,6 @@ def clone_table(src: TxLogTable, dest_path: str, version: int | None = None,
     entry = {
         "mode": "clone",
         "adds": sorted(snap.files),
-        "removes": [],
         "n_files": len(snap.files),
         # every fact map rides along: bloom sidecar refs point into the
         # SOURCE's data_dir exactly like the shared data files (same
@@ -4828,7 +4831,7 @@ def analyze_table(
         facts = table._file_stats(missing, [c for c in cols if c in columns])
     if not facts:
         return None
-    entry = {"mode": "analyze", "adds": [], "removes": [], "n_files": 0, **facts}
+    entry = {"mode": "analyze", **facts}
     return table._publish(base, lambda _: entry, still_valid=lambda _: True)
 
 

@@ -366,3 +366,62 @@ def test_compact_buckets_conflicts_with_a_same_bucket_merge(spark, tmp_path, mon
     assert fresh.latest_version() == 2
     st = {r["id"]: r["amount"] for r in fresh.read_state().collect()}
     assert st[1] == 1.5 and st[k] == 7.0 and len(st) == 41
+
+
+@pytest.mark.parametrize("op", ["compact_buckets", "migrate"])
+def test_rewrite_retry_keeps_a_drifted_column(spark, tmp_path, monkeypatch, op):
+    """A retried partial rewrite records the schema recorded at the base
+    it lands on, unioned with its own: on a widened table (read with the
+    recorded schema given explicitly) a column that an interleaved
+    disjoint-bucket merge brought in stays readable after the rewrite
+    lands on top of it."""
+    w = "id int, qty int, g string, _op string, _lsn string, _deleted string"
+    n = 4 if op == "compact_buckets" else 2
+    t = BucketedTxLogTable(spark, str(tmp_path / "t"), key_cols=["id"], n_buckets=n)
+    t.init_from_events(
+        spark.createDataFrame([(i, i, "abc"[i % 3], "r", "000001", None) for i in range(40)], w)
+    )
+    t.widen_column("qty", "bigint")
+    if op == "compact_buckets":
+        t.merge_cdc_batch_mor(spark.createDataFrame([(1, 10, "z", "u", "000002", None)], w))
+        rewrite = lambda: t.compact_buckets(min_files=2)[0]
+        # the rewritten bucket is key 1's
+        clash = lambda k: _bucket_of(spark, k) == _bucket_of(spark, 1)
+    else:
+        t.rebucket(4, rewrite=False)
+        pinned = snapshot(t)
+        b = pinned.buckets[pinned.files[0]]  # the file migrate_buckets takes
+        rewrite = lambda: t.migrate_buckets(max_files=1)[0]
+        # its rows land in the new buckets b and b + 2
+        clash = lambda k: _bucket_of(spark, k) % 2 == b
+    k = next(k for k in range(100, 200) if not clash(k))
+    drift = spark.createDataFrame(
+        [(k, 7, "r", "c", "000003", None, "new")], w + ", extra string"
+    )
+    racer = BucketedTxLogTable(spark, t.path)
+    fired = _race_once(monkeypatch, lambda: racer.merge_cdc_batch_mor(drift))
+    assert rewrite() == fired[0] + 1
+    fresh = BucketedTxLogTable(spark, t.path)
+    assert "extra" in [f["name"] for f in snapshot(fresh).schema["fields"]]
+    st = {r["id"]: (r["qty"], r["extra"]) for r in fresh.read_state().collect()}
+    assert st[k] == (7, "new") and st[1][1] is None and len(st) == 41
+
+
+def test_layout_change_kept_when_only_the_checkpoint_fails(spark, tmp_path, monkeypatch):
+    """A rebucket whose commit lands but whose checkpoint write then fails
+    leaves the handle on the layout the log now records; one that loses
+    its race goes back to the old one (``test_every_kind_loses_one_race``)."""
+    from cdc_streaming_pipeline_spark.sources import txlog
+
+    t = _bucketed(spark, str(tmp_path / "t"), checkpoint_interval=1)
+
+    def fail(table, version=None):
+        raise OSError("checkpoint store unavailable")
+
+    monkeypatch.setattr(txlog, "write_checkpoint", fail)
+    with pytest.raises(OSError, match="checkpoint store"):
+        t.rebucket(8)
+    fresh = BucketedTxLogTable(spark, t.path)
+    assert fresh.latest_version() == 1
+    assert fresh._read_entry(1)["table_meta"]["n_buckets"] == 8
+    assert t.n_buckets == 8
