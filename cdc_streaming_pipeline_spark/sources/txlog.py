@@ -2896,11 +2896,11 @@ class BucketedTxLogTable(TxLogTable):
     def _publish_partial(
         self, base: int, pinned: Snapshot, files: list[str], entry: dict, df: DataFrame
     ) -> int:
-        """Commit ``entry``, a rewrite of ``files`` (read at ``pinned``)
-        into ``df`` staged in the buckets the entry records, under a
-        merge's rules: the recorded schema stays monotone and a lost
-        race retries iff the merge's file-granular rule holds over that
-        read set."""
+        """Commit ``entry``, which replaces ``files`` (read at
+        ``pinned``) with ``df`` staged into the buckets it records,
+        under a merge's rules: the recorded schema stays monotone, and a
+        lost race retries iff the merge's file-granular rule holds over
+        that read set."""
         ours = set(files)
         dv_read = {f: m for f, m in pinned.dvs.items() if f in ours}
         touched = set(entry["buckets"])
