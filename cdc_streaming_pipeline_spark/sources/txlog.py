@@ -69,7 +69,7 @@ class LayoutMismatchError(ValueError):
     """An explicit constructor argument contradicts the layout the
     table's log records. ``field`` names the mismatched property so
     callers can scope recovery to exactly one kind of mismatch instead
-    of string-matching the message (r16 ADVICE)."""
+    of string-matching the message, which a reworded error would break."""
 
     def __init__(self, message: str, field: str):
         super().__init__(message)
@@ -253,9 +253,9 @@ def _stat_norm(v, side: str):
     """Normalize ONE skipping statistic or probe bound to a JSON-
     primitive, ORDER-PRESERVING encoding — the shared write/read
     contract that makes pruning comparisons typed instead of accidental
-    (r11 verdict defect: ``str(Decimal)`` stats made numeric probes
-    raise TypeError and string probes prune LEXICOGRAPHICALLY WRONG on
-    the schema's canonical money type).
+    (``str(Decimal)`` stats would make numeric probes raise TypeError
+    and string probes prune LEXICOGRAPHICALLY WRONG on the schema's
+    canonical money type).
 
     - int / float / bool / str / None pass through;
     - Decimal → float, rounded OUTWARD by ``side`` ("min" down, "max"
@@ -327,8 +327,8 @@ def _is_num(v) -> bool:
 
 def _coerce_probe(p, stat, col: str, side: str):
     """Coerce a (pre-normalized) probe bound for comparison against one
-    file's recorded statistic, enforcing the type discipline the r11
-    defect lacked: numeric-looking STRING probes against numeric stats
+    file's recorded statistic, enforcing one type discipline:
+    numeric-looking STRING probes against numeric stats
     coerce through the same outward-rounded Decimal path (so
     ``('amount', '20.00', '300.00')`` works on a DECIMAL column instead
     of silently pruning wrong), while a NUMERIC probe against string
@@ -359,8 +359,8 @@ def _range_pruned(st, lo, hi, col: str) -> bool:
     """True iff a file's recorded [min, max] PROVABLY misses [lo, hi].
     ``lo``/``hi`` must already be ``_stat_norm``-alized; ``None`` means
     unbounded on that side. Per-file coercion handles numeric-string
-    probes and refuses mixed-type comparisons (silent lexicographic
-    pruning was the r11 judge-found defect)."""
+    probes and refuses mixed-type comparisons (comparing raw would
+    prune lexicographically, silently wrong)."""
     mn, mx = st[0], st[1]
     if lo is not None and mx is not None:
         if mx < _coerce_probe(lo, mx, col, "min"):
@@ -573,8 +573,8 @@ def _dv_stage_executor_side(
     single file-level metadata row. The driver never materializes a
     position list — its working set is one row per touched file, so a
     compliance-erasure over a wide predicate (millions–billions of
-    positions) scales with executor count instead of melting the
-    driver (the r12 verdict's one `weak` component).
+    positions) scales with executor count instead of exhausting the
+    driver's memory.
 
     Per-task memory is bounded by one file's deleted positions (≤ the
     file's row count — the same bound as reading the file). Returns
@@ -645,8 +645,8 @@ def _dv_stage(
     a metadata-only check), sidecars are composed DRIVER-side: a
     trickle merge's worth of longs plus a handful of tiny sidecar
     reads, skipping the applyInPandas round trip whose fixed
-    Python-worker job cost (~2.5 s at 2M on local[32],
-    .benchmarks/SCALE10_r15.md) dominated the MoR MERGE wall. Anything
+    Python-worker job cost (~2.5 s for a 2M-row table on local[32])
+    dominated the MoR MERGE wall. Anything
     wider — or any caller that does not hold the pairs cached
     (``small_hint=False``, the compliance-erasure delete) — takes the
     executor-side path unchanged, so the driver never materializes an
@@ -1438,10 +1438,9 @@ class TxLogTable:
                 return version
             what = f"{entry['mode']} commit"
             new = snapshot(self) if txn is not None or still_valid else None
-            if txn is not None:
-                done = new.txns.get(txn[0])
-                if done is not None and txn[1] <= done[0]:
-                    return done[1]
+            done = new.applied(txn) if txn is not None else None
+            if done is not None:
+                return done
             if still_valid is None:
                 raise ConcurrentWriteError(
                     f"{what} lost the race for version {version}"
@@ -1556,14 +1555,15 @@ class TxLogTable:
         lands on top of ``base`` first, the derivation is stale ->
         ConcurrentWriteError, never silent lost-update.
         ``txn``: optional (writer_id, epoch) idempotence tag (Delta's
-        txn action): if some version already carries the tag, return it
-        WITHOUT writing — a micro-batch replayed after a streaming
-        restart lands zero duplicate rows.
+        txn action): if the writer's recorded epoch is already at or
+        past ``epoch`` (``Snapshot.applied``), return the recorded
+        version WITHOUT writing — a micro-batch replayed after a
+        streaming restart lands zero duplicate rows.
         """
         if mode not in ("append", "overwrite"):
             raise ValueError(f"mode must be append|overwrite, got {mode!r}")
         if txn is not None:
-            done = self.txn_version(txn)
+            done = snapshot(self).applied(txn)
             if done is not None:
                 return done
         adds = self._stage(df)
@@ -1612,7 +1612,7 @@ class TxLogTable:
         clean files scan plain and union back in. At 100 TB the dirty
         fraction after a selective delete is a handful of files, so the
         read costs what a clean read costs plus an anti-join over the
-        touched slice (measured in .benchmarks/SCALE10_r12.md)."""
+        touched slice."""
         dvs = snapshot(self, version).dvs
         dirty = [f for f in files if f in dvs]
         if not dirty:
@@ -2086,9 +2086,9 @@ class BucketedTxLogTable(TxLogTable):
         gate applied PER (file, column): each column's set is collected
         under ``when(file ∈ candidates-for-THAT-column)``, so a file
         that qualifies via one low-cardinality column never buffers a
-        high-cardinality sibling's set executor-side (r11 verdict
-        'What's wrong #2' — the old cross-product collected every
-        candidate column on every candidate file). Sets exceeding the
+        high-cardinality sibling's set executor-side (a cross-product
+        would collect every candidate column on every candidate
+        file). Sets exceeding the
         cap (sketch error) are dropped exactly; values longer than
         ``DICT_VALUE_CAP`` drop the (file, column) pair to range-only
         pruning."""
@@ -2139,12 +2139,12 @@ class BucketedTxLogTable(TxLogTable):
         # stats — one job instead of two, and the approx-distinct gate
         # is replaced by the exact cap check on the collected set. Big
         # files keep the two-phase plan whose gate bounds executor
-        # aggregation state (the r11 fix).
+        # aggregation state.
         sizes = [os.path.getsize(f) for f in adds]
         fuse_dicts = bool(present) and all(
             s <= SMALL_FACTS_FILE_BYTES for s in sizes
         )
-        # BLOOM FUSE (MoR MERGE wall parity, SCALE10_r15): when the
+        # BLOOM FUSE: when the
         # whole staged batch is tiny (the trickle-postimage shape), the
         # k bloom positions per value ride the SAME aggregate as k
         # bounded collect_sets per column — the separate _bloom_job
@@ -2988,28 +2988,37 @@ class BucketedTxLogTable(TxLogTable):
         """Merge-on-read MERGE (Delta's DV-backed MERGE): apply one CDC
         batch by deletion-vectoring the stored images of the BATCH'S
         KEYS and appending their new winners as bucket-pure files — ONE
-        commit, zero bucket rewrites. Write amplification drops from
-        O(touched-bucket bytes) (``merge_cdc_batch`` rewrites every
-        touched bucket's files) to O(batch keys' rows): at 100 TB a
-        64-bucket-spread trickle batch stops re-writing 1/1 of a
-        64-bucket table per merge and writes kilobytes instead. The
-        scan side is unchanged (the touched buckets' files are still
-        read to find the stored images); the rewrite side is what MoR
-        removes — and the maintenance fold (compaction absorbs vectors
-        + folds small postimage files) keeps sustained MoR ingest
-        bounded, exactly the Delta lifecycle.
+        commit. Write amplification drops from O(touched-bucket bytes)
+        (``merge_cdc_batch`` rewrites every touched bucket's files) to
+        O(batch keys' rows): at 100 TB a 64-bucket-spread trickle batch
+        stops re-writing 1/1 of a 64-bucket table per merge and writes
+        kilobytes instead. The scan side is unchanged (the touched
+        buckets' files are still read to find the stored images); the
+        rewrite side is what MoR removes — and the maintenance fold
+        (compaction absorbs vectors + folds small postimage files)
+        keeps sustained MoR ingest bounded, exactly the Delta
+        lifecycle.
 
-        ``max_dv_fraction`` folds deletion-vector debt INSIDE this
-        commit: before anything is staged, each file of the touched
-        buckets is scored with its prior vector plus the rows this merge
-        would vector (``dv_debt_files``); a touched bucket holding a file
-        over the threshold is rewritten whole — all its DV-applied rows,
-        bloom-skipped files included, merged with the batch and staged
-        the way ``merge_cdc_batch`` stages a bucket — and its files are
-        removed instead of vectored. Clean buckets keep vectors plus
-        appended postimages. The batch still lands as ONE log version,
-        so a streaming sink needs no second fold commit. ``None`` (the
-        default) keeps the pure-MoR commit.
+        ``max_dv_fraction`` turns on the per-bucket copy-on-write vs
+        merge-on-read cost rule (Delta's trade, made per bucket and per
+        batch). A touched bucket is rewritten whole inside this commit —
+        all its DV-applied rows, bloom-skipped files included, merged
+        with the batch and staged the way ``merge_cdc_batch`` stages a
+        bucket, its files removed instead of vectored — when either
+
+        - the logged bytes of the files covering it are at most
+          ``target_file_bytes`` (a file the log has no size for counts
+          as large): decided before the stored-image scan, so a small
+          bucket costs no scan, bloom probe or vector staging, and a
+          batch touching only small buckets scans nothing; or
+        - once this merge's vectors land, it holds a file over the
+          DV-debt threshold (``dv_debt_files``, each file scored with
+          its prior vector plus the rows this merge would vector).
+
+        Other touched buckets keep vectors plus appended postimages. The
+        batch still lands as ONE log version, so a streaming sink needs
+        no second fold commit. ``None`` (the default) keeps the
+        pure-MoR commit whatever the bucket sizes.
 
         Semantics are IDENTICAL to ``merge_cdc_batch`` (the same kernel
         under another fold rule): per key the greatest ``order_col``
@@ -3038,12 +3047,19 @@ class BucketedTxLogTable(TxLogTable):
         """The one CDC merge behind ``merge_cdc_batch`` and
         ``merge_cdc_batch_mor``. ``fold_rule`` picks the touched buckets
         rewritten whole (files removed, DV-applied rows restaged):
-        ``"all"`` folds every one (copy-on-write, mode ``"merge"``); a
-        fraction folds those with a file over that DV-debt threshold
-        once this merge's vectors land; ``None`` folds none. A bucket
-        not folded keeps its files: the stored images of the batch's
-        keys are deletion-vectored and their winners appended (mode
-        ``"merge_mor"``)."""
+
+        - ``"all"`` folds every one (copy-on-write, mode ``"merge"``);
+        - a fraction is the per-bucket copy-on-write vs merge-on-read
+          cost rule of ``merge_cdc_batch_mor``: a bucket whose files'
+          logged bytes fit in ``target_file_bytes`` is folded (decided
+          from the pinned snapshot, before the stored-image scan), and
+          so is one holding a file over that DV-debt threshold once
+          this merge's vectors land (decided after the scan);
+        - ``None`` folds none (pure merge-on-read).
+
+        A bucket not folded keeps its files: the stored images of the
+        batch's keys are deletion-vectored and their winners appended
+        (mode ``"merge_mor"``)."""
         from cdc_streaming_pipeline_spark.operators.cdc import latest_state
         from cdc_streaming_pipeline_spark.operators.merge import (
             BUCKET_COL,
@@ -3063,10 +3079,9 @@ class BucketedTxLogTable(TxLogTable):
         batch = self._to_physical(batch)
         pinned = snapshot(self, base)
         snap, bmap = pinned.files, pinned.buckets
-        if txn is not None:
-            done = pinned.txns.get(txn[0])
-            if done is not None and txn[1] <= done[0]:
-                return done[1], []  # replayed micro-batch: already applied
+        done = pinned.applied(txn)
+        if done is not None:
+            return done, []  # replayed micro-batch: already applied
         probe_keys, trickle = None, False
         if not fold_all:
             # the key probe feeds the stored-image scan's bloom pruning.
@@ -3115,27 +3130,28 @@ class BucketedTxLogTable(TxLogTable):
                 f"{len(untagged)} snapshot files carry no bucket tag — not a "
                 "bucket-pure table (mixed with plain commits?)"
             )
-        # COVERING-rule selection: a file tagged ``b`` under write-time
-        # layout ``n`` holds exactly the keys whose CURRENT bucket t
-        # satisfies t % n == b (sound because lazy rebucket only moves
-        # to multiples of every live layout). Uniform-layout tables
-        # reduce to the plain ``bmap[f] in touched`` test; mid-migration
-        # files written under an old divisor layout are still selected
-        # exactly, and a fold rewrites them under the current layout.
-        layouts = pinned.layouts
-        bucket_files = [
-            f
-            for f in snap
-            if any(
-                _bucket_overlap(
-                    t, self.n_buckets, bmap[f], layouts.get(f, self.n_buckets)
-                )
-                for t in touched
+        bucket_files = self._covering_files(pinned, snap, touched, lambda fs: True)
+        # the copy-on-write half of the fold rule, decided before any
+        # scan: a bucket whose files fit in one target file costs less
+        # to rewrite than to scan, vector and anti-join on every later
+        # read
+        if fold_all:
+            fold = bucket_files
+        elif fold_rule is None:
+            fold = []
+        else:
+            sizes = pinned.bytes
+            fold = self._covering_files(
+                pinned,
+                bucket_files,
+                touched,
+                lambda fs: sum(sizes.get(f, math.inf) for f in fs)
+                <= self.target_file_bytes,
             )
-        ]
-        # the stored-image scan: a fold-all merge rewrites every file it
-        # would scan, so it scans none
-        old = [] if fold_all else bucket_files
+        # the stored-image scan covers the files no fold rewrites
+        cow = set(fold)
+        kept = [f for f in bucket_files if f not in cow]
+        old = kept
         # Bloom-assisted scan pruning: bucket overlap bounds the files
         # that COULD hold the batch's keys; when the leading key column
         # carries bloom sidecars and the key set is small (the CDC
@@ -3191,12 +3207,9 @@ class BucketedTxLogTable(TxLogTable):
             oldk = None
         try:
             pairs = None
-            if fold_all:
-                fold = bucket_files
-            elif fold_rule is None:
-                fold = []
-            else:
-                # this merge's vectored rows per file, before staging
+            if kept and fold_rule is not None:
+                # the debt half: this merge's vectored rows per file,
+                # before staging
                 if oldk is None:
                     new_n = {}
                 elif trickle:
@@ -3214,10 +3227,13 @@ class BucketedTxLogTable(TxLogTable):
                         .collect()  # one row per scanned file
                     }
                 deleted = {
-                    f: dvs.get(f, {}).get("n", 0) + new_n.get(f, 0)
-                    for f in bucket_files
+                    f: dvs.get(f, {}).get("n", 0) + new_n.get(f, 0) for f in kept
                 }
-                fold = self._mor_fold_files(deleted, pinned, touched, fold_rule)
+                dirty = dv_debt_files(deleted, pinned.nulls, fold_rule)
+                if dirty:
+                    fold = fold + self._covering_files(
+                        pinned, kept, touched, lambda fs: not dirty.isdisjoint(fs)
+                    )
             fold_set = set(fold)
             parts = []
             if oldk is not None:
@@ -3228,23 +3244,16 @@ class BucketedTxLogTable(TxLogTable):
             # a folded bucket's every DV-applied row is rewritten. Files
             # the stored-image scan read reuse its merged schema and
             # vector relation (no second footer-merge job or sidecar
-            # load); files the scan did not read are read on their own —
-            # a fold-all merge through the shared snapshot read (only
-            # vectored files pay the anti-join), the MoR fold's
-            # bloom-skipped remainder as one read
+            # load); files the scan did not read (the copy-on-write
+            # buckets' and the bloom-skipped ones) go through the shared
+            # snapshot read, where only vectored files pay the anti-join
             scanned = [f for f in fold if f in old_set]
             if scanned:
                 fr = visible_keyed(self.spark.read.schema(raw.schema).parquet(*scanned))
                 parts.append(fr.drop("_dv_fp", "_dv_ri"))
             skipped = [f for f in fold if f not in old_set]
             if skipped:
-                parts.append(
-                    self._read_snapshot_files(skipped, base)
-                    if fold_all
-                    else _apply_dvs(
-                        self.spark, self._raw_read(skipped, base), skipped, dvs, self.blob
-                    )
-                )
+                parts.append(self._read_snapshot_files(skipped, base))
             merged = batch
             for p in parts:
                 merged = p.unionByName(merged, allowMissingColumns=True)
@@ -3315,29 +3324,32 @@ class BucketedTxLogTable(TxLogTable):
         )
         return v, sorted(touched)
 
-    def _mor_fold_files(
-        self,
-        deleted: dict[str, int],
-        snap: Snapshot,
-        touched: set[int],
-        max_dv_fraction: float,
+    def _covering_files(
+        self, snap: Snapshot, files: list[str], touched: set[int], select
     ) -> list[str]:
-        """The files a MoR merge folds in its own commit: ``deleted``
-        maps every file of the touched buckets to its vectored rows once
-        this merge's vectors land; each touched bucket holding a file
-        over the DV-debt threshold is folded whole, so every file
-        covering it is returned."""
-        dirty = dv_debt_files(deleted, snap.nulls, max_dv_fraction)
-        if not dirty:
-            return []
+        """COVERING-rule selection: the files of ``files`` that cover a
+        touched bucket ``select`` picks, in ``files`` order.
+        ``select(fs)`` sees the files of ``files`` covering one bucket.
 
-        def covers(f: str, t: int) -> bool:
-            return _bucket_overlap(
-                t, self.n_buckets, snap.buckets[f], snap.layouts.get(f, self.n_buckets)
-            )
-
-        folded = {t for t in touched if any(covers(f, t) for f in dirty)}
-        return [f for f in deleted if any(covers(f, t) for t in folded)]
+        A file tagged ``b`` under write-time layout ``n`` holds exactly
+        the keys whose CURRENT bucket t satisfies t % n == b (sound
+        because lazy rebucket only moves to multiples of every live
+        layout). Uniform-layout tables reduce to the plain tag test;
+        mid-migration files written under an old divisor layout are
+        still selected exactly, and a fold rewrites them under the
+        current layout."""
+        picked: set[str] = set()
+        for t in touched:
+            fs = [
+                f
+                for f in files
+                if _bucket_overlap(
+                    t, self.n_buckets, snap.buckets[f], snap.layouts.get(f, self.n_buckets)
+                )
+            ]
+            if fs and select(fs):
+                picked.update(fs)
+        return [f for f in files if f in picked]
 
     def compact_buckets(
         self,
@@ -3460,8 +3472,8 @@ class BucketedTxLogTable(TxLogTable):
         normalized through the same encoding the writer used for the
         stats, numeric-looking string bounds coerce against numeric
         stats, and genuinely incomparable pairs raise TypeError instead
-        of comparing raw (the r11 judge defect: lexicographic pruning on
-        a DECIMAL column)."""
+        of comparing raw (which would prune a DECIMAL column
+        lexicographically)."""
         return self.read_state_pruned([(col, "between", lo, hi)], version)
 
     def read_state_where_in(
@@ -4260,8 +4272,8 @@ def mv_delta(
     if not parts:
         # an entry with neither adds nor removes still contributes a
         # TYPED empty delta: group-column types come from the table's
-        # recorded schema (r10 ADVICE — hardcoding string here made
-        # fold_mv's unionByName mismatch on numeric group columns)
+        # recorded schema (a hardcoded string type would make fold_mv's
+        # unionByName mismatch on numeric group columns)
         from pyspark.sql.types import (
             DecimalType,
             LongType,
@@ -4434,6 +4446,16 @@ class Snapshot:
     schema: dict | None = None
     table_meta: dict | None = None
     checkpoint_version: int | None = None
+
+    def applied(self, txn: tuple[str, int] | None) -> int | None:
+        """The version ``txn``'s writer recorded, when ``txn`` is already
+        applied at this snapshot, else None: the one idempotence rule of
+        every txn-tagged write. Epochs are monotonic per writer
+        (Structured Streaming's batchId contract), so an epoch at or
+        below the writer's latest recorded one landed before, even when
+        its own entry is gone or was never tagged with it."""
+        done = self.txns.get(txn[0]) if txn is not None else None
+        return done[1] if done is not None and txn[1] <= done[0] else None
 
     def live(self) -> "Snapshot":
         """This snapshot with every fact map restricted to live files —
@@ -4860,7 +4882,7 @@ def vacuum(
         return []
     horizon = max(latest - retain_versions + 1, 0)
     # Union of the retained snapshots WITHOUT a per-version from-zero
-    # replay (r10 verdict: vacuum was O(retain × table-age)): every file
+    # replay (which would cost O(retain × table-age)): every file
     # live anywhere in [horizon, latest] is either live AT the horizon
     # or added after it, so ONE checkpoint-bounded resolution at the
     # horizon plus the adds of the retained suffix is the exact set —

@@ -522,11 +522,15 @@ def bucketed_merge_stream_sink(
     ``merge_mode`` picks the kernel's fold rule. ``"rewrite"`` (the
     default, ``merge_cdc_batch``) folds every touched bucket:
     copy-on-write, no vectors. ``"mor"`` (``merge_cdc_batch_mor``)
-    folds only the touched buckets its own vectors push over
-    ``max_dv_fraction`` and deletion-vectors the stored images of the
-    batch's keys elsewhere, appending their winners — O(batch) bytes
-    written instead of O(touched buckets). Either way each batch lands
-    as ONE log version. After the merge, a metadata-only fallback folds
+    applies the per-bucket cost rule: a touched bucket whose files fit
+    in ``target_file_bytes``, or that its own vectors push over
+    ``max_dv_fraction``, is rewritten in the merge commit; the stored
+    images of the batch's keys in every other touched bucket are
+    deletion-vectored and their winners appended — O(batch) bytes
+    written instead of O(touched buckets). While every bucket stays
+    under ``target_file_bytes`` the table carries no vectors at all.
+    ``max_dv_fraction=None`` keeps pure merge-on-read. Either way each
+    batch lands as ONE log version. After the merge, a metadata-only fallback folds
     the debt the merge left — vectors from interleaved
     ``delete_where``/``update_where`` calls in buckets the batch did
     not touch — in a separate untagged commit; it normally finds

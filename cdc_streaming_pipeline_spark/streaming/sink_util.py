@@ -41,8 +41,8 @@ def open_table(spark: SparkSession, path: str, key_cols: list[str], **kw):
     try:
         return BucketedTxLogTable(spark, path, key_cols=key_cols, **kw)
     except LayoutMismatchError as exc:
-        # r15/r16 ADVICE: retry ONLY the recorded-n_buckets mismatch (the
-        # sink opened an existing table with a different default) — any
+        # retry ONLY the recorded-n_buckets mismatch (the sink opened an
+        # existing table with a different default) — any
         # other constructor error (key/order mismatch, missing layout) is
         # real misconfiguration and must propagate, not get silently
         # retried under the table's recorded layout. Typed exception, not

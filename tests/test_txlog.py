@@ -109,6 +109,20 @@ def test_txn_tag_makes_commits_idempotent(spark, tmp_path):
     assert t.txn_version(("writer", 99)) is None
 
 
+def test_append_replayed_with_an_older_absent_epoch_lands_nothing(spark, tmp_path):
+    """Every txn-tagged write shares one idempotence rule: an epoch at or
+    below the writer's recorded one is already applied (epochs are
+    monotonic per writer), even when no entry carries that exact epoch.
+    An append replayed with such an epoch writes nothing and returns
+    the recorded version, exactly as a merge does."""
+    t = TxLogTable(spark, str(tmp_path / "t"))
+    t.commit(_df(spark, 0, 2), txn=("w", 3))
+    v = t.commit(_df(spark, 2, 4), txn=("w", 5))
+    assert t.commit(_df(spark, 2, 4), txn=("w", 4)) == v  # epoch 4 never landed alone
+    assert t.latest_version() == v
+    assert _vals(t.read()) == list(range(4))
+
+
 def test_streaming_sink_exactly_once_through_restart(spark, tmp_path):
     """File-source stream -> txlog sink; a second run with the same
     checkpoint must land only new input, and a manually replayed batch

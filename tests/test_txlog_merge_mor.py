@@ -561,3 +561,194 @@ def test_mor_stream_sink_bounded(spark, tmp_path):
     assert len(live_dvs) <= 3, live_dvs
     # MoR commits landed (mode recorded) — the stream actually used it
     assert any(e.get("mode") == "merge_mor" for e in t.history())
+
+
+# ---- the per-bucket copy-on-write vs merge-on-read cost rule ------------
+
+
+def _bucket_of(spark, keys, n_buckets):
+    """{key: bucket} under the table layout, in one job."""
+    from cdc_streaming_pipeline_spark.operators.merge import BUCKET_COL, with_key_bucket
+
+    df = _ev(spark, [(k, 0.0, "a", "u", "0", None) for k in keys])
+    rows = with_key_bucket(df, ["id"], n_buckets).select("id", BUCKET_COL).collect()
+    return {r["id"]: r[BUCKET_COL] for r in rows}
+
+
+def _state(t):
+    return {(r["id"], r["amount"], r["g"]) for r in t.read_state().collect()}
+
+
+def test_small_touched_buckets_are_rewritten_in_commit(spark, tmp_path):
+    """Under a fractional fold rule a touched bucket whose files fit in
+    ``target_file_bytes`` is rewritten whole inside the merge commit:
+    no vectors, no sidecar directory, every file of the touched buckets
+    removed, the untouched buckets' files live under the same paths."""
+    from tests.txlog_replay import fold_log
+
+    t = _seed(spark, str(tmp_path / "t"))
+    before = fold_log(t)
+    wave = [
+        (5, 5000.0, "z", "u", "900000", None),
+        (7, None, None, "d", "900000", "true"),
+        (500, 1.0, "n", "c", "900000", None),
+        (11, 1.0, "x", "u", "000001", None),  # stale: loses
+    ]
+    v, touched = t.merge_cdc_batch_mor(_ev(spark, wave), max_dv_fraction=0.3)
+    assert len(touched) < t.n_buckets  # some bucket stays untouched
+    e = t._read_entry(v)
+    assert e["mode"] == "merge_mor"
+    assert not e["file_dvs"] and not e["dv_added"]
+    assert not os.path.exists(os.path.join(t.data_dir, "_dv"))
+    assert sorted(e["removes"]) == sorted(
+        f for f in before["files"] if before["buckets"][f] in touched
+    )
+    live = set(resolve_with_checkpoint(t))
+    assert {f for f in before["files"] if before["buckets"][f] not in touched} <= live
+    assert not resolve_file_dvs(t)
+    st = {r["id"]: r["amount"] for r in t.read_state().collect()}
+    assert st[5] == 5000.0 and 7 not in st and st[500] == 1.0 and st[11] == 11.0
+    assert len(st) == 120
+
+
+def test_large_touched_buckets_keep_vectors_and_the_debt_fold(spark, tmp_path):
+    """With ``target_file_bytes`` below every bucket's size the same
+    kind of wave is vectored as before, and the DV-debt half of the
+    rule still folds the buckets this merge pushes over the threshold
+    inside the same commit."""
+    fused = _seed(spark, str(tmp_path / "t"), n=40, target_file_bytes=1)
+    warm = [(k, 50.0 + k, "p", "u", "800000", None) for k in (1, 2, 3)]
+    v, _ = fused.merge_cdc_batch_mor(_ev(spark, warm), max_dv_fraction=0.3)
+    e = fused._read_entry(v)
+    assert e["removes"] == [] and e["file_dvs"]  # 1 row in 10: under the debt
+
+    b = _bucket_of(spark, range(40), 4)
+    hot = {b[1], b[2]}
+    cold = next(k for k in range(4, 40) if b[k] not in hot | {b[3]})
+    wave = [
+        (1, 111.0, "z", "u", "900000", None),    # update of a postimage
+        (2, None, None, "d", "900000", "true"),  # delete of a postimage
+        (cold, 7.0, "y", "u", "900000", None),   # update of an init image
+    ]
+    v, touched = fused.merge_cdc_batch_mor(_ev(spark, wave), max_dv_fraction=0.3)
+    e = fused._read_entry(v)
+    removed = {fused._bucket_map(v - 1)[f] for f in e["removes"]}
+    assert removed == hot  # the debt fold, in-commit
+    assert {b[cold]} == {fused._bucket_map(v - 1)[f] for f in e["dv_added"]}
+    st = {r["id"]: r["amount"] for r in fused.read_state().collect()}
+    assert st[1] == 111.0 and 2 not in st and st[3] == 53.0 and st[cold] == 7.0
+    assert len(st) == 39
+
+
+def test_pure_mor_never_folds_small_buckets(spark, tmp_path):
+    """``max_dv_fraction=None`` stays pure merge-on-read whatever the
+    bucket sizes: nothing is removed, the stored images are vectored."""
+    t = _seed(spark, str(tmp_path / "t"))
+    files_before = set(resolve_with_checkpoint(t))
+    v, _ = t.merge_cdc_batch_mor(
+        _ev(spark, [(5, 5000.0, "z", "u", "900000", None), (9, 1.0, "q", "u", "900000", None)])
+    )
+    e = t._read_entry(v)
+    assert e["removes"] == [] and e["file_dvs"] and e["dv_added"]
+    assert files_before <= set(resolve_with_checkpoint(t))
+
+
+def test_cost_rule_on_mixed_table_equals_python_fold(spark, tmp_path):
+    """A table with two large buckets (incompressible padding) and two
+    small ones under a target between them: random waves fold the small
+    touched buckets and vector the large ones, and the state equals a
+    pure-Python fold of seed + waves at every step."""
+    b = _bucket_of(spark, range(80), 4)
+    large = {b[0], next(b[k] for k in range(80) if b[k] != b[0])}
+    prng = random.Random(11)
+
+    def g_of(k):
+        if b[k] in large:
+            return "".join(prng.choice("0123456789abcdef") for _ in range(1500))
+        return ["a", "b", "c"][k % 3]
+
+    ref = {k: (f"{k:06d}", (k, float(k), g_of(k))) for k in range(60)}
+    t = BucketedTxLogTable(
+        spark, str(tmp_path / "t"), key_cols=["id"], n_buckets=4,
+        stats_cols=["amount"], target_file_bytes=8 << 10,
+    )
+    t.init_from_events(
+        _ev(spark, [(k, amt, g, "r", lsn, None) for k, (lsn, (_, amt, g)) in ref.items()])
+    )
+    sizes = {}
+    for f, bk in t._bucket_map().items():
+        sizes[bk] = sizes.get(bk, 0) + os.path.getsize(f)
+    assert all((sizes[bk] > t.target_file_bytes) == (bk in large) for bk in sizes), sizes
+
+    rng = random.Random(5)
+    kinds = set()
+    for step in range(1, 9):
+        wave = []
+        for i in range(rng.randint(2, 8)):
+            k = rng.randrange(80)
+            op = rng.choice(["u", "u", "c", "d"])
+            stale = rng.random() < 0.2
+            lsn = f"0000{step:02d}{i:02d}" if stale else f"9{step:03d}{i:02d}0"
+            amt, g = (None, None) if op == "d" else (float(step * 100 + i), "w")
+            wave.append((k, amt, g, op, lsn, "true" if op == "d" else None))
+            if k not in ref or lsn > ref[k][0]:
+                ref[k] = (lsn, None if op == "d" else (k, amt, g))
+        v, _ = t.merge_cdc_batch_mor(_ev(spark, wave), max_dv_fraction=0.3)
+        e = t._read_entry(v)
+        kinds.update(k for k in ("removes", "dv_added") if e[k])
+        want = {img for _, img in ref.values() if img is not None}
+        assert _state(t) == want, f"state diverges from the Python fold at step {step}"
+    assert kinds == {"removes", "dv_added"}  # both halves of the rule ran
+
+
+def test_mor_stream_sink_small_buckets_land_without_vectors(spark, tmp_path):
+    """The MoR sink on buckets that stay under ``target_file_bytes``:
+    each micro-batch lands as exactly ONE log version and no entry
+    carries a deletion vector, because every touched bucket is
+    rewritten in the merge commit."""
+    from cdc_streaming_pipeline_spark.streaming.pipeline import (
+        bucketed_merge_stream_sink,
+    )
+
+    src = tmp_path / "src"
+    src.mkdir()
+    table_path = str(tmp_path / "table")
+    expect = {i: float(i) for i in range(64)}
+    _put_json(src / "w000.json", [(i, float(i), "a", "r", "0001", None) for i in range(64)])
+    n_batches = 4
+    for w in range(1, n_batches):
+        # fresh keys, ~16 rows a bucket: each file's debt stays under
+        # the threshold, so only the size rule keeps vectors away
+        keys = [3 * w + j for j in range(3)]
+        for k in keys:
+            expect[k] = 100.0 * w + k
+        _put_json(
+            src / f"w{w:03d}.json",
+            [(k, 100.0 * w + k, "a", "u", f"{w + 1:04d}", None) for k in keys],
+        )
+    # the file source orders by modification time: make it the wave order
+    for w in range(n_batches):
+        os.utime(src / f"w{w:03d}.json", (1_000_000 + w, 1_000_000 + w))
+    q = (
+        bucketed_merge_stream_sink(
+            spark.readStream.schema(S).option("maxFilesPerTrigger", "1").json(str(src)),
+            table_path,
+            str(tmp_path / "ckpt"),
+            key_cols=["id"],
+            n_buckets=4,
+            stats_cols=["amount"],  # row counts: the debt rule scores fractions
+            merge_mode="mor",
+        )
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination(600)
+
+    t = BucketedTxLogTable(spark, table_path)
+    assert {r["id"]: r["amount"] for r in t.read_state().collect()} == expect
+    hist = t.history()
+    assert len(hist) == n_batches, [e["mode"] for e in hist]
+    assert [e["txn"][1] for e in hist] == list(range(n_batches))
+    assert all(e["mode"] == "merge_mor" and e["removes"] for e in hist[1:])
+    assert not any(e.get("file_dvs") or e.get("dv_added") for e in hist)
+    assert not resolve_file_dvs(t)
