@@ -3347,7 +3347,7 @@ class BucketedTxLogTable(TxLogTable):
                     t, self.n_buckets, snap.buckets[f], snap.layouts.get(f, self.n_buckets)
                 )
             ]
-            if fs and select(fs):
+            if select(fs):
                 picked.update(fs)
         return [f for f in files if f in picked]
 

@@ -16,7 +16,10 @@ ingest bounded. With ``max_dv_fraction`` the DV-debt fold rides the
 merge commit: state still equals the rewrite merge's, the change feed
 equals that of the merge + separate-fold pair, a concurrent delete on
 any file of a folded bucket conflicts, and the sink lands one log
-version per batch."""
+version per batch. The per-bucket cost rule behind ``max_dv_fraction``
+rewrites a touched bucket under ``target_file_bytes`` in the merge
+commit without scanning it, keeps larger buckets vectored with the debt
+fold, and keeps a mixed small/large table equal to a Python fold."""
 
 from __future__ import annotations
 
@@ -638,19 +641,6 @@ def test_large_touched_buckets_keep_vectors_and_the_debt_fold(spark, tmp_path):
     st = {r["id"]: r["amount"] for r in fused.read_state().collect()}
     assert st[1] == 111.0 and 2 not in st and st[3] == 53.0 and st[cold] == 7.0
     assert len(st) == 39
-
-
-def test_pure_mor_never_folds_small_buckets(spark, tmp_path):
-    """``max_dv_fraction=None`` stays pure merge-on-read whatever the
-    bucket sizes: nothing is removed, the stored images are vectored."""
-    t = _seed(spark, str(tmp_path / "t"))
-    files_before = set(resolve_with_checkpoint(t))
-    v, _ = t.merge_cdc_batch_mor(
-        _ev(spark, [(5, 5000.0, "z", "u", "900000", None), (9, 1.0, "q", "u", "900000", None)])
-    )
-    e = t._read_entry(v)
-    assert e["removes"] == [] and e["file_dvs"] and e["dv_added"]
-    assert files_before <= set(resolve_with_checkpoint(t))
 
 
 def test_cost_rule_on_mixed_table_equals_python_fold(spark, tmp_path):
