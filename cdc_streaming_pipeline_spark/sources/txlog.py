@@ -573,8 +573,8 @@ def _dv_stage_executor_side(
     single file-level metadata row. The driver never materializes a
     position list — its working set is one row per touched file, so a
     compliance-erasure over a wide predicate (millions–billions of
-    positions) scales with executor count instead of exhausting the
-    driver's memory.
+    positions) scales with executor count instead of funnelling every
+    position through one process.
 
     Per-task memory is bounded by one file's deleted positions (≤ the
     file's row count — the same bound as reading the file). Returns

@@ -1,5 +1,5 @@
 #!/usr/bin/env python
-"""Interleaved A/B driver for the repo benchmark (``perfbench/run.py``).
+"""Interleaved A/B runner for the repo benchmark (``perfbench/run.py``).
 
 Usage:
     python tools/ab_reps.py PARENT_DIR CHANGE_DIR [--pairs N]
