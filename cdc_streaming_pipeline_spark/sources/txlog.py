@@ -1476,7 +1476,10 @@ class TxLogTable:
 
     def txn_version(self, txn: tuple[str, int]) -> int | None:
         """The version a (writer_id, epoch) transaction committed as, or
-        None — the idempotence lookup for exactly-once streaming sinks.
+        None — a history lookup. Whether a tagged write is already
+        applied is ``Snapshot.applied``'s question, not this one: an
+        epoch below the writer's recorded one is applied even when no
+        entry carries it exactly (a replay of an older, absent epoch).
 
         Resolves through the checkpointed per-writer txn state
         (O(commits-since-checkpoint)), which records each writer's
@@ -3010,7 +3013,10 @@ class BucketedTxLogTable(TxLogTable):
           ``target_file_bytes`` (a file the log has no size for counts
           as large): decided before the stored-image scan, so a small
           bucket costs no scan, bloom probe or vector staging, and a
-          batch touching only small buckets scans nothing; or
+          batch touching only small buckets scans nothing. The
+          threshold is the output-file target, not a fitted crossover:
+          ``tools/cow_mor_crossover.py`` measures where a rewrite stops
+          costing less than vectors on a given host; or
         - once this merge's vectors land, it holds a file over the
           DV-debt threshold (``dv_debt_files``, each file scored with
           its prior vector plus the rows this merge would vector).
@@ -3132,9 +3138,13 @@ class BucketedTxLogTable(TxLogTable):
             )
         bucket_files = self._covering_files(pinned, snap, touched, lambda fs: True)
         # the copy-on-write half of the fold rule, decided before any
-        # scan: a bucket whose files fit in one target file costs less
-        # to rewrite than to scan, vector and anti-join on every later
-        # read
+        # scan. tools/cow_mor_crossover.py measures both merges by
+        # bucket size: on 4 vCPUs and local disk a rewrite used less
+        # CPU than the scan plus vectors up to ~15 MiB a bucket and
+        # less wall up to ~7 MiB, and left later reads no anti-join;
+        # it writes the bucket's bytes where vectors write kilobytes,
+        # so on storage that charges for bytes written the crossover
+        # sits lower
         if fold_all:
             fold = bucket_files
         elif fold_rule is None:
@@ -3151,7 +3161,6 @@ class BucketedTxLogTable(TxLogTable):
         # the stored-image scan covers the files no fold rewrites
         cow = set(fold)
         kept = [f for f in bucket_files if f not in cow]
-        old = kept
         # Bloom-assisted scan pruning: bucket overlap bounds the files
         # that COULD hold the batch's keys; when the leading key column
         # carries bloom sidecars and the key set is small (the CDC
@@ -3160,8 +3169,10 @@ class BucketedTxLogTable(TxLogTable):
         # them. Sound because a skipped file contributes no stored
         # image to DV and no rows to the winners; a sustained-MoR
         # bucket with many postimage files then costs a point merge
-        # one file, not the bucket.
-        if old and self.bloom_cols and probe_keys is not None:
+        # one file, not the bucket. ``old`` is the scanned set; the
+        # debt half below still scores and folds over all of ``kept``.
+        old = kept
+        if kept and self.bloom_cols and probe_keys is not None:
             cmap = self.column_mapping or {}
             key0 = self.key_cols[0]
             if key0 in {cmap.get(c, c) for c in self.bloom_cols}:
@@ -3171,7 +3182,7 @@ class BucketedTxLogTable(TxLogTable):
                 blooms = pinned.blooms
                 old = [
                     f
-                    for f in old
+                    for f in kept
                     if not (
                         (bf := blooms.get(f, {}).get(key0))
                         and _bloom_pruned(bf, vals, self.blob)

@@ -530,8 +530,8 @@ def bucketed_merge_stream_sink(
     written instead of O(touched buckets). While every bucket stays
     under ``target_file_bytes`` the table carries no vectors at all.
     ``max_dv_fraction=None`` keeps pure merge-on-read. Either way each
-    batch lands as ONE log version. After the merge, a metadata-only fallback folds
-    the debt the merge left — vectors from interleaved
+    batch lands as ONE log version. After the merge, a metadata-only
+    fallback folds the debt the merge left — vectors from interleaved
     ``delete_where``/``update_where`` calls in buckets the batch did
     not touch — in a separate untagged commit; it normally finds
     nothing. The compaction policy and the DV-debt threshold are what

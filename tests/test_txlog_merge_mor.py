@@ -340,16 +340,17 @@ def test_mor_conflicts_with_concurrent_delete(spark, tmp_path):
     assert 5 not in st and len(st) == 39
 
 
-def _fold_race_table(spark, path):
+def _fold_race_table(spark, path, **kw):
     """A 2-bucket bloom table where key 5's postimage sits in a file of
     its own: a merge of ``other`` (same bucket) bloom-skips that file,
     and its fused fold (threshold 0.0) must still remove it. Returns
-    (table, key 5's postimage files, other, a key of the other bucket)."""
+    (table, key 5's postimage files, other, a key of the other bucket).
+    ``kw`` goes to the table handle."""
     from cdc_streaming_pipeline_spark.operators.merge import touched_buckets
 
     t = BucketedTxLogTable(
         spark, path, key_cols=["id"], n_buckets=2,
-        stats_cols=["amount"], bloom_cols=["id"],
+        stats_cols=["amount"], bloom_cols=["id"], **kw,
     )
     t.init_from_events(
         spark.createDataFrame(
@@ -742,3 +743,114 @@ def test_mor_stream_sink_small_buckets_land_without_vectors(spark, tmp_path):
     assert all(e["mode"] == "merge_mor" and e["removes"] for e in hist[1:])
     assert not any(e.get("file_dvs") or e.get("dv_added") for e in hist)
     assert not resolve_file_dvs(t)
+
+
+# The fused debt fold on buckets over ``target_file_bytes``. The debt-fold
+# tests above build tables far under the default target, so the cost rule
+# rewrites their touched buckets before any scan; these repeat their
+# scenarios with ``target_file_bytes=1``, where every bucket is scanned
+# with the bloom probe, vectored and scored for debt.
+
+
+def test_large_bucket_debt_fold_of_a_bloom_skipped_file_conflicts(spark, tmp_path):
+    """A concurrent delete on a file the bloom probe skipped but the
+    debt fold removes must conflict: the fold reads that file's rows,
+    so landing it would rewrite the deleted row back to life."""
+    t, post5, other, _ = _fold_race_table(
+        spark, str(tmp_path / "t"), target_file_bytes=1
+    )
+    assert t._read_entry(t.latest_version())["file_dvs"]  # key 5 was vectored
+    racer = BucketedTxLogTable(spark, t.path)
+    orig = t._try_commit
+    seen: list[dict] = []
+
+    def race(version, entry):
+        if not seen:
+            seen.append(entry)
+            racer.delete_where(F.col("id") == 5)  # vectors only post5
+        return orig(version, entry)
+
+    t._try_commit = race
+    with pytest.raises(ConcurrentWriteError):
+        t.merge_cdc_batch_mor(
+            _ev(spark, [(other, 1.0, "a", "u", "990000", None)]), max_dv_fraction=0.0
+        )
+    assert set(post5) <= set(seen[0]["removes"])
+    st = {r["id"] for r in BucketedTxLogTable(spark, t.path).read_state().collect()}
+    assert 5 not in st and len(st) == 39
+
+
+def test_large_bucket_debt_fold_retries_past_disjoint_commit(spark, tmp_path):
+    """A debt fold over a bloom-skipped file, on a bucket over
+    ``target_file_bytes``, that loses the race to a commit in the other
+    bucket retries and lands, with both writes in the state."""
+    t, post5, other, far = _fold_race_table(
+        spark, str(tmp_path / "t"), target_file_bytes=1
+    )
+    racer = BucketedTxLogTable(spark, t.path)
+    orig = t._try_commit
+    fired: list[int] = []
+
+    def race(version, entry):
+        if not fired:
+            fired.append(version)
+            racer.merge_cdc_batch_mor(_ev(spark, [(far, 77.0, "a", "u", "990000", None)]))
+        return orig(version, entry)
+
+    t._try_commit = race
+    v, _ = t.merge_cdc_batch_mor(
+        _ev(spark, [(other, 1.0, "a", "u", "990000", None)]), max_dv_fraction=0.0
+    )
+    assert v == fired[0] + 1
+    e = t._read_entry(v)
+    assert set(post5) <= set(e["removes"]) and e["mode"] == "merge_mor"
+    st = {r["id"]: r["amount"] for r in t.read_state().collect()}
+    assert st[other] == 1.0 and st[far] == 77.0 and st[5] == 5555.0 and len(st) == 40
+
+
+def test_large_bucket_fused_fold_feeds_like_merge_plus_fold(spark, tmp_path, monkeypatch):
+    """On buckets over ``target_file_bytes`` with bloom sidecars, one
+    wave folds a hot bucket (a bloom-skipped file of it included, read
+    through the snapshot read) and vectors a clean one in the same
+    commit. State and change feed equal the pure-MoR merge followed by
+    the separate fold commit."""
+    b = _bucket_of(spark, range(40), 4)
+    h2 = next(k for k in range(4, 40) if b[k] == b[1])
+    cold = next(k for k in range(4, 40) if b[k] != b[1])
+    kw = dict(n=40, target_file_bytes=1, bloom_cols=["id"])
+    fused = _seed(spark, str(tmp_path / "fused"), **kw)
+    pair = _seed(spark, str(tmp_path / "pair"), **kw)
+    for t in (fused, pair):  # two postimage files in key 1's bucket
+        t.merge_cdc_batch_mor(_ev(spark, [(1, 51.0, "p", "u", "800000", None)]))
+        t.merge_cdc_batch_mor(_ev(spark, [(h2, 52.0, "p", "u", "800000", None)]))
+    v0 = fused.latest_version()
+    post_h2 = fused._read_entry(v0)["adds"]
+    wave = [
+        (1, 111.0, "z", "u", "900000", None),      # its postimage file: debt 1/1
+        (cold, 7.0, "y", "u", "900000", None),     # an init image: debt 1/10
+        (500, 5.0, "n", "c", "900000", None),      # insert
+    ]
+    read: list[list[str]] = []
+    orig = BucketedTxLogTable._read_snapshot_files
+
+    def spy(self, files, version=None):
+        read.append(list(files))
+        return orig(self, files, version)
+
+    monkeypatch.setattr(BucketedTxLogTable, "_read_snapshot_files", spy)
+    v, _ = fused.merge_cdc_batch_mor(_ev(spark, wave), max_dv_fraction=0.3)
+    monkeypatch.undo()
+    assert v == v0 + 1 == fused.latest_version()
+    assert read == [post_h2]  # bloom-skipped, folded through the snapshot read
+    e = fused._read_entry(v)
+    bm = fused._bucket_map(v0)
+    assert {bm[f] for f in e["removes"]} == {b[1]} and set(post_h2) <= set(e["removes"])
+    assert {bm[f] for f in e["dv_added"]} == {b[cold]}  # the clean bucket: vectored
+
+    pair.merge_cdc_batch_mor(_ev(spark, wave))
+    fv, folded = _sink_fold(pair, 0.3)
+    assert fv == v0 + 2 and folded == [b[1]]
+    assert _state(fused) == _state(pair)
+    assert _feed_rows(fused, v0) == _feed_rows(pair, v0)
+    ids = sorted(r["id"] for r in table_changes(fused, v0).select("id").collect())
+    assert ids == sorted([1, 1, cold, cold, 500])  # pre+post, pre+post, insert

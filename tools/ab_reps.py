@@ -3,24 +3,28 @@
 
 Usage:
     python tools/ab_reps.py PARENT_DIR CHANGE_DIR [--pairs N]
-        [--workload W ...] [--seconds S] [--seed0 K] [--json OUT]
+        [--workload W ...] [--seed0 K]
 
 Runs ``perfbench/run.py --trace 0`` from the root of each checkout, one
-process per run, for N pairs per workload. Pair i uses seed ``seed0 + i``
-on both sides and alternates which side runs first, so a drift in host
-load over the session lands on both sides equally.
+process per run, for N pairs per workload, each run as long as the
+parent's ``BENCHMARK.json`` ``run_seconds`` says. Pair i uses seed
+``seed0 + i`` on both sides and alternates which side runs first, so a
+drift in host load over the session lands on both sides equally.
 
 For every end-to-end metric named in the parent's ``BENCHMARK.json`` it
 prints both medians, the change in the median, the parent's IQR, and the
 number of pairs the change won (lower or higher is better as the metric
-declares). A gain is shown as ``gain`` only when the change won at least
-nine pairs in ten and the median moved by more than the parent's IQR.
+declares). A gain is shown as ``gain`` only over at least ten pairs, when
+the change won at least nine pairs in ten and the median moved by more
+than the parent's IQR.
 
 A metric is flagged ``unresolved`` when the parent's own spread across
 its runs, (max - min) / median, exceeds the metric's bound in
-``BENCHMARK.json``: the host noise is then larger than the regression the
-bound is meant to catch, and more pairs or a quieter host are needed
-before anything is concluded about that metric.
+``BENCHMARK.json`` and the two sides' runs overlap: the host noise is then
+larger than the regression the bound is meant to catch, and more pairs or
+a quieter host are needed before anything is concluded about that metric.
+A change whose every run beats every parent run is resolved whatever the
+spread.
 """
 
 from __future__ import annotations
@@ -61,6 +65,7 @@ def summarize(spec: dict, parent: list[float], change: list[float]) -> dict:
     wins = sum((c < p) if lower else (c > p) for p, c in zip(parent, change))
     spread = (max(parent) - min(parent)) / pm if pm else 0.0
     moved = (pm - cm) if lower else (cm - pm)
+    apart = max(change) < min(parent) if lower else min(change) > max(parent)
     return {
         "parent_median": pm,
         "change_median": cm,
@@ -69,8 +74,8 @@ def summarize(spec: dict, parent: list[float], change: list[float]) -> dict:
         "wins": wins,
         "pairs": len(parent),
         "parent_spread": spread,
-        "unresolved": spread > spec["bound"],
-        "gain": wins >= 0.9 * len(parent) and moved > q3 - q1,
+        "unresolved": spread > spec["bound"] and not apart,
+        "gain": len(parent) >= 10 and wins >= 0.9 * len(parent) and moved > q3 - q1,
     }
 
 
@@ -80,19 +85,16 @@ def main(argv: list[str] | None = None) -> int:
     p.add_argument("change")
     p.add_argument("--pairs", type=int, default=10)
     p.add_argument("--workload", action="append")
-    p.add_argument("--seconds", type=int)
     p.add_argument("--seed0", type=int, default=1)
-    p.add_argument("--json", help="also write the per-run results and verdicts here")
     args = p.parse_args(argv)
 
     with open(os.path.join(args.parent, "BENCHMARK.json"), encoding="utf-8") as fh:
         bench = json.load(fh)
     specs = {m["name"]: m for m in bench["end_to_end"]}
-    seconds = args.seconds or bench["run_seconds"]
+    seconds = bench["run_seconds"]
     workloads = args.workload or [w["name"] for w in bench["workloads"]]
     sides = {"parent": args.parent, "change": args.change}
 
-    report: dict = {}
     for w in workloads:
         runs: dict[str, list[dict]] = {"parent": [], "change": []}
         for i in range(args.pairs):
@@ -109,7 +111,6 @@ def main(argv: list[str] | None = None) -> int:
             pv = [r["metrics"][name]["value"] for r in runs["parent"]]
             cv = [r["metrics"][name]["value"] for r in runs["change"]]
             verdicts[name] = summarize(spec, pv, cv)
-        report[w] = {"runs": runs, "verdicts": verdicts}
         for name, v in verdicts.items():
             flags = [f for f in ("gain", "unresolved") if v[f]]
             print(
@@ -120,9 +121,6 @@ def main(argv: list[str] | None = None) -> int:
                 + (f" [{', '.join(flags)}]" if flags else ""),
                 flush=True,
             )
-    if args.json:
-        with open(args.json, "w", encoding="utf-8") as fh:
-            json.dump(report, fh, indent=1)
     return 0
 
 
