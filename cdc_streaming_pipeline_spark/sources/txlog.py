@@ -3171,23 +3171,22 @@ class BucketedTxLogTable(TxLogTable):
         # bucket with many postimage files then costs a point merge
         # one file, not the bucket. ``old`` is the scanned set; the
         # debt half below still scores and folds over all of ``kept``.
-        old = kept
-        if kept and self.bloom_cols and probe_keys is not None:
-            cmap = self.column_mapping or {}
-            key0 = self.key_cols[0]
-            if key0 in {cmap.get(c, c) for c in self.bloom_cols}:
-                # key values come from the fused probe above — no
-                # second batch job
-                vals = [_dict_norm(v) for v in probe_keys]
-                blooms = pinned.blooms
-                old = [
-                    f
-                    for f in kept
-                    if not (
-                        (bf := blooms.get(f, {}).get(key0))
-                        and _bloom_pruned(bf, vals, self.blob)
-                    )
-                ]
+        cmap, key0 = self.column_mapping or {}, self.key_cols[0]
+        prune = bool(kept) and probe_keys is not None and key0 in {
+            cmap.get(c, c) for c in self.bloom_cols or []
+        }
+        # key values come from the fused probe above — no second batch job
+        vals = [_dict_norm(v) for v in probe_keys] if prune else []
+        blooms = pinned.blooms
+        old = [
+            f
+            for f in kept
+            if not (
+                prune
+                and (bf := blooms.get(f, {}).get(key0))
+                and _bloom_pruned(bf, vals, self.blob)
+            )
+        ]
         dvs = pinned.dvs
         old_set = set(old)
         dv_ours = {f: m for f, m in dvs.items() if f in old_set}

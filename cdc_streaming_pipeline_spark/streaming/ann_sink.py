@@ -150,10 +150,10 @@ class IvfStreamSink:
             try:
                 cells.init_from_events(cdc_shape(cent_df, batch_id), txn=tag)
             except ConcurrentWriteError:
-                # r15 ADVICE: a lost version-0 race (external writer /
-                # duplicate concurrent query) must not kill the stream —
-                # mirror land_mor's posture and serve the COMMITTED
-                # centroids (frozen-bootstrap semantics unchanged).
+                # a lost version-0 race (external writer, duplicate
+                # concurrent query) must not kill the stream: like
+                # land_mor, serve the COMMITTED centroids (the bootstrap
+                # stays frozen).
                 cent = _stored_centroids(cells)
         else:
             cent = _stored_centroids(cells)

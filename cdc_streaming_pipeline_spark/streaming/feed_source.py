@@ -1,7 +1,7 @@
-"""The change feed as a REAL Structured Streaming source (r13 verdict
-item 5): ``ChangeFeedSource``'s poll/advance hand loop re-expressed
-under Spark's own trigger, checkpoint and recovery machinery via the
-Spark 4 Python Data Source API — the broker-less stand-in for the
+"""The change feed as a REAL Structured Streaming source:
+``ChangeFeedSource``'s poll/advance hand loop re-expressed under
+Spark's own trigger, checkpoint and recovery machinery via the Spark 4
+Python Data Source API — the broker-less stand-in for the
 reference's Debezium→Kafka spine (reference:
 airflow/dags/cdc_pipeline_dag.py consumes exactly such a feed), now
 with the CURSOR IN THE CHECKPOINT instead of a side file.
@@ -159,16 +159,20 @@ def feed_replication_stream(
     cursor-in-checkpoint half now owned by Spark. Returns the
     ``StreamingQuery``.
 
-    Batches land with ``merge_cdc_batch``, the merge kernel folding
-    every touched bucket (copy-on-write); ``bucketed_merge_stream_sink``
-    is the sink that lands with the deletion-vector rule. Kill/restart
-    mid-stream is pinned in tests/test_feed_stream.py: the replayed
-    range no-ops on its txn tag and B converges to A exactly."""
+    Batches land through ``sink_util.land`` with ``merge_cdc_batch``,
+    the merge kernel folding every touched bucket (copy-on-write): the
+    first non-empty slice bootstraps B (an empty slice into an empty B
+    lands nothing), and a merge lost to an external writer re-runs from
+    the new head. ``bucketed_merge_stream_sink`` is the sink that lands
+    with the deletion-vector rule. Kill/restart mid-stream is pinned in
+    tests/test_feed_stream.py: the replayed range no-ops on its txn tag
+    and B converges to A exactly."""
     from cdc_streaming_pipeline_spark.sources.txlog import (
         BucketedTxLogTable,
         feed_as_cdc_events,
         table_changes,
     )
+    from cdc_streaming_pipeline_spark.streaming.sink_util import land
 
     spark.dataSource.register(TxlogVersionsDataSource)
     versions = (
@@ -178,7 +182,7 @@ def feed_replication_stream(
         .load()
     )
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
+    def land_slice(batch_df: DataFrame, batch_id: int) -> None:
         vs = [r["version"] for r in batch_df.select("version").collect()]
         if not vs:
             return
@@ -192,15 +196,12 @@ def feed_replication_stream(
             n_buckets=n_buckets,
             **(dest_kwargs or {}),
         )
-        if dest.latest_version() is None:
-            if events.isEmpty():
-                return
-            dest.init_from_events(events, txn=(writer_id, hi))
-        else:
-            dest.merge_cdc_batch(events, txn=(writer_id, hi))
+        if dest.latest_version() is None and events.isEmpty():
+            return
+        land(dest, events, (writer_id, hi), dest.merge_cdc_batch)
 
     writer = (
-        versions.writeStream.foreachBatch(land)
+        versions.writeStream.foreachBatch(land_slice)
         .option("checkpointLocation", checkpoint_path)
     )
     if available_now:

@@ -18,13 +18,11 @@ Streaming query:
   same query with ``readStream.format("kafka")`` + from_json — the
   transforms are source-agnostic DataFrame expressions (operators/cdc.py).
 
-Latest-state storage: per-batch versioned parquet snapshots plus a
-_CURRENT pointer file (poor-man's snapshot isolation, idempotent on batch
-replay because the version dir is keyed by batch id). On a production
-cluster this upsert is a Delta/Iceberg MERGE; the micro-batch logic —
-union prior state with the batch, keep max-LSN row per key, RETAIN delete
-markers so late lower-LSN events cannot resurrect deleted keys — is
-identical.
+Latest state: every micro-batch merges into a ``BucketedTxLogTable`` at
+``state_path`` through the same per-batch body as
+``bucketed_merge_stream_sink``, tagged ``(name, batch_id)`` — one atomic
+log version per batch, a no-op on replay. The stored rows keep delete
+markers, so late lower-LSN events cannot resurrect deleted keys.
 """
 
 from __future__ import annotations
@@ -36,16 +34,10 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
-from cdc_streaming_pipeline_spark.operators.cdc import (
-    latest_state,
-    mark_deleted,
-    split_corrupt,
-    with_time_partitions,
-)
+from cdc_streaming_pipeline_spark.operators.cdc import split_corrupt
 from cdc_streaming_pipeline_spark.schemas import CORRUPT_COL, LSN_COL
 from cdc_streaming_pipeline_spark.sources.event_log import read_event_log, write_event_log
-
-_POINTER = "_CURRENT"
+from cdc_streaming_pipeline_spark.streaming.sink_util import land, maintain, open_table
 
 
 class CdcStreamingPipeline:
@@ -65,7 +57,7 @@ class CdcStreamingPipeline:
         sink_format: str = "parquet",
         trigger_seconds: int = 60,
         name: str = "cdc_pipeline",
-        state_backend: str = "versioned",
+        state_backend: str = "latest",
         max_files_per_trigger: int | None = None,
     ) -> None:
         self.spark = spark
@@ -80,7 +72,7 @@ class CdcStreamingPipeline:
         self.sink_format = sink_format
         self.trigger_seconds = trigger_seconds
         self.name = name
-        if state_backend not in ("versioned", "partitioned", "scd2"):
+        if state_backend not in ("latest", "scd2"):
             raise ValueError(f"unknown state_backend: {state_backend!r}")
         self.state_backend = state_backend
         # bound micro-batch size (and let availableNow backfills split into
@@ -102,58 +94,27 @@ class CdcStreamingPipeline:
             self._upsert_state(good, batch_id)
 
     def _upsert_state(self, batch_df: DataFrame, batch_id: int) -> None:
-        if self.state_backend == "scd2":
-            # Maintain the full VERSION HISTORY incrementally (SCD Type 2)
-            # instead of just the latest row — the warehouse-dimension
-            # backend. Partition-pruned per batch like "partitioned", and
-            # replay-idempotent (merge dedupes on key+lsn), so the same
-            # at-least-once checkpoint story applies.
-            from cdc_streaming_pipeline_spark.operators.merge import (
-                init_scd2,
-                merge_scd2_batch,
+        if self.state_backend == "latest":
+            _merge_stream_batch(
+                batch_df, batch_id, self.state_path, self.key_cols, self.name
             )
-
-            snap = os.path.join(self.state_path, "scd2")
-            if not os.path.exists(snap):
-                init_scd2(batch_df, snap, key_cols=self.key_cols, order_col=LSN_COL)
-            else:
-                merge_scd2_batch(
-                    self.spark, snap, batch_df, key_cols=self.key_cols, order_col=LSN_COL
-                )
             return
-        if self.state_backend == "partitioned":
-            # The 100 TB backend: partition-pruned bucket merge
-            # (operators/merge.py) — reads/rewrites only the buckets this
-            # batch touches instead of rewriting the whole state. Replays
-            # are idempotent (latest-row-wins over identical events).
-            from cdc_streaming_pipeline_spark.operators.merge import (
-                init_snapshot,
-                merge_cdc_batch,
+        # SCD Type 2: the full VERSION HISTORY, maintained incrementally
+        # and partition-pruned per batch — the warehouse-dimension output.
+        # Replay-idempotent (the merge dedupes on key+lsn), so the same
+        # at-least-once checkpoint story applies.
+        from cdc_streaming_pipeline_spark.operators.merge import (
+            init_scd2,
+            merge_scd2_batch,
+        )
+
+        snap = os.path.join(self.state_path, "scd2")
+        if not os.path.exists(snap):
+            init_scd2(batch_df, snap, key_cols=self.key_cols, order_col=LSN_COL)
+        else:
+            merge_scd2_batch(
+                self.spark, snap, batch_df, key_cols=self.key_cols, order_col=LSN_COL
             )
-
-            snap = os.path.join(self.state_path, "partitioned")
-            if not os.path.exists(snap):
-                init_snapshot(batch_df, snap, key_cols=self.key_cols, order_col=LSN_COL)
-            else:
-                merge_cdc_batch(
-                    self.spark, snap, batch_df, key_cols=self.key_cols, order_col=LSN_COL
-                )
-            return
-        prev = read_latest_state(self.spark, self.state_path, raw=True)
-        merged = (
-            prev.unionByName(batch_df, allowMissingColumns=True)
-            if prev is not None
-            else batch_df
-        )
-        new_state = latest_state(
-            merged, key_cols=self.key_cols, order_col=LSN_COL, drop_deleted=False
-        )
-        version_dir = os.path.join(self.state_path, f"v{batch_id}")
-        new_state.write.mode("overwrite").parquet(version_dir)
-        tmp = os.path.join(self.state_path, f".{_POINTER}.tmp")
-        with open(tmp, "w", encoding="utf-8") as fh:
-            fh.write(version_dir)
-        os.replace(tmp, os.path.join(self.state_path, _POINTER))
 
     # ------------------------------------------------------------ start --
     def start(self, available_now: bool = False) -> StreamingQuery:
@@ -200,17 +161,17 @@ def await_available_now(query: StreamingQuery, timeout_s: float) -> None:
 def read_latest_state(
     spark: SparkSession, state_path: str, raw: bool = False
 ) -> DataFrame | None:
-    """Read the current latest-state snapshot.
+    """Read the current latest state, or None before the first batch.
 
-    raw=True keeps delete-marker rows (the upsert needs them so late,
-    lower-LSN events cannot resurrect a deleted key); the default filters
-    them out — the queryable current-table-contents view.
+    raw=True keeps delete-marker rows (late, lower-LSN events must not
+    resurrect a deleted key); the default filters them out — the
+    queryable current-table-contents view.
     """
-    partitioned = os.path.join(state_path, "partitioned")
-    if os.path.exists(partitioned):
-        from cdc_streaming_pipeline_spark.operators.merge import read_snapshot
+    from cdc_streaming_pipeline_spark.sources.txlog import (
+        BucketedTxLogTable,
+        TxLogTable,
+    )
 
-        return read_snapshot(spark, partitioned, raw=raw)
     scd2 = os.path.join(state_path, "scd2")
     if os.path.exists(scd2):
         # the SCD2 backend's latest-state view: currently-open versions
@@ -219,15 +180,10 @@ def read_latest_state(
 
         hist = read_scd2(spark, scd2, raw=raw)
         return hist if raw else hist.filter(F.col("is_current"))
-    pointer = os.path.join(state_path, _POINTER)
-    if not os.path.exists(pointer):
+    if TxLogTable(spark, state_path).latest_version() is None:
         return None
-    with open(pointer, encoding="utf-8") as fh:
-        version_dir = fh.read().strip()
-    df = spark.read.parquet(version_dir)
-    if raw:
-        return df
-    return mark_deleted(df).filter(~F.col("_is_deleted")).drop("_is_deleted")
+    table = BucketedTxLogTable(spark, state_path)
+    return table.read() if raw else table.read_state()
 
 
 def stream_static_enrich(
@@ -369,8 +325,8 @@ def upsert_rollup_partial(
     Additive aggregates are not replay-idempotent if merged in place (a
     redelivered batch would double-count), so the state layout is one
     partial-aggregate directory PER BATCH ID, overwritten on replay —
-    exactly-once by construction on top of at-least-once delivery, the
-    same trick the versioned latest-state backend uses. Partials hold
+    exactly-once by construction on top of at-least-once delivery (as
+    ``psi_drift_monitor_sink``'s per-batch partitions are). Partials hold
     exact-decimal sums (functions/precision.py rationale) so merge order
     can never shift the result."""
     partial = batch_df.groupBy(
@@ -488,32 +444,29 @@ def bucketed_merge_stream_sink(
     ``_deleted``). Readers query ``BucketedTxLogTable.read_state()`` —
     always a complete committed snapshot, never a half-landed batch.
 
-    MAINTENANCE rides the same foreachBatch, because a stream that
-    runs forever must not need an operator to intervene: every
-    salted merge adds up to salt_n files to its touched buckets, so
-    after each merge any bucket that grew past ``max_files_per_bucket``
-    is folded back to one file by ``compact_buckets`` — the check is
-    the already-bounded snapshot resolution, the fold costs only the
-    overgrown buckets, and read_state latency stays flat over an
-    unbounded run. ``vacuum_every=K`` additionally reclaims dead files
-    every K batches (age-guarded — ``vacuum_min_age_seconds`` protects
-    concurrently staged files, so keep it well above a batch interval).
-    Maintenance commits are untagged: a replayed batch no-ops its merge
-    via the txn tag and re-running compaction/vacuum is harmless by
-    construction (both are logical no-ops). Set
-    ``max_files_per_bucket=None``/``vacuum_every=None`` to opt out.
+    Each batch opens, lands and maintains the table through
+    ``sink_util``: ``open_table`` (the table's recorded n_buckets wins
+    over ``n_buckets``), ``land`` (a merge lost to an external writer
+    re-runs from the new head) and ``maintain``, the cadence every CDC
+    sink shares, run after each merge so a stream that runs forever
+    needs no operator: fold buckets grown past
+    ``max_files_per_bucket`` files back to one (``cluster_cols``
+    range-clusters the folded buckets, the OPTIMIZE ZORDER cadence
+    riding the compaction that already runs), fold the
+    ``max_dv_fraction`` deletion-vector debt the merge left
+    (``delete_where``/``update_where`` vectors in buckets no batch
+    rewrote; normally none), backfill skipping facts for files from
+    stats-less writers every ``analyze_every`` batches (needs
+    ``stats_cols``), and vacuum dead files every ``vacuum_every``
+    batches (age-guarded: keep ``vacuum_min_age_seconds`` well above a
+    batch interval). Maintenance commits are untagged; a replayed batch
+    no-ops its merge and re-runs maintenance as a logical no-op.
+    ``None`` opts out of each step.
 
     ``stats_cols`` makes every landed file carry [min, max] skipping
-    stats so dashboards use ``read_state_where`` at proportional I/O;
-    ``cluster_cols`` additionally range-clusters the buckets the
-    maintenance pass folds (the OPTIMIZE ZORDER cadence riding the
-    compaction that already runs — hot buckets degrade per merge and
-    re-cluster on their next fold).
-
-    The STORAGE LAYER rides along, so a stream-written table gets the
-    same point-lookup/delete story as a batch one: ``bloom_cols`` gives
-    every landed AND every compacted file a bloom sidecar;
-    ``max_dv_fraction`` bounds live deletion-vector debt
+    stats so dashboards use ``read_state_where`` at proportional I/O.
+    ``bloom_cols`` gives every landed and every compacted file a bloom
+    sidecar. ``max_dv_fraction`` bounds live deletion-vector debt
     (``txlog.dv_debt_files``: a file whose deleted fraction exceeds the
     threshold, or that carries a vector but no recorded row count, has
     its bucket folded — the rewrite reads DV-applied rows, so it absorbs
@@ -530,110 +483,85 @@ def bucketed_merge_stream_sink(
     written instead of O(touched buckets). While every bucket stays
     under ``target_file_bytes`` the table carries no vectors at all.
     ``max_dv_fraction=None`` keeps pure merge-on-read. Either way each
-    batch lands as ONE log version. After the merge, a metadata-only
-    fallback folds the debt the merge left — vectors from interleaved
-    ``delete_where``/``update_where`` calls in buckets the batch did
-    not touch — in a separate untagged commit; it normally finds
-    nothing. The compaction policy and the DV-debt threshold are what
-    make sustained MoR ingest bounded, so pair it with both.
-    ``analyze_every=K`` backfills stats/bloom facts every K batches for
-    files landed by stats-less writers (requires ``stats_cols``).
+    batch lands as ONE log version.
     Returns the DataStreamWriter (caller picks trigger and starts)."""
-    from cdc_streaming_pipeline_spark.sources.txlog import (
-        BucketedTxLogTable,
-        vacuum,
+    body = functools.partial(
+        _merge_stream_batch,
+        table_path=table_path,
+        key_cols=key_cols,
+        writer_id=writer_id,
+        n_buckets=n_buckets,
+        order_col=order_col,
+        max_files_per_bucket=max_files_per_bucket,
+        vacuum_every=vacuum_every,
+        vacuum_retain_versions=vacuum_retain_versions,
+        vacuum_min_age_seconds=vacuum_min_age_seconds,
+        target_file_bytes=target_file_bytes,
+        stats_cols=stats_cols,
+        cluster_cols=cluster_cols,
+        bloom_cols=bloom_cols,
+        max_dv_fraction=max_dv_fraction,
+        analyze_every=analyze_every,
+        merge_mode=merge_mode,
     )
-    from cdc_streaming_pipeline_spark.streaming.sink_util import land
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        from cdc_streaming_pipeline_spark.sources.txlog import (
-            ConcurrentWriteError,
-            resolve_table_meta,
-        )
-
-        # n_buckets follows the LOG once the table exists (an external
-        # rebucket must not kill the stream — the recorded layout wins);
-        # the sink's parameter applies only at creation / legacy logs.
-        table = BucketedTxLogTable(
-            batch_df.sparkSession,
-            table_path,
-            key_cols=key_cols,
-            n_buckets=None,
-            order_col=order_col,
-            target_file_bytes=target_file_bytes,
-            stats_cols=stats_cols,
-            bloom_cols=bloom_cols,
-        )
-        if resolve_table_meta(table) is None:
-            table.n_buckets = n_buckets
-        # a same-bucket commit from OUTSIDE this stream (another writer,
-        # a manual compact/rebucket/maintenance window) makes the merge
-        # raise ConcurrentWriteError; ``land`` re-runs it, RE-DERIVING
-        # from the new base (latest_state over fresh snapshot + batch)
-        if merge_mode == "mor":
-            merge = functools.partial(
-                table.merge_cdc_batch_mor, max_dv_fraction=max_dv_fraction
-            )
-        else:
-            merge = table.merge_cdc_batch
-        land(table, batch_df, (writer_id, int(batch_id)), merge)
-        if max_files_per_bucket is not None:
-            try:
-                table.compact_buckets(
-                    min_files=max_files_per_bucket + 1, cluster_cols=cluster_cols
-                )
-            except ConcurrentWriteError:
-                pass  # raced an external commit: the next batch folds
-        if max_dv_fraction is not None:
-            # fallback deletion-vector debt fold: the MoR merge folds
-            # the buckets its own vectors push over the threshold, so
-            # what is left here is delete_where/update_where debt the
-            # merge did not rewrite — normally nothing. Metadata-only
-            # check: vectors, live files, bucket tags and row counts all
-            # come from ONE log snapshot, pinned to one version.
-            from cdc_streaming_pipeline_spark.sources.txlog import (
-                dv_debt_files,
-                snapshot,
-            )
-
-            snap = snapshot(table)
-            if snap.dvs:
-                debt = {
-                    f: snap.dvs[f]["n"]
-                    for f in snap.files
-                    if f in snap.dvs and f in snap.buckets
-                }
-                dirty = {
-                    snap.buckets[f]
-                    for f in dv_debt_files(debt, snap.nulls, max_dv_fraction)
-                }
-                if dirty:
-                    try:
-                        table.compact_buckets(
-                            buckets=sorted(dirty),
-                            min_files=1,
-                            cluster_cols=cluster_cols,
-                        )
-                    except ConcurrentWriteError:
-                        pass  # raced: the next batch folds
-        if analyze_every and stats_cols and (int(batch_id) + 1) % analyze_every == 0:
-            from cdc_streaming_pipeline_spark.sources.txlog import analyze_table
-
-            try:
-                analyze_table(table, stats_cols=stats_cols)
-            except ConcurrentWriteError:
-                pass  # facts-only commit lost a race: next cadence retries
-        if vacuum_every and (int(batch_id) + 1) % vacuum_every == 0:
-            vacuum(
-                table,
-                retain_versions=vacuum_retain_versions,
-                min_age_seconds=vacuum_min_age_seconds,
-            )
-
     return (
-        stream_df.writeStream.foreachBatch(_merge)
+        stream_df.writeStream.foreachBatch(body)
         .queryName(writer_id)
         .option("checkpointLocation", checkpoint_path)
+    )
+
+
+def _merge_stream_batch(
+    batch_df: DataFrame,
+    batch_id: int,
+    table_path: str,
+    key_cols: list[str],
+    writer_id: str,
+    n_buckets: int = 64,
+    order_col: str = "_lsn",
+    max_files_per_bucket: int | None = 8,
+    vacuum_every: int | None = None,
+    vacuum_retain_versions: int = 10,
+    vacuum_min_age_seconds: float = 3600.0,
+    target_file_bytes: int = 8 << 20,
+    stats_cols: list[str] | None = None,
+    cluster_cols: list[str] | None = None,
+    bloom_cols: list[str] | None = None,
+    max_dv_fraction: float | None = 0.3,
+    analyze_every: int | None = None,
+    merge_mode: str = "rewrite",
+) -> None:
+    """One micro-batch of ``bucketed_merge_stream_sink`` (its defaults,
+    which ``CdcStreamingPipeline``'s latest state also uses): merge the
+    batch tagged ``(writer_id, batch_id)``, then maintain the table."""
+    # the table's recorded n_buckets wins over the parameter: an
+    # external rebucket must not kill the stream
+    table = open_table(
+        batch_df.sparkSession,
+        table_path,
+        key_cols,
+        n_buckets=n_buckets,
+        order_col=order_col,
+        target_file_bytes=target_file_bytes,
+        stats_cols=stats_cols,
+        bloom_cols=bloom_cols,
+    )
+    merge = table.merge_cdc_batch
+    if merge_mode == "mor":
+        merge = functools.partial(
+            table.merge_cdc_batch_mor, max_dv_fraction=max_dv_fraction
+        )
+    land(table, batch_df, (writer_id, int(batch_id)), merge)
+    maintain(
+        table,
+        batch_id,
+        max_files_per_bucket,
+        vacuum_every,
+        vacuum_retain_versions,
+        vacuum_min_age_seconds,
+        cluster_cols=cluster_cols,
+        max_dv_fraction=max_dv_fraction,
+        analyze_every=analyze_every,
     )
 
 

@@ -1,9 +1,11 @@
-"""Shared landing utilities for the engine's stateful streaming sinks
-(dedup_sink.py, ann_sink.py): CDC-shaping a micro-batch for a txlog
-merge, opening state tables whose recorded layout wins over the sink's
-preferred one, O(batch) merge-on-read landing with txn-tagged
-exactly-once and lost-race retries, and the post-commit maintenance
-cadence (compaction fold + vacuum) that keeps an unbounded stream's
+"""The one landing path for the engine's streaming CDC state: the merge
+sink and the pipeline's latest state (pipeline.py), the feed replica
+(feed_source.py), and the dedup and ANN sinks (dedup_sink.py,
+ann_sink.py). It CDC-shapes a micro-batch for a txlog merge, opens
+state tables whose recorded layout wins over the sink's preferred one,
+lands a batch with txn-tagged exactly-once and lost-race retries, and
+runs the post-commit maintenance cadence (compaction fold, deletion-
+vector debt fold, analyze, vacuum) that keeps an unbounded stream's
 probe plans flat."""
 
 from __future__ import annotations
@@ -92,27 +94,56 @@ def maintain(
     vacuum_retain_versions: int = 10,
     vacuum_min_age_seconds: float = 3600.0,
     cluster_cols: list[str] | None = None,
+    max_dv_fraction: float | None = None,
+    analyze_every: int | None = None,
 ) -> None:
-    """Post-commit maintenance (the streaming/pipeline.py cadence): fold
-    overgrown buckets so sustained MoR appends never degrade the probe
-    plan (``cluster_cols`` additionally range-clusters folded buckets,
-    making files value-pure so dictionary/stats pruning bites), and
-    reclaim dead files on a batch cadence. Maintenance commits are
-    untagged — a replayed batch no-ops its merges via the txn tag and
-    re-folding/vacuuming is a logical no-op."""
+    """Post-commit maintenance, in order (``bucketed_merge_stream_sink``
+    documents each knob; ``None`` skips a step): fold buckets holding
+    more than ``max_files_per_bucket`` files, fold the buckets holding
+    a file over ``max_dv_fraction`` deletion-vector debt (one metadata
+    snapshot decides; the MoR merge folds its own debt, so this finds
+    only ``delete_where``/``update_where`` vectors in buckets no batch
+    rewrote), analyze every ``analyze_every`` batches (the handle's
+    ``stats_cols``), vacuum every ``vacuum_every`` batches. A fold or
+    analyze lost to an external commit is left to the next batch.
+    Maintenance commits are untagged: a replayed batch no-ops its merge
+    via the txn tag, and re-running maintenance is a logical no-op."""
     from cdc_streaming_pipeline_spark.sources.txlog import (
         ConcurrentWriteError,
+        analyze_table,
+        dv_debt_files,
+        snapshot,
         vacuum,
     )
 
-    if max_files_per_bucket is not None:
+    n = int(batch_id) + 1
+
+    def fold(**kw) -> None:
         try:
-            table.compact_buckets(
-                min_files=max_files_per_bucket + 1, cluster_cols=cluster_cols
-            )
+            table.compact_buckets(cluster_cols=cluster_cols, **kw)
         except ConcurrentWriteError:
             pass  # raced an external commit: the next batch folds
-    if vacuum_every and (int(batch_id) + 1) % vacuum_every == 0:
+
+    if max_files_per_bucket is not None:
+        fold(min_files=max_files_per_bucket + 1)
+    if max_dv_fraction is not None:
+        snap = snapshot(table)
+        debt = {
+            f: snap.dvs[f]["n"]
+            for f in snap.files
+            if f in snap.dvs and f in snap.buckets
+        }
+        dirty = {
+            snap.buckets[f] for f in dv_debt_files(debt, snap.nulls, max_dv_fraction)
+        }
+        if dirty:
+            fold(buckets=sorted(dirty), min_files=1)
+    if analyze_every and n % analyze_every == 0 and table.stats_cols:
+        try:
+            analyze_table(table)
+        except ConcurrentWriteError:
+            pass  # facts-only commit lost a race: the next cadence retries
+    if vacuum_every and n % vacuum_every == 0:
         vacuum(
             table,
             retain_versions=vacuum_retain_versions,

@@ -451,9 +451,11 @@ def _put_json(path, rows):
 
 
 def test_mor_stream_sink_lands_one_version_per_batch(spark, tmp_path):
-    """With no external deletes, the MoR sink's DV-debt fold rides the
-    merge commit: every micro-batch — folds included — lands as exactly
-    ONE log version, and the state stays model-exact."""
+    """With no external deletes, every micro-batch of the MoR sink lands
+    as exactly ONE log version, and the state stays model-exact. These
+    buckets stay far under ``target_file_bytes``, so the cost rule
+    rewrites each touched bucket copy-on-write in the merge commit and
+    no vector is staged."""
     from cdc_streaming_pipeline_spark.streaming.pipeline import (
         bucketed_merge_stream_sink,
     )
@@ -472,6 +474,9 @@ def test_mor_stream_sink_lands_one_version_per_batch(spark, tmp_path):
             src / f"w{w:03d}.json",
             [(k, 1000.0 * w + k, "a", "u", f"{w + 1:04d}", None) for k in keys],
         )
+    # the file source orders by modification time: make it the wave order
+    for w in range(n_batches):
+        os.utime(src / f"w{w:03d}.json", (1_000_000 + w, 1_000_000 + w))
     q = (
         bucketed_merge_stream_sink(
             spark.readStream.schema(S).option("maxFilesPerTrigger", "1").json(str(src)),
@@ -499,10 +504,11 @@ def test_mor_stream_sink_lands_one_version_per_batch(spark, tmp_path):
 
 @pytest.mark.slowsuite
 def test_mor_stream_sink_bounded(spark, tmp_path):
-    """The streaming sink in merge_mode='mor': 20+ micro-batches of
-    single-key updates write O(batch) postimage files + vectors, and
-    the maintenance fold (file-count AND DV-debt) keeps the table
-    bounded with state model-exact."""
+    """The streaming sink in merge_mode='mor': a bootstrap and 24
+    single-key updates, with the maintenance fold and vacuum keeping the
+    table bounded and the state model-exact. These buckets stay far
+    under ``target_file_bytes``, so the cost rule rewrites each touched
+    bucket copy-on-write in the merge commit and no vector is staged."""
     import json as _json
 
     from cdc_streaming_pipeline_spark.sources.txlog import resolve_snapshot_state
@@ -530,6 +536,9 @@ def test_mor_stream_sink_bounded(spark, tmp_path):
         k = w % 6
         expect[k] = 1000.0 + w
         put(f"w{w:03d}.json", [(k, 1000.0 + w, "a", "u", f"{w + 1:04d}", None)])
+    # the file source orders by modification time: make it the wave order
+    for w in range(25):
+        os.utime(src / f"w{w:03d}.json", (1_000_000 + w, 1_000_000 + w))
 
     q = (
         bucketed_merge_stream_sink(
@@ -743,6 +752,82 @@ def test_mor_stream_sink_small_buckets_land_without_vectors(spark, tmp_path):
     assert all(e["mode"] == "merge_mor" and e["removes"] for e in hist[1:])
     assert not any(e.get("file_dvs") or e.get("dv_added") for e in hist)
     assert not resolve_file_dvs(t)
+
+
+def test_mor_stream_sink_folds_external_delete_debt(spark, tmp_path):
+    """The MoR sink on buckets over ``target_file_bytes``: merges stage
+    vectors, each micro-batch lands as ONE tagged log version, and a
+    ``delete_where`` between stream runs, in a bucket no later batch
+    touches, is folded after the next batch's merge by the sink's
+    fallback debt fold — a ``compact_buckets(buckets=...)`` commit of
+    just that bucket. The state stays model-exact throughout."""
+    from cdc_streaming_pipeline_spark.streaming.pipeline import (
+        bucketed_merge_stream_sink,
+    )
+
+    src = tmp_path / "src"
+    src.mkdir()
+    table_path = str(tmp_path / "table")
+    b = _bucket_of(spark, range(40), 4)
+    quiet = b[0]  # the bucket only the delete touches
+    hot = [k for k in range(40) if b[k] != quiet][:6]
+    quiet_keys = [k for k in range(40) if b[k] == quiet]
+    doomed = quiet_keys[: len(quiet_keys) // 2 + 1]  # over the 0.3 debt
+    expect = {i: float(i) for i in range(40)}
+
+    def put(w, rows):
+        _put_json(src / f"w{w:03d}.json", rows)
+        # the file source orders by modification time: make it the wave order
+        os.utime(src / f"w{w:03d}.json", (1_000_000 + w, 1_000_000 + w))
+
+    def wave(w):
+        k = hot[w % len(hot)]
+        expect[k] = 100.0 * w + k
+        put(w, [(k, expect[k], "a", "u", f"{w + 1:04d}", None)])
+
+    def run():
+        q = (
+            bucketed_merge_stream_sink(
+                spark.readStream.schema(S).option("maxFilesPerTrigger", "1").json(str(src)),
+                table_path,
+                str(tmp_path / "ckpt"),
+                key_cols=["id"],
+                n_buckets=4,
+                max_files_per_bucket=None,  # no count fold: only the debt fold removes
+                target_file_bytes=1,  # every bucket is large: merges vector
+                stats_cols=["amount"],  # row counts: the debt rule scores fractions
+                max_dv_fraction=0.3,
+                merge_mode="mor",
+            )
+            .trigger(availableNow=True)
+            .start()
+        )
+        q.awaitTermination(600)
+
+    put(0, [(i, float(i), "a", "r", "0001", None) for i in range(40)])
+    for w in range(1, 4):
+        wave(w)
+    run()
+    t = BucketedTxLogTable(spark, table_path)
+    v_del, n_files, n_rows = t.delete_where(F.col("id").isin(doomed))
+    assert (n_files, n_rows) == (1, len(doomed))
+    for k in doomed:
+        del expect[k]
+    for w in range(4, 6):
+        wave(w)
+    run()
+
+    assert {r["id"]: r["amount"] for r in t.read_state().collect()} == expect
+    hist = t.history()
+    merges = [e for e in hist if "txn" in e]
+    assert [e["txn"][1] for e in merges] == list(range(6))  # one version a batch
+    assert any(e.get("dv_added") for e in merges[1:])  # the merges staged vectors
+    vectored = set(hist[v_del]["file_dvs"])
+    folds = [e for e in hist[v_del + 1 :] if "txn" not in e]
+    assert len(hist) == len(merges) + 1 + len(folds)
+    assert len(folds) == 1, [e["mode"] for e in folds]
+    assert folds[0]["buckets"] == [quiet] and vectored <= set(folds[0]["removes"])
+    assert not vectored & set(resolve_with_checkpoint(t))
 
 
 # The fused debt fold on buckets over ``target_file_bytes``. The debt-fold
