@@ -136,8 +136,6 @@ class CdcStreamingPipeline:
             writer = writer.trigger(availableNow=True)
         else:
             writer = writer.trigger(processingTime=f"{self.trigger_seconds} seconds")
-        if self.state_path is not None:
-            os.makedirs(self.state_path, exist_ok=True)
         return writer.start()
 
     def run_once(self, timeout_seconds: int = 120) -> None:
