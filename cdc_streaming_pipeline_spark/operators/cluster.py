@@ -31,6 +31,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cdc_streaming_pipeline_spark.operators.graph import _truncate_lineage
+from cdc_streaming_pipeline_spark.sources.tables import fan_out
 
 
 def connected_components(
@@ -235,9 +236,7 @@ def kmeans_fit(
     # sums members once vs Spark's per-batch partials).
     vecs = df.select(vec_col)
     if len(smat) >= 32768:
-        par = spark.sparkContext.defaultParallelism
-        if vecs.rdd.getNumPartitions() < par:
-            vecs = vecs.repartition(par)
+        vecs = fan_out(vecs)
     vecs = vecs.persist()
 
     # k-means++ seeding (deterministic RNG) on the sample.

@@ -19,24 +19,11 @@ aggregate) — no Python UDFs.
 
 from __future__ import annotations
 
-from collections import deque
-
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from cdc_streaming_pipeline_spark.functions.textfn import normalize_ws, tokens
-
-
-def _parallelize(df: DataFrame) -> DataFrame:
-    """Spread rows across all cores before CPU-heavy per-row expressions.
-
-    Small inputs arrive as ONE scan partition (a single small parquet file
-    under maxPartitionBytes), which would serialize the shingle/signature
-    work onto one core — partition count must follow COMPUTE cost here, not
-    input bytes. One cheap narrow-row shuffle; at 100 TB inputs are already
-    many-partitioned and AQE coalescing keeps this a no-op-ish rebalance.
-    """
-    return df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+from cdc_streaming_pipeline_spark.sources.tables import fan_out, keep
 
 
 # ---------------------------------------------------------------- exact --
@@ -90,82 +77,6 @@ def minhash_signature(shingle_col: Column, num_hashes: int = 16) -> Column:
     return minhash_signature_from_hashes(shingle_hashes(shingle_col), num_hashes)
 
 
-_SHINGLE_CACHE: deque[DataFrame] = deque()
-# distinct persisted frames a full registry pass touches (minhash + ngram
-# + simhash + contamination + the incremental batch/corpus pair); each is
-# ids + hash arrays — MBs at sf0.1. Sized ABOVE the per-pass count: if a
-# pass creates more frames than the cap, the oldest evicts before its
-# second bench pass and both passes run cold (the r8 +3s shingle
-# regression).
-_SHINGLE_CACHE_MAX = 12
-# PER-CALL frames (candidate id pairs, skyline candidates, …) live in
-# their OWN small registry: they only need to survive until the one plan
-# that consumes them executes, and routing them through the shingle
-# registry above evicted the long-lived memo frames mid-bench-pass
-# (measured: doc_contamination 0.68 → 1.55 s when ~20 transient persists
-# per pass churned the shared deque).
-_TRANSIENT_CACHE: deque[DataFrame] = deque()
-_TRANSIENT_CACHE_MAX = 8
-
-
-def _persist_transient(df: DataFrame) -> DataFrame:
-    """Bounded persist for frames consumed by a single returned plan
-    (which executes after the operator function exits, so an in-function
-    unpersist would drop the cache before use)."""
-    df = df.persist()
-    _TRANSIENT_CACHE.append(df)
-    while len(_TRANSIENT_CACHE) > _TRANSIENT_CACHE_MAX:
-        _TRANSIENT_CACHE.popleft().unpersist(blocking=False)
-    return df
-
-
-_FRAME_MEMO: dict[tuple, DataFrame] = {}
-
-
-def _persist_bounded(df: DataFrame) -> DataFrame:
-    """``persist()`` with a bounded registry. The shingle frame feeds
-    several joins of ONE returned plan, so it must stay cached while that
-    plan executes — but a long-lived session calling the pair generators
-    repeatedly would otherwise accumulate cached blocks forever (each call
-    persists a fresh frame and no one unpersists). Keep the newest
-    ``_SHINGLE_CACHE_MAX``; evict the oldest (non-blocking — a consumer
-    still running against an evicted frame just recomputes it)."""
-    df = df.persist()
-    _SHINGLE_CACHE.append(df)
-    while len(_SHINGLE_CACHE) > _SHINGLE_CACHE_MAX:
-        evicted = _SHINGLE_CACHE.popleft()
-        for k, v in list(_FRAME_MEMO.items()):
-            if v is evicted:
-                del _FRAME_MEMO[k]
-        evicted.unpersist(blocking=False)
-    return df
-
-
-def _memo_frame(df: DataFrame, kind: str, params: tuple, build) -> DataFrame:
-    """Cross-CALL reuse of a derived frame, keyed by the INPUT's semantic
-    plan hash (same corpus plan + same params → same derived frame).
-
-    ``_persist_bounded`` alone only helps the joins inside one returned
-    plan; a pipeline running several dedup ops over the same corpus (the
-    normal case — minhash AND simhash AND contamination over one snapshot)
-    re-shingled/re-signed from scratch per op. Spark's semanticHash makes
-    the input identity checkable without executing anything, applicationId
-    keeps frames from leaking across sessions, and eviction rides the same
-    bounded registry (an evicted entry just rebuilds)."""
-    key = (
-        kind,
-        df.sparkSession.sparkContext.applicationId,
-        df.semanticHash(),
-        *params,
-    )
-    cached = _FRAME_MEMO.get(key)
-    if cached is not None:
-        return cached
-    frame = _persist_bounded(build())
-    _FRAME_MEMO[key] = frame
-    return frame
-
-
 def _shingle_hash_frame(
     df: DataFrame, text_col: str, id_col: str, shingle_size: int
 ) -> DataFrame:
@@ -178,7 +89,7 @@ def _shingle_hash_frame(
     boundaries because the bound columns are non-cheap and multiply
     referenced."""
     toks = tokens(normalize_ws(F.col(text_col)))
-    staged = _parallelize(df).select(F.col(id_col).alias("_id"), toks.alias("_toks"))
+    staged = fan_out(df).select(F.col(id_col).alias("_id"), toks.alias("_toks"))
     idx = F.sequence(F.lit(0), F.greatest(F.size("_toks") - shingle_size, F.lit(0)))
     grams = F.transform(
         idx, lambda i: F.array_join(F.slice(F.col("_toks"), i + 1, shingle_size), " ")
@@ -245,13 +156,10 @@ def minhash_lsh_pairs(
     # of the Jaccard verify — persist so the string-heavy shingling runs
     # once, not once per consumer. (Self-joins get ReuseExchange for free;
     # the differently-keyed verify joins do not.)
-    base = _memo_frame(
-        df,
-        "minhash_base",
-        (text_col, id_col, shingle_size, num_hashes),
-        lambda: _shingle_hash_frame(df, text_col, id_col, shingle_size).withColumn(
+    base = keep(
+        _shingle_hash_frame(df, text_col, id_col, shingle_size).withColumn(
             "sig", minhash_signature_from_hashes(F.col("sh_h"), num_hashes)
-        ),
+        )
     )
     banded = _banded_buckets(base, bands, rows_per_band)
 
@@ -282,17 +190,16 @@ def _spread_pairs(cand_ids: DataFrame) -> DataFrame:
     array_intersect over two shingle arrays per candidate pair, but AQE
     coalesces the candidate exchange by its (tiny) id-pair bytes —
     profiled at sf0.1: 4 post-coalesce tasks, max task 1.19 s while 28
-    cores idle. r16 fixed that with an UNCONDITIONAL
-    ``repartition(defaultParallelism)``; the r16 driver run showed the
-    fixed width costs more than it saves when candidates are few (and a
-    par-capped width under-spreads when candidates are huge). So: persist
-    the id-pair frame (16-byte rows, bounded registry), count it — one
-    cheap job whose work the cached verify pass reuses — and size the
-    keyed repartition from the count, skipping the exchange entirely when
-    the pairs already fit one task's budget. The repartition is keyed
-    (not AQE-coalescible) and moves only id rows, never shingle arrays.
+    cores idle. A fixed ``defaultParallelism`` width costs more than it
+    saves when candidates are few and under-spreads when they are huge,
+    so: keep the id-pair frame (16-byte rows, ``tables.keep``), count it
+    — one cheap job whose work the cached verify pass reuses — and size
+    the keyed repartition from the count, skipping the exchange entirely
+    when the pairs already fit one task's budget. The repartition is
+    keyed (not AQE-coalescible) and moves only id rows, never shingle
+    arrays.
     """
-    cand_ids = _persist_transient(cand_ids)
+    cand_ids = keep(cand_ids)
     n = cand_ids.count()
     par = cand_ids.sparkSession.sparkContext.defaultParallelism
     width = min(-(-n // _VERIFY_PAIRS_PER_TASK), par * 8)
@@ -316,9 +223,9 @@ def _verify_jaccard(cand_ids: DataFrame, shingle_df: DataFrame, threshold: float
     candidate pairs of the docs' shingle counts — the array form just
     packs that volume into one wide row per pair (tight codegen
     array_intersect) instead of narrow rows through an extra exchange.
-    An earlier round-8 capture concluded the opposite because the array
-    run paid the cold shingle-frame build (~48s at 10x) inside its
-    timing; controlled re-measurement reversed the verdict."""
+    A timing that includes the cold shingle-frame build (~48s at 10x)
+    inside the array run shows the opposite; that build is shared, so it
+    is not part of the verify cost."""
     sh_a = shingle_df.select(F.col("_id").alias("id_a"), F.col("sh_h").alias("sh_a"))
     sh_b = shingle_df.select(F.col("_id").alias("id_b"), F.col("sh_h").alias("sh_b"))
     cand = _spread_pairs(cand_ids).join(sh_a, "id_a").join(sh_b, "id_b")
@@ -356,12 +263,7 @@ def ngram_jaccard_pairs(
     Jaccard is dominated by stop-shingles anyway. The doc-frequency filter
     is one window over the inverted index — same shuffle the join needs.
     """
-    base = _memo_frame(
-        df,
-        "shingles",
-        (text_col, id_col, shingle_size),
-        lambda: _shingle_hash_frame(df, text_col, id_col, shingle_size),
-    )
+    base = keep(_shingle_hash_frame(df, text_col, id_col, shingle_size))
     # (persisted: feeds the inverted index and both verify joins)
     inv = base.select("_id", F.explode("sh_h").alias("sh"))
     # df >= 2: a shingle seen in ONE document can never produce a pair, so
@@ -406,18 +308,15 @@ def minhash_lsh_incremental(
     """
     rows_per_band = num_hashes // bands
 
-    def sig_frame(df: DataFrame, kind: str) -> DataFrame:
-        return _memo_frame(
-            df,
-            f"minhash_{kind}",
-            (text_col, id_col, shingle_size, num_hashes),
-            lambda: _shingle_hash_frame(df, text_col, id_col, shingle_size).withColumn(
+    def sig_frame(df: DataFrame) -> DataFrame:
+        return keep(
+            _shingle_hash_frame(df, text_col, id_col, shingle_size).withColumn(
                 "sig", minhash_signature_from_hashes(F.col("sh_h"), num_hashes)
-            ),
+            )
         )
 
-    b_base = sig_frame(batch, "inc_batch")
-    c_base = sig_frame(corpus, "inc_corpus")
+    b_base = sig_frame(batch)
+    c_base = sig_frame(corpus)
     cand_ids = (
         _banded_buckets(b_base, bands, rows_per_band)
         .withColumnRenamed("_id", "id_a")
@@ -457,7 +356,7 @@ def simhash64(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> 
     worker startup whenever the pool went cold between bench passes).
     Embarrassingly parallel; one (id, simhash) row per input row.
     """
-    staged = _parallelize(df).select(
+    staged = fan_out(df).select(
         F.col(id_col).alias("_id"), tokens(normalize_ws(F.col(text_col))).alias("_toks")
     )
     hashed = staged.select(
@@ -493,9 +392,7 @@ def simhash_near_dup_pairs(
     # without a cache both sides re-run the whole tokenize+hash+Arrow
     # signature pipeline (the expensive part — the frame itself is one
     # (long, long) row per doc, trivially cacheable at any scale)
-    sh = _memo_frame(
-        df, "simhash", (text_col, id_col), lambda: simhash64(df, text_col, id_col)
-    )
+    sh = keep(simhash64(df, text_col, id_col))
     blocks = sh.select(
         F.col(id_col).alias("_id"),
         "simhash",
@@ -567,7 +464,7 @@ def duplicate_span_removal(
     staged = df.select(
         F.col(id_col).alias("_id"), tokens(normalize_ws(F.col(text_col))).alias("_toks")
     ).filter(F.size("_toks") > 0)
-    staged = _parallelize(staged)
+    staged = fan_out(staged)
 
     toks = staged.select(
         "_id", F.posexplode("_toks").alias("idx", "tok")
@@ -672,12 +569,7 @@ def ngram_containment_pairs(
     Emits ordered (id_small, id_big) with containment of the smaller
     set in the larger, plus both set sizes — ties on size keep id
     order."""
-    base = _memo_frame(
-        df,
-        "shingles",
-        (text_col, id_col, shingle_size),
-        lambda: _shingle_hash_frame(df, text_col, id_col, shingle_size),
-    )
+    base = keep(_shingle_hash_frame(df, text_col, id_col, shingle_size))
     inv = base.select("_id", F.explode("sh_h").alias("sh"))
     rare = inv.withColumn(
         "df", F.count("*").over(Window.partitionBy("sh"))

@@ -55,6 +55,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from cdc_streaming_pipeline_spark.sources.tables import fan_out
+
 
 def _grams(col, q: int):
     """Distinct q-gram set of ``lower(col)`` — pure JVM HOFs; a string
@@ -172,29 +174,19 @@ def fuzzy_join(
     Returns (l_id, r_id, l_val, r_val, edit_dist)."""
     d = max_distance
     # Spread rows across all cores BEFORE the deletion-variant / q-gram
-    # expansion (the dedup._parallelize policy): the per-row expansion is
-    # Σ C(len, i) substring builds — hundreds of strings per row — and a
-    # small input arrives as ONE scan partition, serializing that work
-    # onto one core (profiled: a 2.3 s single-task stage on the 20k-row
-    # part catalog). GUARDED (r16 verdict): an explicit repartition(n) is
-    # REPARTITION_BY_NUM — not AQE-coalescible — so unconditionally
-    # forcing it would full-shuffle an already-wide 100 TB input DOWN to
-    # defaultParallelism, capping parallelism below the scan's natural
-    # width. Fan out only when the input is narrower than the core count;
-    # a wide input keeps its own partitioning and skips the exchange.
-    par = left.sparkSession.sparkContext.defaultParallelism
-
-    def _fan_out(df: DataFrame) -> DataFrame:
-        return df.repartition(par) if df.rdd.getNumPartitions() < par else df
-
-    L = _fan_out(
+    # expansion (``tables.fan_out``): the per-row expansion is Σ C(len, i)
+    # substring builds — hundreds of strings per row — and a small input
+    # arrives as ONE scan partition, serializing that work onto one core
+    # (profiled: a 2.3 s single-task stage on the 20k-row part catalog).
+    # A wide input keeps its own partitioning and skips the exchange.
+    L = fan_out(
         left.select(
             F.col(left_id).alias("l_id"),
             F.col(left_val).alias("l_val"),
             F.length(left_val).alias("_l_len"),
         )
     )
-    R = _fan_out(
+    R = fan_out(
         right.select(
             F.col(right_id).alias("r_id"),
             F.col(right_val).alias("r_val"),

@@ -23,6 +23,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from cdc_streaming_pipeline_spark.sources.tables import keep
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -324,14 +326,7 @@ def phash_near_dup_pairs(
     bit_count(xor). Identical shape to the simhash text path
     (operators/dedup.py:simhash_near_dup_pairs): candidates scale with
     true collisions, never all pairs."""
-    from cdc_streaming_pipeline_spark.operators.dedup import _memo_frame
-
-    ph = _memo_frame(
-        media,
-        "phash",
-        (max_hamming, deterministic_fake),
-        lambda: perceptual_hash(media, deterministic_fake=deterministic_fake),
-    )
+    ph = keep(perceptual_hash(media, deterministic_fake=deterministic_fake))
     blocks = ph.select(
         F.col("media_id").alias("_id"),
         "phash",

@@ -38,15 +38,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from cdc_streaming_pipeline_spark.functions.vector import cosine_pd
-from cdc_streaming_pipeline_spark.operators.dedup import _persist_transient
-
-
-def _fan_out(df: DataFrame) -> DataFrame:
-    """Spread a narrow input across the cores before CPU-heavy batch
-    work (the dedup._parallelize policy, width-guarded per the r16
-    verdict: never force an already-wide input DOWN to core count)."""
-    par = df.sparkSession.sparkContext.defaultParallelism
-    return df.repartition(par) if df.rdd.getNumPartitions() < par else df
+from cdc_streaming_pipeline_spark.sources.tables import fan_out, keep
 
 
 def _normalized_matrix(rows: list, dtype=np.float64) -> tuple[np.ndarray, np.ndarray]:
@@ -451,7 +443,7 @@ def cosine_near_dup_lsh(
             )
 
     bucketed = (
-        df.repartition(spark.sparkContext.defaultParallelism)
+        fan_out(df)
         .select(F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_vec"))
         .mapInPandas(keys_with_vec, "_id long, tbl int, key long, _vec array<double>")
     )
@@ -788,16 +780,16 @@ def ivf_pq_topk(
     )
     # The normalized corpus feeds up to THREE full passes — the codebook
     # sample sort, the encode scan, and the exact-rerank scan — so
-    # persist it once (dedup's bounded transient registry; per-row
-    # values are bit-identical under any partitioning). Fan the encode scan out
-    # only when the corpus is at least sample-sized (pq_fit's sample
-    # tells us) AND narrower than the core count: a Python batch stage
+    # keep it once (``tables.keep``; per-row values are bit-identical
+    # under any partitioning). Fan the encode scan out only when the
+    # corpus is at least sample-sized (pq_fit's sample tells us) and
+    # ``fan_out`` finds it narrower than the core count: a Python batch stage
     # carries ~0.2 s fixed per-task overhead, so a 5k-row corpus keeps
     # its single partition while a big single-row-group scan spreads.
     # The per-batch shortlist selection composes exactly under
     # rebatching (batch top-N ⊇ global top-N members, consistent
     # (dist, id) total order), so the output is unchanged.
-    normed = _persist_transient(normed)
+    normed = keep(normed)
     if not memo_hit:
         fit_stats: dict = {}
         codebooks = pq_fit(
@@ -807,7 +799,7 @@ def ivf_pq_topk(
         big_corpus = fit_stats.get("sample_rows", 0) >= 32768
         if fit_memo is not None:
             fit_memo[fit_key] = (centroids, codebooks, big_corpus)
-    encode_src = _fan_out(normed) if big_corpus else normed
+    encode_src = fan_out(normed) if big_corpus else normed
     bc_index = spark.sparkContext.broadcast((centroids, codebooks))
 
     def encode(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
@@ -833,12 +825,12 @@ def ivf_pq_topk(
     q_ids, q_mat = _normalized_matrix(queries.select(id_col, vec_col).collect())
     sims = q_mat @ centroids.T
     if n_probe == "auto":
-        # Recall-targeted probe policy (the r9 verdict's adaptive
-        # knob): per-query probe count from the best centroid cosine —
-        # see auto_probe_mask's docstring for the mapping and the
-        # measured rejection of the margin rule. On the recall-gate
-        # worst case: recall 0.84 (fixed 8) → ≥0.9 floor
-        # (.benchmarks/SCALE10_r10.md has the cost).
+        # Recall-targeted adaptive probe policy: per-query probe count
+        # from the best centroid cosine — see auto_probe_mask's
+        # docstring for the mapping and the measured rejection of the
+        # margin rule. On the recall-gate worst case: recall 0.84
+        # (fixed 8) → ≥0.9 floor (.benchmarks/SCALE10_r10.md has the
+        # cost).
         probe_mask = auto_probe_mask(sims, probe_sim_hi, probe_sim_lo)
     else:
         n_probe = min(n_probe, n_clusters)

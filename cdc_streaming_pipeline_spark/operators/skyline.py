@@ -49,6 +49,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cdc_streaming_pipeline_spark.sources.tables import keep
+
 
 def _skyline_mask(vals: np.ndarray) -> np.ndarray:
     """Boolean mask of non-strictly-dominated rows of ``vals`` (n × d,
@@ -135,13 +137,11 @@ def skyline(
                 yield b[_skyline_mask(b[dcols].to_numpy(dtype=np.float64))]
 
     # The candidate set feeds the contract count AND the returned merge
-    # plan: persist (bounded registry — the returned plan executes after
-    # this function exits, so an in-function unpersist would drop it),
-    # then release the input cache — the count materializes candidates,
-    # so nothing reads `work` again.
-    from cdc_streaming_pipeline_spark.operators.dedup import _persist_transient
-
-    cand = _persist_transient(pruned.mapInPandas(local_kernel, schema=out_schema))
+    # plan: keep it (the returned plan executes after this function
+    # exits, so an in-function unpersist would drop it), then release the
+    # input cache — the count materializes candidates, so nothing reads
+    # `work` again.
+    cand = keep(pruned.mapInPandas(local_kernel, schema=out_schema))
     n_cand = cand.count()
     work.unpersist(blocking=False)
     if n_cand > max_candidates:

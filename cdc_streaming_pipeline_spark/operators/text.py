@@ -12,6 +12,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from cdc_streaming_pipeline_spark.functions.textfn import normalize_ws, punct_ratio, token_count, tokens
+from cdc_streaming_pipeline_spark.sources.tables import fan_out
 
 # Tiny per-language stopword regexes (word-boundary anchored). The RE subset
 # used (alternation + \b) means the same pattern string runs on Java regex
@@ -201,7 +202,7 @@ def tfidf_top_terms(
     # partition count must follow COMPUTE cost here, not input bytes: a
     # single small parquet file would serialize the tokenize+explode onto
     # one core (measured ~10x on local[32])
-    toked = df.repartition(df.sparkSession.sparkContext.defaultParallelism).select(
+    toked = fan_out(df).select(
         F.col(id_col).alias("_id"),
         F.explode(tokens(normalize_ws(F.col(text_col)))).alias("term"),
     )
@@ -242,7 +243,7 @@ def corpus_top_bigrams(df: DataFrame, k: int = 50, text_col: str = "text") -> Da
     top-k — no full sort of the vocabulary.
     """
     base = (
-        df.repartition(df.sparkSession.sparkContext.defaultParallelism)
+        fan_out(df)
         .select(tokens(normalize_ws(F.col(text_col))).alias("t"))
         .filter(F.size("t") >= 2)
     )
@@ -317,7 +318,7 @@ def perplexity_proxy_scores(
     One explode feeds both the frequency table (map-side-combined groupBy)
     and the per-doc join; the corpus token total rides along as a
     broadcast single-row aggregate. All arithmetic is JVM-side."""
-    toked = df.repartition(df.sparkSession.sparkContext.defaultParallelism).select(
+    toked = fan_out(df).select(
         F.col(id_col).alias("_id"),
         F.explode(tokens(normalize_ws(F.col(text_col)))).alias("term"),
     )

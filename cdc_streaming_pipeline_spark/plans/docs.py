@@ -22,7 +22,7 @@ from cdc_streaming_pipeline_spark.operators import multimodal as mm
 from cdc_streaming_pipeline_spark.operators import sampling as sp
 from cdc_streaming_pipeline_spark.operators import similarity as sim
 from cdc_streaming_pipeline_spark.operators import text as tx
-from cdc_streaming_pipeline_spark.sources.tables import fixture, load_table
+from cdc_streaming_pipeline_spark.sources.tables import fan_out, fixture, keep, load_table
 
 NEAR_DUP_COSINE = 0.4  # driver testdata embeddings are near-orthogonal; 0.4 ≈ p99.95
 ANN_QUERY_IDS = 10  # vec_id < 10 are the query set
@@ -201,54 +201,40 @@ def doc_quantiles_by_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_GEMM_SHARE_CACHE: dict[tuple[str, str, str, float], DataFrame] = {}
-_GEMM_SHARE_CACHE_MAX = 4
+def _parquet_fixture(spark: SparkSession, sf_dir: str, name: str, build) -> DataFrame:
+    """``build()``'s frame, written to parquet under the fixture's root
+    once per (session, sf_dir) and read back from there."""
 
+    def write(root: str) -> DataFrame:
+        build().write.parquet(root)
+        return spark.read.parquet(root)
 
-def _memo_gemm(spark: SparkSession, sf_dir: str, kind: str, build) -> DataFrame:
-    """Memoize + persist a frame derived from the blocked-GEMM edge set,
-    keyed per (session, sf_dir, kind, threshold). The GEMM is the single
-    most expensive kernel in the registry (n²d/2 flops — at 100 TB it
-    dominates the whole pipeline), and THREE registered queries need its
-    output (`embedding_near_dup_blocked` the edges, `near_dup_clusters` and
-    `near_dup_keep_best` the cluster assignment), so recomputing it per
-    query is pure waste.
-
-    Safe to memoize: the testdata under an sf_dir is immutable, the
-    threshold is part of the key, and applicationId keeps a frame from
-    leaking across SparkSessions. Bounded registry, oldest-evicted — a
-    consumer still running against an evicted frame just recomputes."""
-    key = (spark.sparkContext.applicationId, sf_dir, kind, NEAR_DUP_COSINE)
-    cached = _GEMM_SHARE_CACHE.get(key)
-    if cached is not None:
-        return cached
-    frame = build().persist()
-    while len(_GEMM_SHARE_CACHE) >= _GEMM_SHARE_CACHE_MAX:
-        _GEMM_SHARE_CACHE.pop(next(iter(_GEMM_SHARE_CACHE))).unpersist(blocking=False)
-    _GEMM_SHARE_CACHE[key] = frame
-    return frame
+    return fixture(spark, sf_dir, name, write)
 
 
 def _near_dup_edge_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """(id_a, id_b, cosine) exact near-dup edges — one GEMM per session+sf."""
+    """(id_a, id_b, cosine) exact near-dup edges, one GEMM per (session,
+    sf_dir). The blocked GEMM is the most expensive kernel in the
+    registry (n²d/2 flops), and THREE registered queries need its output
+    (`embedding_near_dup_blocked` the edges, `near_dup_clusters` and
+    `near_dup_keep_best` the cluster assignment)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return _memo_gemm(
+    return _parquet_fixture(
         spark,
         sf_dir,
-        "edges",
+        "near_dup_edges",
         lambda: sim.cosine_near_dup_blocked(emb, threshold=NEAR_DUP_COSINE),
     )
 
 
 def _near_dup_cluster_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(vec_id, cluster_id) via connected components over the shared edge
-    frame. connected_components localCheckpoints its internals, so the
-    cached frame is materialized — reuse reads blocks, never recomputes."""
+    frame."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return _memo_gemm(
+    return _parquet_fixture(
         spark,
         sf_dir,
-        "clusters",
+        "near_dup_clusters",
         lambda: cl.connected_components(
             _near_dup_edge_frame(spark, sf_dir), emb, id_col="vec_id"
         ),
@@ -798,15 +784,11 @@ def source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts in one groupBy, per-source set sizes broadcast back onto the
     pair rows. Output is bounded by sources² — tiny at any corpus size."""
     from cdc_streaming_pipeline_spark.functions.textfn import normalize_ws, tokens
-    from cdc_streaming_pipeline_spark.operators.dedup import (
-        _parallelize,
-        _persist_transient,
-    )
 
     docs = load_table(spark, sf_dir, "documents")
-    # fan out before the CPU-heavy tokenize/shingle expressions (the
-    # dedup._parallelize policy — a small corpus is one scan partition)
-    staged = _parallelize(docs).select(
+    # fan out before the CPU-heavy tokenize/shingle expressions (a small
+    # corpus is one scan partition)
+    staged = fan_out(docs).select(
         "source", tokens(normalize_ws(F.col("text"))).alias("_toks")
     )
     toks = F.col("_toks")
@@ -818,10 +800,9 @@ def source_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # THREE consumers (the sizes aggregate + both self-join sides) — left
     # as lineage each re-ran the shingling from the scan (profiled at
-    # sf0.1: two 0.79 s single-task shingle stages per call); persist via
-    # the bounded registry (the returned plan executes after this
-    # function exits)
-    src_sh = _persist_transient(
+    # sf0.1: two 0.79 s single-task shingle stages per call); keep it (the
+    # returned plan executes after this function exits)
+    src_sh = keep(
         staged.select("source", F.explode(shingles).alias("_g")).distinct()
     )
     sizes = src_sh.groupBy("source").agg(F.count("*").alias("n_sh"))
@@ -3321,17 +3302,17 @@ QUERIES["bpe_fertility_by_lang"] = bpe_fertility_by_lang
 
 
 def _dsir_weight_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-doc DSIR weights, persisted per (session, sf): BOTH registry
+    """Per-doc DSIR weights, once per (session, sf_dir): BOTH registry
     queries (the weights themselves and the top-quarter selection)
-    consume the same three-shuffle estimate — the _memo_gemm sharing
-    pattern, hash-feature edition."""
+    consume the same three-shuffle estimate, as the near-dup queries
+    share one GEMM."""
     from cdc_streaming_pipeline_spark.operators.selection import (
         dsir_importance_weights as op,
     )
 
     docs = load_table(spark, sf_dir, "documents")
-    return _memo_gemm(
-        spark, sf_dir, "dsir", lambda: op(docs, target_col=F.col("lang") == "en")
+    return _parquet_fixture(
+        spark, sf_dir, "dsir_weights", lambda: op(docs, target_col=F.col("lang") == "en")
     )
 
 

@@ -48,6 +48,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cdc_streaming_pipeline_spark.schemas import DELETED_COL, LSN_COL, OP_COL, TABLE_COL
+from cdc_streaming_pipeline_spark.sources.tables import keep
 
 DERBY_DRIVER = "org.apache.derby.jdbc.EmbeddedDriver"  # ships in Spark's jars
 
@@ -162,9 +163,10 @@ class JdbcIncrementalSource:
 
     def _advance(self, df: DataFrame) -> DataFrame:
         """Materialize the batch's max watermark (one tiny agg) and advance
-        the stored scalar. Persisted so the consumer's action does not
-        re-poll the source with a now-stale predicate."""
-        df = df.persist()
+        the stored scalar. Kept (``tables.keep``) so the consumer's action
+        does not re-poll the source with a now-stale predicate, and a
+        poller that runs forever holds a bounded number of batches."""
+        df = keep(df)
         row = df.agg(F.max(self.watermark_col).alias("wm")).collect()[0]
         if row["wm"] is not None and (self.watermark is None or row["wm"] > self.watermark):
             self.watermark = row["wm"]

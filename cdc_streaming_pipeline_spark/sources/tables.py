@@ -12,6 +12,8 @@ import hashlib
 import os
 import shutil
 import tempfile
+import threading
+from collections import OrderedDict
 from collections.abc import Callable
 from typing import Any
 
@@ -59,7 +61,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # scans are single-partition. A blanket repartition here measured as a
     # net LOSS — tiny tables feeding Arrow/GEMM paths fragment into
     # overhead-dominated micro-batches. Operators whose per-row compute is
-    # genuinely heavy fan out themselves (operators/dedup._parallelize).
+    # genuinely heavy fan out themselves (``fan_out`` below).
     return df
 
 
@@ -84,6 +86,60 @@ def fixture(
             shutil.rmtree(root, ignore_errors=True)
             raise
     return _FIXTURES[key]
+
+
+def fan_out(df: DataFrame) -> DataFrame:
+    """Spread ``df`` over ``defaultParallelism`` partitions when its
+    estimated natural width is below that, else return it unchanged.
+
+    Partition count must follow COMPUTE cost before CPU-heavy per-row
+    work (tokenize/shingle, deletion variants, Arrow batches): a small
+    table arrives as ONE scan partition and would serialize that work
+    onto one core. An explicit ``repartition(n)`` is not AQE-coalescible,
+    so a wide input keeps its own partitioning instead of being shuffled
+    DOWN to the core count. The width is estimated from the optimized
+    plan — ``sizeInBytes / spark.sql.files.maxPartitionBytes`` — never
+    read through ``.rdd``, which would run a shuffled input's shuffle as
+    a hidden eager job; this fires no Spark job."""
+    spark = df.sparkSession
+    par = spark.sparkContext.defaultParallelism
+    size = int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+    split = spark._jsparkSession.sessionState().conf().filesMaxPartitionBytes()
+    return df.repartition(par) if -(-size // split) < par else df
+
+
+# Frames that outlive the call that built them (a shingle frame several
+# dedup operators share, the id pairs a returned plan reads), in
+# least-recently-kept-or-hit order. The cap holds every distinct frame
+# one full registry pass at sf0.1 keeps (17, counted in bench.py order),
+# so no frame is evicted within a pass. The lock serializes callers on a
+# stream's foreachBatch thread with the driver's own.
+_KEPT: OrderedDict[tuple[str, int, str], DataFrame] = OrderedDict()
+_KEPT_LOCK = threading.Lock()
+KEEP_MAX = 17
+
+
+def keep(df: DataFrame) -> DataFrame:
+    """Persist ``df`` for the plans that read it after this call returns,
+    and return the frame to use: the one already kept for a semantically
+    equal plan, or ``df`` itself, now persisted. Catalyst's cache manager
+    serves every later plan over a kept frame, or over a plan semantically
+    equal to it, from the frame's ``InMemoryRelation``, so reuse across
+    calls needs no key beyond the plan's own. Past
+    ``KEEP_MAX`` the least recently kept-or-hit frame is unpersisted
+    without blocking; a plan still reading it only recomputes it from
+    its lineage. The schema is part of the key because ``semanticHash``
+    erases output names."""
+    app = df.sparkSession.sparkContext.applicationId
+    key = (app, df.semanticHash(), df.schema.simpleString())
+    with _KEPT_LOCK:
+        kept = _KEPT.pop(key, None)
+        if kept is None:
+            kept = df.persist()
+        _KEPT[key] = kept
+        while len(_KEPT) > KEEP_MAX:
+            _KEPT.popitem(last=False)[1].unpersist(blocking=False)
+    return kept
 
 
 def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:

@@ -416,7 +416,6 @@ def bucketed_merge_stream_sink(
     cluster_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
     max_dv_fraction: float | None = 0.3,
-    analyze_every: int | None = None,
     merge_mode: str = "rewrite",
 ):
     """Continuous CDC → queryable current state, exactly once — the
@@ -453,9 +452,7 @@ def bucketed_merge_stream_sink(
     riding the compaction that already runs), fold the
     ``max_dv_fraction`` deletion-vector debt the merge left
     (``delete_where``/``update_where`` vectors in buckets no batch
-    rewrote; normally none), backfill skipping facts for files from
-    stats-less writers every ``analyze_every`` batches (needs
-    ``stats_cols``), and vacuum dead files every ``vacuum_every``
+    rewrote; normally none), and vacuum dead files every ``vacuum_every``
     batches (age-guarded: keep ``vacuum_min_age_seconds`` well above a
     batch interval). Maintenance commits are untagged; a replayed batch
     no-ops its merge and re-runs maintenance as a logical no-op.
@@ -499,7 +496,6 @@ def bucketed_merge_stream_sink(
         cluster_cols=cluster_cols,
         bloom_cols=bloom_cols,
         max_dv_fraction=max_dv_fraction,
-        analyze_every=analyze_every,
         merge_mode=merge_mode,
     )
     return (
@@ -526,7 +522,6 @@ def _merge_stream_batch(
     cluster_cols: list[str] | None = None,
     bloom_cols: list[str] | None = None,
     max_dv_fraction: float | None = 0.3,
-    analyze_every: int | None = None,
     merge_mode: str = "rewrite",
 ) -> None:
     """One micro-batch of ``bucketed_merge_stream_sink`` (its defaults,
@@ -559,7 +554,6 @@ def _merge_stream_batch(
         vacuum_min_age_seconds,
         cluster_cols=cluster_cols,
         max_dv_fraction=max_dv_fraction,
-        analyze_every=analyze_every,
     )
 
 

@@ -5,7 +5,7 @@ ann_sink.py). It CDC-shapes a micro-batch for a txlog merge, opens
 state tables whose recorded layout wins over the sink's preferred one,
 lands a batch with txn-tagged exactly-once and lost-race retries, and
 runs the post-commit maintenance cadence (compaction fold, deletion-
-vector debt fold, analyze, vacuum) that keeps an unbounded stream's
+vector debt fold, vacuum) that keeps an unbounded stream's
 probe plans flat."""
 
 from __future__ import annotations
@@ -95,7 +95,6 @@ def maintain(
     vacuum_min_age_seconds: float = 3600.0,
     cluster_cols: list[str] | None = None,
     max_dv_fraction: float | None = None,
-    analyze_every: int | None = None,
 ) -> None:
     """Post-commit maintenance, in order (``bucketed_merge_stream_sink``
     documents each knob; ``None`` skips a step): fold buckets holding
@@ -103,14 +102,12 @@ def maintain(
     a file over ``max_dv_fraction`` deletion-vector debt (one metadata
     snapshot decides; the MoR merge folds its own debt, so this finds
     only ``delete_where``/``update_where`` vectors in buckets no batch
-    rewrote), analyze every ``analyze_every`` batches (the handle's
-    ``stats_cols``), vacuum every ``vacuum_every`` batches. A fold or
-    analyze lost to an external commit is left to the next batch.
+    rewrote), vacuum every ``vacuum_every`` batches. A fold lost to an
+    external commit is left to the next batch.
     Maintenance commits are untagged: a replayed batch no-ops its merge
     via the txn tag, and re-running maintenance is a logical no-op."""
     from cdc_streaming_pipeline_spark.sources.txlog import (
         ConcurrentWriteError,
-        analyze_table,
         dv_debt_files,
         snapshot,
         vacuum,
@@ -138,11 +135,6 @@ def maintain(
         }
         if dirty:
             fold(buckets=sorted(dirty), min_files=1)
-    if analyze_every and n % analyze_every == 0 and table.stats_cols:
-        try:
-            analyze_table(table)
-        except ConcurrentWriteError:
-            pass  # facts-only commit lost a race: the next cadence retries
     if vacuum_every and n % vacuum_every == 0:
         vacuum(
             table,

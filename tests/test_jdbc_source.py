@@ -265,3 +265,35 @@ def test_federated_join_jdbc_with_parquet(spark, derby):
     plan = out._jdf.queryExecution().executedPlan().toString()
     assert "PushedFilters" in plan
     assert "LessThanOrEqual(id,10)" in plan.replace('"', "")
+
+
+def test_polled_batches_are_held_within_the_keep_cap(spark, derby, monkeypatch):
+    """A poller that runs forever must not accumulate one cached frame per
+    poll: every polled batch goes through the bounded ``tables.keep``."""
+    from pyspark import StorageLevel
+
+    from cdc_streaming_pipeline_spark.sources import tables
+
+    url, execute = derby
+    cap = 2
+    monkeypatch.setattr(tables, "KEEP_MAX", cap, raising=False)
+    polled = []
+    advance = JdbcIncrementalSource._advance
+
+    def recording(self, df):
+        out = advance(self, df)
+        polled.append(out)
+        return out
+
+    monkeypatch.setattr(JdbcIncrementalSource, "_advance", recording)
+    src = JdbcIncrementalSource(spark, url, "customer", driver=DERBY_DRIVER)
+    src.snapshot()
+    for i in range(cap + 3):
+        execute(
+            f"INSERT INTO customer VALUES ({100 + i}, 'name_{100 + i}', 'x@example.com',"
+            f" TIMESTAMP('2026-02-{i + 1:02d} 00:00:00'))"
+        )
+        assert src.poll().count() == 1
+    cached = [b for b in polled if b.storageLevel != StorageLevel.NONE]
+    assert len(polled) == cap + 4
+    assert len(cached) <= cap

@@ -218,11 +218,16 @@ def test_near_dup_gemm_computed_once_across_queries(spark, monkeypatch):
     """The blocked-GEMM edge set is the most expensive kernel in the
     registry; embedding_near_dup_blocked, near_dup_clusters and
     near_dup_keep_best must SHARE one GEMM per (session, sf_dir) rather
-    than each recomputing it (round-5 verdict item #4)."""
+    than each recomputing it."""
     from cdc_streaming_pipeline_spark.operators import similarity as sim
     from cdc_streaming_pipeline_spark.plans import docs
+    from cdc_streaming_pipeline_spark.sources import tables
 
-    docs._GEMM_SHARE_CACHE.clear()
+    def drop_gemm_fixtures():
+        for key in [k for k in tables._FIXTURES if k[2].startswith("near_dup_")]:
+            del tables._FIXTURES[key]
+
+    drop_gemm_fixtures()
     calls = {"n": 0}
     real = sim.cosine_near_dup_blocked
 
@@ -242,7 +247,7 @@ def test_near_dup_gemm_computed_once_across_queries(spark, monkeypatch):
     assert n_nodes > 0 and n_edges >= 0
     # and the cluster frame is the SAME object on repeat calls (cache hit)
     assert docs.near_dup_clusters(spark, SF_DIR) is clusters
-    docs._GEMM_SHARE_CACHE.clear()
+    drop_gemm_fixtures()
 
 
 def test_vocab_coverage_topk_without_global_sort(spark):
