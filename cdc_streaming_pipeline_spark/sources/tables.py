@@ -113,7 +113,7 @@ def fan_out(df: DataFrame) -> DataFrame:
 # least-recently-kept-or-hit order. The cap holds every distinct frame
 # one full registry pass at sf0.1 keeps (17, counted in bench.py order),
 # so no frame is evicted within a pass. The lock serializes callers on a
-# stream's foreachBatch thread with the driver's own.
+# stream's foreachBatch thread with the main thread.
 _KEPT: OrderedDict[tuple[str, int, str], DataFrame] = OrderedDict()
 _KEPT_LOCK = threading.Lock()
 KEEP_MAX = 17
